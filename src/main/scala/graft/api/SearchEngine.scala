@@ -18,6 +18,11 @@ final case class SearchResult(id: String, contents: String, score: Float)
 private[api] final case class LogRow(doc_id: Long, key: String, contents: String,
                                      seq: Long, tombstone: Boolean)
 
+/** What identifies one base index generation on disk (see `baseIndex`). */
+private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
+                                        manifestModified: java.nio.file.attribute.FileTime,
+                                        manifest: String)
+
 /** The document-lifecycle + retrieval surface (reference `SearchEngine`,
   * `/root/reference/src/search.rs:52-133`), rebuilt over the distributed
   * index:
@@ -32,8 +37,10 @@ private[api] final case class LogRow(doc_id: Long, key: String, contents: String
   *   - `compact()` folds deltas into a fresh base (distributed build) and
   *     re-seals the log seq;
   *   - `search(query, limit)` = embed query → disjunctive candidates →
-  *     f32 score fold in query-occurrence order → top-k → contents join
-  *     (`search.rs:118-132`), all as one distributed plan.
+  *     f32 score fold in query-occurrence order → top-k → contents lookup
+  *     (`search.rs:118-132`): the candidates are scored in Spark jobs over
+  *     the base index and the deltas, and the ≤ k hits' contents come from
+  *     one pruned docstore scan, resolved latest-seq-wins on the driver.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -56,6 +63,17 @@ final class SearchEngine private[api] (
   private val DocstoreBuckets = 16
   // superseded sets up to this size take the collected-IN probe path
   private val MaxInProbe = 10000
+  // contents lookups up to this many ids push a literal IN list into the scan
+  private val MaxInContents = 1024
+
+  /** The docstore log's columns. Every log read passes them, so no read runs
+    * a parquet schema-inference job; the `bucket` partition column, when the
+    * layout has one, is still discovered from the directory names, and the
+    * file listing stays fresh per read because appends change the log.
+    */
+  private val LogSchema = org.apache.spark.sql.Encoders.product[LogRow].schema
+
+  private def readLog(): DataFrame = spark.read.schema(LogSchema).parquet(logPath)
 
   /** Child-entry names of a log dir, via the path's OWN filesystem (local,
     * hdfs://, s3a://, …) — a java.io.File listing would return null for any
@@ -255,13 +273,41 @@ final class SearchEngine private[api] (
     * must reach PushedFilters).
     */
   private[graft] def postBaseLogScan(marker: Long): DataFrame =
-    spark.read.parquet(logPath).where($"seq" > marker)
+    readLog().where($"seq" > marker)
 
-  private def baseIndex: Option[Bm25Index] =
-    if (baseExists)
-      Some(new Bm25Index(spark, indexPath, Some(tokenizer), k1, b,
-        avgdlOverride = fixedAvgdl))
-    else None
+  /** The base index, held for one base generation so its tables are
+    * resolved once, not on every search. A generation is identified by the
+    * `base_seq` marker plus the manifest's bytes and file identity: a base
+    * swapped in by another engine instance on the same dir changes it, so
+    * this instance never reads files that were swapped out.
+    */
+  private var heldBase: Option[(BaseGeneration, Bm25Index)] = None
+
+  /** The base index for the given `base_seq` marker (read once per
+    * operation by the caller); None without a base.
+    */
+  private def baseIndex(marker: Long): Option[Bm25Index] = {
+    import java.nio.file.{Files, NoSuchFileException, Paths}
+    val manifest = Paths.get(indexPath, "manifest.json")
+    val generation =
+      try {
+        val attrs = Files.readAttributes(manifest,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        Some(BaseGeneration(marker, attrs.fileKey, attrs.lastModifiedTime,
+          new String(Files.readAllBytes(manifest), java.nio.charset.StandardCharsets.UTF_8)))
+      } catch { case _: NoSuchFileException => None }
+    generation.map { g =>
+      heldBase.collect { case (held, idx) if held == g => idx }.getOrElse {
+        val idx = new Bm25Index(spark, indexPath, Some(tokenizer), k1, b,
+          avgdlOverride = fixedAvgdl)
+        heldBase = Some((g, idx))
+        idx
+      }
+    }
+  }
+
+  /** `base_seq` marker of the current base; -1 without a base. */
+  private def baseMarker(): Long = if (baseExists) builtSeqMarker else -1L
 
   /** Blocks pruned by the live-view WAND path (test instrumentation). */
   private[graft] val wandSkippedBlocks =
@@ -270,10 +316,13 @@ final class SearchEngine private[api] (
   /** The frozen avgdl (fit at build / supplied via withAvgdl); upserts drift
     * it, exactly as the reference documents (`search.rs:78-81`).
     */
-  def avgdl: Float =
-    fixedAvgdl.orElse(baseIndex.map(_.manifest.avgdl)).getOrElse(Embedder.FallbackAvgdl)
+  def avgdl: Float = avgdlOf(baseIndex(baseMarker()))
 
-  private def embedder = new Embedder(Bm25Params(k1, b, avgdl), tokenizer)
+  private def avgdlOf(base: Option[Bm25Index]): Float =
+    fixedAvgdl.orElse(base.map(_.manifest.avgdl)).getOrElse(Embedder.FallbackAvgdl)
+
+  private def embedder(base: Option[Bm25Index]) =
+    new Embedder(Bm25Params(k1, b, avgdlOf(base)), tokenizer)
 
   def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
 
@@ -322,7 +371,7 @@ final class SearchEngine private[api] (
   def liveDocs: Dataset[Doc] = {
     if (!logExists) return spark.emptyDataset[Doc]
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    spark.read.parquet(logPath)
+    readLog()
       .withColumn("rn", row_number().over(w))
       .where($"rn" === 1 && !$"tombstone")
       .select($"key".as("id"), $"contents")
@@ -330,33 +379,50 @@ final class SearchEngine private[api] (
   }
 
   /** Point read: partition-pruned to one bucket directory + doc_id pushed
-    * to the parquet row groups, then latest-seq-wins over just that doc's
-    * rows — never a full-log window (the r3 judge's finding #4).
+    * to the parquet row groups, then latest-seq-wins on the driver over just
+    * that doc's rows — one scan job, never a full-log window.
     */
   def get(id: String): Option[Doc] = {
     if (!logExists) return None
-    pointRows(id)
-      .where($"rn" === 1 && !$"tombstone")
-      .select($"key".as("id"), $"contents")
-      .as[Doc].collect().headOption
+    latestLive(pointRows(id)).values.headOption.map { case (key, contents) => Doc(key, contents) }
   }
 
-  /** The pruned latest-row plan for one key (exposed for the plan audit).
-    * Filters on the STRING key as well as its hash surrogate: the surrogate
-    * prunes (partition dir + row-group stats), the key equality guarantees a
+  /** The pruned log rows of one key (exposed for the plan audit). Filters
+    * on the STRING key as well as its hash surrogate: the surrogate prunes
+    * (partition dir + row-group stats), the key equality guarantees a
     * colliding key's rows can never shadow the requested doc.
     */
-  private[graft] def pointRows(id: String): DataFrame = {
-    val sid = surrogate(id)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    val pruned =
-      if (bucketedLog)
-        spark.read.parquet(logPath).where($"bucket" === sid % DocstoreBuckets)
-      else spark.read.parquet(logPath)
-    pruned
-      .where($"doc_id" === sid && $"key" === id)
-      .withColumn("rn", row_number().over(w))
+  private[graft] def pointRows(id: String): DataFrame =
+    contentsRows(Seq(surrogate(id))).where($"key" === id)
+
+  /** The log rows of `ids` — (doc_id, seq, tombstone, key, contents) — as
+    * one scan (exposed for the plan audit). Up to `MaxInContents` ids are
+    * pushed into the scan as `doc_id IN (...)` plus bucket partition
+    * pruning; a longer list (an unlimited search) filters with a broadcast
+    * semi-join instead, since an unbounded literal list would bloat the plan.
+    */
+  private[graft] def contentsRows(ids: Seq[Long]): DataFrame = {
+    val log = readLog()
+    val rows =
+      if (ids.length > MaxInContents)
+        log.join(broadcast(ids.toDF("doc_id")), Seq("doc_id"), "left_semi")
+      else {
+        val inIds = log.where($"doc_id".isin(ids.map(Long.box): _*))
+        if (!bucketedLog) inIds
+        else inIds.where($"bucket".isin(
+          ids.map(id => Int.box(Math.floorMod(id, DocstoreBuckets.toLong).toInt)).distinct: _*))
+      }
+    rows.select($"doc_id", $"seq", $"tombstone", $"key", $"contents")
   }
+
+  /** Latest-seq-wins over collected `contentsRows`: each doc's newest row,
+    * kept when it is not a tombstone, as doc_id → (key, contents).
+    */
+  private def latestLive(rows: DataFrame): Map[Long, (String, String)] =
+    rows.as[(Long, Long, Boolean, String, String)].collect()
+      .groupBy(_._1).valuesIterator.map(_.maxBy(_._2))
+      .collect { case (id, _, false, key, contents) => id -> ((key, contents)) }
+      .toMap
 
   def iter(): Dataset[Doc] = liveDocs
 
@@ -378,11 +444,12 @@ final class SearchEngine private[api] (
     IndexBuilder.build(spark, corpus, tokenizer, indexPath, cfg,
       Map("source" -> logPath, "rows" -> n.toString), avgdlOverride)
     sealBase()
+    heldBase = None
   }
 
   /** Log seq covered by the current base (recorded at build). */
   private def builtSeqMarker: Long =
-    Checkpoints.readAll(indexPath).get("base_seq") match {
+    Checkpoints.read(indexPath, "base_seq") match {
       case Some(s) =>
         new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).get("seq").asLong()
       case None => -1L
@@ -403,21 +470,20 @@ final class SearchEngine private[api] (
     * post-base parquet row groups (seq min/max stats prune the sealed
     * bulk) instead of windowing the entire log per search.
     */
-  private def changedState(): DataFrame = {
-    val baseSeq = if (baseExists) builtSeqMarker else -1L
+  private def changedState(marker: Long): DataFrame = {
     // fast path: the base covers every appended row → no deltas, zero jobs
-    if (!logExists || nextSeq - 1 <= baseSeq)
+    if (!pendingDeltas(marker))
       return spark.emptyDataset[(Long, Boolean, String)]
         .toDF("doc_id", "tombstone", "contents")
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    spark.read.parquet(logPath)
-      .where($"seq" > baseSeq)
+    readLog()
+      .where($"seq" > marker)
       .withColumn("rn", row_number().over(w)).where($"rn" === 1)
       .select($"doc_id", $"tombstone", $"contents")
   }
 
-  private[graft] def deltaState(): (Dataset[(Long, String)], DataFrame) = {
-    val changed = changedState()
+  private[graft] def deltaState(marker: Long = baseMarker()): (Dataset[(Long, String)], DataFrame) = {
+    val changed = changedState(marker)
     val live = changed.where(!$"tombstone")
       .select($"doc_id", $"contents").as[(Long, String)]
     (live, changed.select($"doc_id"))
@@ -470,12 +536,6 @@ final class SearchEngine private[api] (
 
   // ----------------------------------------------------------------- search
 
-  /** The live-view query state for a set of distinct query terms: all
-    * postings of live documents matching any term (base minus superseded,
-    * plus executor-embedded deltas), and the live document count N.
-    * Public so callers (e.g. the driver-oracle catalog) can score the live
-    * view in alternate precisions; `search` consumes it in reference f32.
-    */
   /** True when log rows exist past the built base (the live view differs
     * from the base index). Exposed so callers can route df lookups to the
     * termstats table when the base IS the live view (post-compaction):
@@ -483,14 +543,27 @@ final class SearchEngine private[api] (
     * exactly (one posting per (term, doc), so the termstats block-count
     * sum equals the distinct-doc count).
     */
-  def hasPendingDeltas: Boolean =
-    logExists && nextSeq - 1 > (if (baseExists) builtSeqMarker else -1L)
+  def hasPendingDeltas: Boolean = pendingDeltas(baseMarker())
 
+  private def pendingDeltas(marker: Long): Boolean = logExists && nextSeq - 1 > marker
+
+  /** The live-view query state for a set of distinct query terms: all
+    * postings of live documents matching any term (base minus superseded,
+    * plus executor-embedded deltas), and the live document count N.
+    * Public so callers (e.g. the driver-oracle catalog) can score the live
+    * view in alternate precisions; `search` consumes it in reference f32.
+    */
   def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
-    val emb = embedder
+    val marker = baseMarker()
+    liveQueryState(distinctTerms, marker, baseIndex(marker))
+  }
+
+  private def liveQueryState(distinctTerms: Array[Long], marker: Long,
+                             baseIdx: Option[Bm25Index]): (Dataset[Posting], Long) = {
+    val emb = embedder(baseIdx)
     val qset = distinctTerms.toSet
-    val (deltaLive, supersededIds) = deltaState()
-    val hasDeltas = logExists && nextSeq - 1 > (if (baseExists) builtSeqMarker else -1L)
+    val (deltaLive, supersededIds) = deltaState(marker)
+    val hasDeltas = pendingDeltas(marker)
 
     // r6 optimization: when the post-base churn is small (the normal case
     // between compactions) ONE collect of (doc_id, tombstone) serves the
@@ -503,13 +576,13 @@ final class SearchEngine private[api] (
     val smallChanged: Option[Array[(Long, Boolean)]] =
       if (!hasDeltas) None
       else {
-        val rows = changedState().select($"doc_id", $"tombstone")
+        val rows = changedState(marker).select($"doc_id", $"tombstone")
           .limit(MaxInProbe + 1).as[(Long, Boolean)].collect()
         if (rows.length <= MaxInProbe) Some(rows) else None
       }
 
     val base: Dataset[Posting] =
-      baseIndex.map(_.postingsFor(distinctTerms)).getOrElse(spark.emptyDataset[Posting])
+      baseIdx.map(_.postingsFor(distinctTerms)).getOrElse(spark.emptyDataset[Posting])
     val baseFiltered: Dataset[Posting] =
       if (!hasDeltas) base
       else smallChanged match {
@@ -529,7 +602,7 @@ final class SearchEngine private[api] (
         terms.indices.collect { case i if qset.contains(terms(i)) => Posting(docId, terms(i), tfs(i), dl) }
       }
     }
-    val baseN = baseIndex.map(_.manifest.nDocs).getOrElse(0L)
+    val baseN = baseIdx.map(_.manifest.nDocs).getOrElse(0L)
     val nLive =
       if (!hasDeltas) baseN
       else smallChanged match {
@@ -556,17 +629,20 @@ final class SearchEngine private[api] (
     val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
     if (qOcc.isEmpty) return Seq.empty
     val distinctTerms = qOcc.distinct
+    // the base identity is read once and serves the whole search
+    val marker = baseMarker()
+    val baseIdx = baseIndex(marker)
 
-    if (limit.isDefined && baseExists) {
-      searchWandLive(qOcc, distinctTerms, limit.get) match {
+    if (limit.isDefined && baseIdx.isDefined) {
+      searchWandLive(baseIdx.get, marker, qOcc, distinctTerms, limit.get) match {
         case Some(hits) => return resolveContents(hits)
         case None       => // fall through to the exhaustive path
       }
     }
 
-    val (candsRaw, nLive) = liveQueryState(distinctTerms)
+    val (candsRaw, nLive) = liveQueryState(distinctTerms, marker, baseIdx)
     val cands = candsRaw.persist()
-    val emb = embedder
+    val emb = embedder(baseIdx)
     try {
       // exact live df per query term + live N (mirrors scorer.rs:99-107 state)
       val dfLive: Map[Long, Long] = cands.groupBy($"term")
@@ -596,38 +672,14 @@ final class SearchEngine private[api] (
     } finally cands.unpersist()
   }
 
-  /** Contents join for scored hits (broadcast semi-join, not isin: an
-    * unlimited search can return many ids and a literal In list would blow
-    * up the plan).
-    *
-    * The semi-join runs BEFORE the latest-seq window: only the k hit docs'
-    * log rows are windowed (k groups in, k rows out), instead of ranking
-    * the entire docstore log and then keeping k docs — the r3 judge's
-    * finding #1 for the contents side. Equivalent because latest-wins is
-    * computed per doc_id, and the semi-join keeps every row of each kept
-    * doc_id.
+  /** Contents for scored hits: the hit docs' log rows come from one pruned
+    * scan (`contentsRows`) and latest-seq-wins runs on the driver over those
+    * few rows — no window, no exchange. Every row of a hit doc is read, so
+    * the newest one decides, exactly as over the whole log.
     */
   private def resolveContents(hits: Seq[(Long, Float)]): Seq[SearchResult] = {
     if (hits.isEmpty || !logExists) return Seq.empty
-    val idsDf = spark.createDataset(hits.map(_._1)).toDF("doc_id")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    // For a top-k-sized hit list, additionally push an In(doc_id) predicate
-    // into the scan itself: the semi-join bounds what the window sees, the
-    // pushed filter bounds what the scan READS (row-group stats /
-    // dictionary pruning). Unlimited searches skip the literal list (an
-    // unbounded In would bloat the plan) and rely on the semi-join alone.
-    val log0 = spark.read.parquet(logPath)
-    val log =
-      if (hits.length <= 1024) log0.where($"doc_id".isin(hits.map(h => Long.box(h._1)): _*))
-      else log0
-    val contents = log
-      .join(broadcast(idsDf), Seq("doc_id"), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
-      .select($"doc_id", $"key", $"contents")
-      .as[(Long, String, String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-
+    val contents = latestLive(contentsRows(hits.map(_._1)))
     hits.flatMap { case (docId, score) =>
       contents.get(docId).map { case (key, c) => SearchResult(key, c, score) }
     }
@@ -637,12 +689,10 @@ final class SearchEngine private[api] (
     * scored deltas, merged. Returns None when the superseded set is too
     * large to broadcast safely (caller falls back to exhaustive).
     */
-  private def searchWandLive(qOcc: Array[Long], distinctTerms: Array[Long],
-                             k: Int): Option[Seq[(Long, Float)]] = {
-    val idx = baseIndex.get
-    val (deltaLive, supersededIds) = deltaState()
-    val baseSeq = builtSeqMarker
-    val hasDeltas = logExists && nextSeq - 1 > baseSeq
+  private def searchWandLive(idx: Bm25Index, marker: Long, qOcc: Array[Long],
+                             distinctTerms: Array[Long], k: Int): Option[Seq[(Long, Float)]] = {
+    val (deltaLive, supersededIds) = deltaState(marker)
+    val hasDeltas = pendingDeltas(marker)
 
     val superseded: Set[Long] =
       if (!hasDeltas) Set.empty
@@ -657,12 +707,12 @@ final class SearchEngine private[api] (
     //            + |live delta docs containing t|
     val dfsBase = idx.termDfs(distinctTerms)
     val supCounts: Map[Long, Long] =
-      if (superseded.isEmpty || !baseExists) Map.empty
+      if (superseded.isEmpty) Map.empty
       else {
         val supDf = spark.createDataset(superseded.toSeq).toDF("doc_id")
         // additionally push the literal id list into the scan when small
         // (stats/dictionary pruning); the semi-join stays as the row filter
-        val fwd0 = spark.read.parquet(s"$indexPath/forward")
+        val fwd0 = idx.forwardTable
         val fwd =
           if (superseded.size <= 1024)
             fwd0.where($"doc_id".isin(superseded.toSeq.map(Long.box): _*))
@@ -672,7 +722,7 @@ final class SearchEngine private[api] (
           .where($"term".isin(distinctTerms.map(Long.box): _*))
           .groupBy($"term").count().as[(Long, Long)].collect().toMap
       }
-    val emb = embedder
+    val emb = embedder(Some(idx))
     val qset = distinctTerms.toSet
     val deltaCands: Dataset[Posting] =
       if (!hasDeltas) spark.emptyDataset[Posting]
@@ -778,6 +828,7 @@ final class SearchEngine private[api] (
     // keeping it past the verify would double index storage per engine dir
     deleteRecursively(new java.io.File(s"$dir/index_old"))
     Checkpoints.commit(indexPath, "base_seq", Map("seq" -> sealSeq))
+    heldBase = None
     compactLog()
   }
 
@@ -799,7 +850,7 @@ final class SearchEngine private[api] (
   private def compactLog(): Unit = {
     if (!logExists) return
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    val live = spark.read.parquet(logPath)
+    val live = readLog()
       .withColumn("rn", row_number().over(w))
       .where($"rn" === 1 && !$"tombstone")
       .select($"doc_id", $"key", $"contents", $"seq", $"tombstone")

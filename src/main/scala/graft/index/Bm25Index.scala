@@ -59,6 +59,13 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
 
   def nDocs: Long = manifest.nDocs
 
+  // An index dir never changes after it is built (compaction writes a new
+  // dir and swaps it in), so each table is resolved once per instance: later
+  // reads skip the parquet schema-inference job and the file listing.
+  @transient private lazy val termStatsTable = spark.read.parquet(s"$indexDir/termstats")
+  @transient private lazy val postingsTable = spark.read.parquet(s"$indexDir/postings")
+  @transient private[graft] lazy val forwardTable = spark.read.parquet(s"$indexDir/forward")
+
   /** Sub-ranges per shard for the WAND query fan-out (task count scales as
     * numShards × this — numShards is not a parallelism ceiling).
     */
@@ -91,7 +98,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     */
   def termStatsFor(terms: Array[Long]): DataFrame = {
     val buckets = terms.map(manifest.bucketOf).distinct
-    spark.read.parquet(s"$indexDir/termstats")
+    termStatsTable
       .where($"bucket".isin(buckets.map(Int.box): _*) && $"term".isin(terms.map(Long.box): _*))
       .select($"term", $"df")
   }
@@ -99,7 +106,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   /** Decoded postings of the given terms (pruned scan over posting blocks). */
   def postingsFor(terms: Array[Long]): Dataset[Posting] = {
     if (terms.isEmpty) return spark.emptyDataset[Posting]
-    spark.read.parquet(s"$indexDir/postings")
+    postingsTable
       .where($"term".isin(terms: _*))
       .select($"term", $"cnt", $"docs", $"tfs", $"dls")
       .as[(Long, Int, Array[Byte], Array[Byte], Array[Byte])]
@@ -230,7 +237,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       math.min(rangesPerShard - 1, ((doc - lo) / width).toInt)
     }
     val rps = rangesPerShard
-    val blocks = spark.read.parquet(s"$indexDir/postings")
+    val blocks = postingsTable
       .where($"term".isin(present: _*))
       .select($"shard", $"term", $"block", $"cnt", $"max_tf", $"min_dl",
         $"min_doc", $"max_doc", $"docs", $"tfs", $"dls")
@@ -421,7 +428,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   def scoreDoc(docId: Long, query: String): Option[Float] = {
     val qOcc = queryTerms(query)
     val shard = manifest.shardOf(docId)
-    val fwd = spark.read.parquet(s"$indexDir/forward")
+    val fwd = forwardTable
       .where($"shard" === shard && $"doc_id" === docId)
       .select($"doc_id", $"shard", $"dl", $"terms", $"tfs")
       .as[ForwardRow]

@@ -163,6 +163,11 @@ object Checkpoints {
     Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** One checkpoint's payload, None when it was never committed. */
+  def read(indexDir: String, name: String): Option[String] =
+    try Some(new String(Files.readAllBytes(path(indexDir, name)), StandardCharsets.UTF_8))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
   def readAll(indexDir: String): Map[String, String] = {
     val dir = Paths.get(indexDir, "_checkpoints")
     if (!Files.exists(dir)) return Map.empty

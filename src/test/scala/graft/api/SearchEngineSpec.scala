@@ -428,6 +428,112 @@ class SearchEngineSpec extends SparkTestBase {
     assert(ex.getMessage.contains("mixed docstore layout"))
   }
 
+  /** Same hits in the same order: key, contents and f32 score bits. */
+  private def assertSameResults(got: Seq[SearchResult], exp: Seq[SearchResult], what: String): Unit = {
+    assert(got.map(r => (r.id, r.contents)) === exp.map(r => (r.id, r.contents)), what)
+    assert(got.map(r => java.lang.Float.floatToRawIntBits(r.score)) ===
+      exp.map(r => java.lang.Float.floatToRawIntBits(r.score)), what)
+  }
+
+  /** Every query, limited and unlimited, returns what `fresh` returns. */
+  private def assertSameSearches(eng: SearchEngine, fresh: SearchEngine, queries: Seq[String]): Unit =
+    for (q <- queries; limit <- Seq(Some(2), None))
+      assertSameResults(eng.search(q, limit), fresh.search(q, limit), s"query '$q' limit $limit")
+
+  test("a clean limited search runs at most 4 Spark jobs and infers no parquet schema; get runs 1") {
+    import org.apache.spark.graft.JobRecorder
+    enEngine.search("chicken soup", Some(10)) // warm-up: resolves the held index tables
+    val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", Some(10)))
+    assert(hits.nonEmpty)
+    assert(jobs.length <= 4, s"${jobs.length} jobs: $jobs")
+    assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
+    val (doc, getJobs) = JobRecorder(spark.sparkContext)(enEngine.get("Guacamole"))
+    assert(doc.exists(_.id == "Guacamole"))
+    assert(getJobs.length === 1, s"get jobs: $getJobs")
+  }
+
+  test("contents resolve latest-seq-wins: 3 upserts, a remove and a re-upsert, all pending") {
+    val base = Seq(Doc("a", "grilled cheese sandwich"), Doc("b", "bacon avocado sandwich"),
+      Doc("c", "tomato soup with cheese"))
+    val eng = SearchEngine.withDocuments(spark, tmpDir("latest1"), base)
+    for (v <- 1 to 3) eng.upsert(Doc("a", s"cheese sandwich version $v"))
+    eng.remove("a")
+    eng.upsert(Doc("a", "toasted cheese sandwich again"))
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("latest2"), eng.avgdl)
+    fresh.upsert(Seq(Doc("a", "toasted cheese sandwich again"), base(1), base(2)))
+    assertSameSearches(eng, fresh, Seq("cheese sandwich", "version", "toasted", "soup"))
+    assert(eng.get("a").contains(Doc("a", "toasted cheese sandwich again")))
+  }
+
+  test("an unlimited search with more than 1024 hits resolves contents via the semi-join") {
+    val docs = (0 until 1100).map(i => Doc(s"d$i", s"common word${i % 7} term${i % 13}"))
+    val eng = SearchEngine.withDocuments(spark, tmpDir("wide1"), docs)
+    eng.remove("d3")
+    eng.upsert(Doc("d4", "common word4 changed"))
+    val live = docs.filterNot(d => d.id == "d3" || d.id == "d4") :+ Doc("d4", "common word4 changed")
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("wide2"), eng.avgdl)
+    fresh.upsert(live)
+    val got = eng.search("common word4", None)
+    assert(got.length > 1024)
+    assertSameResults(got, fresh.search("common word4", None), "unlimited")
+    assertSameResults(eng.search("common word4", Some(5)), fresh.search("common word4", Some(5)), "top 5")
+  }
+
+  test("a legacy flat log resolves contents without a bucket filter") {
+    import spark.implicits._
+    val dir = tmpDir("legacyc1")
+    def sid(k: String) = graft.text.FxHash.hash64(k) & Long.MaxValue
+    Seq(LogRow(sid("x"), "x", "grilled cheese sandwich", 0L, tombstone = false),
+      LogRow(sid("x"), "x", "grilled cheese toast", 1L, tombstone = false),
+      LogRow(sid("y"), "y", "bacon sandwich", 2L, tombstone = false),
+      LogRow(sid("z"), "z", "cheese soup", 3L, tombstone = false),
+      LogRow(sid("z"), "z", "", 4L, tombstone = true))
+      .toDS().coalesce(1).write.parquet(s"$dir/docstore")
+    val eng = SearchEngine.withAvgdl(spark, dir, 4.0f)
+    eng.buildBase(avgdlOverride = Some(4.0f))
+    eng.upsert(Doc("w", "cheese sandwich melt"))
+    eng.remove("y")
+    eng.upsert(Doc("y", "bacon toast"))
+    assert(!eng.contentsRows(Seq(sid("x"), sid("y"))).queryExecution.executedPlan.toString.contains("bucket"))
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("legacyc2"), 4.0f)
+    fresh.upsert(Seq(Doc("x", "grilled cheese toast"), Doc("w", "cheese sandwich melt"),
+      Doc("y", "bacon toast")))
+    assertSameSearches(eng, fresh, Seq("cheese", "toast", "sandwich", "soup"))
+  }
+
+  test("the held base index follows compact() and buildBase() on the same instance") {
+    val dir = tmpDir("held1")
+    val eng = SearchEngine.withDocuments(spark, dir, Seq(
+      Doc("a", "spark shuffle join"), Doc("b", "shuffle sort merge"), Doc("c", "join broadcast hash")))
+    eng.remove("b")
+    eng.upsert(Doc("e", "shuffle join window"))
+    val q = "shuffle join"
+    eng.search(q, Some(2))
+    eng.compact()
+    assertSameResults(eng.search(q, Some(2)), SearchEngine.open(spark, dir).search(q, Some(2)), "after compact")
+
+    val dir2 = tmpDir("held2")
+    val eng2 = SearchEngine.open(spark, dir2)
+    eng2.upsert(Seq(Doc("a", "spark shuffle join"), Doc("b", "shuffle sort merge")))
+    eng2.search(q, Some(2)) // no base yet
+    eng2.buildBase()
+    assertSameResults(eng2.search(q, Some(2)), SearchEngine.open(spark, dir2).search(q, Some(2)), "after buildBase")
+  }
+
+  test("a base compacted by another instance is picked up, never read from swapped-out files") {
+    val dir = tmpDir("held3")
+    val a = SearchEngine.withDocuments(spark, dir, Seq(
+      Doc("a", "spark shuffle join"), Doc("b", "shuffle sort merge"), Doc("c", "join broadcast hash")))
+    a.upsert(Doc("d", "shuffle join window"))
+    val q = "shuffle join"
+    a.search(q, Some(3))
+    val b = SearchEngine.open(spark, dir)
+    b.upsert(Doc("e", "merge join shuffle"))
+    b.compact()
+    for (limit <- Seq(Some(3), None))
+      assertSameResults(a.search(q, limit), SearchEngine.open(spark, dir).search(q, limit), s"limit $limit")
+  }
+
   test("open-time max seq comes from parquet footer stats and equals the aggregate") {
     // r6: the footer fast path must (a) actually fire on a freshly written
     // log (exact INT64 row-group stats) and (b) agree with the distributed

@@ -132,6 +132,19 @@ class PlanAuditSpec extends SparkTestBase {
       s"no bucket partition pruning:\n$plan")
   }
 
+  test("contents lookup is one scan: bucket partition pruning, pushed doc_id IN, no exchange or window") {
+    import graft.api.{Doc, SearchEngine}
+    val eng = SearchEngine.withDocuments(spark, tmpDir("audit_contents"),
+      Seq(Doc("k1", "alpha beta"), Doc("k2", "gamma delta"), Doc("k3", "beta gamma")))
+    val plan = eng.contentsRows(Seq("k1", "k2", "k3").map(eng.surrogate))
+      .queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
+      s"no bucket partition pruning:\n$plan")
+    assert(plan.contains("PushedFilters: [In(doc_id"), s"doc_id IN not pushed:\n$plan")
+    assert(!plan.contains("Exchange"), s"contents lookup shuffles:\n$plan")
+    assert(!plan.contains("Window"), s"contents lookup windows:\n$plan")
+  }
+
   test("corpus scan for tokenization prunes to the needed columns") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "text")

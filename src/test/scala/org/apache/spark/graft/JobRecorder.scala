@@ -1,0 +1,33 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import scala.jdk.CollectionConverters._
+
+/** Records the Spark jobs a block launches, as each job's stage names. Jobs
+  * are told apart by a job group private to the call, so jobs of other
+  * threads never count. Lives under `org.apache.spark` to drain the
+  * listener bus, so the record is complete when the block's result returns.
+  */
+object JobRecorder {
+  def apply[A](sc: SparkContext)(body: => A): (A, Seq[Seq[String]]) = {
+    val group = s"job-recorder-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
+          jobs.add(e.stageInfos.map(_.name))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "recorded")
+    try {
+      val result = body
+      sc.listenerBus.waitUntilEmpty()
+      (result, jobs.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}
