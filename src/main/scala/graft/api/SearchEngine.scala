@@ -30,17 +30,19 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *   - the doc store is a parquet append log (key, contents, seq, tombstone)
   *     — the reference's `HashMap<K, String>` (`search.rs:52-59`);
   *   - `upsert`/`remove` append delta rows (I1/I2 in SURVEY §2.4): the base
-  *     index is immutable; at query time base postings (minus superseded doc
-  *     versions) are unioned with on-the-fly-embedded delta postings, and
-  *     df/N are recomputed exactly from the merged scan — so scores equal a
-  *     from-scratch reference engine over the same live docs;
+  *     index is immutable; each search collects the post-base churn set once
+  *     and corrects df/N exactly from it (base df − superseded base docs +
+  *     live delta docs) — so scores equal a from-scratch reference engine
+  *     over the same live docs;
   *   - `compact()` folds deltas into a fresh base (distributed build) and
   *     re-seals the log seq;
-  *   - `search(query, limit)` = embed query → disjunctive candidates →
-  *     f32 score fold in query-occurrence order → top-k → contents lookup
-  *     (`search.rs:118-132`): the candidates are scored in Spark jobs over
-  *     the base index and the deltas, and the ≤ k hits' contents come from
-  *     one pruned docstore scan, resolved latest-seq-wins on the driver.
+  *   - `search(query, limit)` = embed query → live df/N → block-max WAND
+  *     over the base with the superseded docs excluded (unbounded k, so
+  *     nothing pruned, for an unlimited search) + the delta docs scored in
+  *     executors with the same f32 fold in query-occurrence order → driver
+  *     merge → contents lookup (`search.rs:118-132`): the ≤ k hits' contents
+  *     come from one pruned docstore scan, resolved latest-seq-wins on the
+  *     driver.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -61,7 +63,7 @@ final class SearchEngine private[api] (
     * manifest-versioned knob would let it scale with the corpus).
     */
   private val DocstoreBuckets = 16
-  // superseded sets up to this size take the collected-IN probe path
+  // churn sets up to this size are probed with a literal IN list
   private val MaxInProbe = 10000
   // contents lookups up to this many ids push a literal IN list into the scan
   private val MaxInContents = 1024
@@ -309,7 +311,9 @@ final class SearchEngine private[api] (
   /** `base_seq` marker of the current base; -1 without a base. */
   private def baseMarker(): Long = if (baseExists) builtSeqMarker else -1L
 
-  /** Blocks pruned by the live-view WAND path (test instrumentation). */
+  /** Blocks pruned by the WAND base side of `search` (read by the tests and
+    * the benchmark).
+    */
   private[graft] val wandSkippedBlocks =
     spark.sparkContext.longAccumulator("liveWandSkippedBlocks")
 
@@ -432,9 +436,15 @@ final class SearchEngine private[api] (
 
   /** Batch-builds the base index from the current live docs (distributed,
     * checkpointed — see IndexBuilder), then seals the covered log seq.
+    * Refused once a base exists: the build would be a no-op, and the seal
+    * would drop every pending delta from later searches — `compact()`
+    * folds them in.
     */
   def buildBase(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2),
                 avgdlOverride: Option[Float] = None): Unit = {
+    if (baseExists)
+      throw new IllegalStateException(
+        s"a base index already exists at $indexPath; fold pending changes in with compact()")
     val corpus = liveDocs.mapPartitions { it =>
       it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
     }
@@ -458,11 +468,6 @@ final class SearchEngine private[api] (
   private def sealBase(): Unit =
     Checkpoints.commit(indexPath, "base_seq", Map("seq" -> (nextSeq - 1)))
 
-  /** Live docs newer than the base, plus all doc ids superseded since — as
-    * DATASETS: delta contents are embedded in executors and tombstones are
-    * applied via broadcast anti-join, so an upsert burst between compactions
-    * never funnels through the driver.
-    */
   /** Latest post-base log row per doc — (doc_id, tombstone, contents).
     * Filter seq > baseSeq BEFORE the window (provably equivalent: a doc
     * with any post-base row has its latest row post-base, and a doc with
@@ -482,6 +487,10 @@ final class SearchEngine private[api] (
       .select($"doc_id", $"tombstone", $"contents")
   }
 
+  /** Live docs newer than the base, plus all doc ids superseded since — as
+    * DATASETS, so an upsert burst between compactions never funnels its
+    * contents through the driver.
+    */
   private[graft] def deltaState(marker: Long = baseMarker()): (Dataset[(Long, String)], DataFrame) = {
     val changed = changedState(marker)
     val live = changed.where(!$"tombstone")
@@ -489,49 +498,53 @@ final class SearchEngine private[api] (
     (live, changed.select($"doc_id"))
   }
 
-  /** Superseded-set membership probes go against the sorted doc-id sidecar
-    * when the base has one (fresh builds and compactions write it): an
-    * 8-byte column in doc_id order, so the common small-delta case is a
-    * handful of stats-pruned row groups instead of a full forward scan per
-    * search. Exposed for the plan audit.
+  /** The post-base churn set: every changed doc's id and whether its latest
+    * row is a tombstone, sorted by id. Collected once per operation (not
+    * even planned when nothing is pending), it is the superseded set the
+    * base side excludes and, with `liveDocCount`, gives the live N.
     */
-  private[graft] def baseMembershipTable: DataFrame = {
-    val sidecar = new java.io.File(s"$indexPath/docids")
-    if (sidecar.exists()) spark.read.parquet(s"$indexPath/docids")
-    else spark.read.parquet(s"$indexPath/forward").select($"doc_id") // pre-sidecar index dirs
-  }
+  private def churn(marker: Long): Array[(Long, Boolean)] =
+    if (!pendingDeltas(marker)) Array.empty
+    else changedState(marker).select($"doc_id", $"tombstone").as[(Long, Boolean)].collect().sortBy(_._1)
 
-  /** Count of `ids` present in the base. Small sets (the normal churn
-    * between compactions) go through a collected IN filter — pushed into
-    * the parquet scan of the sorted sidecar — and only a pathologically
-    * large superseded set falls back to the broadcast semi-join.
+  /** Live N: base docs, minus the changed ids the base holds, plus the
+    * changed docs whose latest row is live.
     */
-  private[graft] def countInBase(ids: DataFrame): Long = {
-    val small = ids.select($"doc_id").limit(MaxInProbe + 1).collect().map(_.getLong(0))
-    if (small.length <= MaxInProbe) countInBase(small)
-    else
-      baseMembershipTable
-        .join(broadcast(ids.select($"doc_id")), Seq("doc_id"), "left_semi")
-        .count()
-  }
+  private def liveDocCount(base: Option[Bm25Index], churn: Array[(Long, Boolean)]): Long =
+    base.fold(0L)(idx => idx.nDocs - countInBase(idx, churn.map(_._1))) + churn.count(!_._2)
 
-  /** Pre-collected form: the WAND path already holds the superseded set on
-    * the driver, so it must not re-run the delta-log query to collect it
-    * again (one saved Spark job per live search).
+  /** `df`'s rows whose doc_id is (`in`) or is not among the sorted `ids`: a
+    * literal IN list pushed into the scan for up to `MaxInProbe` ids (the
+    * normal churn between compactions), a broadcast join of the collected
+    * ids above that, where the literal list would bloat the plan.
     */
-  private[graft] def countInBase(ids: Array[Long]): Long =
-    if (ids.isEmpty) 0L
-    else if (ids.length <= MaxInProbe)
-      baseMembershipTable.where($"doc_id".isin(ids.map(Long.box): _*)).count()
-    else {
-      val df = spark.createDataset(ids.toSeq).toDF("doc_id")
-      baseMembershipTable.join(broadcast(df), Seq("doc_id"), "left_semi").count()
+  private def whereIds(df: DataFrame, ids: Array[Long], in: Boolean): DataFrame =
+    if (ids.length <= MaxInProbe) {
+      val isIn = $"doc_id".isin(ids.map(Long.box): _*)
+      df.where(if (in) isIn else !isIn)
+    } else df.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"), if (in) "left_semi" else "left_anti")
+
+  /** How many of `ids` the base holds, probed on its sorted doc-id sidecar. */
+  private def countInBase(idx: Bm25Index, ids: Array[Long]): Long =
+    if (ids.isEmpty) 0L else whereIds(idx.docIdsTable, ids, in = true).count()
+
+  /** Per query term, how many of the base docs among `ids` hold it. */
+  private def baseTermCounts(idx: Bm25Index, ids: Array[Long], terms: Array[Long]): Map[Long, Long] =
+    if (ids.isEmpty) Map.empty
+    else whereIds(idx.forwardTable, ids, in = true)
+      .select(explode($"terms").as("term"))
+      .where($"term".isin(terms.map(Long.box): _*))
+      .groupBy($"term").count().as[(Long, Long)].collect().toMap
+
+  /** Postings of the live delta docs for `terms`, embedded in executors. */
+  private def deltaPostings(marker: Long, terms: Array[Long], emb: Embedder): Dataset[Posting] = {
+    val qset = terms.toSet
+    deltaState(marker)._1.mapPartitions { it =>
+      it.flatMap { case (docId, contents) =>
+        val (ts, tfs, dl) = emb.termFrequencies(contents)
+        ts.indices.collect { case i if qset.contains(ts(i)) => Posting(docId, ts(i), tfs(i), dl) }
+      }
     }
-
-  private def liveN(baseN: Long, supersededIds: DataFrame, deltaLiveCount: Long): Long = {
-    // N = base docs − superseded ids that existed in base + live delta docs.
-    val inBase: Long = if (baseExists) countInBase(supersededIds) else 0L
-    baseN - inBase + deltaLiveCount
   }
 
   // ----------------------------------------------------------------- search
@@ -548,129 +561,98 @@ final class SearchEngine private[api] (
   private def pendingDeltas(marker: Long): Boolean = logExists && nextSeq - 1 > marker
 
   /** The live-view query state for a set of distinct query terms: all
-    * postings of live documents matching any term (base minus superseded,
-    * plus executor-embedded deltas), and the live document count N.
+    * postings of live documents matching any term (base minus the churn
+    * set, plus executor-embedded deltas), and the live document count N.
     * Public so callers (e.g. the driver-oracle catalog) can score the live
-    * view in alternate precisions; `search` consumes it in reference f32.
+    * view in alternate precisions; `search` scores it in reference f32.
     */
   def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
     val marker = baseMarker()
-    liveQueryState(distinctTerms, marker, baseIndex(marker))
-  }
-
-  private def liveQueryState(distinctTerms: Array[Long], marker: Long,
-                             baseIdx: Option[Bm25Index]): (Dataset[Posting], Long) = {
-    val emb = embedder(baseIdx)
-    val qset = distinctTerms.toSet
-    val (deltaLive, supersededIds) = deltaState(marker)
-    val hasDeltas = pendingDeltas(marker)
-
-    // r6 optimization: when the post-base churn is small (the normal case
-    // between compactions) ONE collect of (doc_id, tombstone) serves the
-    // superseded-id exclusion, the delta-live count AND the liveN base
-    // membership probe — formerly three separate jobs (deltaLive.count, a
-    // superseded-id collect, the sidecar count) plus a re-execution of the
-    // windowed log subplan inside the anti-join's broadcast build. A
-    // pathologically large churn set falls back to the previous
-    // anti-join + count shape unchanged.
-    val smallChanged: Option[Array[(Long, Boolean)]] =
-      if (!hasDeltas) None
-      else {
-        val rows = changedState(marker).select($"doc_id", $"tombstone")
-          .limit(MaxInProbe + 1).as[(Long, Boolean)].collect()
-        if (rows.length <= MaxInProbe) Some(rows) else None
-      }
-
-    val base: Dataset[Posting] =
-      baseIdx.map(_.postingsFor(distinctTerms)).getOrElse(spark.emptyDataset[Posting])
-    val baseFiltered: Dataset[Posting] =
-      if (!hasDeltas) base
-      else smallChanged match {
-        case Some(rows) if rows.isEmpty => base
-        case Some(rows) =>
-          // same exclusion set as the anti-join, as a literal filter — the
-          // windowed log subplan no longer re-executes inside a broadcast
-          base.where(!$"doc_id".isin(rows.map(r => Long.box(r._1)).toSeq: _*)).as[Posting]
-        case None =>
-          base.join(broadcast(supersededIds), Seq("doc_id"), "left_anti").as[Posting]
-      }
-    // delta docs are embedded IN EXECUTORS (no driver collect): tokenize,
-    // keep only postings whose term is queried
-    val deltaCands: Dataset[Posting] = deltaLive.mapPartitions { it =>
-      it.flatMap { case (docId, contents) =>
-        val (terms, tfs, dl) = emb.termFrequencies(contents)
-        terms.indices.collect { case i if qset.contains(terms(i)) => Posting(docId, terms(i), tfs(i), dl) }
-      }
+    val baseIdx = baseIndex(marker)
+    val changed = churn(marker)
+    val superseded = changed.map(_._1)
+    val base = baseIdx.fold(spark.emptyDataset[Posting]) { idx =>
+      val postings = idx.postingsFor(distinctTerms)
+      if (superseded.isEmpty) postings
+      else whereIds(postings.toDF(), superseded, in = false).as[Posting]
     }
-    val baseN = baseIdx.map(_.manifest.nDocs).getOrElse(0L)
-    val nLive =
-      if (!hasDeltas) baseN
-      else smallChanged match {
-        case Some(rows) =>
-          val inBase = if (baseExists) countInBase(rows.map(_._1)) else 0L
-          baseN - inBase + rows.count(!_._2)
-        case None => liveN(baseN, supersededIds, deltaLive.count())
-      }
-    (baseFiltered.union(deltaCands), nLive)
+    (base.union(deltaPostings(marker, distinctTerms, embedder(baseIdx))), liveDocCount(baseIdx, changed))
   }
 
-  /** Top-`limit` search ((score desc, key asc)-deterministic; `None` returns
-    * every doc sharing ≥1 query term, like the reference's unlimited mode).
+  /** Top-`limit` search, ordered by (score desc, doc_id surrogate asc);
+    * `None` returns every doc sharing ≥1 query term, like the reference's
+    * unlimited mode.
     *
-    * With a limit and a base index, the base side runs block-max WAND with
-    * LIVE idfs and the superseded set excluded, while the (small) delta side
-    * is scored exhaustively and the two top-k lists merge — so a busy engine
-    * between compactions no longer pays full candidate scoring on hot terms.
-    * Results are bit-identical to the exhaustive live scorer (gated in
-    * SearchEngineSpec). Falls back to the exhaustive path for unlimited
-    * searches or when the superseded set is too large to broadcast.
+    * One route for every limit and engine state. The post-base churn set
+    * is collected once: its ids are the superseded docs, and it gives the
+    * live df (base df − superseded base docs holding the term + live delta
+    * docs holding it) and the live N. The base side is the index's
+    * block-max WAND with those live idfs and the superseded docs excluded;
+    * an unlimited search passes an unbounded k, so nothing is pruned. The
+    * delta docs are embedded and scored in executors with the same f32
+    * fold in query-occurrence order, and the two hit lists merge on the
+    * driver; an engine without a base has an empty base side. Results are
+    * bit-identical to a fresh engine over the live docs (gated in
+    * SearchEngineSpec).
     */
   def search(query: String, limit: Option[Int] = None): Seq[SearchResult] = {
     val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
     if (qOcc.isEmpty) return Seq.empty
-    val distinctTerms = qOcc.distinct
-    // the base identity is read once and serves the whole search
+    val terms = qOcc.distinct
+    // the base identity and the churn set are read once and serve the whole search
     val marker = baseMarker()
     val baseIdx = baseIndex(marker)
-
-    if (limit.isDefined && baseIdx.isDefined) {
-      searchWandLive(baseIdx.get, marker, qOcc, distinctTerms, limit.get) match {
-        case Some(hits) => return resolveContents(hits)
-        case None       => // fall through to the exhaustive path
-      }
-    }
-
-    val (candsRaw, nLive) = liveQueryState(distinctTerms, marker, baseIdx)
-    val cands = candsRaw.persist()
+    val changed = churn(marker)
+    val superseded = changed.map(_._1)
     val emb = embedder(baseIdx)
+    val deltas =
+      if (changed.exists(!_._2)) Some(deltaPostings(marker, terms, emb).persist()) else None
     try {
-      // exact live df per query term + live N (mirrors scorer.rs:99-107 state)
-      val dfLive: Map[Long, Long] = cands.groupBy($"term")
-        .agg(countDistinct($"doc_id").as("df")).as[(Long, Long)].collect().toMap
-      if (dfLive.isEmpty) return Seq.empty
+      // df_live(t) = df_base(t) − |superseded base docs holding t|
+      //            + |live delta docs holding t|   (one posting per (doc, term))
+      val dfBase = baseIdx.fold(Map.empty[Long, Long])(_.termDfs(terms))
+      val dfSuperseded = baseIdx.fold(Map.empty[Long, Long])(baseTermCounts(_, superseded, terms))
+      val dfDelta = deltas.fold(Map.empty[Long, Long])(
+        _.groupBy($"term").count().as[(Long, Long)].collect().toMap)
+      val dfLive = terms.map(t =>
+        t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + dfDelta.getOrElse(t, 0L))).toMap
+      if (dfLive.values.forall(_ <= 0L)) return Seq.empty
+      val nLive = liveDocCount(baseIdx, changed)
+      val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(nLive, df) }
 
-      val idfs: Map[Long, Float] = distinctTerms.iterator.map { t =>
-        t -> graft.bm25.Bm25Math.idf(nLive, dfLive.getOrElse(t, 0L))
-      }.toMap
-
-      val qOccL = qOcc
-      val scored = cands.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
-        val values = new java.util.HashMap[Long, Float](16)
-        ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-        var score = 0.0f
-        var i = 0
-        while (i < qOccL.length) {
-          val v = values.get(qOccL(i))
-          if (v != 0.0f) score += idfs(qOccL(i)) * v
-          i += 1
-        }
-        ScoredDoc(docId, score)
+      val k = limit.getOrElse(Int.MaxValue)
+      val present = terms.filter(dfBase.contains)
+      val baseHits = baseIdx match {
+        case Some(idx) if present.nonEmpty =>
+          topK(idx.wandTopK(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks)), limit)
+        case _ => Array.empty[ScoredDoc]
       }
-      val sorted = scored.orderBy($"score".desc, $"doc_id".asc)
-      val hits = limit.map(sorted.limit).getOrElse(sorted).as[ScoredDoc].collect()
-      resolveContents(hits.toSeq.map(h => (h.doc_id, h.score)))
-    } finally cands.unpersist()
+      val deltaHits = deltas.fold(Array.empty[ScoredDoc]) { d =>
+        val scored = d.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
+          // f32 fold in query-occurrence order (scorer.rs:109-123)
+          val values = new java.util.HashMap[Long, Float](16)
+          ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
+          var score = 0.0f
+          var i = 0
+          while (i < qOcc.length) {
+            val v = values.get(qOcc(i))
+            if (v != 0.0f) score += idfs(qOcc(i)) * v
+            i += 1
+          }
+          ScoredDoc(docId, score)
+        }
+        topK(scored, limit)
+      }
+      // a doc lives on exactly one side (superseded base docs are excluded),
+      // so a plain merge is exact
+      resolveContents((baseHits ++ deltaHits).map(h => (h.doc_id, h.score))
+        .sortBy { case (id, s) => (-s, id) }.take(k).toSeq)
+    } finally deltas.foreach(_.unpersist())
   }
+
+  /** Collected hits: the top `limit` by (score desc, doc_id asc), or all. */
+  private def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Array[ScoredDoc] =
+    limit.fold(scored)(scored.orderBy($"score".desc, $"doc_id".asc).limit(_).as[ScoredDoc]).collect()
 
   /** Contents for scored hits: the hit docs' log rows come from one pruned
     * scan (`contentsRows`) and latest-seq-wins runs on the driver over those
@@ -683,105 +665,6 @@ final class SearchEngine private[api] (
     hits.flatMap { case (docId, score) =>
       contents.get(docId).map { case (key, c) => SearchResult(key, c, score) }
     }
-  }
-
-  /** Hybrid top-k over the live view: WAND-pruned base + exhaustively
-    * scored deltas, merged. Returns None when the superseded set is too
-    * large to broadcast safely (caller falls back to exhaustive).
-    */
-  private def searchWandLive(idx: Bm25Index, marker: Long, qOcc: Array[Long],
-                             distinctTerms: Array[Long], k: Int): Option[Seq[(Long, Float)]] = {
-    val (deltaLive, supersededIds) = deltaState(marker)
-    val hasDeltas = pendingDeltas(marker)
-
-    val superseded: Set[Long] =
-      if (!hasDeltas) Set.empty
-      else {
-        val ids = supersededIds.limit(100001).as[Long].collect()
-        if (ids.length > 100000) return None // too big to broadcast — exhaustive
-        ids.toSet
-      }
-
-    // ---- live df/N without scanning the base candidates -----------------
-    // df_live(t) = df_base(t) − |superseded∩base docs containing t|
-    //            + |live delta docs containing t|
-    val dfsBase = idx.termDfs(distinctTerms)
-    val supCounts: Map[Long, Long] =
-      if (superseded.isEmpty) Map.empty
-      else {
-        val supDf = spark.createDataset(superseded.toSeq).toDF("doc_id")
-        // additionally push the literal id list into the scan when small
-        // (stats/dictionary pruning); the semi-join stays as the row filter
-        val fwd0 = idx.forwardTable
-        val fwd =
-          if (superseded.size <= 1024)
-            fwd0.where($"doc_id".isin(superseded.toSeq.map(Long.box): _*))
-          else fwd0
-        fwd.join(broadcast(supDf), Seq("doc_id"), "left_semi")
-          .select(explode($"terms").as("term"))
-          .where($"term".isin(distinctTerms.map(Long.box): _*))
-          .groupBy($"term").count().as[(Long, Long)].collect().toMap
-      }
-    val emb = embedder(Some(idx))
-    val qset = distinctTerms.toSet
-    val deltaCands: Dataset[Posting] =
-      if (!hasDeltas) spark.emptyDataset[Posting]
-      else deltaLive.mapPartitions { it =>
-        it.flatMap { case (docId, contents) =>
-          val (terms, tfs, dl) = emb.termFrequencies(contents)
-          terms.indices.collect { case i if qset.contains(terms(i)) => Posting(docId, terms(i), tfs(i), dl) }
-        }
-      }.persist()
-    try {
-      val deltaCounts: Map[Long, Long] =
-        if (!hasDeltas) Map.empty
-        else deltaCands.groupBy($"term").agg(countDistinct($"doc_id").as("df"))
-          .as[(Long, Long)].collect().toMap
-      val baseN = idx.manifest.nDocs
-      val nLive =
-        if (!hasDeltas) baseN
-        else baseN - countInBase(superseded.toArray) + deltaLive.count()
-      val dfLive: Map[Long, Long] = distinctTerms.iterator.map { t =>
-        t -> (dfsBase.getOrElse(t, 0L) - supCounts.getOrElse(t, 0L) + deltaCounts.getOrElse(t, 0L))
-      }.toMap
-      if (dfLive.values.forall(_ <= 0L)) return Some(Seq.empty)
-      val idfs: Map[Long, Float] = distinctTerms.iterator.map { t =>
-        t -> graft.bm25.Bm25Math.idf(nLive, dfLive(t))
-      }.toMap
-
-      // ---- base side: block-max WAND with live idfs, superseded excluded
-      val present = distinctTerms.filter(dfsBase.contains)
-      val baseHits: Array[(Long, Float)] =
-        if (present.isEmpty) Array.empty
-        else idx.wandTopKLive(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks))
-          .orderBy($"score".desc, $"doc_id".asc).limit(k)
-          .as[ScoredDoc].collect().map(h => (h.doc_id, h.score))
-
-      // ---- delta side: exhaustive f32 fold over the (small) delta docs --
-      val qOccL = qOcc
-      val idfB = idfs
-      val deltaHits: Array[(Long, Float)] =
-        if (!hasDeltas) Array.empty
-        else deltaCands.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
-          val values = new java.util.HashMap[Long, Float](16)
-          ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-          var score = 0.0f
-          var i = 0
-          while (i < qOccL.length) {
-            val v = values.get(qOccL(i))
-            if (v != 0.0f) score += idfB(qOccL(i)) * v
-            i += 1
-          }
-          ScoredDoc(docId, score)
-        }.orderBy($"score".desc, $"doc_id".asc).limit(k)
-          .as[ScoredDoc].collect().map(h => (h.doc_id, h.score))
-
-      // a doc lives on exactly one side (superseded base docs are excluded),
-      // so a plain merge is exact
-      Some((baseHits ++ deltaHits)
-        .sortBy { case (id, s) => (-s, id) }
-        .take(k).toSeq)
-    } finally { deltaCands.unpersist(): Unit }
   }
 
   /** Distributed compaction: with an existing base, folds pending deltas in

@@ -66,6 +66,18 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   @transient private lazy val postingsTable = spark.read.parquet(s"$indexDir/postings")
   @transient private[graft] lazy val forwardTable = spark.read.parquet(s"$indexDir/forward")
 
+  /** The index's doc ids: the sorted 8-byte `docids` sidecar (fresh builds
+    * and compactions write it), so a membership probe reads a handful of
+    * stats-pruned row groups instead of the forward table; index dirs from
+    * before the sidecar fall back to the forward table's ids.
+    */
+  @transient private[graft] lazy val docIdsTable: DataFrame = {
+    val sidecar = new org.apache.hadoop.fs.Path(s"$indexDir/docids")
+    if (sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar))
+      spark.read.parquet(sidecar.toString)
+    else forwardTable.select($"doc_id")
+  }
+
   /** Sub-ranges per shard for the WAND query fan-out (task count scales as
     * numShards × this — numShards is not a parallelism ceiling).
     */
@@ -141,7 +153,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
         val present = distinctTerms.filter(dfs.contains)
         if (present.isEmpty) return spark.emptyDataset[ScoredDoc]
         val idfs = distinctTerms.iterator.map(t => t -> idf(dfs.getOrElse(t, 0L))).toMap
-        wandTopK(qOcc, present, idfs, limit.get, Set.empty, None)
+        wandTopK(qOcc, present, idfs, limit.get, Array.empty, None)
       case _ =>
         exhaustive(qOcc, distinctTerms)
     }
@@ -192,22 +204,17 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * Memory is O(k + blockSize·|terms|) regardless of posting length; the
     * pruning is conservative, so results are rank- and bit-identical to the
     * exhaustive scorer (asserted in Bm25IndexSpec).
+    *
+    * `idfs` are the caller's (the engine passes live df/N), `exclude` is a
+    * sorted array of doc ids passed over unscored (the engine's superseded
+    * docs), and `skipAcc` counts pruned blocks. With `k = Int.MaxValue` the
+    * threshold never rises above −∞, so nothing is pruned and every
+    * candidate is scored: the engine's unlimited search.
     */
-  /** Public live-view entry: block-max WAND over the BASE postings with
-    * caller-supplied idfs (live df/N) and a set of excluded (superseded)
-    * doc ids — the engine's between-compactions search path. `skipAcc`
-    * counts pruned blocks (test instrumentation).
-    */
-  private[graft] def wandTopKLive(qOcc: Array[Long], present: Array[Long],
-                                  idfs: Map[Long, Float], k: Int,
-                                  exclude: Set[Long],
-                                  skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] =
-    wandTopK(qOcc, present, idfs, k, exclude, skipAcc)
-
-  private def wandTopK(qOcc: Array[Long], present: Array[Long],
-                       idfs: Map[Long, Float], k: Int,
-                       exclude: Set[Long],
-                       skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
+  private[graft] def wandTopK(qOcc: Array[Long], present: Array[Long],
+                              idfs: Map[Long, Float], k: Int,
+                              exclude: Array[Long],
+                              skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
     val emb = embedder
     val qOccB = spark.sparkContext.broadcast(qOcc)
     val idfB = spark.sparkContext.broadcast(idfs)
@@ -261,7 +268,8 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       // Conservative padding for the f32 accumulation of ≤|occ| additions:
       // fold result ≤ realSum·(1+2^-24)^(|occ|-1); 1e-6·|occ| dominates that.
       val pad = 1.0 + occ.length * 1e-6
-      val heap = new java.util.PriorityQueue[ScoredDoc](k + 1,
+      // capacity clamped: k + 1 overflows for an unlimited k
+      val heap = new java.util.PriorityQueue[ScoredDoc](math.min(k, 1024) + 1,
         (a: ScoredDoc, b: ScoredDoc) =>
           if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
           else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
@@ -385,7 +393,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           var minDoc = Long.MaxValue
           cursors.forEach { c => if (c.hasCurrent && c.currentDoc < minDoc) minDoc = c.currentDoc }
           if (minDoc == Long.MaxValue) done = true
-          else if (excluded.contains(minDoc)) {
+          else if (java.util.Arrays.binarySearch(excluded, minDoc) >= 0) {
             // superseded doc: advance past it without scoring
             val thr = threshold
             cursors.forEach { c =>

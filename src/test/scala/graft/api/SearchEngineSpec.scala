@@ -233,6 +233,17 @@ class SearchEngineSpec extends SparkTestBase {
     }
     assert(eng.wandSkippedBlocks.value > 0L,
       "live-WAND should have pruned at least one block with a nonempty delta")
+
+    // unlimited search runs the same WAND operator, so also compare both
+    // limits against an independent scorer: a fresh engine without a base
+    // (delta fold only) over the live docs, with the frozen avgdl
+    val gone = Set("d7", "d13", "d100", "d5")
+    val live = docs.filterNot(d => gone(d.id)) ++ Seq(Doc("d5", "merge join catalyst"),
+      Doc("dx", "merge fast window row"), Doc("dy", "join join sort"))
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("wandlive2"), eng.avgdl)
+    fresh.upsert(live)
+    for (q <- Seq("merge join", "spark window", "sort fast key", "join"); limit <- Seq(Some(5), None))
+      assertSameResults(eng.search(q, limit), fresh.search(q, limit), s"query '$q' limit $limit")
   }
 
   test("a pre-bucketing flat docstore dir stays readable and appendable (layout gate)") {
@@ -559,5 +570,61 @@ class SearchEngineSpec extends SparkTestBase {
     val after = spark.read.parquet(s"$dir/docstore")
       .agg(max($"seq")).head().getLong(0)
     assert(after == trueMax + 1)
+  }
+
+  test("buildBase over an existing base is refused, pending deltas stay searchable, compact folds them in") {
+    val dir = tmpDir("rebuild1")
+    val base = Seq(Doc("a", "grilled cheese sandwich"), Doc("b", "bacon avocado toast"))
+    val eng = SearchEngine.withDocuments(spark, dir, base)
+    eng.upsert(Doc("c", "roasted cheese soup"))
+    val ex = intercept[IllegalStateException] { eng.buildBase() }
+    assert(ex.getMessage.contains("compact()"), ex.getMessage)
+    assert(eng.hasPendingDeltas)
+    assert(eng.search("soup", None).map(_.id) === Seq("c"))
+    assert(SearchEngine.open(spark, dir).search("soup", Some(3)).map(_.id) === Seq("c"))
+    eng.compact()
+    assert(!eng.hasPendingDeltas)
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("rebuild2"), eng.avgdl)
+    fresh.upsert(base :+ Doc("c", "roasted cheese soup"))
+    assertSameSearches(eng, fresh, Seq("soup", "cheese", "toast"))
+    assertSameSearches(SearchEngine.open(spark, dir), fresh, Seq("soup", "cheese"))
+  }
+
+  test("a warm limited search with deltas pending infers no parquet schema and runs at most 16 Spark jobs") {
+    import org.apache.spark.graft.JobRecorder
+    val eng = SearchEngine.withDocuments(spark, tmpDir("deltajobs"), enRecipes)
+    eng.upsert(Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"), enRecipes(3).copy(contents = "garlic bread")))
+    eng.remove(enRecipes(5).id)
+    eng.search("chicken soup", Some(10)) // warm-up: resolves the held index tables, the sidecar included
+    val (hits, jobs) = JobRecorder(spark.sparkContext)(eng.search("garlic vegetable", Some(10)))
+    assert(hits.exists(_.id == "Garlic Soup"))
+    assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
+    assert(jobs.length <= 16, s"${jobs.length} jobs: $jobs")
+  }
+
+  test("churn above 100 000 changed ids: limited and unlimited search ≡ fresh engine, bit-exact") {
+    import spark.implicits._
+    // > MaxInProbe (10 000) changed ids between compactions, and above the
+    // 100 000 ids the live WAND once capped at: tombstones for absent keys,
+    // plus real removes, updates and new docs
+    val docs = (0 until 200).map(i => Doc(s"d$i", s"common word${i % 7} term${i % 13} item$i"))
+    val eng = SearchEngine.withDocuments(spark, tmpDir("bigchurn1"), docs)
+    eng.removeBatch(spark.range(100050).map(i => s"absent$i"))
+    eng.remove("d3")
+    eng.removeBatch(Seq("d10", "d11").toDS())
+    eng.upsert(Seq(Doc("d4", "common word4 changed"), Doc("new1", "common term2 fresh")))
+    val gone = Set("d3", "d10", "d11", "d4")
+    val live = docs.filterNot(d => gone(d.id)) ++
+      Seq(Doc("d4", "common word4 changed"), Doc("new1", "common term2 fresh"))
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("bigchurn2"), eng.avgdl)
+    fresh.upsert(live)
+    assertSameSearches(eng, fresh, Seq("common word4", "term2 item10", "word3 term3 word3", "fresh"))
+    assert(eng.search("common", None).length === live.length)
+    // the public live query state (catalog surface) takes the anti-join branch
+    val terms = eng.tokenizer.tokenize("common word4 term2").map(graft.text.FxHash.hash32u).distinct
+    val (posts, n) = eng.liveQueryState(terms)
+    val (freshPosts, freshN) = fresh.liveQueryState(terms)
+    assert(n === live.length.toLong && freshN === n)
+    assert(posts.collect().sortBy(p => (p.doc_id, p.term)) === freshPosts.collect().sortBy(p => (p.doc_id, p.term)))
   }
 }

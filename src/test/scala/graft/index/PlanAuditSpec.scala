@@ -159,7 +159,7 @@ class PlanAuditSpec extends SparkTestBase {
       Seq(Doc("a", "alpha beta"), Doc("b", "gamma delta"), Doc("c", "beta gamma")))
     eng.remove("b") // a superseded id → the live view must correct N
     // sidecar exists and is the membership table
-    val plan = eng.baseMembershipTable
+    val plan = new graft.index.Bm25Index(spark, s"${eng.dir}/index").docIdsTable
       .where($"doc_id".isin(Long.box(1L), Long.box(2L)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("docids"), s"membership not on the sidecar:\n$plan")
