@@ -644,7 +644,7 @@ object Queries {
     "ft_df_topterms" -> { (spark, sfDir) =>
       import spark.implicits._
       val dir = cachedIndex(spark, sfDir, "simple", simpleTokenizer)
-      val terms = spark.read.parquet(s"$dir/termstats").select($"term", $"df")
+      val terms = graft.index.IndexTables.termstats(spark, dir).select($"term", $"df")
       val dict = docs(spark, sfDir)
         .select(explode(split($"text", " ")).as("token"))
         .where(length($"token") > 0)
@@ -675,7 +675,7 @@ object Queries {
       // expression (matches DuckDB's avg()), identical values, one Spark
       // job instead of three.
       val dfs = idx.termStatsFor(qTerms)
-      val avgDf = spark.read.parquet(s"$dir/forward")
+      val avgDf = graft.index.IndexTables.forward(spark, dir)
         .agg((sum($"dl").cast("double") / count(lit(1))).as("avgdl"))
       val posts = idx.postingsFor(qTerms).toDF()
       posts.join(broadcast(dfs), "term")

@@ -3,7 +3,7 @@ package graft.api
 import graft.bm25.{Bm25Params, Embedder}
 import graft.index._
 import graft.text.{Bm25Tokenizer, FxHash, Language, TextTokenizer}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession, functions}
 import org.apache.spark.sql.functions._
 
 /** A document (reference `Document<K>`, `/root/reference/src/search.rs:17-38`).
@@ -445,16 +445,26 @@ final class SearchEngine private[api] (
     if (baseExists)
       throw new IllegalStateException(
         s"a base index already exists at $indexPath; fold pending changes in with compact()")
-    val corpus = liveDocs.mapPartitions { it =>
-      it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
-    }
-    val n = corpus.count()
-    val distinctIds = corpus.select($"doc_id").distinct().count()
-    require(n == distinctIds, s"doc key hash collision: $n docs, $distinctIds distinct surrogates")
-    IndexBuilder.build(spark, corpus, tokenizer, indexPath, cfg,
-      Map("source" -> logPath, "rows" -> n.toString), avgdlOverride)
+    buildFromLog(indexPath, cfg, avgdlOverride)
     sealBase()
     heldBase = None
+  }
+
+  /** Builds an index at `out` from the live docs, resolved once and cached:
+    * the count + collision check, the bound sampling and the build read it.
+    */
+  private def buildFromLog(out: String, cfg: IndexBuildConfig,
+                           avgdlOverride: Option[Float]): IndexManifest = {
+    val corpus = liveDocs.mapPartitions { it =>
+      it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
+    }.persist()
+    try {
+      val r = corpus.agg(functions.count(lit(1)), countDistinct($"doc_id")).head()
+      val (n, distinctIds) = (r.getLong(0), r.getLong(1))
+      require(n == distinctIds, s"doc key hash collision: $n docs, $distinctIds distinct surrogates")
+      IndexBuilder.build(spark, corpus, tokenizer, out, cfg,
+        Map("source" -> logPath, "rows" -> n.toString), avgdlOverride)
+    } finally corpus.unpersist()
   }
 
   /** Log seq covered by the current base (recorded at build). */
@@ -487,16 +497,12 @@ final class SearchEngine private[api] (
       .select($"doc_id", $"tombstone", $"contents")
   }
 
-  /** Live docs newer than the base, plus all doc ids superseded since — as
-    * DATASETS, so an upsert burst between compactions never funnels its
-    * contents through the driver.
+  /** Live docs newer than the base, as (doc_id, contents) — a DATASET, so
+    * an upsert burst between compactions never funnels its contents through
+    * the driver.
     */
-  private[graft] def deltaState(marker: Long = baseMarker()): (Dataset[(Long, String)], DataFrame) = {
-    val changed = changedState(marker)
-    val live = changed.where(!$"tombstone")
-      .select($"doc_id", $"contents").as[(Long, String)]
-    (live, changed.select($"doc_id"))
-  }
+  private[graft] def liveDeltas(marker: Long = baseMarker()): Dataset[(Long, String)] =
+    changedState(marker).where(!$"tombstone").select($"doc_id", $"contents").as[(Long, String)]
 
   /** The post-base churn set: every changed doc's id and whether its latest
     * row is a tombstone, sorted by id. Collected once per operation (not
@@ -539,7 +545,7 @@ final class SearchEngine private[api] (
   /** Postings of the live delta docs for `terms`, embedded in executors. */
   private def deltaPostings(marker: Long, terms: Array[Long], emb: Embedder): Dataset[Posting] = {
     val qset = terms.toSet
-    deltaState(marker)._1.mapPartitions { it =>
+    liveDeltas(marker).mapPartitions { it =>
       it.flatMap { case (docId, contents) =>
         val (ts, tfs, dl) = emb.termFrequencies(contents)
         ts.indices.collect { case i if qset.contains(ts(i)) => Posting(docId, ts(i), tfs(i), dl) }
@@ -671,24 +677,21 @@ final class SearchEngine private[api] (
     * via the multi-way posting merge (Compactor — base blocks are decoded
     * and merged, never re-tokenized); without one, batch-builds from the
     * live docs. Physical-only either way: the frozen avgdl carries through,
-    * so scores do not move.
+    * so scores do not move. The collected churn set's ids are exactly the
+    * base docs to drop (every live delta is a changed doc); the new base's
+    * `nDocs` is the live count the log compaction needs.
     */
   def compact(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2)): Unit = {
     val frozenAvgdl = avgdl
     val sealSeq = nextSeq - 1
     val tmp = s"$dir/index_compacting"
     deleteRecursively(new java.io.File(tmp))
-    if (baseExists) {
-      val (deltaLive, supersededIds) = deltaState()
-      val deltaCorpus = deltaLive.map { case (id, c) => CorpusDoc(id, c) }
-      Compactor.merge(spark, indexPath, tmp, deltaCorpus, supersededIds, tokenizer, cfg)
-    } else {
-      val corpus = liveDocs.mapPartitions { it =>
-        it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
-      }
-      IndexBuilder.build(spark, corpus, tokenizer, tmp, cfg,
-        Map("source" -> logPath), Some(frozenAvgdl))
-    }
+    val compacted =
+      if (baseExists) {
+        val marker = builtSeqMarker
+        val deltaCorpus = liveDeltas(marker).map { case (id, c) => CorpusDoc(id, c) }
+        Compactor.merge(spark, indexPath, tmp, deltaCorpus, churn(marker).map(_._1), tokenizer, cfg)
+      } else buildFromLog(tmp, cfg, Some(frozenAvgdl))
     // Swap with java.nio Files.move (throws on failure — a silent renameTo
     // failure here would seal base_seq over an index that never moved into
     // place, dropping the un-folded deltas from every later search).
@@ -712,7 +715,7 @@ final class SearchEngine private[api] (
     deleteRecursively(new java.io.File(s"$dir/index_old"))
     Checkpoints.commit(indexPath, "base_seq", Map("seq" -> sealSeq))
     heldBase = None
-    compactLog()
+    compactLog(compacted.nDocs)
   }
 
   /** Rewrites the docstore log to its live view (latest-seq, non-tombstone
@@ -728,9 +731,10 @@ final class SearchEngine private[api] (
     * the swap verifies — a surviving `docstore_old` is therefore the
     * crash signal recovery keys on, and keeping it longer would double
     * docstore storage for no recovery value beyond the window. An all-tombstones log compacts to
-    * log deletion, not an unreadable zero-file parquet dir.
+    * log deletion, not an unreadable zero-file parquet dir. `liveCount` is
+    * the just-built base's `nDocs`: that base is exactly the live view.
     */
-  private def compactLog(): Unit = {
+  private def compactLog(liveCount: Long): Unit = {
     if (!logExists) return
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
     val live = readLog()
@@ -739,8 +743,7 @@ final class SearchEngine private[api] (
       .select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
     val tmp = s"$dir/docstore_compacting"
     deleteRecursively(new java.io.File(tmp))
-    val liveCount = live.persist().count()
-    try { if (liveCount > 0) writeLogTo(live, tmp) } finally live.unpersist()
+    if (liveCount > 0) writeLogTo(live, tmp)
     import java.nio.file.{Files, Paths}
     val oldLog = Paths.get(logPath)
     val bak = Paths.get(s"$dir/docstore_old")

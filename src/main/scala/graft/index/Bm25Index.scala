@@ -60,11 +60,11 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   def nDocs: Long = manifest.nDocs
 
   // An index dir never changes after it is built (compaction writes a new
-  // dir and swaps it in), so each table is resolved once per instance: later
-  // reads skip the parquet schema-inference job and the file listing.
-  @transient private lazy val termStatsTable = spark.read.parquet(s"$indexDir/termstats")
-  @transient private lazy val postingsTable = spark.read.parquet(s"$indexDir/postings")
-  @transient private[graft] lazy val forwardTable = spark.read.parquet(s"$indexDir/forward")
+  // dir and swaps it in), so each table is resolved once per instance, with
+  // its written schema (no schema-inference job; later reads skip the listing).
+  @transient private lazy val termStatsTable = IndexTables.termstats(spark, indexDir)
+  @transient private lazy val postingsTable = IndexTables.postings(spark, indexDir)
+  @transient private[graft] lazy val forwardTable = IndexTables.forward(spark, indexDir)
 
   /** The index's doc ids: the sorted 8-byte `docids` sidecar (fresh builds
     * and compactions write it), so a membership probe reads a handful of
@@ -74,7 +74,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   @transient private[graft] lazy val docIdsTable: DataFrame = {
     val sidecar = new org.apache.hadoop.fs.Path(s"$indexDir/docids")
     if (sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar))
-      spark.read.parquet(sidecar.toString)
+      IndexTables.docIds(spark, indexDir)
     else forwardTable.select($"doc_id")
   }
 

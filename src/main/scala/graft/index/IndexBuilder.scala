@@ -2,7 +2,7 @@ package graft.index
 
 import graft.bm25.Embedder
 import graft.text.{Bm25Tokenizer, TextTokenizer}
-import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A corpus document keyed by a Long surrogate id (see `graft.api` for the
@@ -29,6 +29,24 @@ final case class PostingBlock(shard: Int, term: Long, block: Int, cnt: Int,
                               min_doc: Long, max_doc: Long,
                               docs: Array[Byte], tfs: Array[Byte], dls: Array[Byte])
 
+/** The index tables, read with the schemas their writers write, so no read
+  * runs a parquet schema-inference job. The postings table's `group`
+  * partition column is still discovered from its directory names.
+  */
+object IndexTables {
+  private lazy val ForwardSchema = Encoders.product[ForwardRow].schema
+  private lazy val PostingsSchema = Encoders.product[PostingBlock].schema
+
+  def forward(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(ForwardSchema).parquet(s"$indexDir/forward")
+  def postings(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(PostingsSchema).parquet(s"$indexDir/postings")
+  def termstats(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema("term BIGINT, df BIGINT, bucket INT").parquet(s"$indexDir/termstats")
+  def docIds(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema("doc_id BIGINT").parquet(s"$indexDir/docids")
+}
+
 final case class IndexBuildConfig(
     numShards: Int = 8,
     blockSize: Int = 128,
@@ -52,17 +70,21 @@ final case class IndexBuildConfig(
   *                        shuffle) → forward index partitioned by doc-range
   *                        shard (range bounds from quantiles, recorded in the
   *                        checkpoint lineage).
-  *   stage 2 `stats`      Σdl / N / avgdl — exact integer aggregate
-  *                        (`embedder.rs:213-237` semantics).
+  *   stage 2 `stats`      Σdl / N / avgdl — exact integer aggregate over
+  *                        the written forward rows (`embedder.rs:213-237`
+  *                        semantics), recorded in its checkpoint.
   *   stage 3 `postings_*` per shard group: explode → shuffle by shard →
   *                        sort (shard, term, doc_id) → streaming block
   *                        encoder (delta+varbyte+block-max) → parquet
   *                        partitioned by shard. No giant per-term groupBy:
   *                        the sort-based encoder bounds memory regardless of
   *                        term skew.
-  *   stage 4 `termstats`  df(term) via salted two-phase aggregation
-  *                        (explicit skew handling for hot terms) →
-  *                        parquet partitioned by term bucket.
+  *   stage 4 `termstats`  df(term) via salted two-phase aggregation over
+  *                        the written blocks (explicit skew handling for
+  *                        hot terms) → parquet partitioned by term bucket.
+  *                        The same aggregation gives the content metrics
+  *                        (blocks, bytes, postings, vocabulary, max/mean
+  *                        df), recorded in its checkpoint.
   *
   * Every stage commits a checkpoint marker with lineage + metrics; a
   * restarted build skips committed stages/groups (kill/resume test in
@@ -71,18 +93,41 @@ final case class IndexBuildConfig(
 object IndexBuilder {
 
   /** Writes the sorted doc-id sidecar: the forward table's id column,
-    * range-partitioned and sorted so parquet row-group min/max stats make
-    * point/membership probes near-perfectly prunable. Shared by the fresh
-    * build and the compactor.
+    * partitioned by its doc-range `shard` and sorted within, so parquet
+    * row-group min/max stats make point/membership probes near-perfectly
+    * prunable — without a range-sampling job. Shared by the fresh build and
+    * the compactor.
     */
-  def writeDocIds(spark: SparkSession, fwdPath: String, outPath: String,
-                  partitions: Int): Unit = {
+  def writeDocIds(spark: SparkSession, indexDir: String, numShards: Int): Unit = {
     import spark.implicits._
-    spark.read.parquet(fwdPath).select($"doc_id")
-      .repartitionByRange(math.max(1, partitions), $"doc_id")
+    IndexTables.forward(spark, indexDir).select($"shard", $"doc_id")
+      .repartition(math.max(1, numShards), $"shard")
       .sortWithinPartitions($"doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
+      .select($"doc_id")
+      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docids")
   }
+
+  /** (rows, Σdl) of forward rows: a build's N and Σdl, or a compaction's drop. */
+  private[graft] def docStats(fwd: DataFrame): (Long, Long) = {
+    val t = longTotals(fwd.select(col("dl").cast("long")))
+    (t(0), t(1))
+  }
+
+  /** [rows, Σ c1, max c1, Σ c2, max c2, …] over non-negative long columns,
+    * in ONE job: partitions fold their rows and the driver adds the
+    * partials (a global `agg` runs a second job for its exchange).
+    */
+  private[graft] def longTotals(df: DataFrame): Array[Long] = {
+    val n = df.columns.length
+    df.queryExecution.toRdd.aggregate(new Array[Long](2 * n + 1))((a, r) => {
+      a(0) += 1
+      for (i <- 0 until n) { a(2 * i + 1) += r.getLong(i); a(2 * i + 2) = math.max(a(2 * i + 2), r.getLong(i)) }
+      a
+    }, (a, b) => Array.tabulate(2 * n + 1)(i => if (i % 2 == 0 && i > 0) math.max(a(i), b(i)) else a(i) + b(i)))
+  }
+
+  private def checkpoint(indexDir: String, name: String) =
+    Checkpoints.read(indexDir, name).map(new com.fasterxml.jackson.databind.ObjectMapper().readTree(_))
 
   def tokenizerConfig(t: TextTokenizer): TokenizerConfig = t match {
     case b: Bm25Tokenizer => TokenizerConfig(b.language.name, b.normalization, b.stopwords, b.stemming)
@@ -106,13 +151,11 @@ object IndexBuilder {
     if (IndexManifest.exists(indexDir)) return IndexManifest.read(indexDir)
 
     // --- shard bounds (range partitioning of the doc-id space) ------------
-    val bounds: Array[Long] =
-      if (Checkpoints.isDone(indexDir, "bounds")) {
-        val s = Checkpoints.readAll(indexDir)("bounds")
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
+    val bounds: Array[Long] = checkpoint(indexDir, "bounds") match {
+      case Some(n) =>
         val b = n.get("bounds").asText()
         if (b.isEmpty) Array.empty[Long] else b.split(",").map(_.toLong)
-      } else {
+      case None =>
         val bs =
           if (cfg.numShards <= 1) Array.empty[Long]
           else if (cfg.uniformIdSpace)
@@ -123,17 +166,13 @@ object IndexBuilder {
         Checkpoints.commit(indexDir, "bounds",
           Map("bounds" -> bs.mkString(","), "numShards" -> cfg.numShards))
         bs
-      }
+    }
     def shardOf(docId: Long): Int = {
       var lo = 0
       var hi = bounds.length
       while (lo < hi) { val mid = (lo + hi) >>> 1; if (docId < bounds(mid)) hi = mid else lo = mid + 1 }
       lo
     }
-
-    val fwdPath = s"$indexDir/forward"
-    val postingsPath = s"$indexDir/postings"
-    val termstatsPath = s"$indexDir/termstats"
 
     // --- stage 1: forward index ------------------------------------------
     if (!Checkpoints.isDone(indexDir, "forward")) {
@@ -150,7 +189,7 @@ object IndexBuilder {
       // by shard anyway, and shard/doc_id remain ordinary columns for
       // stats-based pruning. (An earlier repartition+partitionBy layout
       // serialized this stage on shuffle + small-file IO.)
-      fwd.write.mode(SaveMode.Overwrite).parquet(fwdPath)
+      fwd.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/forward")
       // row count is recorded by the stats stage (single agg over the output)
       Checkpoints.commit(indexDir, "forward", Map(
         "seconds" -> (System.nanoTime() - t) / 1e9))
@@ -162,86 +201,65 @@ object IndexBuilder {
     // the build (its result is not needed until the manifest is written).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val statsF: Future[(Long, Long)] =
-      if (Checkpoints.isDone(indexDir, "stats")) {
-        val s = Checkpoints.readAll(indexDir)("stats")
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
-        Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
-      } else Future {
-        val row = spark.read.parquet(fwdPath).agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
-        val (n, s) = (row.getLong(0), row.getLong(1))
+    val statsF: Future[(Long, Long)] = checkpoint(indexDir, "stats") match {
+      case Some(n) => Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
+      case None => Future {
+        val (n, s) = docStats(IndexTables.forward(spark, indexDir))
         Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s))
         (n, s)
       }
+    }
 
     // --- stage 2b: sorted doc-id sidecar (concurrent, like stats) ---------
-    // An id-only table RANGE-SORTED by doc_id: membership probes (the
-    // live-view N correction semi-joins the superseded set against the base)
+    // An id-only table sorted by doc_id within each shard: membership probes
+    // (the live-view N correction counts the superseded ids the base holds)
     // prune to a few row groups via parquet min/max stats instead of
     // scanning the whole forward index — 8 bytes/doc in perfectly
     // prunable order vs wide forward rows in ingest order.
     val docidsF: Future[Unit] =
       if (Checkpoints.isDone(indexDir, "docids")) Future.successful(())
       else Future {
-        IndexBuilder.writeDocIds(spark, fwdPath, s"$indexDir/docids", cfg.numShards)
+        writeDocIds(spark, indexDir, cfg.numShards)
         Checkpoints.commit(indexDir, "docids", Map("seconds" -> 0))
       }
 
     // --- stage 3: posting blocks per shard group --------------------------
     val groups = math.max(1, math.min(cfg.shardGroups, cfg.numShards))
-    var encBlocks = 0L; var encBytes = 0L; var encPostings = 0L
-    for (g <- 0 until groups) {
-      val name = s"postings_g$g"
-      if (Checkpoints.isDone(indexDir, name)) {
-        val s = Checkpoints.readAll(indexDir)(name)
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
-        if (n.has("blocks")) {
-          encBlocks += n.get("blocks").asLong(); encBytes += n.get("bytes").asLong()
-          encPostings += n.get("postings").asLong()
-        } else {
-          // checkpoint predates the metrics keys: recompute from the durable
-          // group output instead of silently reporting 0
-          val m = spark.read.parquet(s"$postingsPath/group=$g")
-            .agg(count(lit(1)),
-              coalesce(sum(length($"docs") + length($"tfs") + length($"dls")), lit(0L)),
-              coalesce(sum($"cnt".cast("long")), lit(0L))).head()
-          encBlocks += m.getLong(0); encBytes += m.getLong(1); encPostings += m.getLong(2)
-        }
-      } else {
-        val t = System.nanoTime()
-        val shardsInGroup = (0 until cfg.numShards).filter(_ % groups == g)
-        // Columnar end-to-end: explode via Catalyst's generate (whole-stage
-        // codegen, no per-posting JVM objects), shuffle+sort on UnsafeRows,
-        // and encode straight off InternalRow — an earlier typed-Dataset
-        // version allocated a Tuple5 per posting on both shuffle sides
-        // (287M objects at the 1M-doc bench) and was GC-bound.
-        val exploded = spark.read.parquet(fwdPath)
-          .where($"shard".isin(shardsInGroup: _*))
-          .select($"shard", $"doc_id", $"dl", explode(arrays_zip($"terms", $"tfs")).as("te"))
-          .select($"shard", $"te.terms".as("term"), $"doc_id", $"te.tfs".as("tf"), $"dl")
-        // Partition by (shard, term): a term's postings within a shard stay
-        // in one task (whole blocks), while the task count scales with the
-        // cluster instead of the shard count — numShards stops being a
-        // parallelism ceiling.
-        // each group owns its subdirectory (hive-style `group=N`, so readers
-        // of the root discover it as a partition column): group overwrite is
-        // a plain directory replace, and each task writes exactly one file
-        val (b, by, p) = encodePostingRows(spark, exploded, s"$postingsPath/group=$g", cfg,
-          math.max(shardsInGroup.size, 1))
-        encBlocks += b; encBytes += by; encPostings += p
-        Checkpoints.commit(indexDir, name, Map(
-          "shards" -> shardsInGroup.mkString(","),
-          "blocks" -> b, "bytes" -> by, "postings" -> p,
-          "seconds" -> (System.nanoTime() - t) / 1e9))
-      }
+    for (g <- 0 until groups; name = s"postings_g$g" if !Checkpoints.isDone(indexDir, name)) {
+      val t = System.nanoTime()
+      val shardsInGroup = (0 until cfg.numShards).filter(_ % groups == g)
+      // Columnar end-to-end: explode via Catalyst's generate (whole-stage
+      // codegen, no per-posting JVM objects), shuffle+sort on UnsafeRows,
+      // and encode straight off InternalRow — an earlier typed-Dataset
+      // version allocated a Tuple5 per posting on both shuffle sides
+      // (287M objects at the 1M-doc bench) and was GC-bound.
+      val exploded = IndexTables.forward(spark, indexDir)
+        .where($"shard".isin(shardsInGroup: _*))
+        .select($"shard", $"doc_id", $"dl", explode(arrays_zip($"terms", $"tfs")).as("te"))
+        .select($"shard", $"te.terms".as("term"), $"doc_id", $"te.tfs".as("tf"), $"dl")
+      // Partition by (shard, term): a term's postings within a shard stay
+      // in one task (whole blocks), while the task count scales with the
+      // cluster instead of the shard count — numShards stops being a
+      // parallelism ceiling.
+      // each group owns its subdirectory (hive-style `group=N`, so readers
+      // of the root discover it as a partition column): group overwrite is
+      // a plain directory replace, and each task writes exactly one file
+      encodePostingRows(spark, exploded, s"$indexDir/postings/group=$g", cfg,
+        math.max(shardsInGroup.size, 1))
+      Checkpoints.commit(indexDir, name, Map(
+        "shards" -> shardsInGroup.mkString(","),
+        "seconds" -> (System.nanoTime() - t) / 1e9))
     }
 
-    // --- stage 4: term stats (df) via salted two-phase aggregation --------
-    if (!Checkpoints.isDone(indexDir, "termstats")) {
-      val t = System.nanoTime()
-      buildTermstats(spark, postingsPath, termstatsPath, cfg)
-      Checkpoints.commit(indexDir, "termstats",
-        Map("seconds" -> (System.nanoTime() - t) / 1e9))
+    // --- stage 4: term stats (df) + content metrics -----------------------
+    // a checkpoint from before the metrics were recorded redoes the stage
+    val content = checkpoint(indexDir, "termstats").filter(_.has("vocabulary")) match {
+      case Some(n) => ContentMetrics.map(k => k -> n.get(k).asDouble()).toMap
+      case None =>
+        val t = System.nanoTime()
+        val c = buildTermstats(spark, indexDir, cfg)
+        Checkpoints.commit(indexDir, "termstats", c + ("seconds" -> (System.nanoTime() - t) / 1e9))
+        c
     }
 
     // --- finalize: metrics + manifest -------------------------------------
@@ -251,9 +269,6 @@ object IndexBuilder {
     val avgdl = avgdlOverride.getOrElse(
       if (nDocs == 0L) Embedder.FallbackAvgdl
       else (sumDl.toDouble / nDocs.toDouble).toFloat)
-    val seconds = (System.nanoTime() - t0) / 1e9
-    val metrics = computeMetrics(spark, termstatsPath, nDocs, seconds,
-      encBlocks, encBytes, encPostings)
     val manifest = IndexManifest(
       version = IndexManifest.CurrentVersion,
       numShards = cfg.numShards,
@@ -266,28 +281,25 @@ object IndexBuilder {
       avgdl = avgdl,
       shardBounds = bounds,
       lineage = lineage ++ Map("builder" -> "graft.index.IndexBuilder"),
-      metrics = metrics
+      metrics = metrics(content, nDocs, (System.nanoTime() - t0) / 1e9)
     )
     manifest.write(indexDir)
     manifest
   }
 
-  /** Sorts posting rows (shard, term, doc_id, tf, dl) through the
-    * (shard, term)-partitioned exchange and writes encoded blocks. Shared by
-    * the batch build and the merge compactor (the shuffle-sort IS the
-    * distributed multi-way merge of whatever sorted/unsorted runs feed it).
-    */
-  /** Distributed multi-way posting merge (north_rule): map tasks locally
-    * sort bounded posting buffers and emit delta+varbyte run CHUNKS
-    * (~10 B/posting) keyed by (shard, term-prefix) group; the exchange
-    * carries 3× less data than raw posting rows and the reduce side k-way
-    * merges the sorted chunks straight into blocks — no external sort at
-    * all. See PostingRuns for the chunk format and determinism argument.
+  /** Distributed multi-way posting merge (north_rule) of posting rows
+    * (shard, term, doc_id, tf, dl) into encoded blocks, shared by the batch
+    * build and the merge compactor: map tasks locally sort bounded posting
+    * buffers and emit delta+varbyte run CHUNKS (~10 B/posting) keyed by
+    * (shard, term-prefix) group; the exchange carries 3× less data than raw
+    * posting rows and the reduce side k-way merges the sorted chunks
+    * straight into blocks — no external sort at all. See PostingRuns for
+    * the chunk format and determinism argument.
     */
   private[graft] def encodePostingRows(spark: SparkSession,
                                        rows: org.apache.spark.sql.DataFrame,
                                        outPath: String, cfg: IndexBuildConfig,
-                                       minTasks: Int = 1): (Long, Long, Long) = {
+                                       minTasks: Int = 1): Unit = {
     import spark.implicits._
     val numPostingTasks =
       if (cfg.postingTasks > 0) cfg.postingTasks
@@ -349,14 +361,6 @@ object IndexBuilder {
     }
     spark.createDataset(blockRdd)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
-    // metrics from the WRITTEN parquet (not accumulators): task retries /
-    // speculative attempts cannot double-count, and a resumed build can
-    // always recompute them from the durable output
-    val m = spark.read.parquet(outPath)
-      .agg(count(lit(1)),
-        coalesce(sum(length($"docs") + length($"tfs") + length($"dls")), lit(0L)),
-        coalesce(sum($"cnt".cast("long")), lit(0L))).head()
-    (m.getLong(0), m.getLong(1), m.getLong(2))
   }
 
   /** Streaming block builder over the cursor heap: pops (shard, term, doc)-
@@ -405,48 +409,54 @@ object IndexBuilder {
       }
     }
 
-  /** df(term) via salted two-phase aggregation over the encoded blocks,
-    * written bucket-partitioned for query-time pruning.
+  /** The content metrics `buildTermstats` derives (termstats checkpoint keys). */
+  private val ContentMetrics =
+    Seq("blocks", "compressedBytes", "postings", "vocabulary", "maxDf", "meanDf")
+
+  /** df(term) via salted two-phase aggregation over the written posting
+    * blocks, written bucket-partitioned for query-time pruning. The same
+    * per-term aggregation carries each term's block count and bytes; it is
+    * cached, written, and its cache summed into the content metrics — so
+    * they come from the written postings (a retried or speculative task
+    * cannot count twice) without reading anything back.
     */
-  private[graft] def buildTermstats(spark: SparkSession, postingsPath: String,
-                                    termstatsPath: String, cfg: IndexBuildConfig): Unit = {
+  private[graft] def buildTermstats(spark: SparkSession, indexDir: String,
+                                    cfg: IndexBuildConfig): Map[String, Double] = {
     import spark.implicits._
-    val blocksDf = spark.read.parquet(postingsPath)
     // salt on block id: partial sums per (term, salt), then final merge —
     // bounds any single reducer's load for pathologically hot terms.
-    val partial = blocksDf
+    val partial = IndexTables.postings(spark, indexDir)
       .groupBy($"term", pmod($"block", lit(cfg.saltBuckets)).as("salt"))
-      .agg(sum($"cnt").as("c"))
-    val df = partial.groupBy($"term").agg(sum($"c").as("df"))
-      .withColumn("bucket", pmod($"term", lit(cfg.termBuckets)).cast("int"))
-    df.repartition(cfg.termBuckets, $"bucket")
-      .sortWithinPartitions($"bucket", $"term")
-      .write.mode(SaveMode.Overwrite).parquet(termstatsPath)
+      .agg(sum($"cnt").as("c"), count(lit(1)).as("nb"),
+        sum(length($"docs") + length($"tfs") + length($"dls")).as("nby"))
+    val perTerm = partial.groupBy($"term")
+      .agg(sum($"c").as("df"), sum($"nb").as("blocks"), sum($"nby").as("bytes"))
+      .persist()
+    try {
+      perTerm.select($"term", $"df", pmod($"term", lit(cfg.termBuckets)).cast("int").as("bucket"))
+        .repartition(cfg.termBuckets, $"bucket")
+        .sortWithinPartitions($"bucket", $"term")
+        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/termstats")
+      val t = longTotals(perTerm.select($"df", $"blocks", $"bytes"))
+      val (vocab, postings) = (t(0), t(1))
+      Map("blocks" -> t(3).toDouble, "compressedBytes" -> t(5).toDouble,
+        "postings" -> postings.toDouble, "vocabulary" -> vocab.toDouble,
+        "maxDf" -> t(2).toDouble,
+        "meanDf" -> (if (vocab > 0) postings.toDouble / vocab else 0.0))
+    } finally perTerm.unpersist()
   }
 
-  /** Index-wide metrics: block stats come from the encoder's accumulators
-    * (no end-of-build postings rescan); only the small termstats table is
-    * aggregated here.
-    */
-  private[graft] def computeMetrics(spark: SparkSession, termstatsPath: String,
-                                    nDocs: Long, seconds: Double,
-                                    nBlocks: Long, bytes: Long,
-                                    postings: Long): Map[String, Double] = {
-    import spark.implicits._
-    val stats = spark.read.parquet(termstatsPath).agg(
-      count(lit(1)), coalesce(max($"df"), lit(0L)), coalesce(avg($"df"), lit(0.0))).head()
-    val (vocab, maxDf, meanDf) = (stats.getLong(0), stats.getLong(1), stats.getDouble(2))
-    Map(
+  /** Manifest metrics: the content metrics plus the build's rates. */
+  private[graft] def metrics(content: Map[String, Double], nDocs: Long,
+                             seconds: Double): Map[String, Double] = {
+    val postings = content("postings")
+    val meanDf = content("meanDf")
+    content - "meanDf" ++ Map(
       "buildSeconds" -> seconds,
       "docsPerSecond" -> (if (seconds > 0) nDocs / seconds else 0.0),
-      "postings" -> postings.toDouble,
       "postingsPerSecond" -> (if (seconds > 0) postings / seconds else 0.0),
-      "blocks" -> nBlocks.toDouble,
-      "compressedBytes" -> bytes.toDouble,
-      "bytesPerPosting" -> (if (postings > 0) bytes.toDouble / postings else 0.0),
-      "vocabulary" -> vocab.toDouble,
-      "maxDf" -> maxDf.toDouble,
-      "dfSkewRatio" -> (if (meanDf > 0) maxDf / meanDf else 0.0)
+      "bytesPerPosting" -> (if (postings > 0) content("compressedBytes") / postings else 0.0),
+      "dfSkewRatio" -> (if (meanDf > 0) content("maxDf") / meanDf else 0.0)
     )
   }
 

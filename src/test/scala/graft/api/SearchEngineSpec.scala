@@ -602,6 +602,50 @@ class SearchEngineSpec extends SparkTestBase {
     assert(jobs.length <= 16, s"${jobs.length} jobs: $jobs")
   }
 
+  test("compact() on a churned engine runs at most 20 Spark jobs and infers no parquet schema") {
+    import org.apache.spark.graft.JobRecorder
+    val eng = SearchEngine.withDocuments(spark, tmpDir("compactjobs1"), enRecipes)
+    val added = Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"),
+      enRecipes(3).copy(contents = "garlic bread"))
+    eng.upsert(added)
+    eng.remove(enRecipes(5).id)
+    val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.compact())
+    // writes are `parquet at` stages too; a read's call site names the reader
+    assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
+    assert(jobs.length <= 20, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    val live = enRecipes.filterNot(d => d.id == enRecipes(3).id || d.id == enRecipes(5).id) ++ added
+    val fresh = SearchEngine.withAvgdl(spark, tmpDir("compactjobs2"), eng.avgdl)
+    fresh.upsert(live)
+    assertSameSearches(eng, fresh, Seq("garlic vegetable", "chicken soup", "bread"))
+    assert(eng.count() === fresh.count())
+  }
+
+  test("buildBase runs at most 21 Spark jobs and infers no parquet schema") {
+    import org.apache.spark.graft.JobRecorder
+    val eng = SearchEngine.withAvgdl(spark, tmpDir("buildjobs"), 10.0f)
+    eng.upsert(enRecipes)
+    val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.buildBase())
+    assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
+    // 21 with the concurrent stats and docids jobs; the recorder may miss
+    // those when a pooled thread started under another job group runs them
+    assert(jobs.length <= 21, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+  }
+
+  test("the first search on a freshly opened engine infers no parquet schema") {
+    import org.apache.spark.graft.JobRecorder
+    val dir = tmpDir("openjobs")
+    val eng = SearchEngine.withDocuments(spark, dir, enRecipes)
+    eng.upsert(Doc("Garlic Soup", "simmer garlic and vegetable stock"))
+    eng.remove(enRecipes(5).id)
+    for (pending <- Seq(true, false)) {
+      if (!pending) eng.compact()
+      val (hits, jobs) = JobRecorder(spark.sparkContext)(
+        SearchEngine.open(spark, dir).search("garlic vegetable", Some(10)))
+      assert(hits.exists(_.id == "Garlic Soup"), s"pending $pending")
+      assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"pending $pending, schema-inference job: $jobs")
+    }
+  }
+
   test("churn above 100 000 changed ids: limited and unlimited search ≡ fresh engine, bit-exact") {
     import spark.implicits._
     // > MaxInProbe (10 000) changed ids between compactions, and above the
@@ -626,5 +670,11 @@ class SearchEngineSpec extends SparkTestBase {
     val (freshPosts, freshN) = fresh.liveQueryState(terms)
     assert(n === live.length.toLong && freshN === n)
     assert(posts.collect().sortBy(p => (p.doc_id, p.term)) === freshPosts.collect().sortBy(p => (p.doc_id, p.term)))
+    // compaction folds the whole churn set in: same searches, live count and N
+    eng.compact()
+    assert(!eng.hasPendingDeltas)
+    assertSameSearches(eng, fresh, Seq("common word4", "term2 item10", "word3 term3 word3", "fresh"))
+    assert(eng.count() === live.length.toLong)
+    assert(graft.index.IndexManifest.read(s"${eng.dir}/index").nDocs === live.length.toLong)
   }
 }

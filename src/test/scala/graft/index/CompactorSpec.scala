@@ -38,8 +38,21 @@ class CompactorSpec extends SparkTestBase {
     // carry the base bounds so sharding is identical
     Checkpoints.commit(freshDir, "bounds", Map(
       "bounds" -> baseManifest.shardBounds.mkString(","), "numShards" -> cfg.numShards))
-    IndexBuilder.build(spark, liveDocs, tok, freshDir, cfg,
+    val freshManifest = IndexBuilder.build(spark, liveDocs, tok, freshDir, cfg,
       avgdlOverride = Some(baseManifest.avgdl))
+    // the merge derives its stats and metrics; they equal the fresh build's
+    assert(merged.nDocs === freshManifest.nDocs)
+    assert(merged.sumDl === freshManifest.sumDl)
+    for (m <- Seq("postings", "blocks", "compressedBytes", "vocabulary", "maxDf", "dfSkewRatio"))
+      assert(merged.metrics(m) === freshManifest.metrics(m), m)
+    // ... and are the written tables' own figures
+    import org.apache.spark.sql.functions._
+    val ts = spark.read.parquet(s"$mergedDir/termstats").agg(count(lit(1)), max($"df"), avg($"df")).head()
+    val pb = spark.read.parquet(s"$mergedDir/postings")
+      .agg(count(lit(1)), sum($"cnt"), sum(length($"docs") + length($"tfs") + length($"dls"))).head()
+    assert(Seq("vocabulary", "maxDf", "dfSkewRatio", "blocks", "postings", "compressedBytes").map(merged.metrics) ===
+      Seq(ts.getLong(0).toDouble, ts.getLong(1).toDouble, ts.getLong(1) / ts.getDouble(2),
+        pb.getLong(0).toDouble, pb.getLong(1).toDouble, pb.getLong(2).toDouble))
 
     def postingsSig(dir: String): Seq[String] = {
       val idx = new Bm25Index(spark, dir)
@@ -58,6 +71,11 @@ class CompactorSpec extends SparkTestBase {
         }
     }
     assert(postingsSig(mergedDir) === postingsSig(freshDir))
+    // upsert semantics do not rest on the caller: the updated doc 5 left out
+    // of `superseded` still replaces its base version
+    val upsertDir = tmpDir("cmp_upsert")
+    Compactor.merge(spark, baseDir, upsertDir, deltaDocs, superseded.filterNot(_ == 5L), tok, cfg)
+    assert(postingsSig(upsertDir) === postingsSig(freshDir))
 
     // search equivalence, bit-exact
     val qm = new Bm25Index(spark, mergedDir)

@@ -59,6 +59,15 @@ class IndexResumeSpec extends SparkTestBase {
     assert(t1 === t2, "termstats differ after resume")
     assert(m1.nDocs === m2.nDocs && m1.sumDl === m2.sumDl && m1.avgdl === m2.avgdl)
     assert(m1.shardBounds.toSeq === m2.shardBounds.toSeq)
+    for (k <- Seq("postings", "blocks", "compressedBytes", "bytesPerPosting", "vocabulary",
+                  "maxDf", "dfSkewRatio"))
+      assert(m1.metrics(k) === m2.metrics(k), s"content metric $k differs after resume")
+    // a crash after every stage committed: the content metrics are read
+    // back from the termstats checkpoint
+    Files.delete(Paths.get(crashed, "manifest.json"))
+    val m3 = IndexBuilder.build(spark, docs, Bm25Tokenizer.default, crashed, cfg)
+    for (k <- Seq("postings", "blocks", "compressedBytes", "vocabulary", "maxDf", "dfSkewRatio"))
+      assert(m3.metrics(k) === m1.metrics(k), s"content metric $k differs after a manifest-only resume")
     assert(resumeSeconds < 60, s"resume took ${resumeSeconds}s")
   }
 

@@ -104,7 +104,7 @@ class PlanAuditSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("audit_eng"),
       Seq(Doc("a", "base doc one"), Doc("b", "base doc two")))
     eng.upsert(Doc("c", "a fresh delta doc"))
-    val (live, _) = eng.deltaState()
+    val live = eng.liveDeltas()
     val plan = live.queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThan(seq"), s"seq filter not pushed to the log scan:\n$plan")
   }

@@ -12,12 +12,20 @@ import scala.jdk.CollectionConverters._
   */
 object JobRecorder {
   def apply[A](sc: SparkContext)(body: => A): (A, Seq[Seq[String]]) = {
+    val (result, jobs) = withCallSites(sc)(body)
+    (result, jobs.map(_.map(_._1)))
+  }
+
+  /** Like `apply`, with each stage's name paired with its long call site
+    * (the stack it was launched from).
+    */
+  def withCallSites[A](sc: SparkContext)(body: => A): (A, Seq[Seq[(String, String)]]) = {
     val group = s"job-recorder-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
-          jobs.add(e.stageInfos.map(_.name))
+          jobs.add(e.stageInfos.map(s => (s.name, s.details)))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "recorded")
@@ -30,4 +38,11 @@ object JobRecorder {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Whether a recorded stage is a parquet schema inference: a job launched
+    * from a `DataFrameReader.parquet` call, which a read with a known schema
+    * never runs. (Writes are `DataFrameWriter` call sites.)
+    */
+  def infersSchema(stage: (String, String)): Boolean =
+    stage._1.startsWith("parquet at") && stage._2.contains("DataFrameReader.parquet")
 }
