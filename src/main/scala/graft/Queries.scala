@@ -355,7 +355,7 @@ object Queries {
     *
     * Shape chosen for 100 TB, not just the test scale:
     *   - K (number of inverted lists) scales as √n (the classical IVF
-    *     balance point: probe cost ≈ K + nprobe·n/K), overridable;
+    *     balance point: probe cost ≈ K + nprobe·n/K);
     *   - centroid training is 5 rounds of distributed Lloyd's: assignment
     *     is a broadcast + narrow map; the update is a `reduceGroups`
     *     partial aggregation (map-side combine of (Σvec, count) pairs), so
@@ -371,39 +371,17 @@ object Queries {
     *     ScaNN-SOAR style): boundary vectors are reachable from either
     *     neighboring probe, which removes the seed-luck cliff in recall at
     *     the cost of 2× list volume;
-    *   - nprobe defaults to ⌈K/4⌉ (recall-biased; AnnRecallSpec holds
+    *   - nprobe is ⌈K/4⌉ (recall-biased; AnnRecallSpec holds
     *     recall@10 ≥ 0.9 at two scales AND on a sparse-id corpus).
     */
-  /** K above which the IVF path stops collecting/broadcasting centroids
-    * through the driver and routes to the centroids-as-a-table variant
-    * (the r4 judge's documented 10^5-cluster driver ceiling, made
-    * optional). 4096 × typical dims is comfortably under broadcast limits;
-    * past it the table path keeps everything in executors.
-    */
-  private[graft] val DriverCentroidCap = 4096
-
-  /** Shared IVF prologue: the vectors table (persisted — scanned once per
-    * Lloyd round + twice after) and the K/nprobe scaling rule.
-    */
-  private def ivfProlog(spark: SparkSession, sfDir: String,
-                        kOverride: Int, nprobeOverride: Int): (DataFrame, Int, Int) = {
+  def simAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    // the vectors, persisted: scanned once per Lloyd round and twice after
     val e = tbl(spark, sfDir, "embeddings")
       .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
       .persist()
-    val n = e.count()
-    val k = if (kOverride > 0) kOverride
-            else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = if (nprobeOverride > 0) nprobeOverride
-                 else math.max(4, math.ceil(k / 4.0).toInt) // recall-biased K/4
-    (e, k, nprobe)
-  }
-
-  def simAnnIvf(spark: SparkSession, sfDir: String,
-                kOverride: Int = 0, nprobeOverride: Int = 0): DataFrame = {
-    import spark.implicits._
-    val (e, k, nprobe) = ivfProlog(spark, sfDir, kOverride, nprobeOverride)
-    if (k > DriverCentroidCap) return simAnnIvfDistributedImpl(spark, e, k, nprobe)
+    val k = math.max(16, math.ceil(math.sqrt(e.count().toDouble)).toInt)
+    val nprobe = math.max(4, math.ceil(k / 4.0).toInt) // recall-biased K/4
     def cos(a: Array[Double], b: Array[Double]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
@@ -480,134 +458,6 @@ object Queries {
       .orderBy($"cos_r".desc, $"vec_id")
       .limit(10)
   }
-
-  /** Test/benchmark hook for the centroids-as-a-table IVF path (the
-    * automatic route fires only past [[DriverCentroidCap]]).
-    */
-  def simAnnIvfDistributed(spark: SparkSession, sfDir: String,
-                           kOverride: Int = 0, nprobeOverride: Int = 0): DataFrame = {
-    val (e, k, nprobe) = ivfProlog(spark, sfDir, kOverride, nprobeOverride)
-    simAnnIvfDistributedImpl(spark, e, k, nprobe)
-  }
-
-  /** Centroids-as-a-table IVF — the scale path past the K×dim driver
-    * ceiling: seeds, Lloyd updates, spill assignment and the probe ranking
-    * all stay in executors; the driver only ever sees row counts and the
-    * nprobe-sized probe id list.
-    *
-    *   - seeds: the SAME deterministic k-smallest-ids draw as the local
-    *     path (so both paths converge to the same centroids and one recall
-    *     rule gates both), gathered by TakeOrdered into one executor task —
-    *     never the driver; the centroid id is the seed's own vec_id, so no
-    *     dense relabeling. If K×dim ever outgrows a task, the narrow hash
-    *     draw (`xxhash64(vec_id) % ⌈n/K⌉ = 0`) is the no-gather swap-in —
-    *     at sf0.01 it costs ~0.3 recall@10 against this data's optimum, so
-    *     it is not the default;
-    *   - assignment: vectors × broadcast(centroid TABLE) cross join; the
-    *     per-vector best/best-2 folds are associative, so the partial
-    *     hash-agg / reduceGroups combine collapses the K-fold map-side and
-    *     each Lloyd round shuffles one row per VECTOR, not per pair;
-    *   - update: (sum, count) reduceGroups per centroid (map-side
-    *     combined), empty clusters keep their previous centroid; lineage
-    *     cut per round with localCheckpoint (the dedup_clusters pattern);
-    *   - same top-2 spill assignment and ⌈K/4⌉ multiprobe as the driver
-    *     path, so AnnRecallSpec gates both paths with one rule.
-    *
-    * Past broadcast limits (K×dim over ~8 GB) Spark would need the cross
-    * join unbroadcast — at that point a coarse quantizer (two-level IVF)
-    * is the real design; documented bound, same class as the reference's
-    * single-node memory ceiling.
-    */
-  private def simAnnIvfDistributedImpl(spark: SparkSession, e: DataFrame,
-                                       k: Int, nprobe: Int): DataFrame = {
-    import spark.implicits._
-    def withNorm(df: DataFrame, vcol: String, out: String): DataFrame =
-      df.withColumn(out, sqrt(expr(
-        s"aggregate(transform($vcol, x -> x * x), cast(0 as double), (s, p) -> s + p)")))
-    // cos(v, cv) as a codegen'd column (zero-norm → -1, like the local cos)
-    def simCol: org.apache.spark.sql.Column =
-      when($"nv" === 0.0 || $"ncv" === 0.0, lit(-1.0)).otherwise(
-        expr("aggregate(zip_with(v, cv, (x, y) -> x * y), cast(0 as double), (s, p) -> s + p)")
-          / ($"nv" * $"ncv"))
-
-    val ev = withNorm(e, "v", "nv").persist()
-    var cents = withNorm(
-      ev.orderBy($"vec_id").limit(k).select($"vec_id".as("cid"), $"v".as("cv")),
-      "cv", "ncv")
-      .localCheckpoint(true)
-    // the seed scan above materialized ev, which supersedes the prologue's
-    // vectors cache for the rest of the job — holding both would double
-    // cache pressure exactly at the scale this path exists for
-    e.unpersist(blocking = false)
-
-    for (_ <- 1 to 5) {
-      val scored = ev.crossJoin(broadcast(cents)).withColumn("sim", simCol)
-      // best cid per vector — partial max_by collapses the K rows map-side;
-      // ties break to the lowest cid (the local path's first-wins order)
-      val best = scored.groupBy($"vec_id").agg(
-        max_by($"cid", struct($"sim", -$"cid")).as("cid"), first($"v").as("v"))
-      val updated = best.select($"cid", $"v").as[(Long, Seq[Double])]
-        .map { case (cid, v) => (cid, (v.toArray, 1L)) }
-        .groupByKey(_._1)
-        .reduceGroups { (a: (Long, (Array[Double], Long)), b: (Long, (Array[Double], Long))) =>
-          val (s1, n1) = a._2; val (s2, n2) = b._2
-          val sum = new Array[Double](s1.length)
-          var i = 0
-          while (i < s1.length) { sum(i) = s1(i) + s2(i); i += 1 }
-          (a._1, (sum, n1 + n2))
-        }
-        .map { case (cid, (_, (sum, cnt))) => (cid, sum.toSeq.map(_ / cnt)) }
-        .toDF("cid", "cv")
-      val kept = cents.select($"cid", $"cv")
-        .join(updated, Seq("cid"), "left_anti")
-      cents = withNorm(updated.unionByName(kept), "cv", "ncv").localCheckpoint(true)
-    }
-
-    // top-2 spill assignment via an associative best-2 fold (state:
-    // (c1, s1, c2, s2)); merge keeps the global best two by (sim, -cid)
-    val scored = ev.crossJoin(broadcast(cents)).withColumn("sim", simCol)
-      .select($"vec_id", $"cid", $"sim").as[(Long, Long, Double)]
-    def better(s: Double, c: Long, s2: Double, c2: Long): Boolean =
-      s > s2 || (s == s2 && c < c2)
-    val assigned = scored
-      .map { case (id, cid, sim) => (id, (cid, sim, -1L, -3.0)) }
-      .groupByKey(_._1)
-      .reduceGroups { (a: (Long, (Long, Double, Long, Double)), b: (Long, (Long, Double, Long, Double))) =>
-        val cands = Seq((a._2._1, a._2._2), (a._2._3, a._2._4), (b._2._1, b._2._2), (b._2._3, b._2._4))
-          .filter(_._1 >= 0L)
-        val sorted = cands.sortWith((x, y) => better(x._2, x._1, y._2, y._1))
-        val (c1, s1) = sorted.head
-        val (c2, s2) = if (sorted.length > 1) sorted(1) else (-1L, -3.0)
-        (a._1, (c1, s1, c2, s2))
-      }
-      .map { case (_, (id, (c1, _, c2, _))) => (id, c1, c2) }
-      .toDF("vec_id", "c1", "c2")
-
-    // probe ranking: centroids × broadcast query row; only nprobe ids ever
-    // reach the driver-side of the plan (as a broadcast semi-join input)
-    val q = ev.where($"vec_id" === 0).select($"v".as("qv"), $"nv".as("nq"))
-    val qSim = when($"ncv" === 0.0 || $"nq" === 0.0, lit(-1.0)).otherwise(
-      expr("aggregate(zip_with(cv, qv, (x, y) -> x * y), cast(0 as double), (s, p) -> s + p)")
-        / ($"ncv" * $"nq"))
-    val probeIds = cents.crossJoin(broadcast(q)).withColumn("sim", qSim)
-      .orderBy($"sim".desc, $"cid").limit(nprobe).select($"cid")
-    val probed = assigned.join(broadcast(probeIds.withColumnRenamed("cid", "c1")), Seq("c1"), "left_semi")
-      .unionByName(
-        assigned.join(broadcast(probeIds.withColumnRenamed("cid", "c2")), Seq("c2"), "left_semi"))
-      .select($"vec_id").distinct()
-
-    probed.where($"vec_id" =!= 0)
-      .join(ev.select($"vec_id", $"v", $"nv"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("sim",
-        when($"nv" === 0.0 || $"nq" === 0.0, lit(-1.0)).otherwise(
-          expr("aggregate(zip_with(v, qv, (x, y) -> x * y), cast(0 as double), (s, p) -> s + p)")
-            / ($"nv" * $"nq")))
-      .select($"vec_id", (rint($"sim" * 10000) / 10000).as("cos_r"))
-      .orderBy($"cos_r".desc, $"vec_id")
-      .limit(10)
-  }
-
 
   // ================================================================ queries
 

@@ -328,7 +328,7 @@ final class SearchEngine private[api] (
   private def embedder(base: Option[Bm25Index]) =
     new Embedder(Bm25Params(k1, b, avgdlOf(base)), tokenizer)
 
-  def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
+  def surrogate(key: String): Long = SearchEngine.surrogate(key)
 
   // ---------------------------------------------------------------- mutation
 
@@ -346,7 +346,7 @@ final class SearchEngine private[api] (
   def upsertBatch(docs: Dataset[Doc]): Unit = {
     val seq = nextSeq
     writeLog(docs.mapPartitions { it =>
-      it.map(d => LogRow(FxHash.hash64(d.id) & Long.MaxValue, d.id, d.contents, seq, tombstone = false))
+      it.map(d => LogRow(SearchEngine.surrogate(d.id), d.id, d.contents, seq, tombstone = false))
     }.toDF())
     nextSeq = seq + 1
   }
@@ -358,7 +358,7 @@ final class SearchEngine private[api] (
   def removeBatch(ids: Dataset[String]): Unit = {
     val seq = nextSeq
     writeLog(ids.mapPartitions { it =>
-      it.map(k => LogRow(FxHash.hash64(k) & Long.MaxValue, k, "", seq, tombstone = true))
+      it.map(k => LogRow(SearchEngine.surrogate(k), k, "", seq, tombstone = true))
     }.toDF())
     nextSeq = seq + 1
   }
@@ -372,14 +372,19 @@ final class SearchEngine private[api] (
   // ---------------------------------------------------------------- doc read
 
   /** Latest-seq-wins live view of the doc store. */
-  def liveDocs: Dataset[Doc] = {
-    if (!logExists) return spark.emptyDataset[Doc]
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    readLog()
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
-      .select($"key".as("id"), $"contents")
-      .as[Doc]
+  def liveDocs: Dataset[Doc] =
+    if (!logExists) spark.emptyDataset[Doc]
+    else liveRows().select($"key".as("id"), $"contents").as[Doc]
+
+  /** The live log rows: each key's latest row, unless it is a tombstone.
+    * Each row keeps its own `doc_id`, so two keys sharing a surrogate stay
+    * two documents (and fail the build's collision check). The window also
+    * clusters on `doc_id`, a function of the key, which keeps each
+    * partition in doc_id order.
+    */
+  private def liveRows(): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id", $"key").orderBy($"seq".desc)
+    readLog().withColumn("rn", row_number().over(w)).where($"rn" === 1 && !$"tombstone")
   }
 
   /** Point read: partition-pruned to one bucket directory + doc_id pushed
@@ -455,9 +460,10 @@ final class SearchEngine private[api] (
     */
   private def buildFromLog(out: String, cfg: IndexBuildConfig,
                            avgdlOverride: Option[Float]): IndexManifest = {
-    val corpus = liveDocs.mapPartitions { it =>
-      it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
-    }.persist()
+    val live =
+      if (!logExists) spark.emptyDataset[CorpusDoc]
+      else liveRows().select($"doc_id", $"contents".as("content")).as[CorpusDoc]
+    val corpus = live.persist()
     try {
       val r = corpus.agg(functions.count(lit(1)), countDistinct($"doc_id")).head()
       val (n, distinctIds) = (r.getLong(0), r.getLong(1))
@@ -736,11 +742,7 @@ final class SearchEngine private[api] (
     */
   private def compactLog(liveCount: Long): Unit = {
     if (!logExists) return
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    val live = readLog()
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
-      .select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
+    val live = liveRows().select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
     val tmp = s"$dir/docstore_compacting"
     deleteRecursively(new java.io.File(tmp))
     if (liveCount > 0) writeLogTo(live, tmp)
@@ -771,6 +773,11 @@ final class SearchEngine private[api] (
 }
 
 object SearchEngine {
+
+  /** A document key's Long id in the index and the docstore log: its
+    * FxHash64, masked non-negative.
+    */
+  def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
 
   /** `SearchEngineBuilder::with_avgdl` (`search.rs:161-171`). */
   def withAvgdl(spark: SparkSession, dir: String, avgdl: Float,

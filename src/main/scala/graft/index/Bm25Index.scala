@@ -12,6 +12,32 @@ final case class Posting(doc_id: Long, term: Long, tf: Int, dl: Int)
 
 final case class ScoredDoc(doc_id: Long, score: Float)
 
+/** The WAND fan-out's doc sub-ranges: shard `s` covers the doc ids in
+  * [low, high) of the index's shard bounds, split into `perShard` slices of
+  * equal width, the last absorbing the remainder. Blocks are routed with
+  * `rangeOf` and each fan-out task filters its postings to `range`.
+  */
+private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int) {
+  private def low(s: Int): Long = math.max(0L, if (s == 0) Long.MinValue else bounds(s - 1))
+  private def high(s: Int): Long = if (s >= bounds.length) Long.MaxValue else bounds(s)
+  private def width(s: Int): Long = {
+    val span = high(s) - low(s)
+    math.max(1L, (if (span < 0) Long.MaxValue else span) / perShard)
+  }
+
+  /** The sub-range of shard `s` that holds `doc`. */
+  def rangeOf(s: Int, doc: Long): Int =
+    if (perShard <= 1) 0 else math.min(perShard - 1, ((doc - low(s)) / width(s)).toInt)
+
+  /** Sub-range `r` of shard `s` as inclusive doc bounds. */
+  def range(s: Int, r: Int): (Long, Long) =
+    if (perShard <= 1) (Long.MinValue, Long.MaxValue)
+    else {
+      val a = low(s) + r.toLong * width(s)
+      (a, if (r == perShard - 1) Long.MaxValue else a + width(s) - 1)
+    }
+}
+
 /** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan):
   * driver-side query embedding (pure function, no job) → term-stat lookup
   * with bucket/row-group pruning → pruned posting-block scan → per-candidate
@@ -229,21 +255,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     // it overlaps (cursors filter decoded postings to their range), so the
     // task count scales with the cluster instead of the shard count.
     val numShards = manifest.numShards
-    val rangesPerShard = wandFanoutRangesPerShard
-    val shardBounds = manifest.shardBounds
-    def shardLow(s: Int): Long =
-      math.max(0L, if (s == 0) Long.MinValue else shardBounds(s - 1))
-    def shardHigh(s: Int): Long =
-      if (s >= shardBounds.length) Long.MaxValue else shardBounds(s)
-    // [low, high) split into R slices; the last slice absorbs the remainder
-    def rangeOf(shard: Int, doc: Long): Int = {
-      if (rangesPerShard <= 1) return 0
-      val lo = shardLow(shard)
-      val span = shardHigh(shard) - lo
-      val width = math.max(1L, (if (span < 0) Long.MaxValue else span) / rangesPerShard)
-      math.min(rangesPerShard - 1, ((doc - lo) / width).toInt)
-    }
-    val rps = rangesPerShard
+    val ranges = FanoutRanges(manifest.shardBounds, wandFanoutRangesPerShard)
     val blocks = postingsTable
       .where($"term".isin(present: _*))
       .select($"shard", $"term", $"block", $"cnt", $"max_tf", $"min_dl",
@@ -251,16 +263,15 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       .as[(Int, Long, Int, Int, Int, Int, Long, Long, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (shard, term, block, cnt, maxTf, minDl, minDoc, maxDoc, d, t, l) =>
         val _ = block // block ids are per build-slice; readers order by min_doc
-        val r0 = rangeOf(shard, minDoc)
-        val r1 = rangeOf(shard, maxDoc)
+        val r0 = ranges.rangeOf(shard, minDoc)
+        val r1 = ranges.rangeOf(shard, maxDoc)
         (r0 to r1).iterator.map(r =>
           (shard, r, term, minDoc, cnt, maxTf, minDl, d, t, l))
       }
       .toDF("shard", "rng", "term", "min_doc", "cnt", "max_tf", "min_dl", "docs", "tfs", "dls")
-      .repartition(math.max(numShards * rps, spark.sparkContext.defaultParallelism),
+      .repartition(math.max(numShards * ranges.perShard, spark.sparkContext.defaultParallelism),
         $"shard", $"rng")
       .as[(Int, Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-    val boundsB = spark.sparkContext.broadcast(shardBounds)
     blocks.mapPartitions { it =>
       val occ = qOccB.value
       val idfMap = idfB.value
@@ -274,29 +285,12 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
           else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
 
-      // per-(shard, sub-range) doc bounds, recomputed from the broadcast
-      // shard bounds (pure function of (shard, rng))
-      val boundsArr = boundsB.value
-      def pShardLow(s: Int): Long =
-        math.max(0L, if (s == 0) Long.MinValue else boundsArr(s - 1))
-      def pShardHigh(s: Int): Long =
-        if (s >= boundsArr.length) Long.MaxValue else boundsArr(s)
-      def pRange(s: Int, r: Int): (Long, Long) = { // inclusive [lo, hi]
-        if (rps <= 1) return (Long.MinValue, Long.MaxValue)
-        val lo = pShardLow(s)
-        val span = pShardHigh(s) - lo
-        val width = math.max(1L, (if (span < 0) Long.MaxValue else span) / rps)
-        val a = lo + r.toLong * width
-        val b = if (r == rps - 1) Long.MaxValue else a + width - 1
-        (a, b)
-      }
-
       // (shard, rng) → term → blocks ordered by block index
       val byGroup = new java.util.HashMap[Long, java.util.HashMap[Long, java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]]]()
       val groupRange = new java.util.HashMap[Long, (Long, Long)]()
       it.foreach { case (shard, rng, term, minDoc, cnt, maxTf, minDl, d, t, l) =>
         val key = (shard.toLong << 32) | (rng.toLong & 0xFFFFFFFFL)
-        groupRange.computeIfAbsent(key, _ => pRange(shard, rng))
+        groupRange.computeIfAbsent(key, _ => ranges.range(shard, rng))
         byGroup.computeIfAbsent(key, _ => new java.util.HashMap())
           .computeIfAbsent(term, _ => new java.util.ArrayList())
           .add((minDoc, cnt, maxTf, minDl, d, t, l))

@@ -52,7 +52,6 @@ final case class IndexBuildConfig(
     blockSize: Int = 128,
     termBuckets: Int = 64,
     shardGroups: Int = 4, // checkpoint granularity for the postings stage
-    saltBuckets: Int = 16, // two-phase (salted) df aggregation fan-out
     postingTasks: Int = 0, // shuffle tasks for the postings stage (0 = 3x parallelism)
     // escape valve for pathologically hot terms: split each (shard,
     // term-prefix) merge group into 2^k doc-range slices so no reduce task
@@ -124,6 +123,19 @@ object IndexBuilder {
       for (i <- 0 until n) { a(2 * i + 1) += r.getLong(i); a(2 * i + 2) = math.max(a(2 * i + 2), r.getLong(i)) }
       a
     }, (a, b) => Array.tabulate(2 * n + 1)(i => if (i % 2 == 0 && i > 0) math.max(a(i), b(i)) else a(i) + b(i)))
+  }
+
+  /** Runs `body` on a new thread. A thread inherits the Spark local
+    * properties of the thread that starts it, so the body's jobs carry the
+    * caller's job group and description; a pooled thread would carry the
+    * ones current when the pool created it.
+    */
+  private def concurrently[A](body: => A): scala.concurrent.Future[A] = {
+    val p = scala.concurrent.Promise[A]()
+    val t = new Thread(() => try p.success(body) catch { case e: Throwable => p.failure(e) })
+    t.setDaemon(true)
+    t.start()
+    p.future
   }
 
   private def checkpoint(indexDir: String, name: String) =
@@ -200,10 +212,9 @@ object IndexBuilder {
     // output, so it overlaps with the postings stage instead of serializing
     // the build (its result is not needed until the manifest is written).
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     val statsF: Future[(Long, Long)] = checkpoint(indexDir, "stats") match {
       case Some(n) => Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
-      case None => Future {
+      case None => concurrently {
         val (n, s) = docStats(IndexTables.forward(spark, indexDir))
         Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s))
         (n, s)
@@ -218,7 +229,7 @@ object IndexBuilder {
     // prunable order vs wide forward rows in ingest order.
     val docidsF: Future[Unit] =
       if (Checkpoints.isDone(indexDir, "docids")) Future.successful(())
-      else Future {
+      else concurrently {
         writeDocIds(spark, indexDir, cfg.numShards)
         Checkpoints.commit(indexDir, "docids", Map("seconds" -> 0))
       }
@@ -423,10 +434,10 @@ object IndexBuilder {
   private[graft] def buildTermstats(spark: SparkSession, indexDir: String,
                                     cfg: IndexBuildConfig): Map[String, Double] = {
     import spark.implicits._
-    // salt on block id: partial sums per (term, salt), then final merge —
-    // bounds any single reducer's load for pathologically hot terms.
+    // salt on block id (16 salts): partial sums per (term, salt), then final
+    // merge — bounds any single reducer's load for pathologically hot terms.
     val partial = IndexTables.postings(spark, indexDir)
-      .groupBy($"term", pmod($"block", lit(cfg.saltBuckets)).as("salt"))
+      .groupBy($"term", pmod($"block", lit(16)).as("salt"))
       .agg(sum($"cnt").as("c"), count(lit(1)).as("nb"),
         sum(length($"docs") + length($"tfs") + length($"dls")).as("nby"))
     val perTerm = partial.groupBy($"term")

@@ -28,33 +28,6 @@ class AnnRecallSpec extends SparkTestBase {
     assert(r >= 0.9, s"recall@10 = $r at sf0.01")
   }
 
-  private def recallDistributedAt(sf: String): Double = {
-    val exact = Queries.all("sim_cosine_topk")(spark, sf)
-      .collect().take(10).map(_.getLong(0)).toSet
-    val ann = Queries.simAnnIvfDistributed(spark, sf)
-      .collect().map(_.getLong(0)).toSet
-    exact.intersect(ann).size.toDouble / 10.0
-  }
-
-  test("centroids-as-a-table IVF recall@10 ≥ 0.9 (sf0.001)") {
-    val r = recallDistributedAt("/root/testdata/sf0.001")
-    assert(r >= 0.9, s"distributed-path recall@10 = $r at sf0.001")
-  }
-
-  test("centroids-as-a-table IVF recall@10 ≥ 0.9 (sf0.01)") {
-    val r = recallDistributedAt("/root/testdata/sf0.01")
-    assert(r >= 0.9, s"distributed-path recall@10 = $r at sf0.01")
-  }
-
-  test("K above DriverCentroidCap routes to the centroids-as-a-table path") {
-    // with K > n every vector seeds its own centroid; the route must still
-    // return a valid top-10 (the driver path would have collected K×dim)
-    val rows = Queries.simAnnIvf(spark, "/root/testdata/sf0.001",
-      kOverride = Queries.DriverCentroidCap + 1).collect()
-    assert(rows.length === 10)
-    assert(rows.forall(_.getLong(0) != 0L))
-  }
-
   test("sim_ann_ivf recall@10 ≥ 0.9 on a SPARSE-id corpus (no dense-id seeding assumption)") {
     import org.apache.spark.sql.functions._
     // remap vec_id -> vec_id*9973 + 101 (collision-free affine map), except

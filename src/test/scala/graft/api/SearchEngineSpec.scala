@@ -622,13 +622,34 @@ class SearchEngineSpec extends SparkTestBase {
 
   test("buildBase runs at most 21 Spark jobs and infers no parquet schema") {
     import org.apache.spark.graft.JobRecorder
+    // an earlier build, outside the recorder: threads it leaves behind must
+    // not run the next build's stages under a stale job group
+    SearchEngine.withDocuments(spark, tmpDir("buildjobs0"), enRecipes.take(5))
     val eng = SearchEngine.withAvgdl(spark, tmpDir("buildjobs"), 10.0f)
     eng.upsert(enRecipes)
     val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.buildBase())
     assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
-    // 21 with the concurrent stats and docids jobs; the recorder may miss
-    // those when a pooled thread started under another job group runs them
-    assert(jobs.length <= 21, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    // the concurrent stats and docids stages run under the caller's job group
+    for (stage <- Seq("IndexBuilder$.docStats", "IndexBuilder$.writeDocIds"))
+      assert(jobs.exists(_.exists(_._2.contains(stage))), s"no $stage job: ${jobs.map(_.map(_._1))}")
+    // the traced benchmark's index.build.jobs
+    assert(jobs.length === 21, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+  }
+
+  test("two live keys with one surrogate fail the build's collision check") {
+    import org.apache.spark.sql.functions.{lit, pmod}
+    import spark.implicits._
+    val dir = tmpDir("collide")
+    val eng = SearchEngine.withAvgdl(spark, dir, 3.0f)
+    eng.upsert(Doc("a", "grilled cheese sandwich"))
+    // a row of key "b" that hashes like "a", appended in the log's layout
+    Seq(LogRow(eng.surrogate("a"), "b", "bacon avocado toast", 1L, tombstone = false)).toDF()
+      .withColumn("bucket", pmod($"doc_id", lit(16L)))
+      .write.mode("append").partitionBy("bucket").parquet(s"$dir/docstore")
+    val built = intercept[IllegalArgumentException] { eng.buildBase() }
+    assert(built.getMessage.contains("collision"), built.getMessage)
+    val compacted = intercept[IllegalArgumentException] { SearchEngine.open(spark, dir).compact() }
+    assert(compacted.getMessage.contains("collision"), compacted.getMessage)
   }
 
   test("the first search on a freshly opened engine infers no parquet schema") {

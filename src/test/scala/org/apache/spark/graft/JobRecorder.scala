@@ -1,7 +1,9 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.jdk.CollectionConverters._
 
@@ -17,15 +19,25 @@ object JobRecorder {
   }
 
   /** Like `apply`, with each stage's name paired with its long call site
-    * (the stack it was launched from).
+    * (the stack it was launched from). A job of a SQL execution also carries
+    * the execution's call site: adaptive execution submits its jobs from a
+    * pool thread whose stack names no caller.
     */
   def withCallSites[A](sc: SparkContext)(body: => A): (A, Seq[Seq[(String, String)]]) = {
     val group = s"job-recorder-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
+    val executionSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executionSites.put(s.executionId.toString, s.details)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
-          jobs.add(e.stageInfos.map(s => (s.name, s.details)))
+        if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)) {
+          val site = Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .flatMap(id => Option(executionSites.get(id))).fold("")("\n" + _)
+          jobs.add(e.stageInfos.map(s => (s.name, s.details + site)))
+        }
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "recorded")
