@@ -42,11 +42,9 @@ object Queries {
     */
   def cachedIndex(spark: SparkSession, sfDir: String, kind: String, tok: TextTokenizer): String = {
     val safe = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
-    // version+layout-stamped dir: stale caches from older on-disk formats
-    // are never picked up (IndexManifest.read fail-fasts on a VERSION
-    // mismatch; LayoutRev additionally rebuilds when an additive sidecar
-    // layout lands without a version bump)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_idx_v${graft.index.IndexManifest.CurrentVersion}${graft.index.IndexManifest.LayoutRev}_${safe}_$kind"
+    // version-stamped dir: stale caches from older on-disk formats are
+    // never picked up (IndexManifest.read fail-fasts on a VERSION mismatch)
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_idx_v${graft.index.IndexManifest.CurrentVersion}_${safe}_$kind"
     import spark.implicits._
     val corpus = docs(spark, sfDir).selectExpr("doc_id", "text as content").as[CorpusDoc]
     IndexBuilder.build(spark, corpus, tok, dir,
@@ -65,7 +63,7 @@ object Queries {
     import spark.implicits._
     val safe = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
     val variant = if (compacted) "cmp" else "live"
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_eng_v${graft.index.IndexManifest.CurrentVersion}${graft.index.IndexManifest.LayoutRev}_${safe}_$variant"
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_eng_v${graft.index.IndexManifest.CurrentVersion}_${safe}_$variant"
     val marker = new java.io.File(s"$dir/_lifecycle_done")
     if (!marker.exists()) {
       def rm(f: java.io.File): Unit = {

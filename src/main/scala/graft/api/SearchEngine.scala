@@ -18,6 +18,11 @@ final case class SearchResult(id: String, contents: String, score: Float)
 private[api] final case class LogRow(doc_id: Long, key: String, contents: String,
                                      seq: Long, tombstone: Boolean)
 
+/** One changed doc of the post-base churn: its latest row's tombstone flag
+  * and, when live, its token count and the tf of each query term.
+  */
+private[api] final case class ChangedDoc(doc_id: Long, tombstone: Boolean, dl: Int, tfs: Array[Int])
+
 /** What identifies one base index generation on disk (see `baseIndex`). */
 private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
                                         manifestModified: java.nio.file.attribute.FileTime,
@@ -30,19 +35,22 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *   - the doc store is a parquet append log (key, contents, seq, tombstone)
   *     — the reference's `HashMap<K, String>` (`search.rs:52-59`);
   *   - `upsert`/`remove` append delta rows (I1/I2 in SURVEY §2.4): the base
-  *     index is immutable; each search collects the post-base churn set once
-  *     and corrects df/N exactly from it (base df − superseded base docs +
-  *     live delta docs) — so scores equal a from-scratch reference engine
-  *     over the same live docs;
+  *     index is immutable; each search makes one pass over the post-base
+  *     churn (each changed doc's id, tombstone flag, token count and
+  *     query-term tfs, embedded in executors and collected) and corrects
+  *     df/N exactly from it (base df − superseded base docs + live changed
+  *     docs) — so scores equal a from-scratch reference engine over the
+  *     same live docs;
   *   - `compact()` folds deltas into a fresh base (distributed build) and
   *     re-seals the log seq;
-  *   - `search(query, limit)` = embed query → live df/N → block-max WAND
-  *     over the base with the superseded docs excluded (unbounded k, so
-  *     nothing pruned, for an unlimited search) + the delta docs scored in
-  *     executors with the same f32 fold in query-occurrence order → driver
-  *     merge → contents lookup (`search.rs:118-132`): the ≤ k hits' contents
-  *     come from one pruned docstore scan, resolved latest-seq-wins on the
-  *     driver.
+  *   - `search(query, limit)` = embed query → churn pass → live df/N (the
+  *     base df plus one forward-table probe of the changed ids) →
+  *     block-max WAND over the base with the superseded docs excluded
+  *     (unbounded k, so nothing pruned, for an unlimited search) + the live
+  *     changed docs scored on the driver with the same f32 fold in
+  *     query-occurrence order → merge → contents lookup
+  *     (`search.rs:118-132`): the ≤ k hits' contents come from one pruned
+  *     docstore scan, resolved latest-seq-wins on the driver.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -177,6 +185,13 @@ final class SearchEngine private[api] (
     deleteRecursively(new java.io.File(s"$dir/docstore_compacting"))
   }
 
+  /** How many log data files the driver-side footer scan will read before
+    * deferring to the distributed aggregate (which parallelizes footer
+    * reads across the cluster). Declared before `nextSeq`: the class body
+    * initialises in order, and `nextSeq`'s open-time scan reads it.
+    */
+  private val FooterScanMaxFiles = 64
+
   private var nextSeq: Long = currentMaxSeq() + 1
 
   private def logExists: Boolean =
@@ -211,12 +226,6 @@ final class SearchEngine private[api] (
         postBaseLogScan(marker).agg(coalesce(max($"seq"), lit(marker))).head().getLong(0))
     }
   }
-
-  /** How many log data files the driver-side footer scan will read before
-    * deferring to the distributed aggregate (which parallelizes footer
-    * reads across the cluster).
-    */
-  private val FooterScanMaxFiles = 64
 
   /** Driver-side max(seq) from parquet footer statistics: Some(max(marker,
     * global max)) when every populated row group carries exact non-null
@@ -332,9 +341,12 @@ final class SearchEngine private[api] (
 
   // ---------------------------------------------------------------- mutation
 
-  def upsert(docs: Seq[Doc]): Unit = appendLog(docs.zipWithIndex.map { case (d, i) =>
-    LogRow(surrogate(d.id), d.id, d.contents, nextSeq + i, tombstone = false)
-  })
+  def upsert(docs: Seq[Doc]): Unit = {
+    docs.foreach(SearchEngine.requireDoc)
+    appendLog(docs.zipWithIndex.map { case (d, i) =>
+      LogRow(surrogate(d.id), d.id, d.contents, nextSeq + i, tombstone = false)
+    })
+  }
 
   def upsert(doc: Doc): Unit = upsert(Seq(doc))
 
@@ -346,19 +358,27 @@ final class SearchEngine private[api] (
   def upsertBatch(docs: Dataset[Doc]): Unit = {
     val seq = nextSeq
     writeLog(docs.mapPartitions { it =>
-      it.map(d => LogRow(SearchEngine.surrogate(d.id), d.id, d.contents, seq, tombstone = false))
+      it.map { d =>
+        SearchEngine.requireDoc(d)
+        LogRow(SearchEngine.surrogate(d.id), d.id, d.contents, seq, tombstone = false)
+      }
     }.toDF())
     nextSeq = seq + 1
   }
 
-  def remove(id: String): Unit = appendLog(Seq(
-    LogRow(surrogate(id), id, "", nextSeq, tombstone = true)))
+  def remove(id: String): Unit = {
+    SearchEngine.requireKey(id)
+    appendLog(Seq(LogRow(surrogate(id), id, "", nextSeq, tombstone = true)))
+  }
 
   /** Distributed batch remove (tombstones written in executors). */
   def removeBatch(ids: Dataset[String]): Unit = {
     val seq = nextSeq
     writeLog(ids.mapPartitions { it =>
-      it.map(k => LogRow(SearchEngine.surrogate(k), k, "", seq, tombstone = true))
+      it.map { k =>
+        SearchEngine.requireKey(k)
+        LogRow(SearchEngine.surrogate(k), k, "", seq, tombstone = true)
+      }
     }.toDF())
     nextSeq = seq + 1
   }
@@ -510,20 +530,31 @@ final class SearchEngine private[api] (
   private[graft] def liveDeltas(marker: Long = baseMarker()): Dataset[(Long, String)] =
     changedState(marker).where(!$"tombstone").select($"doc_id", $"contents").as[(Long, String)]
 
-  /** The post-base churn set: every changed doc's id and whether its latest
-    * row is a tombstone, sorted by id. Collected once per operation (not
-    * even planned when nothing is pending), it is the superseded set the
-    * base side excludes and, with `liveDocCount`, gives the live N.
+  /** The post-base churn set in one pass, sorted by id: each changed doc's
+    * id, whether its latest row is a tombstone, and for a live one its
+    * token count and the tf of each of `terms` (in `terms` order). The
+    * post-base window feeds an executor-side embed, so contents never leave
+    * the executors; tombstones, and calls without terms, skip the embed
+    * (and without terms the scan skips the contents column). Not even
+    * planned when nothing is pending.
     */
-  private def churn(marker: Long): Array[(Long, Boolean)] =
+  private def churn(marker: Long, terms: Array[Long], emb: Embedder): Array[ChangedDoc] =
     if (!pendingDeltas(marker)) Array.empty
-    else changedState(marker).select($"doc_id", $"tombstone").as[(Long, Boolean)].collect().sortBy(_._1)
-
-  /** Live N: base docs, minus the changed ids the base holds, plus the
-    * changed docs whose latest row is live.
-    */
-  private def liveDocCount(base: Option[Bm25Index], churn: Array[(Long, Boolean)]): Long =
-    base.fold(0L)(idx => idx.nDocs - countInBase(idx, churn.map(_._1))) + churn.count(!_._2)
+    else {
+      val contents = if (terms.isEmpty) lit("") else $"contents"
+      changedState(marker).select($"doc_id", $"tombstone", contents).as[(Long, Boolean, String)]
+        .mapPartitions { it =>
+          it.map { case (id, tombstone, text) =>
+            val tfs = new Array[Int](terms.length)
+            if (tombstone || terms.isEmpty) ChangedDoc(id, tombstone, 0, tfs)
+            else {
+              val (docTerms, docTfs, dl) = emb.termFrequencies(text)
+              for (i <- docTerms.indices; j = terms.indexOf(docTerms(i)) if j >= 0) tfs(j) = docTfs(i)
+              ChangedDoc(id, tombstone, dl, tfs)
+            }
+          }
+        }.collect().sortBy(_.doc_id)
+    }
 
   /** `df`'s rows whose doc_id is (`in`) or is not among the sorted `ids`: a
     * literal IN list pushed into the scan for up to `MaxInProbe` ids (the
@@ -536,28 +567,23 @@ final class SearchEngine private[api] (
       df.where(if (in) isIn else !isIn)
     } else df.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"), if (in) "left_semi" else "left_anti")
 
-  /** How many of `ids` the base holds, probed on its sorted doc-id sidecar. */
-  private def countInBase(idx: Bm25Index, ids: Array[Long]): Long =
-    if (ids.isEmpty) 0L else whereIds(idx.docIdsTable, ids, in = true).count()
+  /** The base's forward rows among the sorted `ids`, as one 0/1 column per
+    * term: whether the doc holds it (exposed for the plan audit: the id
+    * filter reaches the scan, which reads `doc_id` and `terms` only).
+    */
+  private[graft] def probeRows(idx: Bm25Index, ids: Array[Long], terms: Array[Long]): DataFrame =
+    whereIds(idx.forwardTable, ids, in = true)
+      .select(terms.map(t => array_contains($"terms", t).cast("long")): _*)
 
-  /** Per query term, how many of the base docs among `ids` hold it. */
-  private def baseTermCounts(idx: Bm25Index, ids: Array[Long], terms: Array[Long]): Map[Long, Long] =
-    if (ids.isEmpty) Map.empty
-    else whereIds(idx.forwardTable, ids, in = true)
-      .select(explode($"terms").as("term"))
-      .where($"term".isin(terms.map(Long.box): _*))
-      .groupBy($"term").count().as[(Long, Long)].collect().toMap
-
-  /** Postings of the live delta docs for `terms`, embedded in executors. */
-  private def deltaPostings(marker: Long, terms: Array[Long], emb: Embedder): Dataset[Posting] = {
-    val qset = terms.toSet
-    liveDeltas(marker).mapPartitions { it =>
-      it.flatMap { case (docId, contents) =>
-        val (ts, tfs, dl) = emb.termFrequencies(contents)
-        ts.indices.collect { case i if qset.contains(ts(i)) => Posting(docId, ts(i), tfs(i), dl) }
-      }
+  /** One job over the base's forward rows among `ids`: how many of them
+    * the base holds, and per term how many of those hold it.
+    */
+  private def baseProbe(idx: Bm25Index, ids: Array[Long], terms: Array[Long]): (Long, Map[Long, Long]) =
+    if (ids.isEmpty) (0L, Map.empty)
+    else {
+      val t = IndexBuilder.longTotals(probeRows(idx, ids, terms))
+      (t(0), terms.indices.map(j => terms(j) -> t(2 * j + 1)).toMap)
     }
-  }
 
   // ----------------------------------------------------------------- search
 
@@ -573,93 +599,91 @@ final class SearchEngine private[api] (
   private def pendingDeltas(marker: Long): Boolean = logExists && nextSeq - 1 > marker
 
   /** The live-view query state for a set of distinct query terms: all
-    * postings of live documents matching any term (base minus the churn
-    * set, plus executor-embedded deltas), and the live document count N.
-    * Public so callers (e.g. the driver-oracle catalog) can score the live
-    * view in alternate precisions; `search` scores it in reference f32.
+    * postings of live documents matching any term (the base's, minus the
+    * churn set, plus the live changed docs' from the churn pass's tfs), and
+    * the live document count N. Public so callers (e.g. the driver-oracle
+    * catalog) can score the live view in alternate precisions; `search`
+    * scores it in reference f32.
     */
   def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
     val marker = baseMarker()
     val baseIdx = baseIndex(marker)
-    val changed = churn(marker)
-    val superseded = changed.map(_._1)
+    val changed = churn(marker, distinctTerms, embedder(baseIdx))
+    val superseded = changed.map(_.doc_id)
+    val live = changed.filterNot(_.tombstone)
     val base = baseIdx.fold(spark.emptyDataset[Posting]) { idx =>
       val postings = idx.postingsFor(distinctTerms)
       if (superseded.isEmpty) postings
       else whereIds(postings.toDF(), superseded, in = false).as[Posting]
     }
-    (base.union(deltaPostings(marker, distinctTerms, embedder(baseIdx))), liveDocCount(baseIdx, changed))
+    val changedPostings = for (d <- live; j <- distinctTerms.indices if d.tfs(j) > 0)
+      yield Posting(d.doc_id, distinctTerms(j), d.tfs(j), d.dl)
+    // live N: base docs, minus the changed ids the base holds, plus the live changed docs
+    val inBase = baseIdx.fold(0L)(baseProbe(_, superseded, Array.empty)._1)
+    (base.union(changedPostings.toSeq.toDS()), baseIdx.fold(0L)(_.nDocs) - inBase + live.length)
   }
 
   /** Top-`limit` search, ordered by (score desc, doc_id surrogate asc);
     * `None` returns every doc sharing ≥1 query term, like the reference's
     * unlimited mode.
     *
-    * One route for every limit and engine state. The post-base churn set
-    * is collected once: its ids are the superseded docs, and it gives the
-    * live df (base df − superseded base docs holding the term + live delta
-    * docs holding it) and the live N. The base side is the index's
-    * block-max WAND with those live idfs and the superseded docs excluded;
-    * an unlimited search passes an unbounded k, so nothing is pruned. The
-    * delta docs are embedded and scored in executors with the same f32
-    * fold in query-occurrence order, and the two hit lists merge on the
-    * driver; an engine without a base has an empty base side. Results are
+    * One route for every limit and engine state. One churn pass gives the
+    * superseded ids and each live changed doc's token count and query-term
+    * tfs; one probe of the base's forward rows among the superseded ids
+    * gives how many the base holds, in total and per term. From those the
+    * driver derives the live df (base df − superseded base docs holding the
+    * term + live changed docs holding it) and the live N. The base side is
+    * the index's block-max WAND with those live idfs and the superseded
+    * docs excluded; an unlimited search passes an unbounded k, so nothing
+    * is pruned. The changed docs are scored on the driver with the same
+    * f32 fold in query-occurrence order, and the two hit lists merge; an
+    * engine without a base has an empty base side. Results are
     * bit-identical to a fresh engine over the live docs (gated in
     * SearchEngineSpec).
     */
   def search(query: String, limit: Option[Int] = None): Seq[SearchResult] = {
+    require(query != null, "null query")
     val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
     if (qOcc.isEmpty) return Seq.empty
     val terms = qOcc.distinct
     // the base identity and the churn set are read once and serve the whole search
     val marker = baseMarker()
     val baseIdx = baseIndex(marker)
-    val changed = churn(marker)
-    val superseded = changed.map(_._1)
     val emb = embedder(baseIdx)
-    val deltas =
-      if (changed.exists(!_._2)) Some(deltaPostings(marker, terms, emb).persist()) else None
-    try {
-      // df_live(t) = df_base(t) − |superseded base docs holding t|
-      //            + |live delta docs holding t|   (one posting per (doc, term))
-      val dfBase = baseIdx.fold(Map.empty[Long, Long])(_.termDfs(terms))
-      val dfSuperseded = baseIdx.fold(Map.empty[Long, Long])(baseTermCounts(_, superseded, terms))
-      val dfDelta = deltas.fold(Map.empty[Long, Long])(
-        _.groupBy($"term").count().as[(Long, Long)].collect().toMap)
-      val dfLive = terms.map(t =>
-        t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + dfDelta.getOrElse(t, 0L))).toMap
-      if (dfLive.values.forall(_ <= 0L)) return Seq.empty
-      val nLive = liveDocCount(baseIdx, changed)
-      val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(nLive, df) }
+    val changed = churn(marker, terms, emb)
+    val superseded = changed.map(_.doc_id)
+    val live = changed.filterNot(_.tombstone)
+    // df_live(t) = df_base(t) − |superseded base docs holding t|
+    //            + |live changed docs holding t|   (one posting per (doc, term))
+    val dfBase = baseIdx.fold(Map.empty[Long, Long])(_.termDfs(terms))
+    val (inBase, dfSuperseded) = baseIdx.fold((0L, Map.empty[Long, Long]))(baseProbe(_, superseded, terms))
+    val dfLive = terms.indices.map { j =>
+      val t = terms(j)
+      t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + live.count(_.tfs(j) > 0))
+    }.toMap
+    if (dfLive.values.forall(_ <= 0L)) return Seq.empty
+    val nLive = baseIdx.fold(0L)(_.nDocs) - inBase + live.length
+    val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(nLive, df) }
 
-      val k = limit.getOrElse(Int.MaxValue)
-      val present = terms.filter(dfBase.contains)
-      val baseHits = baseIdx match {
-        case Some(idx) if present.nonEmpty =>
-          topK(idx.wandTopK(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks)), limit)
-        case _ => Array.empty[ScoredDoc]
-      }
-      val deltaHits = deltas.fold(Array.empty[ScoredDoc]) { d =>
-        val scored = d.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
-          // f32 fold in query-occurrence order (scorer.rs:109-123)
-          val values = new java.util.HashMap[Long, Float](16)
-          ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-          var score = 0.0f
-          var i = 0
-          while (i < qOcc.length) {
-            val v = values.get(qOcc(i))
-            if (v != 0.0f) score += idfs(qOcc(i)) * v
-            i += 1
-          }
-          ScoredDoc(docId, score)
-        }
-        topK(scored, limit)
-      }
-      // a doc lives on exactly one side (superseded base docs are excluded),
-      // so a plain merge is exact
-      resolveContents((baseHits ++ deltaHits).map(h => (h.doc_id, h.score))
-        .sortBy { case (id, s) => (-s, id) }.take(k).toSeq)
-    } finally deltas.foreach(_.unpersist())
+    val k = limit.getOrElse(Int.MaxValue)
+    val present = terms.filter(dfBase.contains)
+    val baseHits = baseIdx match {
+      case Some(idx) if present.nonEmpty =>
+        topK(idx.wandTopK(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks)), limit)
+      case _ => Array.empty[ScoredDoc]
+    }
+    // f32 fold in query-occurrence order (scorer.rs:109-123) over the live
+    // changed docs holding a query term
+    val slots = qOcc.map(terms.indexOf(_))
+    val changedHits = live.filter(_.tfs.exists(_ > 0)).map { d =>
+      var score = 0.0f
+      for (i <- qOcc.indices; tf = d.tfs(slots(i)) if tf > 0) score += idfs(qOcc(i)) * emb.weight(tf, d.dl)
+      ScoredDoc(d.doc_id, score)
+    }
+    // a doc lives on exactly one side (superseded base docs are excluded),
+    // so a plain merge is exact
+    resolveContents((baseHits ++ changedHits).map(h => (h.doc_id, h.score))
+      .sortBy { case (id, s) => (-s, id) }.take(k).toSeq)
   }
 
   /** Collected hits: the top `limit` by (score desc, doc_id asc), or all. */
@@ -696,7 +720,8 @@ final class SearchEngine private[api] (
       if (baseExists) {
         val marker = builtSeqMarker
         val deltaCorpus = liveDeltas(marker).map { case (id, c) => CorpusDoc(id, c) }
-        Compactor.merge(spark, indexPath, tmp, deltaCorpus, churn(marker).map(_._1), tokenizer, cfg)
+        val superseded = churn(marker, Array.empty, embedder(baseIndex(marker))).map(_.doc_id)
+        Compactor.merge(spark, indexPath, tmp, deltaCorpus, superseded, tokenizer, cfg)
       } else buildFromLog(tmp, cfg, Some(frozenAvgdl))
     // Swap with java.nio Files.move (throws on failure — a silent renameTo
     // failure here would seal base_seq over an index that never moved into
@@ -778,6 +803,19 @@ object SearchEngine {
     * FxHash64, masked non-negative.
     */
   def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
+
+  /** Null keys and contents are refused before anything is appended: every
+    * later search and compaction tokenizes each live delta's contents. The
+    * batch writers call these in their tasks, so a null row fails the write
+    * job and nothing is committed.
+    */
+  private[api] def requireKey(key: String): Unit = require(key != null, "null document key")
+
+  private[api] def requireDoc(d: Doc): Unit = {
+    require(d != null, "null document")
+    requireKey(d.id)
+    require(d.contents != null, s"null contents for document key '${d.id}'")
+  }
 
   /** `SearchEngineBuilder::with_avgdl` (`search.rs:161-171`). */
   def withAvgdl(spark: SparkSession, dir: String, avgdl: Float,

@@ -92,18 +92,6 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   @transient private lazy val postingsTable = IndexTables.postings(spark, indexDir)
   @transient private[graft] lazy val forwardTable = IndexTables.forward(spark, indexDir)
 
-  /** The index's doc ids: the sorted 8-byte `docids` sidecar (fresh builds
-    * and compactions write it), so a membership probe reads a handful of
-    * stats-pruned row groups instead of the forward table; index dirs from
-    * before the sidecar fall back to the forward table's ids.
-    */
-  @transient private[graft] lazy val docIdsTable: DataFrame = {
-    val sidecar = new org.apache.hadoop.fs.Path(s"$indexDir/docids")
-    if (sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar))
-      IndexTables.docIds(spark, indexDir)
-    else forwardTable.select($"doc_id")
-  }
-
   /** Sub-ranges per shard for the WAND query fan-out (task count scales as
     * numShards × this — numShards is not a parallelism ceiling).
     */

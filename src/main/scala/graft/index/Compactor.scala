@@ -66,8 +66,6 @@ object Compactor {
       val baseFwd = IndexTables.forward(spark, baseDir)
       baseFwd.where(kept($"doc_id")).as[ForwardRow].union(deltaFwd)
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/forward")
-      // sorted doc-id sidecar, same as a fresh build (liveN membership probes)
-      IndexBuilder.writeDocIds(spark, outDir, eff.numShards)
       val (goneDocs, goneDl) = IndexBuilder.docStats(baseFwd.where(!kept($"doc_id")))
 
       // --- postings: decoded base blocks ∪ delta postings → sort-merge ----

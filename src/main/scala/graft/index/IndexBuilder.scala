@@ -43,8 +43,6 @@ object IndexTables {
     spark.read.schema(PostingsSchema).parquet(s"$indexDir/postings")
   def termstats(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.schema("term BIGINT, df BIGINT, bucket INT").parquet(s"$indexDir/termstats")
-  def docIds(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema("doc_id BIGINT").parquet(s"$indexDir/docids")
 }
 
 final case class IndexBuildConfig(
@@ -90,21 +88,6 @@ final case class IndexBuildConfig(
   * IndexResumeSpec).
   */
 object IndexBuilder {
-
-  /** Writes the sorted doc-id sidecar: the forward table's id column,
-    * partitioned by its doc-range `shard` and sorted within, so parquet
-    * row-group min/max stats make point/membership probes near-perfectly
-    * prunable — without a range-sampling job. Shared by the fresh build and
-    * the compactor.
-    */
-  def writeDocIds(spark: SparkSession, indexDir: String, numShards: Int): Unit = {
-    import spark.implicits._
-    IndexTables.forward(spark, indexDir).select($"shard", $"doc_id")
-      .repartition(math.max(1, numShards), $"shard")
-      .sortWithinPartitions($"doc_id")
-      .select($"doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docids")
-  }
 
   /** (rows, Σdl) of forward rows: a build's N and Σdl, or a compaction's drop. */
   private[graft] def docStats(fwd: DataFrame): (Long, Long) = {
@@ -221,19 +204,6 @@ object IndexBuilder {
       }
     }
 
-    // --- stage 2b: sorted doc-id sidecar (concurrent, like stats) ---------
-    // An id-only table sorted by doc_id within each shard: membership probes
-    // (the live-view N correction counts the superseded ids the base holds)
-    // prune to a few row groups via parquet min/max stats instead of
-    // scanning the whole forward index — 8 bytes/doc in perfectly
-    // prunable order vs wide forward rows in ingest order.
-    val docidsF: Future[Unit] =
-      if (Checkpoints.isDone(indexDir, "docids")) Future.successful(())
-      else concurrently {
-        writeDocIds(spark, indexDir, cfg.numShards)
-        Checkpoints.commit(indexDir, "docids", Map("seconds" -> 0))
-      }
-
     // --- stage 3: posting blocks per shard group --------------------------
     val groups = math.max(1, math.min(cfg.shardGroups, cfg.numShards))
     for (g <- 0 until groups; name = s"postings_g$g" if !Checkpoints.isDone(indexDir, name)) {
@@ -275,7 +245,6 @@ object IndexBuilder {
 
     // --- finalize: metrics + manifest -------------------------------------
     import scala.concurrent.duration.Duration
-    Await.result(docidsF, Duration.Inf)
     val (nDocs, sumDl) = Await.result(statsF, Duration.Inf)
     val avgdl = avgdlOverride.getOrElse(
       if (nDocs == 0L) Embedder.FallbackAvgdl

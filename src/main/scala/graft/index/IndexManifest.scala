@@ -68,13 +68,6 @@ object IndexManifest {
     */
   val CurrentVersion = 3
 
-  /** ADDITIVE layout revision: bumped when the index dir gains optional
-    * sidecars (readers of older dirs still work via fallbacks, so
-    * CurrentVersion — which fail-fasts — must NOT change). Cache keys that
-    * want the newest layout include this. "b" = the sorted docids sidecar.
-    */
-  val LayoutRev = "b"
-
   private val mapper = new ObjectMapper()
 
   def write(m: IndexManifest, indexDir: String): Unit = {

@@ -49,6 +49,8 @@ object ScalingBench {
         CodeCorpus.generate(spark, n, seed = 42L, partitions = math.max(cpus * 4, 16))
           .write.mode("overwrite").parquet(corpusPath)
       }
+      // the surrogate ids' collision check, outside the timed build
+      TableIO.assertUniqueIds(TableIO.toCorpusDocs(TableIO.readCorpus(spark, corpusPath)))
       val indexDir = s"$tmp/graft_scale_idx_${n}_cpus${cpus}_${System.nanoTime()}"
 
       // warmup: a tiny throwaway build exercises every code path (parquet

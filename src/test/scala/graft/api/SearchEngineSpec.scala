@@ -572,6 +572,33 @@ class SearchEngineSpec extends SparkTestBase {
     assert(after == trueMax + 1)
   }
 
+  test("null keys, contents and queries are rejected before anything is appended") {
+    import spark.implicits._
+    val base = Seq(Doc("a", "grilled cheese sandwich"), Doc("b", "bacon avocado toast"))
+    val eng = SearchEngine.withDocuments(spark, tmpDir("nulls"), base)
+    eng.upsert(Doc("c", "tomato soup with cheese"))
+    val queries = Seq("cheese", "toast soup")
+    val before = queries.map(eng.search(_, None))
+    intercept[IllegalArgumentException](eng.upsert(Doc("d", null)))
+    intercept[IllegalArgumentException](eng.upsert(Doc(null, "lentil soup")))
+    intercept[IllegalArgumentException](eng.upsert(Seq(Doc("e", "pea soup"), null)))
+    intercept[IllegalArgumentException](eng.remove(null))
+    intercept[IllegalArgumentException](eng.search(null, Some(3)))
+    // the batch writers fail their write job, so nothing is committed
+    val upserted = intercept[org.apache.spark.SparkException](
+      eng.upsertBatch(Seq(Doc("f", "pea soup"), Doc("g", null)).toDS()))
+    assert(upserted.getMessage.contains("null contents"), upserted.getMessage)
+    val removed = intercept[org.apache.spark.SparkException](eng.removeBatch(Seq("a", null).toDS()))
+    assert(removed.getMessage.contains("null document key"), removed.getMessage)
+    for (e <- Seq(eng, SearchEngine.open(spark, eng.dir))) {
+      assert(e.count() === 3L)
+      assert(queries.map(e.search(_, None)) === before)
+      assert(e.get("e").isEmpty && e.get("f").isEmpty && e.get("a").nonEmpty)
+    }
+    eng.compact()
+    assert(queries.map(eng.search(_, None)) === before)
+  }
+
   test("buildBase over an existing base is refused, pending deltas stay searchable, compact folds them in") {
     val dir = tmpDir("rebuild1")
     val base = Seq(Doc("a", "grilled cheese sandwich"), Doc("b", "bacon avocado toast"))
@@ -595,16 +622,18 @@ class SearchEngineSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("deltajobs"), enRecipes)
     eng.upsert(Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"), enRecipes(3).copy(contents = "garlic bread")))
     eng.remove(enRecipes(5).id)
-    eng.search("chicken soup", Some(10)) // warm-up: resolves the held index tables, the sidecar included
+    eng.search("chicken soup", Some(10)) // warm-up: resolves the held index tables
     val (hits, jobs) = JobRecorder(spark.sparkContext)(eng.search("garlic vegetable", Some(10)))
     assert(hits.exists(_.id == "Garlic Soup"))
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
-    assert(jobs.length <= 16, s"${jobs.length} jobs: $jobs")
+    // churn pass 2 · termDfs 1 · forward probe 1 · base WAND 2 · contents 1
+    assert(jobs.length <= 7, s"${jobs.length} jobs: $jobs")
   }
 
   test("compact() on a churned engine runs at most 20 Spark jobs and infers no parquet schema") {
     import org.apache.spark.graft.JobRecorder
-    val eng = SearchEngine.withDocuments(spark, tmpDir("compactjobs1"), enRecipes)
+    val dir = tmpDir("compactjobs1")
+    val eng = SearchEngine.withDocuments(spark, dir, enRecipes)
     val added = Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"),
       enRecipes(3).copy(contents = "garlic bread"))
     eng.upsert(added)
@@ -612,7 +641,8 @@ class SearchEngineSpec extends SparkTestBase {
     val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.compact())
     // writes are `parquet at` stages too; a read's call site names the reader
     assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
-    assert(jobs.length <= 20, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(jobs.length <= 17, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(!new java.io.File(s"$dir/index/docids").exists())
     val live = enRecipes.filterNot(d => d.id == enRecipes(3).id || d.id == enRecipes(5).id) ++ added
     val fresh = SearchEngine.withAvgdl(spark, tmpDir("compactjobs2"), eng.avgdl)
     fresh.upsert(live)
@@ -629,11 +659,12 @@ class SearchEngineSpec extends SparkTestBase {
     eng.upsert(enRecipes)
     val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.buildBase())
     assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
-    // the concurrent stats and docids stages run under the caller's job group
-    for (stage <- Seq("IndexBuilder$.docStats", "IndexBuilder$.writeDocIds"))
-      assert(jobs.exists(_.exists(_._2.contains(stage))), s"no $stage job: ${jobs.map(_.map(_._1))}")
+    // the concurrent stats stage runs under the caller's job group
+    assert(jobs.exists(_.exists(_._2.contains("IndexBuilder$.docStats"))),
+      s"no IndexBuilder$$.docStats job: ${jobs.map(_.map(_._1))}")
     // the traced benchmark's index.build.jobs
-    assert(jobs.length === 21, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(jobs.length === 19, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(!new java.io.File(s"${eng.dir}/index/docids").exists())
   }
 
   test("two live keys with one surrogate fail the build's collision check") {
@@ -660,8 +691,10 @@ class SearchEngineSpec extends SparkTestBase {
     eng.remove(enRecipes(5).id)
     for (pending <- Seq(true, false)) {
       if (!pending) eng.compact()
-      val (hits, jobs) = JobRecorder(spark.sparkContext)(
-        SearchEngine.open(spark, dir).search("garlic vegetable", Some(10)))
+      // open reads the max seq from the log's parquet footers: no Spark job
+      val (opened, openJobs) = JobRecorder(spark.sparkContext)(SearchEngine.open(spark, dir))
+      assert(openJobs.isEmpty, s"pending $pending, open jobs: $openJobs")
+      val (hits, jobs) = JobRecorder(spark.sparkContext)(opened.search("garlic vegetable", Some(10)))
       assert(hits.exists(_.id == "Garlic Soup"), s"pending $pending")
       assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"pending $pending, schema-inference job: $jobs")
     }
@@ -691,6 +724,14 @@ class SearchEngineSpec extends SparkTestBase {
     val (freshPosts, freshN) = fresh.liveQueryState(terms)
     assert(n === live.length.toLong && freshN === n)
     assert(posts.collect().sortBy(p => (p.doc_id, p.term)) === freshPosts.collect().sortBy(p => (p.doc_id, p.term)))
+    // a reopened engine sees the same churn: searches, and point reads of
+    // updated, new, untouched, removed and never-present keys
+    val re = SearchEngine.open(spark, eng.dir)
+    assertSameSearches(re, fresh, Seq("common word4", "term2 item10", "fresh"))
+    assert(re.get("d4").contains(Doc("d4", "common word4 changed")))
+    assert(re.get("new1").contains(Doc("new1", "common term2 fresh")))
+    assert(re.get("d0").contains(docs(0)))
+    for (k <- Seq("d3", "d10", "absent5")) assert(re.get(k).isEmpty, k)
     // compaction folds the whole churn set in: same searches, live count and N
     eng.compact()
     assert(!eng.hasPendingDeltas)

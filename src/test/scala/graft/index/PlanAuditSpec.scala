@@ -153,20 +153,22 @@ class PlanAuditSpec extends SparkTestBase {
       s"expected pruned read schema:\n$plan")
   }
 
-  test("liveN membership probes the sorted docids sidecar with a pushed filter") {
+  test("base probe pushes doc_id IN and reads doc_id and terms only") {
     import graft.api.{Doc, SearchEngine}
-    val eng = SearchEngine.withDocuments(spark, tmpDir("audit_liven"),
+    val eng = SearchEngine.withDocuments(spark, tmpDir("audit_probe"),
       Seq(Doc("a", "alpha beta"), Doc("b", "gamma delta"), Doc("c", "beta gamma")))
-    eng.remove("b") // a superseded id → the live view must correct N
-    // sidecar exists and is the membership table
-    val plan = new graft.index.Bm25Index(spark, s"${eng.dir}/index").docIdsTable
-      .where($"doc_id".isin(Long.box(1L), Long.box(2L)))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("docids"), s"membership not on the sidecar:\n$plan")
-    assert(plan.contains("PushedFilters: [In(doc_id") || plan.contains("PushedFilters: [Or(EqualTo(doc_id"),
-      s"id probe not pushed into the scan:\n$plan")
-    // and the corrected N is observable through search (live view excludes b)
-    assert(eng.count() === 2)
+    val idx = new graft.index.Bm25Index(spark, s"${eng.dir}/index")
+    val ids = Seq("a", "b").map(eng.surrogate).sorted.toArray
+    val terms = eng.tokenizer.tokenize("beta gamma").map(graft.text.FxHash.hash32u).distinct
+    for (t <- Seq(terms, Array.empty[Long])) {
+      val plan = eng.probeRows(idx, ids, t).queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters: [In(doc_id"), s"id probe not pushed into the scan:\n$plan")
+      val schema = if (t.isEmpty) "struct<doc_id:bigint>" else "struct<doc_id:bigint,terms:array<bigint>>"
+      assert(plan.contains(s"ReadSchema: $schema"), s"probe reads more than it needs:\n$plan")
+    }
+    // rows, then (Σ, max) per term: both probed docs, one holding each term
+    val totals = IndexBuilder.longTotals(eng.probeRows(idx, ids, terms))
+    assert(totals.toSeq === Seq(2L, 1L, 1L, 1L, 1L))
   }
 
   test("sessionize plans one user_id exchange shared by window and aggregation") {
