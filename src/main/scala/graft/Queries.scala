@@ -487,7 +487,7 @@ object Queries {
         .orderBy($"lang")
     },
 
-    // I3: document frequency via the index's salted termstats, joined back
+    // I3: document frequency via the index's termstats, joined back
     // to token strings through a driver-checkable dictionary.
     "ft_df_topterms" -> { (spark, sfDir) =>
       import spark.implicits._

@@ -509,9 +509,10 @@ final class SearchEngine private[api] (
     * with any post-base row has its latest row post-base, and a doc with
     * none contributes nothing either way) — so the delta path scans only
     * post-base parquet row groups (seq min/max stats prune the sealed
-    * bulk) instead of windowing the entire log per search.
+    * bulk) instead of windowing the entire log per search. `compact()`
+    * hands it to the merge; exposed for the plan audit.
     */
-  private def changedState(marker: Long): DataFrame = {
+  private[graft] def changedState(marker: Long): DataFrame = {
     // fast path: the base covers every appended row → no deltas, zero jobs
     if (!pendingDeltas(marker))
       return spark.emptyDataset[(Long, Boolean, String)]
@@ -523,38 +524,26 @@ final class SearchEngine private[api] (
       .select($"doc_id", $"tombstone", $"contents")
   }
 
-  /** Live docs newer than the base, as (doc_id, contents) — a DATASET, so
-    * an upsert burst between compactions never funnels its contents through
-    * the driver.
-    */
-  private[graft] def liveDeltas(marker: Long = baseMarker()): Dataset[(Long, String)] =
-    changedState(marker).where(!$"tombstone").select($"doc_id", $"contents").as[(Long, String)]
-
   /** The post-base churn set in one pass, sorted by id: each changed doc's
     * id, whether its latest row is a tombstone, and for a live one its
     * token count and the tf of each of `terms` (in `terms` order). The
     * post-base window feeds an executor-side embed, so contents never leave
-    * the executors; tombstones, and calls without terms, skip the embed
-    * (and without terms the scan skips the contents column). Not even
-    * planned when nothing is pending.
+    * the executors; tombstones skip the embed. Not even planned when
+    * nothing is pending.
     */
   private def churn(marker: Long, terms: Array[Long], emb: Embedder): Array[ChangedDoc] =
     if (!pendingDeltas(marker)) Array.empty
-    else {
-      val contents = if (terms.isEmpty) lit("") else $"contents"
-      changedState(marker).select($"doc_id", $"tombstone", contents).as[(Long, Boolean, String)]
-        .mapPartitions { it =>
-          it.map { case (id, tombstone, text) =>
-            val tfs = new Array[Int](terms.length)
-            if (tombstone || terms.isEmpty) ChangedDoc(id, tombstone, 0, tfs)
-            else {
-              val (docTerms, docTfs, dl) = emb.termFrequencies(text)
-              for (i <- docTerms.indices; j = terms.indexOf(docTerms(i)) if j >= 0) tfs(j) = docTfs(i)
-              ChangedDoc(id, tombstone, dl, tfs)
-            }
-          }
-        }.collect().sortBy(_.doc_id)
-    }
+    else changedState(marker).as[(Long, Boolean, String)].mapPartitions { it =>
+      it.map { case (id, tombstone, text) =>
+        val tfs = new Array[Int](terms.length)
+        if (tombstone) ChangedDoc(id, tombstone, 0, tfs)
+        else {
+          val (docTerms, docTfs, dl) = emb.termFrequencies(text)
+          for (i <- docTerms.indices; j = terms.indexOf(docTerms(i)) if j >= 0) tfs(j) = docTfs(i)
+          ChangedDoc(id, tombstone, dl, tfs)
+        }
+      }
+    }.collect().sortBy(_.doc_id)
 
   /** `df`'s rows whose doc_id is (`in`) or is not among the sorted `ids`: a
     * literal IN list pushed into the scan for up to `MaxInProbe` ids (the
@@ -707,9 +696,10 @@ final class SearchEngine private[api] (
     * via the multi-way posting merge (Compactor — base blocks are decoded
     * and merged, never re-tokenized); without one, batch-builds from the
     * live docs. Physical-only either way: the frozen avgdl carries through,
-    * so scores do not move. The collected churn set's ids are exactly the
-    * base docs to drop (every live delta is a changed doc); the new base's
-    * `nDocs` is the live count the log compaction needs.
+    * so scores do not move. The post-base window (`changedState`) is
+    * evaluated once: the merge tokenizes its live docs into cached forward
+    * rows and collects every changed id, the base docs to drop, in the same
+    * pass. The new base's `nDocs` is the live count the log compaction needs.
     */
   def compact(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2)): Unit = {
     val frozenAvgdl = avgdl
@@ -717,12 +707,8 @@ final class SearchEngine private[api] (
     val tmp = s"$dir/index_compacting"
     deleteRecursively(new java.io.File(tmp))
     val compacted =
-      if (baseExists) {
-        val marker = builtSeqMarker
-        val deltaCorpus = liveDeltas(marker).map { case (id, c) => CorpusDoc(id, c) }
-        val superseded = churn(marker, Array.empty, embedder(baseIndex(marker))).map(_.doc_id)
-        Compactor.merge(spark, indexPath, tmp, deltaCorpus, superseded, tokenizer, cfg)
-      } else buildFromLog(tmp, cfg, Some(frozenAvgdl))
+      if (baseExists) Compactor.merge(spark, indexPath, tmp, changedState(builtSeqMarker), tokenizer, cfg)
+      else buildFromLog(tmp, cfg, Some(frozenAvgdl))
     // Swap with java.nio Files.move (throws on failure — a silent renameTo
     // failure here would seal base_seq over an index that never moved into
     // place, dropping the un-folded deltas from every later search).

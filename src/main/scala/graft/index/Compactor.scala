@@ -2,21 +2,24 @@ package graft.index
 
 import graft.bm25.{Bm25Params, Embedder, TokenHasher}
 import graft.text.TextTokenizer
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed multi-way posting merge (north_rule): folds pending deltas
   * into a base index WITHOUT re-tokenizing the base corpus —
   *
+  *   - the changed docs (each one's latest post-base version) are read in
+  *     ONE pass: live ones are tokenized in executors into cached forward
+  *     rows, and one collect of (doc_id, tombstone, dl) gives the drop set
+  *     (every changed id: an upsert replaces its base version, a tombstone
+  *     removes it), the delta count and Σdl; the forward write and the
+  *     posting explode both read the cache;
   *   - base posting blocks are decoded columnar-ly (one UDF call per block,
   *     then a Catalyst explode — never per-posting JVM objects on the scan
-  *     side); superseded doc versions are dropped by a binary search of the
+  *     side); dropped doc versions are filtered by a binary search of the
   *     sorted drop ids, broadcast once (no join exchange, no `distinct`,
   *     never an `isin` literal list — a large tombstone set would blow up
   *     the plan);
-  *   - delta documents (the only text in the job) are tokenized once in
-  *     executors and cached: the forward write and the posting explode
-  *     both read them;
   *   - both streams feed the builder's (shard, term)-partitioned sort-merge
   *     exchange and block encoder, producing fresh range-partitioned shards.
   *
@@ -27,16 +30,14 @@ import org.apache.spark.sql.functions._
   * the base's, minus the dropped base rows, plus the deltas; the content
   * metrics come from the termstats aggregation — nothing written is read
   * back for the manifest.
-  *
-  * Upsert semantics are enforced structurally: any base doc whose id appears
-  * in the delta OR the superseded set is dropped before the merge, so a
-  * delta doc missing from `superseded` cannot produce duplicate postings.
   */
 object Compactor {
 
+  /** @param changed the changed docs as (doc_id, tombstone, contents), one
+    *   row per id; a tombstone's contents are not read.
+    */
   def merge(spark: SparkSession, baseDir: String, outDir: String,
-            deltaDocs: Dataset[CorpusDoc], superseded: Array[Long],
-            tokenizer: TextTokenizer,
+            changed: DataFrame, tokenizer: TextTokenizer,
             cfg: IndexBuildConfig = IndexBuildConfig()): IndexManifest = {
     import spark.implicits._
     val t0 = System.nanoTime()
@@ -48,17 +49,16 @@ object Compactor {
     val hasher = TokenHasher.fromName(base.hasher).getOrElse(TokenHasher.default)
 
     val emb = new Embedder(Bm25Params(), tokenizer, hasher)
-    val deltaFwd = deltaDocs.mapPartitions { it =>
-      it.map { d =>
-        val (terms, tfs, dl) = emb.termFrequencies(d.content)
-        ForwardRow(d.doc_id, base.shardOf(d.doc_id), dl, terms, tfs)
-      }
-    }.persist()
+    val changedFwd = changed.as[(Long, Boolean, String)].map { case (id, tombstone, text) =>
+      val (terms, tfs, dl) =
+        if (tombstone) (Array.empty[Long], Array.empty[Int], 0) else emb.termFrequencies(text)
+      (tombstone, ForwardRow(id, base.shardOf(id), dl, terms, tfs))
+    }.toDF("tombstone", "row").persist()
     try {
-      // the deltas' ids join the drop set (an upsert replaces its base
-      // version), their count and Σdl the new stats
-      val deltaDl = deltaFwd.select($"doc_id", $"dl").as[(Long, Int)].collect()
-      val drop = (superseded ++ deltaDl.map(_._1)).distinct.sorted
+      val deltaFwd = changedFwd.where(!$"tombstone").select($"row.*").as[ForwardRow]
+      val changedDl = changedFwd.select($"row.doc_id", $"tombstone", $"row.dl").as[(Long, Boolean, Int)].collect()
+      val deltaDl = changedDl.filterNot(_._2).map(_._3.toLong)
+      val drop = changedDl.map(_._1).distinct.sorted
       val dropB = spark.sparkContext.broadcast(drop)
       val kept = udf((id: Long) => java.util.Arrays.binarySearch(dropB.value, id) < 0)
 
@@ -88,7 +88,7 @@ object Compactor {
       val nDocs = base.nDocs - goneDocs + deltaDl.length
       val manifest = base.copy(
         nDocs = nDocs,
-        sumDl = base.sumDl - goneDl + deltaDl.iterator.map(_._2.toLong).sum,
+        sumDl = base.sumDl - goneDl + deltaDl.sum,
         // avgdl intentionally unchanged (frozen at fit, reference semantics)
         lineage = base.lineage ++ Map(
           "compactedFrom" -> baseDir,
@@ -99,6 +99,6 @@ object Compactor {
       Checkpoints.commit(outDir, "bounds",
         Map("bounds" -> base.shardBounds.mkString(","), "numShards" -> base.numShards))
       manifest
-    } finally deltaFwd.unpersist()
+    } finally changedFwd.unpersist()
   }
 }

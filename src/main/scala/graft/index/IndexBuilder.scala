@@ -76,9 +76,11 @@ final case class IndexBuildConfig(
   *                        partitioned by shard. No giant per-term groupBy:
   *                        the sort-based encoder bounds memory regardless of
   *                        term skew.
-  *   stage 4 `termstats`  df(term) via salted two-phase aggregation over
-  *                        the written blocks (explicit skew handling for
-  *                        hot terms) → parquet partitioned by term bucket.
+  *   stage 4 `termstats`  df(term) via one `groupBy(term)` over the
+  *                        written blocks (one exchange; the map-side
+  *                        partial aggregate folds a hot term to a row per
+  *                        task, so no salt) → parquet in the aggregation's
+  *                        partitioning, sorted by (term bucket, term).
   *                        The same aggregation gives the content metrics
   *                        (blocks, bytes, postings, vocabulary, max/mean
   *                        df), recorded in its checkpoint.
@@ -393,28 +395,32 @@ object IndexBuilder {
   private val ContentMetrics =
     Seq("blocks", "compressedBytes", "postings", "vocabulary", "maxDf", "meanDf")
 
-  /** df(term) via salted two-phase aggregation over the written posting
-    * blocks, written bucket-partitioned for query-time pruning. The same
-    * per-term aggregation carries each term's block count and bytes; it is
-    * cached, written, and its cache summed into the content metrics — so
-    * they come from the written postings (a retried or speculative task
-    * cannot count twice) without reading anything back.
+  /** df(term) over the written posting blocks, with each term's block
+    * count and bytes, in one `groupBy(term)`: one exchange, below which
+    * Spark's partial aggregate already folds a hot term to one row per map
+    * task, so no salt is needed. Exposed for the plan audit.
+    */
+  private[graft] def termAggregate(spark: SparkSession, indexDir: String): DataFrame = {
+    import spark.implicits._
+    IndexTables.postings(spark, indexDir).groupBy($"term")
+      .agg(sum($"cnt").as("df"), count(lit(1)).as("blocks"),
+        sum(length($"docs") + length($"tfs") + length($"dls")).as("bytes"))
+  }
+
+  /** Writes termstats (term, df, bucket) from `termAggregate`, in the
+    * aggregation's own partitioning sorted by (bucket, term): readers prune
+    * on the `bucket` column and row-group stats, so a file per bucket buys
+    * nothing but one-bucket files. The per-term rows are cached, written,
+    * and the cache summed into the content metrics — so they come from the
+    * written postings (a retried or speculative task cannot count twice)
+    * without reading anything back.
     */
   private[graft] def buildTermstats(spark: SparkSession, indexDir: String,
                                     cfg: IndexBuildConfig): Map[String, Double] = {
     import spark.implicits._
-    // salt on block id (16 salts): partial sums per (term, salt), then final
-    // merge — bounds any single reducer's load for pathologically hot terms.
-    val partial = IndexTables.postings(spark, indexDir)
-      .groupBy($"term", pmod($"block", lit(16)).as("salt"))
-      .agg(sum($"cnt").as("c"), count(lit(1)).as("nb"),
-        sum(length($"docs") + length($"tfs") + length($"dls")).as("nby"))
-    val perTerm = partial.groupBy($"term")
-      .agg(sum($"c").as("df"), sum($"nb").as("blocks"), sum($"nby").as("bytes"))
-      .persist()
+    val perTerm = termAggregate(spark, indexDir).persist()
     try {
       perTerm.select($"term", $"df", pmod($"term", lit(cfg.termBuckets)).cast("int").as("bucket"))
-        .repartition(cfg.termBuckets, $"bucket")
         .sortWithinPartitions($"bucket", $"term")
         .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/termstats")
       val t = longTotals(perTerm.select($"df", $"blocks", $"bytes"))

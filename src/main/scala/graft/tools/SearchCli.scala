@@ -45,11 +45,12 @@ object SearchCli {
         // fold a delta corpus (parquet: doc_id, text) into a base index via
         // the distributed multi-way posting merge; optional csv of doc ids
         // to remove/supersede as the 4th arg
-        val superseded = rest.headOption.map(_.split(",").filter(_.nonEmpty).map(_.toLong))
-          .getOrElse(Array.empty[Long])
+        val removed = rest.headOption.map(_.split(",").filter(_.nonEmpty).map(_.toLong))
+          .getOrElse(Array.empty[Long]).toSeq.toDF("doc_id")
+          .selectExpr("doc_id", "true as tombstone", "cast(null as string) as contents")
         val deltas = spark.read.parquet(deltaPath)
-          .selectExpr("doc_id", "text as content").as[CorpusDoc]
-        val m = Compactor.merge(spark, baseDir, outDir, deltas, superseded,
+          .selectExpr("doc_id", "false as tombstone", "text as contents")
+        val m = Compactor.merge(spark, baseDir, outDir, deltas.union(removed),
           new Bm25Index(spark, baseDir).tokenizer)
         println(f"merged: ${m.nDocs} docs, ${m.metrics("postings")}%.0f postings, " +
           f"avgdl ${m.avgdl}%.4f (frozen), ${m.metrics("bytesPerPosting")}%.2f B/posting")

@@ -641,7 +641,7 @@ class SearchEngineSpec extends SparkTestBase {
     val (_, jobs) = JobRecorder.withCallSites(spark.sparkContext)(eng.compact())
     // writes are `parquet at` stages too; a read's call site names the reader
     assert(!jobs.flatten.exists(JobRecorder.infersSchema), s"schema-inference job: ${jobs.map(_.map(_._1))}")
-    assert(jobs.length <= 17, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(jobs.length <= 13, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
     assert(!new java.io.File(s"$dir/index/docids").exists())
     val live = enRecipes.filterNot(d => d.id == enRecipes(3).id || d.id == enRecipes(5).id) ++ added
     val fresh = SearchEngine.withAvgdl(spark, tmpDir("compactjobs2"), eng.avgdl)
@@ -663,7 +663,7 @@ class SearchEngineSpec extends SparkTestBase {
     assert(jobs.exists(_.exists(_._2.contains("IndexBuilder$.docStats"))),
       s"no IndexBuilder$$.docStats job: ${jobs.map(_.map(_._1))}")
     // the traced benchmark's index.build.jobs
-    assert(jobs.length === 19, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
+    assert(jobs.length === 17, s"${jobs.length} jobs: ${jobs.map(_.map(_._1))}")
     assert(!new java.io.File(s"${eng.dir}/index/docids").exists())
   }
 

@@ -20,20 +20,26 @@ class CompactorSpec extends SparkTestBase {
     val cfg = IndexBuildConfig(numShards = 4, shardGroups = 1)
     val baseManifest = IndexBuilder.build(spark, baseDocs, tok, baseDir, cfg)
 
-    // deltas: remove docs 3 and 7, update doc 5, add two new docs
-    val superseded = Array(3L, 7L, 5L)
+    // deltas: remove docs 3 and 7, update doc 5, add two new docs; the
+    // changed rows are (doc_id, tombstone, contents), one per id
+    val removed = Seq(3L, 7L)
     val deltaDocs = Seq(
       CorpusDoc(5L, "spark merge sort window stream"),
       CorpusDoc(100001L, "hash join broadcast table scan"),
-      CorpusDoc(100002L, "filter group agg query row")).toDS()
+      CorpusDoc(100002L, "filter group agg query row"))
+    def changed(tombstones: Seq[Long]) =
+      (tombstones.map((_, true, null: String)) ++ deltaDocs.map(d => (d.doc_id, false, d.content)))
+        .toDF("doc_id", "tombstone", "contents")
 
+    // 100003 was added and removed since the base: its tombstone drops nothing
     val mergedDir = tmpDir("cmp_merged")
-    val merged = Compactor.merge(spark, baseDir, mergedDir, deltaDocs, superseded, tok, cfg)
+    val merged = Compactor.merge(spark, baseDir, mergedDir, changed(removed :+ 100003L), tok, cfg)
     assert(merged.nDocs === 500L - 3 + 3) // 2 removed, 1 replaced, 2 added
     assert(merged.avgdl === baseManifest.avgdl) // frozen
 
     // fresh build over the equivalent live corpus with the same bounds+avgdl
-    val liveDocs = baseDocs.filter(d => !superseded.contains(d.doc_id)).union(deltaDocs)
+    val superseded = removed :+ 5L
+    val liveDocs = baseDocs.filter(d => !superseded.contains(d.doc_id)).union(deltaDocs.toDS())
     val freshDir = tmpDir("cmp_fresh")
     // carry the base bounds so sharding is identical
     Checkpoints.commit(freshDir, "bounds", Map(
@@ -71,10 +77,10 @@ class CompactorSpec extends SparkTestBase {
         }
     }
     assert(postingsSig(mergedDir) === postingsSig(freshDir))
-    // upsert semantics do not rest on the caller: the updated doc 5 left out
-    // of `superseded` still replaces its base version
+    // upsert semantics do not rest on a tombstone: the updated doc 5, only a
+    // live changed row, still replaces its base version
     val upsertDir = tmpDir("cmp_upsert")
-    Compactor.merge(spark, baseDir, upsertDir, deltaDocs, superseded.filterNot(_ == 5L), tok, cfg)
+    Compactor.merge(spark, baseDir, upsertDir, changed(removed), tok, cfg)
     assert(postingsSig(upsertDir) === postingsSig(freshDir))
 
     // search equivalence, bit-exact

@@ -30,6 +30,20 @@ class PlanAuditSpec extends SparkTestBase {
       s"block metadata read by the decode path:\n$plan")
   }
 
+  test("termstats aggregation is one exchange over a partial aggregate, written in its own partitioning") {
+    // the map-side partial aggregate folds a hot term to one row per task,
+    // so no salt exchange; the write adds no repartition
+    val plan = IndexBuilder.termAggregate(spark, indexDir).queryExecution.executedPlan.toString
+    val lines = plan.linesIterator.toSeq
+    assert(lines.count(_.contains("Exchange ")) == 1, s"expected one exchange:\n$plan")
+    val exchange = lines.indexWhere(_.contains("Exchange "))
+    assert(lines.drop(exchange + 1).exists(l => l.contains("HashAggregate(") && l.contains("partial_sum")),
+      s"no partial aggregate below the exchange:\n$plan")
+    val files = new java.io.File(s"$indexDir/termstats").listFiles().count(_.getName.endsWith(".parquet"))
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(files <= partitions, s"$files termstats files for $partitions shuffle partitions")
+  }
+
   test("termstats lookup pushes bucket+term filters") {
     val terms = index.queryTerms("merge").distinct
     val df = spark.read.parquet(s"$indexDir/termstats")
@@ -104,8 +118,8 @@ class PlanAuditSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("audit_eng"),
       Seq(Doc("a", "base doc one"), Doc("b", "base doc two")))
     eng.upsert(Doc("c", "a fresh delta doc"))
-    val live = eng.liveDeltas()
-    val plan = live.queryExecution.executedPlan.toString
+    // the churn pass of both search and compact() reads this window
+    val plan = eng.changedState(0L).queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThan(seq"), s"seq filter not pushed to the log scan:\n$plan")
   }
 
