@@ -44,13 +44,16 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *   - `compact()` folds deltas into a fresh base (distributed build) and
   *     re-seals the log seq;
   *   - `search(query, limit)` = embed query → churn pass → live df/N (the
-  *     base df plus one forward-table probe of the changed ids) →
+  *     base df from the held index's term dictionary, no job, plus one
+  *     forward-table probe of the changed ids) →
   *     block-max WAND over the base with the superseded docs excluded
   *     (unbounded k, so nothing pruned, for an unlimited search) + the live
   *     changed docs scored on the driver with the same f32 fold in
   *     query-occurrence order → merge → contents lookup
   *     (`search.rs:118-132`): the ≤ k hits' contents come from one pruned
-  *     docstore scan, resolved latest-seq-wins on the driver.
+  *     docstore scan, resolved latest-seq-wins on the driver. A clean search
+  *     is 3 Spark jobs (base WAND 2, contents 1); with deltas pending it is
+  *     6 (churn pass 2, forward probe 1, base WAND 2, contents 1).
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -68,7 +71,11 @@ final class SearchEngine private[api] (
   /** The docstore log is laid out in `bucket = pmod(doc_id, B)` partition
     * directories so a point read (`get`) prunes to 1/B of the files before
     * the doc_id row-group pushdown even runs. B is a layout constant (a
-    * manifest-versioned knob would let it scale with the corpus).
+    * manifest-versioned knob would let it scale with the corpus). Every
+    * write adds at most one file per bucket: `appendLog` writes from one
+    * task, and the batch writers cluster their rows by bucket first, so a
+    * batch adds B files whatever its input partitioning (not input
+    * partitions × B, which would soon push `open` past `FooterScanMaxFiles`).
     */
   private val DocstoreBuckets = 16
   // churn sets up to this size are probed with a literal IN list
@@ -129,13 +136,18 @@ final class SearchEngine private[api] (
     dataNames.isEmpty || hasBucket
   }
 
-  /** All log writers funnel here: stamps the bucket partition column. */
-  private def writeLog(df: DataFrame): Unit = writeLogTo(df, logPath)
+  /** All log writers funnel here: stamps the bucket partition column.
+    * `perBucket` clusters the rows by bucket before the write, so each
+    * bucket dir gets one file (the batch writers, whose input may have any
+    * number of partitions).
+    */
+  private def writeLog(df: DataFrame, perBucket: Boolean = false): Unit =
+    writeLogTo(df, logPath, perBucket)
 
   /** Same layout decision, arbitrary target (log compaction rewrites into a
     * side dir then swaps).
     */
-  private def writeLogTo(df: DataFrame, path: String): Unit = {
+  private def writeLogTo(df: DataFrame, path: String, perBucket: Boolean = false): Unit = {
     // A surviving docstore_old means a swap failed AND its in-process
     // restore failed (double fault — swap recovery normally heals or
     // removes it at open, and compactLog restores before rethrowing).
@@ -145,9 +157,11 @@ final class SearchEngine private[api] (
       s"unhealed log-compaction backup at $dir/docstore_old: a swap failed and " +
         "could not self-restore; re-open the engine (or move the backup back to " +
         s"$logPath) before writing")
-    if (bucketedLog)
-      df.withColumn("bucket", pmod($"doc_id", lit(DocstoreBuckets.toLong)))
+    if (bucketedLog) {
+      val rows = df.withColumn("bucket", pmod($"doc_id", lit(DocstoreBuckets.toLong)))
+      (if (perBucket) rows.repartition($"bucket") else rows)
         .write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
+    }
     else
       df.write.mode(SaveMode.Append).parquet(path)
   }
@@ -362,7 +376,7 @@ final class SearchEngine private[api] (
         SearchEngine.requireDoc(d)
         LogRow(SearchEngine.surrogate(d.id), d.id, d.contents, seq, tombstone = false)
       }
-    }.toDF())
+    }.toDF(), perBucket = true)
     nextSeq = seq + 1
   }
 
@@ -379,7 +393,7 @@ final class SearchEngine private[api] (
         SearchEngine.requireKey(k)
         LogRow(SearchEngine.surrogate(k), k, "", seq, tombstone = true)
       }
-    }.toDF())
+    }.toDF(), perBucket = true)
     nextSeq = seq + 1
   }
 

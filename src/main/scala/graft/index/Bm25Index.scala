@@ -40,7 +40,8 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
 
 /** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan):
   * driver-side query embedding (pure function, no job) → term-stat lookup
-  * with bucket/row-group pruning → pruned posting-block scan → per-candidate
+  * (the held term dictionary for WAND, a bucket/row-group-pruned scan for
+  * the exhaustive scorer) → pruned posting-block scan → per-candidate
   * f32 score fold (query-occurrence order, `/root/reference/src/scorer.rs:109-123`)
   * → `TakeOrderedAndProject` top-k.
   *
@@ -55,6 +56,12 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   *   - `wand`: block-max WAND with a per-partition top-k heap — skips
   *     decoding blocks whose upper bound cannot enter the current top-k.
   *     Safe/exact for monotone additive scores, so rank-identical.
+  *
+  * An instance holds its index dir's small global metadata on the driver:
+  * the resolved tables and the term dictionary (every term with its df,
+  * sorted; 16 B × the manifest's `vocabulary`), both read once. The posting
+  * payload stays in the partitions. After the first lookup a WAND search
+  * launches only its own fan-out jobs.
   */
 final class Bm25Index(spark: SparkSession, val indexDir: String,
                       customTokenizer: Option[TextTokenizer] = None,
@@ -105,22 +112,39 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     */
   def idf(df: Long): Float = graft.bm25.Bm25Math.idf(nDocs, df)
 
-  /** df lookup for query terms: bucket-pruned termstats scan (reads only the
-    * term buckets the query touches, then row-group pruning via the sorted
-    * term column).
+  /** The term dictionary: every term of the index, sorted, and its df at the
+    * same position. Collected from termstats by one job, on the first
+    * `termDfs` of this instance; an index dir never changes, so it stays
+    * valid for the instance's life. It holds 16 B × the manifest's
+    * `vocabulary` (0.7 MB for the 42 k terms of a 200 k-doc `CodeCorpus`
+    * index). `@transient`: it is driver-side metadata, and a
+    * task closure that captures this index (the WAND fan-out, `postingsFor`)
+    * must never ship it.
+    */
+  @transient private lazy val termDictionary: (Array[Long], Array[Long]) = {
+    val rows = termStatsTable.select($"term", $"df").as[(Long, Long)].collect().sortBy(_._1)
+    (rows.map(_._1), rows.map(_._2))
+  }
+
+  /** df of each of `terms` the index holds (absent terms have no entry): a
+    * binary search of the term dictionary, so only the first call of an
+    * instance launches a job.
     */
   def termDfs(terms: Array[Long]): Map[Long, Long] = {
     if (terms.isEmpty) return Map.empty
-    termStatsFor(terms)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
+    val (dictTerms, dictDfs) = termDictionary
+    terms.iterator.flatMap { t =>
+      val i = java.util.Arrays.binarySearch(dictTerms, t)
+      if (i >= 0) Some(t -> dictDfs(i)) else None
+    }.toMap
   }
 
-  /** The (term, df) rows for `terms` as a DataFrame — the single definition
-    * of the bucket+term-pruned termstats scan (shared by the collected
-    * termDfs lookup, the exhaustive scorer's broadcast side, and catalog
-    * queries that ride the df lookup inside their own plan).
+  /** The (term, df) rows for `terms` as a DataFrame: the bucket- and
+    * term-pruned termstats scan (reads only the term buckets the query
+    * touches, then row-group pruning via the sorted term column). For plans
+    * that take the df lookup inside themselves: the exhaustive scorer's
+    * broadcast side and the catalog queries. A driver-side lookup reads the
+    * term dictionary instead (`termDfs`).
     */
   def termStatsFor(terms: Array[Long]): DataFrame = {
     val buckets = terms.map(manifest.bucketOf).distinct
@@ -161,7 +185,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
 
     val scored = mode match {
       case "wand" if limit.isDefined =>
-        // WAND needs idfs up front (block bounds) → one small termstats
+        // WAND needs idfs up front (block bounds) → a term dictionary
         // lookup, then the pruned merge.
         val dfs = termDfs(distinctTerms)
         val present = distinctTerms.filter(dfs.contains)

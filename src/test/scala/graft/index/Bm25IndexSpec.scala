@@ -199,6 +199,30 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(m.bucketOf(7L) === 7 % m.termBuckets)
   }
 
+  test("termDfs from the term dictionary equals the termStatsFor scan for every term") {
+    val all = IndexTables.termstats(spark, indexDir).select($"term").as[Long].collect()
+    assert(all.length.toDouble === index.manifest.metrics("vocabulary"))
+    val scanned = index.termStatsFor(all).as[(Long, Long)].collect().toMap
+    assert(scanned.size === all.length)
+    assert(index.termDfs(all) === scanned)
+    val held = all.toSet
+    val absent = Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue).filterNot(held).toArray
+    assert(absent.nonEmpty)
+    assert(index.termDfs(absent).isEmpty)
+    assert(index.termDfs(absent ++ all.take(3)) === all.take(3).map(t => t -> scanned(t)).toMap)
+  }
+
+  test("a second termDfs on one index instance launches no Spark job") {
+    import org.apache.spark.graft.JobRecorder
+    val fresh = new Bm25Index(spark, indexDir)
+    val terms = fresh.queryTerms("merge join sort").distinct
+    val (first, firstJobs) = JobRecorder(spark.sparkContext)(fresh.termDfs(terms))
+    assert(firstJobs.length === 1, s"first lookup jobs: $firstJobs")
+    val (second, secondJobs) = JobRecorder(spark.sparkContext)(fresh.termDfs(fresh.queryTerms("spark window")))
+    assert(secondJobs.isEmpty, s"second lookup jobs: $secondJobs")
+    assert(first === index.termDfs(terms) && second.nonEmpty)
+  }
+
   test("df from termstats equals live distinct count from postings") {
     val terms = index.queryTerms("merge join").distinct
     val dfs = index.termDfs(terms)
