@@ -2,7 +2,7 @@ package graft
 
 import graft.index._
 import graft.text.{Bm25Tokenizer, FnTokenizer, FxHash, TextTokenizer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The driver-facing query catalog: every entry is one operator/capability
@@ -84,6 +84,15 @@ object Queries {
     dir
   }
 
+  /** `score_r`: a doc's double-precision BM25 (k1 = 1.2, b = 0.75, corpus
+    * size `n`) over its posting rows (tf, dl, df), rounded as the oracles do.
+    */
+  private def bm25ScoreR(n: Double, avgdl: Column): Column = {
+    val idf = log(lit(1.0) + (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    val w = col("tf") * lit(2.2) / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl))
+    round(sum(idf * w), 3).as("score_r")
+  }
+
   /** Double-precision BM25 top-20 over the engine's LIVE view (the engine's
     * own f32 path is snapshot-gated in sbt; the driver compare needs the
     * cross-dialect double convention). avgdl is the frozen build-time value.
@@ -104,9 +113,7 @@ object Queries {
         new Bm25Index(spark, s"$dir/index", Some(simpleTokenizer)).termStatsFor(terms)
       else posts.toDF().groupBy($"term").agg(countDistinct($"doc_id").as("df"))
     val scored = posts.toDF().join(broadcast(dfs), "term")
-      .withColumn("idf", log(lit(1.0) + (lit(nLive.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-      .withColumn("w", $"tf" * lit(2.2) / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / lit(avgdl))))
-      .groupBy($"doc_id").agg(round(sum($"idf" * $"w"), 3).as("score_r"))
+      .groupBy($"doc_id").agg(bm25ScoreR(nLive.toDouble, lit(avgdl)))
     // map the engine's surrogate ids back to the original doc ids via the log
     val keys = spark.read.parquet(s"$dir/docstore").select($"doc_id", $"key").distinct()
     scored.join(keys, "doc_id")
@@ -528,10 +535,8 @@ object Queries {
       val posts = idx.postingsFor(qTerms).toDF()
       posts.join(broadcast(dfs), "term")
         .crossJoin(broadcast(avgDf))
-        .withColumn("idf", log(lit(1.0) + (lit(n) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-        .withColumn("w", $"tf" * lit(2.2) / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
         .groupBy($"doc_id")
-        .agg(round(sum($"idf" * $"w"), 3).as("score_r"))
+        .agg(bm25ScoreR(n, $"avgdl"))
         .orderBy($"score_r".desc, $"doc_id")
         .limit(20)
     },

@@ -707,13 +707,14 @@ final class SearchEngine private[api] (
   }
 
   /** Distributed compaction: with an existing base, folds pending deltas in
-    * via the multi-way posting merge (Compactor — base blocks are decoded
-    * and merged, never re-tokenized); without one, batch-builds from the
-    * live docs. Physical-only either way: the frozen avgdl carries through,
-    * so scores do not move. The post-base window (`changedState`) is
-    * evaluated once: the merge tokenizes its live docs into cached forward
-    * rows and collects every changed id, the base docs to drop, in the same
-    * pass. The new base's `nDocs` is the live count the log compaction needs.
+    * via the multi-way posting merge (Compactor — the base's forward rows,
+    * never re-tokenized, and the changed docs feed the builder's stages);
+    * without one, batch-builds from the live docs. Physical-only either
+    * way: the frozen avgdl carries through, so scores do not move. The
+    * post-base window (`changedState`) is evaluated once: the merge
+    * tokenizes its live docs into cached forward rows and collects every
+    * changed id, the base docs to drop, in the same pass. The new base's
+    * `nDocs` is the live count the log compaction needs.
     */
   def compact(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2)): Unit = {
     val frozenAvgdl = avgdl

@@ -463,7 +463,6 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           val t = qOcc(i)
           val v = weights.get(t)
           if (v != 0.0f) score += idf(dfs.getOrElse(t, 0L)) * v
-          else score += idf(dfs.getOrElse(t, 0L)) * 0.0f // exact no-op, kept for clarity
           i += 1
         }
         score

@@ -87,11 +87,14 @@ final case class IndexBuildConfig(
   *
   * Every stage commits a checkpoint marker with lineage + metrics; a
   * restarted build skips committed stages/groups (kill/resume test in
-  * IndexResumeSpec).
+  * IndexResumeSpec). Stages 2–4 and the manifest are `fromForward`, which
+  * `build` runs after its forward stage and `Compactor.merge` runs over the
+  * merged forward table: this is the only code that turns forward rows into
+  * postings, stats, termstats and a manifest.
   */
 object IndexBuilder {
 
-  /** (rows, Σdl) of forward rows: a build's N and Σdl, or a compaction's drop. */
+  /** (rows, Σdl) of forward rows: an index's N and Σdl. */
   private[graft] def docStats(fwd: DataFrame): (Long, Long) = {
     val t = longTotals(fwd.select(col("dl").cast("long")))
     (t(0), t(1))
@@ -164,13 +167,6 @@ object IndexBuilder {
           Map("bounds" -> bs.mkString(","), "numShards" -> cfg.numShards))
         bs
     }
-    def shardOf(docId: Long): Int = {
-      var lo = 0
-      var hi = bounds.length
-      while (lo < hi) { val mid = (lo + hi) >>> 1; if (docId < bounds(mid)) hi = mid else lo = mid + 1 }
-      lo
-    }
-
     // --- stage 1: forward index ------------------------------------------
     if (!Checkpoints.isDone(indexDir, "forward")) {
       val t = System.nanoTime()
@@ -178,7 +174,7 @@ object IndexBuilder {
       val fwd = docs.mapPartitions { it =>
         it.map { d =>
           val (terms, tfs, dl) = emb.termFrequencies(d.content)
-          ForwardRow(d.doc_id, shardOf(d.doc_id), dl, terms, tfs)
+          ForwardRow(d.doc_id, IndexManifest.shardOf(bounds, d.doc_id), dl, terms, tfs)
         }
       }
       // Written in input partitioning: the forward build is a pure narrow
@@ -191,6 +187,19 @@ object IndexBuilder {
       Checkpoints.commit(indexDir, "forward", Map(
         "seconds" -> (System.nanoTime() - t) / 1e9))
     }
+    fromForward(spark, indexDir, bounds, cfg, tokenizerConfig(tokenizer), hasher.name,
+      lineage, avgdlOverride, t0)
+  }
+
+  /** Stages 2–4 and the manifest over the forward table written at
+    * `indexDir/forward`, sharded by `bounds`; committed stages are skipped.
+    * `t0` is when the whole operation started (the manifest's build rates).
+    */
+  private[graft] def fromForward(spark: SparkSession, indexDir: String, bounds: Array[Long],
+                                 cfg: IndexBuildConfig, tokenizer: TokenizerConfig,
+                                 hasherName: String, lineage: Map[String, String],
+                                 avgdlOverride: Option[Float], t0: Long): IndexManifest = {
+    import spark.implicits._
 
     // --- stage 2: corpus stats (N, Σdl, avgdl) ----------------------------
     // Launched as a CONCURRENT job: it only reads the committed forward
@@ -256,8 +265,8 @@ object IndexBuilder {
       numShards = cfg.numShards,
       blockSize = cfg.blockSize,
       termBuckets = cfg.termBuckets,
-      tokenizer = tokenizerConfig(tokenizer),
-      hasher = hasher.name,
+      tokenizer = tokenizer,
+      hasher = hasherName,
       nDocs = nDocs,
       sumDl = sumDl,
       avgdl = avgdl,

@@ -35,16 +35,8 @@ final case class IndexManifest(
     s"index format version $version is not supported (current: " +
       s"${IndexManifest.CurrentVersion}) — rebuild the index with this library version")
 
-  /** Range shard for a doc id (binary search over recorded bounds). */
-  def shardOf(docId: Long): Int = {
-    var lo = 0
-    var hi = shardBounds.length // shard index in [0, numShards)
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (docId < shardBounds(mid)) hi = mid else lo = mid + 1
-    }
-    lo
-  }
+  /** Range shard for a doc id under the recorded bounds. */
+  def shardOf(docId: Long): Int = IndexManifest.shardOf(shardBounds, docId)
 
   /** Termstats bucket — MUST match the builder's `pmod` (non-negative even
     * for negative 64-bit term hashes from custom hashers).
@@ -69,6 +61,19 @@ object IndexManifest {
   val CurrentVersion = 3
 
   private val mapper = new ObjectMapper()
+
+  /** Range shard in [0, bounds.length] for a doc id: binary search over
+    * ascending exclusive upper bounds.
+    */
+  def shardOf(bounds: Array[Long], docId: Long): Int = {
+    var lo = 0
+    var hi = bounds.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (docId < bounds(mid)) hi = mid else lo = mid + 1
+    }
+    lo
+  }
 
   def write(m: IndexManifest, indexDir: String): Unit = {
     val root = mapper.createObjectNode()

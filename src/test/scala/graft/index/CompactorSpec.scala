@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.SparkTestBase
+import graft.bm25.FnHasher
 import graft.text.Bm25Tokenizer
 
 /** The multi-way merge compactor must produce an index whose decoded content
@@ -95,5 +96,48 @@ class CompactorSpec extends SparkTestBase {
           java.lang.Float.floatToRawIntBits(y.score), s"q='$q' doc ${x.doc_id}")
       }
     }
+  }
+
+  private def smallBase(hasher: graft.bm25.TokenHasher = graft.bm25.TokenHasher.default): String = {
+    val dir = tmpDir("cmp_small")
+    IndexBuilder.build(spark, Seq(CorpusDoc(1L, "spark merge sort"), CorpusDoc(2L, "hash join table"),
+      CorpusDoc(3L, "window stream row")).toDS(), Bm25Tokenizer.default, dir,
+      IndexBuildConfig(numShards = 2, shardGroups = 1), hasher = hasher)
+    dir
+  }
+  private def oneUpsert =
+    Seq((2L, false, "broadcast join table")).toDF("doc_id", "tombstone", "contents")
+
+  test("merge refuses a base built with a hasher it cannot name, writing no manifest") {
+    val base = smallBase(new FnHasher("rev", t => t.reverse.hashCode.toLong & Long.MaxValue))
+    val out = tmpDir("cmp_rev")
+    val e = intercept[IllegalArgumentException](
+      Compactor.merge(spark, base, out, oneUpsert, Bm25Tokenizer.default))
+    assert(e.getMessage.contains("rev"))
+    assert(!IndexManifest.exists(out))
+  }
+
+  test("merge refuses an output dir holding a manifest or checkpoints") {
+    val base = smallBase()
+    val withManifest = tmpDir("cmp_stale")
+    IndexManifest.read(base).write(withManifest)
+    intercept[IllegalArgumentException](
+      Compactor.merge(spark, base, withManifest, oneUpsert, Bm25Tokenizer.default))
+    val withCheckpoint = tmpDir("cmp_stale_ckpt")
+    Checkpoints.commit(withCheckpoint, "postings_g0", Map("shards" -> "0,1"))
+    intercept[IllegalArgumentException](
+      Compactor.merge(spark, base, withCheckpoint, oneUpsert, Bm25Tokenizer.default))
+    assert(!IndexManifest.exists(withCheckpoint))
+  }
+
+  test("a merged index carries the same checkpoint set as a built one") {
+    val base = smallBase()
+    val out = tmpDir("cmp_ckpt")
+    Compactor.merge(spark, base, out, oneUpsert, Bm25Tokenizer.default)
+    val merged = Checkpoints.readAll(out)
+    assert(merged.keySet === Set("bounds", "forward", "stats", "postings_g0", "termstats"))
+    assert(merged.keySet === Checkpoints.readAll(base).keySet)
+    assert(merged("forward").contains("seconds"))
+    assert(merged("stats").contains("\"nDocs\" : 3"))
   }
 }
