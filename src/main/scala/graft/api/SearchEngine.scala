@@ -23,6 +23,10 @@ private[api] final case class LogRow(doc_id: Long, key: String, contents: String
   */
 private[api] final case class ChangedDoc(doc_id: Long, tombstone: Boolean, dl: Int, tfs: Array[Int])
 
+/** The live view one query sees (see `SearchEngine.liveView`). */
+private final case class LiveView(base: Option[Bm25Index], emb: Embedder, superseded: Array[Long],
+                                  live: Array[ChangedDoc], dfSuperseded: Map[Long, Long], nLive: Long)
+
 /** What identifies one base index generation on disk (see `baseIndex`). */
 private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
                                         manifestModified: java.nio.file.attribute.FileTime,
@@ -33,7 +37,9 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   * index:
   *
   *   - the doc store is a parquet append log (key, contents, seq, tombstone)
-  *     — the reference's `HashMap<K, String>` (`search.rs:52-59`);
+  *     in `bucket = pmod(doc_id, 16)` partition dirs — the reference's
+  *     `HashMap<K, String>` (`search.rs:52-59`); a log with data files
+  *     outside `bucket=` dirs (the pre-bucket flat layout) is refused at open;
   *   - `upsert`/`remove` append delta rows (I1/I2 in SURVEY §2.4): the base
   *     index is immutable; each search makes one pass over the post-base
   *     churn (each changed doc's id, tombstone flag, token count and
@@ -41,8 +47,10 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *     df/N exactly from it (base df − superseded base docs + live changed
   *     docs) — so scores equal a from-scratch reference engine over the
   *     same live docs;
-  *   - `compact()` folds deltas into a fresh base (distributed build) and
-  *     re-seals the log seq;
+  *   - `compact()` folds deltas into a fresh base (distributed build),
+  *     re-seals the log seq and rewrites the log to its live view; both
+  *     directories are replaced by one swap routine and healed at open by
+  *     one recovery rule;
   *   - `search(query, limit)` = embed query → churn pass → live df/N (the
   *     base df from the held index's term dictionary, no job, plus one
   *     forward-table probe of the changed ids) →
@@ -84,24 +92,23 @@ final class SearchEngine private[api] (
   private val MaxInContents = 1024
 
   /** The docstore log's columns. Every log read passes them, so no read runs
-    * a parquet schema-inference job; the `bucket` partition column, when the
-    * layout has one, is still discovered from the directory names, and the
-    * file listing stays fresh per read because appends change the log.
+    * a parquet schema-inference job; the `bucket` partition column is still
+    * discovered from the directory names, and the file listing stays fresh
+    * per read because appends change the log.
     */
   private val LogSchema = org.apache.spark.sql.Encoders.product[LogRow].schema
 
   private def readLog(): DataFrame = spark.read.schema(LogSchema).parquet(logPath)
 
-  /** Child-entry names of a log dir, via the path's OWN filesystem (local,
+  /** Child-entry names of a dir, via the path's OWN filesystem (local,
     * hdfs://, s3a://, …) — a java.io.File listing would return null for any
     * non-local scheme and silently misclassify the dir. None = absent dir.
     */
-  private def listLog(): Option[Array[String]] = {
-    val p = new org.apache.hadoop.fs.Path(logPath)
+  private def listDir(path: String): Option[Array[String]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      // a non-directory at the log path (corrupt state) reads as absent,
-      // matching the previous File.list()==null behavior
+      // a non-directory at the path (corrupt state) reads as absent
       if (!fs.getFileStatus(p).isDirectory) None
       else Some(fs.listStatus(p).map(_.getPath.getName))
     } catch {
@@ -110,93 +117,44 @@ final class SearchEngine private[api] (
     }
   }
 
-  /** Layout gate: logs created by this engine are bucket-partitioned, but a
-    * dir written before the bucketed layout (flat part files, no `bucket=`
-    * dirs) must stay flat — appending partition dirs next to flat files
-    * breaks parquet partition discovery for every subsequent read. Such a
-    * legacy log keeps the flat layout for both appends and point reads
-    * (which then rely on doc_id row-group pushdown alone). Decided once, at
-    * the first log access of this engine instance.
-    */
-  private lazy val bucketedLog: Boolean = {
-    // "_"-prefixed (markers) and "."-prefixed (checksums) entries are
-    // hidden to the parquet reader — neither layout evidence nor data
-    val dataNames = listLog().getOrElse(Array.empty[String])
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    val hasBucket = dataNames.exists(_.startsWith("bucket="))
-    val hasFlat = dataNames.exists(n => !n.startsWith("bucket="))
-    // A dir holding BOTH flat part files and bucket= dirs is corrupt (a
-    // torn layout migration, or two engines racing this decision on a
-    // fresh dir): partition discovery would drop the flat rows silently.
-    // Fail fast with a diagnostic instead of picking a side.
-    require(!(hasBucket && hasFlat),
-      s"mixed docstore layout at $logPath: both flat data files and bucket= " +
-        "partition dirs are present; the log is corrupt and needs manual repair " +
-        "(move the flat files into the bucketed layout or restore a backup)")
-    dataNames.isEmpty || hasBucket
-  }
+  /** Whether `path` holds a log: any data entry, or a committed empty write. */
+  private def isLog(path: String): Boolean =
+    listDir(path).exists(_.exists(n => !n.startsWith("_") || n == "_SUCCESS"))
 
   /** All log writers funnel here: stamps the bucket partition column.
     * `perBucket` clusters the rows by bucket before the write, so each
     * bucket dir gets one file (the batch writers, whose input may have any
-    * number of partitions).
+    * number of partitions). Log compaction writes to a side dir, then swaps.
     */
-  private def writeLog(df: DataFrame, perBucket: Boolean = false): Unit =
-    writeLogTo(df, logPath, perBucket)
-
-  /** Same layout decision, arbitrary target (log compaction rewrites into a
-    * side dir then swaps).
-    */
-  private def writeLogTo(df: DataFrame, path: String, perBucket: Boolean = false): Unit = {
+  private def writeLog(df: DataFrame, path: String = logPath, perBucket: Boolean = false): Unit = {
     // A surviving docstore_old means a swap failed AND its in-process
-    // restore failed (double fault — swap recovery normally heals or
-    // removes it at open, and compactLog restores before rethrowing).
-    // Appending now could recreate a log dir that forges the
+    // restore failed (double fault — open-time recovery normally heals or
+    // removes it). Appending now could recreate a log dir that forges the
     // "swap finished" signal and orphan the backup's contents: refuse.
-    require(!new java.io.File(s"$dir/docstore_old").exists(),
-      s"unhealed log-compaction backup at $dir/docstore_old: a swap failed and " +
+    require(!new java.io.File(s"${logPath}_old").exists(),
+      s"unhealed log-compaction backup at ${logPath}_old: a swap failed and " +
         "could not self-restore; re-open the engine (or move the backup back to " +
         s"$logPath) before writing")
-    if (bucketedLog) {
-      val rows = df.withColumn("bucket", pmod($"doc_id", lit(DocstoreBuckets.toLong)))
-      (if (perBucket) rows.repartition($"bucket") else rows)
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
-    }
-    else
-      df.write.mode(SaveMode.Append).parquet(path)
+    val rows = df.withColumn("bucket", pmod($"doc_id", lit(DocstoreBuckets.toLong)))
+    (if (perBucket) rows.repartition($"bucket") else rows)
+      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
   }
 
-  /** Heal a torn log-compaction swap before anything reads the log. The
-    * swap in `compactLog()` deletes its `docstore_old` backup only after
-    * the new log verifies, so a surviving backup is an unambiguous crash
-    * signal and the recovery is deterministic (single-writer, like every
-    * other mutation on an engine dir): log missing → the crash hit between
-    * the two renames, restore the complete old log (every kept seq is
-    * already sealed under the base_seq marker, so searches are identical);
-    * log present → the swap finished, drop the leftover backup. A stale
-    * `docstore_compacting` is dead weight either way.
+  /** Open: heal both directories' torn swaps, then refuse a log that is not
+    * bucket-partitioned — its data files outside `bucket=` dirs would be
+    * dropped (mixed dir) or misread (flat dir) by partition discovery.
     */
   locally {
-    import java.nio.file.{Files, Paths}
-    // A MISSING index with a backed-up manifest is something only the torn
-    // window between compact()'s two renames can produce. Restoring the
-    // backup recreates the exact pre-compaction engine: the old base still
-    // carries its own sealed marker, and the log is untouched at that
-    // point (compactLog only runs after the index swap verifies). The
-    // compaction work is lost, never data. Next to a LIVE index the backup
-    // is stale either way (a crash after the verify, or retention by a
-    // pre-round-5 binary that kept it indefinitely) — drop it, the live
-    // index is authoritative.
-    if (!IndexManifest.exists(indexPath) && IndexManifest.exists(s"$dir/index_old"))
-      Files.move(Paths.get(s"$dir/index_old"), Paths.get(indexPath)): Unit
-    else deleteRecursively(new java.io.File(s"$dir/index_old"))
-    deleteRecursively(new java.io.File(s"$dir/index_compacting"))
-    val bak = new java.io.File(s"$dir/docstore_old")
-    if (bak.exists()) {
-      if (new java.io.File(logPath).exists()) deleteRecursively(bak)
-      else Files.move(bak.toPath, Paths.get(logPath)): Unit
-    }
-    deleteRecursively(new java.io.File(s"$dir/docstore_compacting"))
+    recover(indexPath, IndexManifest.exists)
+    recover(logPath, isLog)
+    // "_"-prefixed (markers) and "."-prefixed (checksums) entries are
+    // hidden to the parquet reader, so they are not data
+    val outside = listDir(logPath).getOrElse(Array.empty[String])
+      .filterNot(n => n.startsWith("_") || n.startsWith(".") || n.startsWith("bucket="))
+    require(outside.isEmpty,
+      s"docstore at $logPath holds data files outside bucket= partition dirs " +
+        s"(${outside.take(3).mkString(", ")}): the pre-bucket flat layout is not read; " +
+        s"rewrite the rows into bucket=pmod(doc_id, $DocstoreBuckets) dirs or restore a backup")
   }
 
   /** How many log data files the driver-side footer scan will read before
@@ -208,8 +166,7 @@ final class SearchEngine private[api] (
 
   private var nextSeq: Long = currentMaxSeq() + 1
 
-  private def logExists: Boolean =
-    listLog().exists(_.exists(n => !n.startsWith("_") || n == "_SUCCESS"))
+  private def logExists: Boolean = isLog(logPath)
 
   private def baseExists: Boolean = IndexManifest.exists(indexPath)
 
@@ -226,9 +183,6 @@ final class SearchEngine private[api] (
     val marker = builtSeqMarker
     if (!logExists) marker
     else {
-      // force the layout gate before the first log read: a mixed layout gets
-      // this engine's diagnostic, not Spark's partition-discovery error
-      bucketedLog: Unit
       // r6: for small logs (the steady state between compactions) the max
       // seq comes straight from the parquet footers on the driver — INT64
       // row-group min/max statistics are exact, and max(marker, global max)
@@ -449,12 +403,8 @@ final class SearchEngine private[api] (
     val rows =
       if (ids.length > MaxInContents)
         log.join(broadcast(ids.toDF("doc_id")), Seq("doc_id"), "left_semi")
-      else {
-        val inIds = log.where($"doc_id".isin(ids.map(Long.box): _*))
-        if (!bucketedLog) inIds
-        else inIds.where($"bucket".isin(
-          ids.map(id => Int.box(Math.floorMod(id, DocstoreBuckets.toLong).toInt)).distinct: _*))
-      }
+      else log.where($"doc_id".isin(ids.map(Long.box): _*) && $"bucket".isin(
+        ids.map(id => Int.box(Math.floorMod(id, DocstoreBuckets.toLong).toInt)).distinct: _*))
     rows.select($"doc_id", $"seq", $"tombstone", $"key", $"contents")
   }
 
@@ -515,8 +465,8 @@ final class SearchEngine private[api] (
       case None => -1L
     }
 
-  private def sealBase(): Unit =
-    Checkpoints.commit(indexPath, "base_seq", Map("seq" -> (nextSeq - 1)))
+  private def sealBase(seq: Long = nextSeq - 1): Unit =
+    Checkpoints.commit(indexPath, "base_seq", Map("seq" -> seq))
 
   /** Latest post-base log row per doc — (doc_id, tombstone, contents).
     * Filter seq > baseSeq BEFORE the window (provably equivalent: a doc
@@ -609,21 +559,33 @@ final class SearchEngine private[api] (
     * scores it in reference f32.
     */
   def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
+    val v = liveView(distinctTerms)
+    val base = v.base.fold(spark.emptyDataset[Posting]) { idx =>
+      val postings = idx.postingsFor(distinctTerms)
+      if (v.superseded.isEmpty) postings
+      else whereIds(postings.toDF(), v.superseded, in = false).as[Posting]
+    }
+    val changedPostings = for (d <- v.live; j <- distinctTerms.indices if d.tfs(j) > 0)
+      yield Posting(d.doc_id, distinctTerms(j), d.tfs(j), d.dl)
+    (base.union(changedPostings.toSeq.toDS()), v.nLive)
+  }
+
+  /** The live view over the distinct query `terms`, derived once per call
+    * from one read of the base identity: the base index and its embedder,
+    * the post-base churn pass (superseded ids, live changed docs), one
+    * probe of the base's forward rows among the superseded ids (how many
+    * the base holds, in total and per term) and the live N — base docs,
+    * minus the superseded ones the base holds, plus the live changed docs.
+    */
+  private def liveView(terms: Array[Long]): LiveView = {
     val marker = baseMarker()
-    val baseIdx = baseIndex(marker)
-    val changed = churn(marker, distinctTerms, embedder(baseIdx))
+    val base = baseIndex(marker)
+    val emb = embedder(base)
+    val changed = churn(marker, terms, emb)
     val superseded = changed.map(_.doc_id)
     val live = changed.filterNot(_.tombstone)
-    val base = baseIdx.fold(spark.emptyDataset[Posting]) { idx =>
-      val postings = idx.postingsFor(distinctTerms)
-      if (superseded.isEmpty) postings
-      else whereIds(postings.toDF(), superseded, in = false).as[Posting]
-    }
-    val changedPostings = for (d <- live; j <- distinctTerms.indices if d.tfs(j) > 0)
-      yield Posting(d.doc_id, distinctTerms(j), d.tfs(j), d.dl)
-    // live N: base docs, minus the changed ids the base holds, plus the live changed docs
-    val inBase = baseIdx.fold(0L)(baseProbe(_, superseded, Array.empty)._1)
-    (base.union(changedPostings.toSeq.toDS()), baseIdx.fold(0L)(_.nDocs) - inBase + live.length)
+    val (inBase, dfSuperseded) = base.fold((0L, Map.empty[Long, Long]))(baseProbe(_, superseded, terms))
+    LiveView(base, emb, superseded, live, dfSuperseded, base.fold(0L)(_.nDocs) - inBase + live.length)
   }
 
   /** Top-`limit` search, ordered by (score desc, doc_id surrogate asc);
@@ -649,38 +611,30 @@ final class SearchEngine private[api] (
     val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
     if (qOcc.isEmpty) return Seq.empty
     val terms = qOcc.distinct
-    // the base identity and the churn set are read once and serve the whole search
-    val marker = baseMarker()
-    val baseIdx = baseIndex(marker)
-    val emb = embedder(baseIdx)
-    val changed = churn(marker, terms, emb)
-    val superseded = changed.map(_.doc_id)
-    val live = changed.filterNot(_.tombstone)
+    val v = liveView(terms)
     // df_live(t) = df_base(t) − |superseded base docs holding t|
     //            + |live changed docs holding t|   (one posting per (doc, term))
-    val dfBase = baseIdx.fold(Map.empty[Long, Long])(_.termDfs(terms))
-    val (inBase, dfSuperseded) = baseIdx.fold((0L, Map.empty[Long, Long]))(baseProbe(_, superseded, terms))
+    val dfBase = v.base.fold(Map.empty[Long, Long])(_.termDfs(terms))
     val dfLive = terms.indices.map { j =>
       val t = terms(j)
-      t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + live.count(_.tfs(j) > 0))
+      t -> (dfBase.getOrElse(t, 0L) - v.dfSuperseded.getOrElse(t, 0L) + v.live.count(_.tfs(j) > 0))
     }.toMap
     if (dfLive.values.forall(_ <= 0L)) return Seq.empty
-    val nLive = baseIdx.fold(0L)(_.nDocs) - inBase + live.length
-    val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(nLive, df) }
+    val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(v.nLive, df) }
 
     val k = limit.getOrElse(Int.MaxValue)
     val present = terms.filter(dfBase.contains)
-    val baseHits = baseIdx match {
+    val baseHits = v.base match {
       case Some(idx) if present.nonEmpty =>
-        topK(idx.wandTopK(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks)), limit)
+        topK(idx.wandTopK(qOcc, present, idfs, k, v.superseded, Some(wandSkippedBlocks)), limit)
       case _ => Array.empty[ScoredDoc]
     }
     // f32 fold in query-occurrence order (scorer.rs:109-123) over the live
     // changed docs holding a query term
     val slots = qOcc.map(terms.indexOf(_))
-    val changedHits = live.filter(_.tfs.exists(_ > 0)).map { d =>
+    val changedHits = v.live.filter(_.tfs.exists(_ > 0)).map { d =>
       var score = 0.0f
-      for (i <- qOcc.indices; tf = d.tfs(slots(i)) if tf > 0) score += idfs(qOcc(i)) * emb.weight(tf, d.dl)
+      for (i <- qOcc.indices; tf = d.tfs(slots(i)) if tf > 0) score += idfs(qOcc(i)) * v.emb.weight(tf, d.dl)
       ScoredDoc(d.doc_id, score)
     }
     // a doc lives on exactly one side (superseded base docs are excluded),
@@ -715,37 +669,23 @@ final class SearchEngine private[api] (
     * tokenizes its live docs into cached forward rows and collects every
     * changed id, the base docs to drop, in the same pass. The new base's
     * `nDocs` is the live count the log compaction needs.
+    *
+    * The order is index swap verified → seal → log swap: the log is
+    * untouched until the new base is in place, and when it is rewritten
+    * the marker already covers every kept seq, so a crash at any point
+    * leaves an engine whose searches agree with the pre- or post-compaction
+    * one (see `swapIn` and `recover`).
     */
   def compact(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2)): Unit = {
     val frozenAvgdl = avgdl
     val sealSeq = nextSeq - 1
-    val tmp = s"$dir/index_compacting"
-    deleteRecursively(new java.io.File(tmp))
+    val tmp = s"${indexPath}_compacting"
+    deleteRecursively(tmp)
     val compacted =
       if (baseExists) Compactor.merge(spark, indexPath, tmp, changedState(builtSeqMarker), tokenizer, cfg)
       else buildFromLog(tmp, cfg, Some(frozenAvgdl))
-    // Swap with java.nio Files.move (throws on failure — a silent renameTo
-    // failure here would seal base_seq over an index that never moved into
-    // place, dropping the un-folded deltas from every later search).
-    import java.nio.file.{Files, Paths}
-    val oldDir = Paths.get(indexPath)
-    val backedUp = Files.exists(oldDir)
-    val idxBak = Paths.get(s"$dir/index_old")
-    if (backedUp) {
-      deleteRecursively(idxBak.toFile)
-      Files.move(oldDir, idxBak)
-    }
-    // restore on in-process failure, mirroring compactLog: a surviving
-    // caller that kept using the engine would otherwise see no base and
-    // silently rescore everything from the log with a fallback avgdl
-    try Files.move(Paths.get(tmp), oldDir)
-    catch { case t: Throwable => if (backedUp) Files.move(idxBak, oldDir); throw t }
-    require(IndexManifest.exists(indexPath), s"compaction swap failed: no manifest at $indexPath")
-    // the backup's only job is covering the two-rename window just closed
-    // (open's swap recovery restores it if the move above never ran);
-    // keeping it past the verify would double index storage per engine dir
-    deleteRecursively(new java.io.File(s"$dir/index_old"))
-    Checkpoints.commit(indexPath, "base_seq", Map("seq" -> sealSeq))
+    swapIn(indexPath, IndexManifest.exists)
+    sealBase(sealSeq)
     heldBase = None
     compactLog(compacted.nDocs)
   }
@@ -753,48 +693,72 @@ final class SearchEngine private[api] (
   /** Rewrites the docstore log to its live view (latest-seq, non-tombstone
     * rows, original seqs preserved) — without this every superseded row and
     * tombstone stays in the log forever, and `liveDocs`/`buildBase`/`get`
-    * pay for the garbage on a churn-heavy deployment (the r4 judge's top
-    * finding). Runs after the index swap + seal: the marker already covers
-    * every kept seq, so outside the two-rename swap window a crash leaves
-    * either the old log (complete) or the new one (its exact live view) —
-    * searches agree either way; a crash inside the window is healed at the
-    * next open (the constructor's swap-recovery block restores the backup,
-    * which is complete and seals identically). The backup is dropped once
-    * the swap verifies — a surviving `docstore_old` is therefore the
-    * crash signal recovery keys on, and keeping it longer would double
-    * docstore storage for no recovery value beyond the window. An all-tombstones log compacts to
-    * log deletion, not an unreadable zero-file parquet dir. `liveCount` is
-    * the just-built base's `nDocs`: that base is exactly the live view.
+    * pay for the garbage on a churn-heavy deployment. An all-tombstones log
+    * stages nothing, so the swap deletes the log rather than leave an
+    * unreadable zero-file parquet dir. `liveCount` is the just-built base's
+    * `nDocs`: that base is exactly the live view.
     */
   private def compactLog(liveCount: Long): Unit = {
     if (!logExists) return
-    val live = liveRows().select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
-    val tmp = s"$dir/docstore_compacting"
-    deleteRecursively(new java.io.File(tmp))
-    if (liveCount > 0) writeLogTo(live, tmp)
-    import java.nio.file.{Files, Paths}
-    val oldLog = Paths.get(logPath)
-    val bak = Paths.get(s"$dir/docstore_old")
-    deleteRecursively(bak.toFile)
-    Files.move(oldLog, bak)
-    if (liveCount > 0) {
-      // If the second rename fails with the PROCESS surviving, restore the
-      // backup before rethrowing: a caller that swallowed the error and
-      // kept appending would otherwise recreate the log dir from nothing,
-      // forging the "swap finished" signal open-time recovery keys on —
-      // and the next cleanup would drop the only complete copy of every
-      // pre-compaction document's contents. (writeLogTo's backup guard is
-      // the second line of defense if even this restore throws.)
-      try Files.move(Paths.get(tmp), oldLog)
-      catch { case t: Throwable => Files.move(bak, oldLog); throw t }
-      require(logExists, s"log compaction swap failed: no data at $logPath")
-    }
-    deleteRecursively(bak.toFile)
+    val tmp = s"${logPath}_compacting"
+    deleteRecursively(tmp)
+    if (liveCount > 0)
+      writeLog(liveRows().select($"doc_id", $"key", $"contents", $"seq", $"tombstone"), tmp)
+    swapIn(logPath, isLog)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** Replaces the directory `live` by `${live}_compacting`, or removes it
+    * when nothing is staged. `live` first moves aside to `${live}_old`,
+    * which is dropped only once `complete(live)` verifies the move-in, so a
+    * surviving backup is the crash signal `recover` keys on; keeping it
+    * longer would double the directory's storage. The moves are java.nio
+    * `Files.move`, which throws on failure: a silent `renameTo` failure
+    * could seal `base_seq` over an index that never landed and drop the
+    * un-folded deltas from every later search. A move-in that throws with
+    * the process surviving restores the backup before rethrowing, so a
+    * caller that swallows the error keeps a complete directory: no
+    * base-less rescoring with a fallback avgdl, and no append recreating a
+    * log dir that forges the "swap finished" signal (`writeLog` refuses
+    * over a backup should even the restore throw).
+    */
+  private def swapIn(live: String, complete: String => Boolean): Unit = {
+    import java.nio.file.{Files, Paths}
+    val (target, staged, bak) = (Paths.get(live), Paths.get(s"${live}_compacting"), Paths.get(s"${live}_old"))
+    deleteRecursively(bak.toString)
+    val backedUp = Files.exists(target)
+    if (backedUp) Files.move(target, bak)
+    if (Files.exists(staged)) {
+      try Files.move(staged, target)
+      catch { case t: Throwable => if (backedUp) Files.move(bak, target); throw t }
+      require(complete(live), s"compaction swap failed: $live is incomplete after the move")
+    }
+    deleteRecursively(bak.toString)
+  }
+
+  /** Open-time recovery of a torn `swapIn` (single-writer, like every other
+    * mutation on an engine dir). An incomplete `live` next to a complete
+    * backup is what only the window between the two moves leaves, and
+    * restoring the backup recreates the exact pre-swap engine: an index
+    * backup carries its own sealed marker and the log is untouched until
+    * the index swap verifies; a log backup's seqs are all sealed, so
+    * searches agree. The compaction work is lost, never data. Next to a
+    * complete `live` the backup is stale and is dropped; a staged dir is
+    * dead weight either way.
+    */
+  private def recover(live: String, complete: String => Boolean): Unit = {
+    import java.nio.file.{Files, Paths}
+    val bak = s"${live}_old"
+    if (!complete(live) && complete(bak)) Files.move(Paths.get(bak), Paths.get(live)): Unit
+    else deleteRecursively(bak)
+    deleteRecursively(s"${live}_compacting")
+  }
+
+  private def deleteRecursively(path: String): Unit = {
+    def delete(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delete))
+      f.delete(): Unit
+    }
+    delete(new java.io.File(path))
   }
 }
 

@@ -66,7 +66,6 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
 final class Bm25Index(spark: SparkSession, val indexDir: String,
                       customTokenizer: Option[TextTokenizer] = None,
                       k1: Float = 1.2f, b: Float = 0.75f,
-                      customHasher: Option[graft.bm25.TokenHasher] = None,
                       wandRangesPerShard: Int = 0,
                       avgdlOverride: Option[Float] = None) extends Serializable {
   import spark.implicits._
@@ -81,11 +80,8 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       tc.normalization, tc.stopwords, tc.stemming)
   }
 
-  val hasher: graft.bm25.TokenHasher = customHasher.getOrElse {
-    graft.bm25.TokenHasher.fromName(manifest.hasher).getOrElse(
-      throw new IllegalArgumentException(
-        s"index was built with hasher '${manifest.hasher}'; pass it to Bm25Index explicitly"))
-  }
+  val hasher: graft.bm25.TokenHasher = graft.bm25.TokenHasher.fromName(manifest.hasher).getOrElse(
+    throw new IllegalArgumentException(s"index was built with hasher '${manifest.hasher}', which has no known name"))
 
   val params: Bm25Params = Bm25Params(k1, b, avgdlOverride.getOrElse(manifest.avgdl))
   private val embedder = new Embedder(params, tokenizer, hasher)

@@ -59,8 +59,8 @@ object Compactor {
       val kept = udf((id: Long) => java.util.Arrays.binarySearch(dropB.value, id) < 0)
 
       // forward: base \ drop ∪ tokenized deltas
-      Checkpoints.commit(outDir, "bounds",
-        Map("bounds" -> base.shardBounds.mkString(","), "numShards" -> base.numShards))
+      Checkpoints.commit(outDir, "bounds", Map("bounds" -> base.shardBounds.mkString(","),
+        "numShards" -> base.numShards, "seconds" -> 0.0))
       IndexTables.forward(spark, baseDir).where(kept($"doc_id")).as[ForwardRow]
         .union(changedFwd.where(!$"tombstone").select($"row.*").as[ForwardRow])
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/forward")

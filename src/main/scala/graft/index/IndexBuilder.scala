@@ -156,15 +156,17 @@ object IndexBuilder {
         val b = n.get("bounds").asText()
         if (b.isEmpty) Array.empty[Long] else b.split(",").map(_.toLong)
       case None =>
-        val bs =
-          if (cfg.numShards <= 1) Array.empty[Long]
+        // analytic bounds take no time; sampled ones record the quantile job's
+        val t = System.nanoTime()
+        val (bs, seconds) =
+          if (cfg.numShards <= 1) (Array.empty[Long], 0.0)
           else if (cfg.uniformIdSpace)
-            Array.tabulate(cfg.numShards - 1)(i => (Long.MaxValue / cfg.numShards) * (i + 1))
-          else docs.toDF().stat
+            (Array.tabulate(cfg.numShards - 1)(i => (Long.MaxValue / cfg.numShards) * (i + 1)), 0.0)
+          else (docs.toDF().stat
             .approxQuantile("doc_id", (1 until cfg.numShards).map(_.toDouble / cfg.numShards).toArray, 0.001)
-            .map(_.toLong)
+            .map(_.toLong), (System.nanoTime() - t) / 1e9)
         Checkpoints.commit(indexDir, "bounds",
-          Map("bounds" -> bs.mkString(","), "numShards" -> cfg.numShards))
+          Map("bounds" -> bs.mkString(","), "numShards" -> cfg.numShards, "seconds" -> seconds))
         bs
     }
     // --- stage 1: forward index ------------------------------------------
@@ -209,8 +211,10 @@ object IndexBuilder {
     val statsF: Future[(Long, Long)] = checkpoint(indexDir, "stats") match {
       case Some(n) => Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
       case None => concurrently {
+        val t = System.nanoTime()
         val (n, s) = docStats(IndexTables.forward(spark, indexDir))
-        Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s))
+        Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s,
+          "seconds" -> (System.nanoTime() - t) / 1e9))
         (n, s)
       }
     }

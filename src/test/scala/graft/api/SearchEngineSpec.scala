@@ -246,25 +246,6 @@ class SearchEngineSpec extends SparkTestBase {
       assertSameResults(eng.search(q, limit), fresh.search(q, limit), s"query '$q' limit $limit")
   }
 
-  test("a pre-bucketing flat docstore dir stays readable and appendable (layout gate)") {
-    import spark.implicits._
-    val dir = tmpDir("legacy")
-    // simulate a log written before the bucketed layout: flat part files,
-    // no bucket column, no partition directories
-    val sid = graft.text.FxHash.hash64("old doc") & Long.MaxValue
-    Seq(LogRow(sid, "old doc", "grilled cheese sandwich", 0L, tombstone = false))
-      .toDS().coalesce(1).write.parquet(s"$dir/docstore")
-    val eng = SearchEngine.withAvgdl(spark, dir, 4.0f)
-    assert(eng.get("old doc").contains(Doc("old doc", "grilled cheese sandwich")))
-    // appends must stay flat — partition dirs next to flat files would break
-    // parquet partition discovery for every later read
-    eng.upsert(Doc("new doc", "bacon avocado sandwich"))
-    assert(eng.count() === 2)
-    assert(eng.get("new doc").exists(_.contents == "bacon avocado sandwich"))
-    assert(eng.search("sandwich", None).map(_.id).toSet === Set("old doc", "new doc"))
-    assert(!new java.io.File(s"$dir/docstore").list().exists(_.startsWith("bucket=")))
-  }
-
   test("compaction preserves search results exactly") {
     val base = Seq(
       Doc("a", "spark shuffle join"), Doc("b", "shuffle sort merge"),
@@ -318,25 +299,6 @@ class SearchEngineSpec extends SparkTestBase {
     assert(eng.count() === liveBefore.length.toLong + 1)
   }
 
-  test("a legacy flat log stays flat through log compaction") {
-    import spark.implicits._
-    val dir = tmpDir("legacycmp")
-    val sid = graft.text.FxHash.hash64("old doc") & Long.MaxValue
-    Seq(LogRow(sid, "old doc", "grilled cheese sandwich", 0L, tombstone = false))
-      .toDS().coalesce(1).write.parquet(s"$dir/docstore")
-    val eng = SearchEngine.withAvgdl(spark, dir, 4.0f)
-    eng.upsert(Doc("new doc", "bacon avocado sandwich"))
-    eng.remove("old doc")
-    eng.compact()
-    // the rewritten log must keep the flat layout this engine committed to
-    assert(!new java.io.File(s"$dir/docstore").list().exists(_.startsWith("bucket=")))
-    assert(eng.count() === 1)
-    assert(eng.search("sandwich", None).map(_.id) === Seq("new doc"))
-    val re = SearchEngine.open(spark, dir)
-    assert(re.get("new doc").exists(_.contents == "bacon avocado sandwich"))
-    assert(re.get("old doc").isEmpty)
-  }
-
   test("a torn log-compaction swap heals at the next open") {
     import java.nio.file.{Files, Paths}
     val dir = tmpDir("logswapcrash")
@@ -388,6 +350,34 @@ class SearchEngineSpec extends SparkTestBase {
     assert(re.get("c").exists(_.contents == "roasted tomato soup"))
   }
 
+  test("open drops stale staged dirs and a backup next to a live index; the next compact is bit-identical") {
+    import graft.index.{Checkpoints, IndexManifest}
+    import java.nio.file.{Files, Paths}
+    val dir = tmpDir("stalerecover")
+    val base = Seq(Doc("a", "grilled cheese sandwich"), Doc("b", "bacon avocado toast"),
+      Doc("c", "tomato soup with cheese"))
+    val eng = SearchEngine.withDocuments(spark, dir, base)
+    eng.upsert(Doc("d", "cheese toast melt"))
+    eng.remove("b")
+    val queries = Seq("cheese", "toast sandwich", "soup")
+    val before = for (q <- queries; limit <- Seq(Some(2), None)) yield eng.search(q, limit)
+    // a compaction that died before its swap: staged index checkpoints (no
+    // manifest) and a staged log; and a complete backup next to the live index
+    Checkpoints.commit(s"$dir/index_compacting", "postings_g0", Map("shards" -> "0,1"))
+    Files.createDirectories(Paths.get(s"$dir/docstore_compacting/bucket=0"))
+    Files.write(Paths.get(s"$dir/docstore_compacting/bucket=0/stale.parquet"), Array[Byte](1, 2, 3))
+    IndexManifest.read(s"$dir/index").write(s"$dir/index_old")
+    assert(IndexManifest.exists(s"$dir/index_old"))
+    val re = SearchEngine.open(spark, dir)
+    for (d <- Seq("index_compacting", "docstore_compacting", "index_old", "docstore_old"))
+      assert(!Files.exists(Paths.get(s"$dir/$d")), d)
+    assert(IndexManifest.exists(s"$dir/index"))
+    re.compact()
+    assert(!re.hasPendingDeltas)
+    val after = for (q <- queries; limit <- Seq(Some(2), None)) yield re.search(q, limit)
+    for ((g, e) <- after.zip(before)) assertSameResults(g, e, "after compact")
+  }
+
   test("a successful compact leaves no backup or tmp dirs behind") {
     val dir = tmpDir("cmpclean")
     val eng = SearchEngine.withDocuments(spark, dir, Seq(Doc("a", "grilled cheese sandwich")))
@@ -425,18 +415,35 @@ class SearchEngineSpec extends SparkTestBase {
     assert(re.search("risen", None).map(_.id) === Seq("a"))
   }
 
-  test("a mixed flat+bucketed docstore layout fails fast") {
+  test("a docstore holding flat data files is refused at open") {
+    import org.apache.spark.graft.JobRecorder
+    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val dir = tmpDir("mixed")
     val sid = graft.text.FxHash.hash64("x") & Long.MaxValue
-    // flat part files AND a bucket= dir — the corruption the layout gate
-    // exists for; picking either layout silently drops rows
-    Seq(LogRow(sid, "x", "flat row", 0L, tombstone = false))
-      .toDS().coalesce(1).write.parquet(s"$dir/docstore")
-    Seq(LogRow(sid, "x", "bucketed row", 1L, tombstone = false))
-      .toDS().coalesce(1).write.parquet(s"$dir/docstore/bucket=0")
-    val ex = intercept[IllegalArgumentException] { SearchEngine.withAvgdl(spark, dir, 4.0f) }
-    assert(ex.getMessage.contains("mixed docstore layout"))
+    def flatRow(dir: String, seq: Long) =
+      Seq(LogRow(sid, "x", "flat row", seq, tombstone = false)).toDS().coalesce(1)
+        .write.mode("append").parquet(s"$dir/docstore")
+    def listing(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString).toSeq.sorted finally walk.close()
+    }
+    // a pre-bucket log (flat part files only), and a mixed one whose flat
+    // rows partition discovery would drop
+    val flat = tmpDir("flatlog")
+    flatRow(flat, 0L)
+    val mixed = tmpDir("mixedlog")
+    flatRow(mixed, 0L)
+    Seq(LogRow(sid, "x", "bucketed row", 1L, tombstone = false)).toDS().coalesce(1)
+      .write.parquet(s"$mixed/docstore/bucket=0")
+    for (dir <- Seq(flat, mixed)) {
+      val before = listing(dir)
+      val (ex, jobs) = JobRecorder(spark.sparkContext)(
+        intercept[IllegalArgumentException](SearchEngine.open(spark, dir)))
+      assert(ex.getMessage.contains("pre-bucket"), ex.getMessage)
+      assert(jobs.isEmpty, s"$dir: open jobs $jobs")
+      assert(listing(dir) === before, dir)
+    }
   }
 
   /** Same hits in the same order: key, contents and f32 score bits. */
@@ -489,28 +496,6 @@ class SearchEngineSpec extends SparkTestBase {
     assert(got.length > 1024)
     assertSameResults(got, fresh.search("common word4", None), "unlimited")
     assertSameResults(eng.search("common word4", Some(5)), fresh.search("common word4", Some(5)), "top 5")
-  }
-
-  test("a legacy flat log resolves contents without a bucket filter") {
-    import spark.implicits._
-    val dir = tmpDir("legacyc1")
-    def sid(k: String) = graft.text.FxHash.hash64(k) & Long.MaxValue
-    Seq(LogRow(sid("x"), "x", "grilled cheese sandwich", 0L, tombstone = false),
-      LogRow(sid("x"), "x", "grilled cheese toast", 1L, tombstone = false),
-      LogRow(sid("y"), "y", "bacon sandwich", 2L, tombstone = false),
-      LogRow(sid("z"), "z", "cheese soup", 3L, tombstone = false),
-      LogRow(sid("z"), "z", "", 4L, tombstone = true))
-      .toDS().coalesce(1).write.parquet(s"$dir/docstore")
-    val eng = SearchEngine.withAvgdl(spark, dir, 4.0f)
-    eng.buildBase(avgdlOverride = Some(4.0f))
-    eng.upsert(Doc("w", "cheese sandwich melt"))
-    eng.remove("y")
-    eng.upsert(Doc("y", "bacon toast"))
-    assert(!eng.contentsRows(Seq(sid("x"), sid("y"))).queryExecution.executedPlan.toString.contains("bucket"))
-    val fresh = SearchEngine.withAvgdl(spark, tmpDir("legacyc2"), 4.0f)
-    fresh.upsert(Seq(Doc("x", "grilled cheese toast"), Doc("w", "cheese sandwich melt"),
-      Doc("y", "bacon toast")))
-    assertSameSearches(eng, fresh, Seq("cheese", "toast", "sandwich", "soup"))
   }
 
   test("the held base index follows compact() and buildBase() on the same instance") {

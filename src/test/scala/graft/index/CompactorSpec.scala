@@ -137,7 +137,9 @@ class CompactorSpec extends SparkTestBase {
     val merged = Checkpoints.readAll(out)
     assert(merged.keySet === Set("bounds", "forward", "stats", "postings_g0", "termstats"))
     assert(merged.keySet === Checkpoints.readAll(base).keySet)
-    assert(merged("forward").contains("seconds"))
+    // every stage records its time, in a built index and a merged one
+    for ((what, cps) <- Seq("built" -> Checkpoints.readAll(base), "merged" -> merged); (name, json) <- cps)
+      assert(json.contains("\"seconds\""), s"$what $name: $json")
     assert(merged("stats").contains("\"nDocs\" : 3"))
   }
 }
