@@ -13,7 +13,7 @@ object OracleSql {
   /** Shared CTE prefix for the hyperplane-LSH entries: `e` = vectors as
     * DOUBLE[], `b` = one row per (vec, band) with its 8-bit sign code —
     * the same md5-derived ±1 planes the Spark side embeds as literals
-    * (Queries.hyperplaneSigns), recomputed here in SQL.
+    * (NearDup.hyperplaneSigns), recomputed here in SQL.
     */
   private val lshBandsCte: String = {
     val bit = (p: Int) =>
@@ -217,10 +217,10 @@ object OracleSql {
         |k AS (SELECT h, min(doc_id) AS keep_id, count(*) AS dup_cnt FROM h GROUP BY h)
         |SELECT doc_id, keep_id, dup_cnt FROM h JOIN k USING (h) ORDER BY doc_id""".stripMargin,
 
-    // restates jaccardBlockCandidates bit-for-bit: within-block all-pairs
+    // restates NearDup.jaccardBlockCandidates bit-for-bit: within-block all-pairs
     // for blocks of <= cap docs, banded-minhash candidates (same md5-slice
     // 4x2 banding as the dedup_minhash family, over shingles — see the
-    // Queries.scala hot-path note for why not the word set) inside
+    // NearDup hot-leg note for why not the word set) inside
     // oversized blocks
     "dedup_jaccard_block" ->
       s"""WITH w AS (
@@ -243,11 +243,11 @@ object OracleSql {
          |), small_pairs AS (
          |  SELECT x.doc_id AS a, y.doc_id AS b
          |  FROM dc x JOIN dc y ON x.blk = y.blk AND x.doc_id < y.doc_id
-         |  WHERE x.bcnt <= ${Queries.JaccardHotBlockCap}
+         |  WHERE x.bcnt <= ${NearDup.JaccardHotBlockCap}
          |), hh AS (
          |  SELECT doc_id, blk,
          |    list_transform(sh, s -> md5('0:' || s) || md5('1:' || s)) AS hh
-         |  FROM dc WHERE bcnt > ${Queries.JaccardHotBlockCap}
+         |  FROM dc WHERE bcnt > ${NearDup.JaccardHotBlockCap}
          |), sig AS (
          |  SELECT doc_id, blk,
          |    list_aggregate(list_transform(hh, m -> substring(m, 1, 8)), 'min') AS h0,

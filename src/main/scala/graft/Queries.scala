@@ -17,16 +17,25 @@ import org.apache.spark.sql.functions._
   *     sbt test suite against the Rust snapshots instead — stronger than a
   *     cross-dialect float compare);
   *   - only functions DuckDB 1.0 has offline (no fts/stem extension).
+  *
+  * The near-dup entries (`dedup_jaccard_block`, `dedup_minhash_*`,
+  * `dedup_clusters`, `dedup_embedding_cosine`, `sim_ann_lsh`) are thin
+  * calls into [[NearDup]], which holds their one pipeline and their cache.
   */
 object Queries {
 
   // --------------------------------------------------------------- helpers
 
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def docs(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
 
   private def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** The embeddings table as (vec_id, v: DOUBLE[]). */
+  private[graft] def vectors(spark: SparkSession, sfDir: String): DataFrame =
+    tbl(spark, sfDir, "embeddings")
+      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
 
   /** Whitespace tokenizer (the custom-tokenizer hook T7,
     * `/root/reference/src/tokenizer.rs:3-6`): used for the SQL-checkable
@@ -122,239 +131,6 @@ object Queries {
       .limit(20)
   }
 
-  /** Blocks larger than this route through the banded-minhash candidate
-    * path instead of the within-block all-pairs join (r4 judge finding #2).
-    */
-  private[graft] val JaccardHotBlockCap = 64
-
-  /** Candidate pairs for `dedup_jaccard_block`, hot-block-bounded, plus the
-    * (doc_id, wsd) side table for the exact-Jaccard verify. Blocks of at
-    * most `cap` docs take the exact within-block all-pairs join; OVERSIZED
-    * blocks (one globally-common minimum shingle — boilerplate, license
-    * headers — would otherwise degenerate the self-join toward all-pairs,
-    * the r4 judge's scale finding) pair only docs that ALSO share a 4×2
-    * minhash band inside the block, the same md5-slice banding as the
-    * dedup_minhash family — so a hot block costs O(block) band rows, never
-    * O(block²) comparisons, and true near-dups still collide with the
-    * usual LSH probability. Docs with <3 words band on their exact text
-    * (their block IS the exact-text group, so band collision ≡ block
-    * membership — no pair lost). The corpus-wide persisted projection is
-    * kept LEAN — (doc_id, wsd, blk) only; the shingle arrays (~3× the
-    * text) exist transiently inside the block-key expression and are
-    * rebuilt just for the hot docs — and the banding basis is shingles by
-    * design, not the word set the metric measures (see the hot-path note
-    * below for why word banding degenerates on boilerplate-keyed blocks).
-    * The DuckDB oracle restates the full rule bit-for-bit. Exposed for
-    * the hot-block spec, which counts candidates directly.
-    */
-  private[graft] def jaccardBlockCandidates(spark: SparkSession, sfDir: String,
-                                            cap: Int): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    // persist() collapses the min-shingle-hash projection once — the
-    // self-join legs and the wsd re-entry would otherwise recompute every
-    // shingle md5
-    val d = docs(spark, sfDir)
-      .select($"doc_id", split($"text", " ").as("ws"), $"text", md5($"text").as("th"))
-      .withColumn("wsd", array_distinct($"ws"))
-      .withColumn("blk", when(size($"ws") >= 3,
-        expr("array_min(transform(sequence(0, size(ws)-3), " +
-          "i -> md5(concat('jb:', ws[i], ' ', ws[i+1], ' ', ws[i+2]))))"))
-        .otherwise($"th"))
-      .select($"doc_id", $"wsd", $"blk")
-      .persist()
-    val counts = d.groupBy($"blk").agg(count(lit(1)).as("bcnt"))
-    // r6: the cache-materialization action (formerly a bare d.count()) now
-    // doubles as the hot-block probe — same single job (the aggregate scans
-    // every cached partition), but the driver learns whether the hot path
-    // is needed at all. On corpora with no oversized block (the common
-    // case) the entire hot leg — a second full-corpus shingle rebuild, the
-    // banded sigs and the band self-join — is skipped outright: AQE does
-    // NOT runtime-prune the probe side of an empty-broadcast join, so
-    // without this the shingle projection re-ran per invocation for zero
-    // hot docs.
-    val nHotBlocks = counts.where($"bcnt" > cap).count()
-    val dc = d.join(counts, "blk")
-
-    val small = dc.where($"bcnt" <= cap)
-    val smallPairs = small.select($"blk", $"doc_id".as("a"))
-      .join(small.select($"blk", $"doc_id".as("b")), Seq("blk"))
-      .where($"a" < $"b").select($"a", $"b")
-    if (nHotBlocks == 0L) return (smallPairs, d)
-
-    // hot path: shingles REBUILT for the hot docs only (a second narrow
-    // text scan over the rare oversized blocks — the price of keeping the
-    // corpus-wide persisted projection shingle-free), then 8 minhashes as
-    // 2 md5 slices per shingle (the same CollapseProject-safe
-    // two-projection shape as dedup_minhash_sig), banded 4×2; candidates
-    // join on (blk, band, bucket).
-    //
-    // The minhashes deliberately run over SHINGLES, not the word set the
-    // final Jaccard measures. Banding the word set was tried and is
-    // structurally wrong for blocks DEFINED by shared boilerplate words:
-    // those words are in every doc of the block, so whenever a band's
-    // common-word slice minima hash low, most of the block shares the
-    // full band signature and the band degenerates to a clique —
-    // empirically ~25 % of merely-boilerplate pairs collide, re-exploding
-    // exactly the blocks this path bounds (the shared 3-shingle is a far
-    // weaker attractor: one array element among many vs 3-of-7 words).
-    // The trade-off is order-sensitivity: word-PERMUTED near-dups whose
-    // block crosses the cap collide only at the usual LSH rate; the
-    // order-robust near-dup pipeline is dedup_minhash_verified.
-    val shingled = docs(spark, sfDir)
-      .select($"doc_id", split($"text", " ").as("ws"), $"text")
-      .withColumn("sh", when(size($"ws") >= 3, expr(
-        "transform(sequence(0, size(ws)-3), i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-        .otherwise(array($"text")))
-      .select($"doc_id", $"sh")
-    // the hot-doc id list is tiny by construction (docs of the rare
-    // oversized blocks) — pin it as the broadcast build side so the
-    // shingled corpus is only ever the streamed probe side: without the
-    // hint the planner has broadcast the SHINGLED side (the whole corpus's
-    // shingle arrays through the driver), and a misestimate at scale would
-    // otherwise shuffle the 3×-text shingle projection (r5 judge nit #2)
-    val hot = broadcast(dc.where($"bcnt" > cap).select($"blk", $"doc_id"))
-      .join(shingled, "doc_id")
-      .select($"blk", $"doc_id", expr(
-        "transform(sh, s -> concat(md5(concat('0:', s)), md5(concat('1:', s))))").as("hh"))
-    val sigs = (0 until 8).map(j =>
-      expr(s"array_min(transform(hh, m -> substring(m, ${1 + 8 * j}, 8)))").as(s"h$j"))
-    val banded = hot.select(($"blk" +: $"doc_id" +: sigs): _*)
-      .selectExpr("blk", "doc_id",
-        "stack(4, 0, md5(concat(h0, h1)), 1, md5(concat(h2, h3)), " +
-          "2, md5(concat(h4, h5)), 3, md5(concat(h6, h7))) as (band, bucket)")
-    val hotPairs = banded.select($"blk", $"band", $"bucket", $"doc_id".as("a"))
-      .join(banded.select($"blk", $"band", $"bucket", $"doc_id".as("b")),
-        Seq("blk", "band", "bucket"))
-      .where($"a" < $"b").select($"a", $"b").distinct()
-
-    // a pair lives in exactly one block, and a block is on exactly one
-    // path, so the union is duplicate-free
-    (smallPairs.unionByName(hotPairs), d)
-  }
-
-  /** Rademacher hyperplane signs for `planes` planes over `dim` dims: plane
-    * p, dim d is +1 iff the first hex digit of md5("rp:p:d") < '8'. Derived
-    * from md5 so the DuckDB oracles reconstruct the SAME ±1 matrix in SQL —
-    * shared by the banded-LSH dedup and the LSH-bucketed ANN probe.
-    */
-  private[graft] def hyperplaneSigns(dim: Int, planes: Int): Array[Array[Int]] =
-    Array.tabulate(planes, dim) { (p, d) =>
-      if (org.apache.commons.codec.digest.DigestUtils.md5Hex(s"rp:$p:$d").charAt(0) < '8') 1 else -1
-    }
-
-  /** One shared, persisted (vec_id, band, bucket) projection per
-    * (session, table, band geometry): the banded-LSH dedup and the LSH ANN
-    * probe consume the same 32 hyperplane projections, so they are computed
-    * once per session, not once per query (ids + 8-char codes only — the
-    * vectors never enter the cache). Bounded at [[BandCodeCacheMax]] entries
-    * (oldest unpersisted on eviction); entries of stopped sessions are
-    * dropped eagerly.
-    */
-  private val bandCodeCache =
-    scala.collection.mutable.LinkedHashMap.empty[(Int, String, Int, Int), DataFrame]
-  private val BandCodeCacheMax = 8
-
-  private def cachedBandCodes(spark: SparkSession, sfDir: String,
-                              bands: Int, planesPerBand: Int): DataFrame = synchronized {
-    import spark.implicits._
-    // entries from stopped sessions are dead weight (and identityHashCode can
-    // be reused after GC) — drop them before lookup
-    bandCodeCache.filterInPlace((_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(spark), sfDir, bands, planesPerBand)
-    if (!bandCodeCache.contains(key))
-      while (bandCodeCache.size >= BandCodeCacheMax) {
-        val (k, df) = bandCodeCache.head
-        df.unpersist(blocking = false)
-        bandCodeCache.remove(k)
-      }
-    bandCodeCache.getOrElseUpdate(key, {
-      val e = tbl(spark, sfDir, "embeddings")
-        .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
-      val dim = e.select(size($"v")).head().getInt(0)
-      val cols = bandCodeCols(hyperplaneSigns(dim, bands * planesPerBand), bands, planesPerBand)
-      e.withColumn("bb", explode(array(cols: _*)))
-        .select($"vec_id", $"bb.band".as("band"), $"bb.bucket".as("bucket"))
-        .persist()
-    })
-  }
-
-  /** The per-row band-code columns over a DOUBLE[] vector column `v`: for
-    * each band, an 8-char '0'/'1' string of hyperplane signs (one struct
-    * column per band). The sign arrays are embedded as ±1 LITERALS (no
-    * per-row hashing) and the dot product is a plain in-order fold, so the
-    * driver-collected codes of any row equal the executor-computed ones
-    * bit-for-bit.
-    */
-  private def bandCodeCols(signs: Array[Array[Int]], bands: Int, planesPerBand: Int) = {
-    def bit(p: Int) = {
-      val arr = signs(p).map(s => if (s > 0) "1D" else "-1D").mkString("array(", ", ", ")")
-      when(expr(
-        s"aggregate(zip_with(v, $arr, (x, s) -> x * s), cast(0 as double), (s, x) -> s + x)") >= 0,
-        lit("1")).otherwise(lit("0"))
-    }
-    (0 until bands).map { b =>
-      val code = concat((0 until planesPerBand).map(r => bit(b * planesPerBand + r)): _*)
-      struct(lit(b).as("band"), code.as("bucket"))
-    }
-  }
-
-  /** LSH-bucketed approximate top-k cosine search — the data-OBLIVIOUS
-    * scale path next to the data-ADAPTIVE IVF (`sim_ann_ivf`): the same
-    * 4-band × 8-plane random-hyperplane codes as `dedup_embedding_cosine`,
-    * probed with query-directed multiprobe — per band, the query's exact
-    * code plus all 8 Hamming-1 flips (9 probe buckets/band, 36 total).
-    * Candidates = vectors colliding with ANY probe bucket; exact-cosine
-    * re-rank; top-10.
-    *
-    * Scale shape: the band codes are a narrow projection; the probe is a
-    * broadcast equi-join against 36 (band, bucket) literals — with the
-    * banded table laid out partitioned by (band, bucket) it prunes at the
-    * file level, touching ~9/256 of each band (~13% of the corpus unioned
-    * over 4 bands) instead of scanning it; candidate ids ride the distinct
-    * alone and vectors re-enter by id (the dedup path's rule). Recall is a
-    * property of the SIMILARITY REGIME, not the data size: ≈1.0 for
-    * near-duplicate neighbors (cos ≥ 0.9 — the regime LSH targets in a
-    * 100 TB dedup/retrieval pipeline; AnnRecallSpec gates it with planted
-    * near-dups), but weak for near-orthogonal "neighbors" like this
-    * synthetic table's organic top-10 (cos ≈ 0.3, where a data-oblivious
-    * hash cannot separate signal from noise — that regime belongs to IVF,
-    * which learns the corpus structure). Unlike IVF there is no trained
-    * state, so the oracle reproduces codes, probes, and re-rank exactly —
-    * this entry is DuckDB value-checked, not rows-only.
-    */
-  def simAnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val bands = 4
-    val planesPerBand = 8
-    val e = tbl(spark, sfDir, "embeddings")
-      .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
-    // shared with dedup_embedding_cosine: one persisted code projection
-    // per session serves the query-code collect and the candidate probe
-    val withB = cachedBandCodes(spark, sfDir, bands, planesPerBand)
-    // query codes come from the SAME plan as the candidates' (collected,
-    // not recomputed driver-side), so they are equal by construction
-    val qCodes: Map[Int, String] = withB.where($"vec_id" === 0)
-      .as[(Long, Int, String)].collect().map(r => r._2 -> r._3).toMap
-    val probes: Seq[(Int, String)] = (0 until bands).flatMap { b =>
-      val c = qCodes(b)
-      (c +: (0 until planesPerBand).map(i =>
-        c.updated(i, if (c.charAt(i) == '1') '0' else '1'))).map(b -> _)
-    }
-    val probeDf = probes.toDF("band", "bucket")
-    val cands = withB.join(broadcast(probeDf), Seq("band", "bucket"))
-      .where($"vec_id" =!= 0)
-      .select($"vec_id").distinct()
-    val q = e.where($"vec_id" === 0).select($"v".as("qv"))
-    cands.join(e, "vec_id").crossJoin(broadcast(q))
-      .withColumn("dot", expr("aggregate(zip_with(v, qv, (x, y) -> x*y), cast(0 as double), (s, p) -> s + p)"))
-      .withColumn("nv", expr("sqrt(aggregate(transform(v, x -> x*x), cast(0 as double), (s, p) -> s + p))"))
-      .withColumn("nq", expr("sqrt(aggregate(transform(qv, x -> x*x), cast(0 as double), (s, p) -> s + p))"))
-      .withColumn("cos_r", round($"dot" / ($"nv" * $"nq"), 4))
-      .select($"vec_id", $"cos_r")
-      .orderBy($"cos_r".desc, $"vec_id")
-      .limit(10)
-  }
-
   /** IVF approximate-nearest-neighbour top-k over the embeddings table —
     * the scale path next to the exact `sim_cosine_topk` baseline.
     *
@@ -382,9 +158,7 @@ object Queries {
   def simAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // the vectors, persisted: scanned once per Lloyd round and twice after
-    val e = tbl(spark, sfDir, "embeddings")
-      .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
-      .persist()
+    val e = vectors(spark, sfDir).persist()
     val k = math.max(16, math.ceil(math.sqrt(e.count().toDouble)).toInt)
     val nprobe = math.max(4, math.ceil(k / 4.0).toInt) // recall-biased K/4
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -578,180 +352,26 @@ object Queries {
         .orderBy($"doc_id")
     },
 
-    // n-gram Jaccard dedup with CONTENT-derived blocking: the block key is
-    // the doc's minimum 3-shingle hash (a 1-band minhash), so near-dup docs
-    // collide with P ≈ Jaccard regardless of where their ids fall; docs with
-    // <3 words fall back to an exact-text block. Pair generation is
-    // within-block only, and HOT blocks (a globally-common minimum shingle
-    // — boilerplate header, license line — pulling a corpus fraction into
-    // one block) are bounded: see jaccardBlockCandidates.
-    "dedup_jaccard_block" -> { (spark, sfDir) =>
-      import spark.implicits._
-      val (cands, d) = jaccardBlockCandidates(spark, sfDir, JaccardHotBlockCap)
-      val wa = d.select($"doc_id".as("a"), $"wsd".as("wa"))
-      val wb = d.select($"doc_id".as("b"), $"wsd".as("wb"))
-      cands.join(wa, "a").join(wb, "b")
-        .withColumn("jac",
-          size(array_intersect($"wa", $"wb")).cast("double") / size(array_union($"wa", $"wb")))
-        .where($"jac" >= 0.8)
-        .select($"a", $"b", round($"jac", 4).as("jaccard"))
-        .orderBy($"a", $"b")
-    },
+    // The near-dup family is one pipeline in NearDup (shingle → signature
+    // → band → verify → components, one held cache per session and sfDir);
+    // these entries only name its outputs.
 
-    // MinHash signatures: 8 minhash functions over word 3-shingles, banded
-    // 4×2 (shingle → minhash → band → bucket-join is the LSH scale path).
-    // Hashing cost is the dominant term of the whole LSH family, so the 8
-    // functions are derived from TWO salted md5s per shingle, sliced into
-    // 8 independent 32-bit (8-hex-char) values — 4× less hashing than 8
-    // full md5s, same collision math (n²/2³² intra-doc collisions are
-    // negligible at realistic shingle counts). The hh projection is kept
-    // in its own Project: Spark's CollapseProject refuses to inline a
-    // non-cheap alias consumed 8×, so the md5s are computed once per
-    // shingle, not once per slice.
-    "dedup_minhash_sig" -> { (spark, sfDir) =>
-      import spark.implicits._
-      val d = docs(spark, sfDir).select($"doc_id", split($"text", " ").as("ws"))
-        .where(size($"ws") >= 3)
-        .withColumn("sh", expr(
-          "transform(sequence(0, size(ws)-3), i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-        .select($"doc_id", expr(
-          "transform(sh, s -> concat(md5(concat('0:', s)), md5(concat('1:', s))))").as("hh"))
-      val sigs = (0 until 8).map(j =>
-        expr(s"array_min(transform(hh, m -> substring(m, ${1 + 8 * j}, 8)))").as(s"h$j"))
-      val withSigs = d.select(($"doc_id" +: sigs): _*)
-      withSigs.select($"doc_id",
-        md5(concat($"h0", $"h1")).as("band0"),
-        md5(concat($"h2", $"h3")).as("band1"),
-        md5(concat($"h4", $"h5")).as("band2"),
-        md5(concat($"h6", $"h7")).as("band3"))
-        .orderBy($"doc_id")
-    },
+    // n-gram Jaccard ≥ 0.8 within content-keyed blocks (a 1-band minhash
+    // of 3-shingles; hot blocks banded): see NearDup.jaccardBlockCandidates.
+    "dedup_jaccard_block" -> { (spark, sfDir) => NearDup.jaccardBlock(spark, sfDir) },
 
-    "dedup_minhash_pairs" -> { (spark, sfDir) =>
-      import spark.implicits._
-      // persist() is a projection-collapse barrier: without it Catalyst
-      // inlines the 8 minhash array-transforms into each stacked band
-      // column and recomputes them 4× (26s → ~1s at sf0.1). No eager
-      // count() here (r6): this query consumes sig exactly ONCE (the stack
-      // feeds one aggregation — no self-join, no broadcast build), so the
-      // aggregation job materializes the cache inline and an up-front
-      // materialization action would only add a job.
-      val sig = all("dedup_minhash_sig")(spark, sfDir).persist()
-      val stacked = sig.selectExpr("doc_id",
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) as (band, bucket)")
-      stacked.groupBy($"band", $"bucket")
-        .agg(count(lit(1)).as("cnt"), min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"))
-        .where($"cnt" > 1)
-        .orderBy($"band", $"bucket")
-    },
+    // MinHash signatures: 8 minhashes over word 3-shingles, banded 4×2.
+    "dedup_minhash_sig" -> { (spark, sfDir) => NearDup.signature(spark, sfDir) },
 
-    // The full LSH pipeline's last step: band-bucket candidate pairs
-    // VERIFIED by exact 3-shingle Jaccard ≥ 0.7 (pairs are bucket-bounded,
-    // so the verification join is cheap at any scale).
-    "dedup_minhash_verified" -> { (spark, sfDir) =>
-      import spark.implicits._
-      val sig = all("dedup_minhash_sig")(spark, sfDir).persist()
-      sig.count()
-      val stacked = sig.selectExpr("doc_id",
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) as (band, bucket)")
-      val xs = stacked.select($"band", $"bucket", $"doc_id".as("a"))
-      val ys = stacked.select($"band", $"bucket", $"doc_id".as("b"))
-      val pairs = xs.join(ys, Seq("band", "bucket")).where($"a" < $"b")
-        .select($"a", $"b").distinct()
-      val sh = docs(spark, sfDir).select($"doc_id", split($"text", " ").as("ws"))
-        .where(size($"ws") >= 3)
-        .select($"doc_id", array_distinct(expr(
-          "transform(sequence(0, size(ws)-3), i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))")).as("shs"))
-        .persist() // shared by both pair-join legs
-      sh.count()
-      pairs
-        .join(sh.select($"doc_id".as("a"), $"shs".as("sa")), "a")
-        .join(sh.select($"doc_id".as("b"), $"shs".as("sb")), "b")
-        .withColumn("jac",
-          size(array_intersect($"sa", $"sb")).cast("double") / size(array_union($"sa", $"sb")))
-        .where($"jac" >= 0.7)
-        .select($"a", $"b", round($"jac", 4).as("jaccard"))
-        .orderBy($"a", $"b")
-    },
+    "dedup_minhash_pairs" -> { (spark, sfDir) => NearDup.buckets(spark, sfDir) },
 
-    // Near-duplicate CLUSTERING — the dedup output a training pipeline
-    // actually consumes: connected components over the verified near-dup
-    // pair graph (dedup_minhash_verified's edges). Every clustered doc is
-    // labeled with its component's MINIMUM doc_id and the canonical keeper
-    // flagged, so "drop keep=0" is the dedup action. Spark shape: iterative
-    // min-label propagation — each round is one equi-join + hash-agg,
-    // fully distributed (the driver only checks the converged-count
-    // scalar), converging in O(component diameter) rounds; near-dup
-    // clusters are shallow (a doc chains to the canonical through few
-    // hops), and the O(log n) large-star/small-star variant is the known
-    // swap-in if diameters ever grow at 100 TB.
-    "dedup_clusters" -> { (spark, sfDir) =>
-      import spark.implicits._
-      val pairs = all("dedup_minhash_verified")(spark, sfDir)
-        .select($"a", $"b").persist()
-      // edges are persisted ALREADY HASH-PARTITIONED on t: every round's
-      // propagation join keys on t, so the loop-invariant side is shuffled
-      // exactly once for the whole loop instead of once per round
-      // (guide §2.4 — reuse one exchange across same-keyed operations)
-      val edges = pairs.union(pairs.select($"b", $"a")).toDF("s", "t")
-        .repartition($"t").persist()
-      // no eager edges.count(): round 1's convergence action materializes
-      // pairs → edges → init labels in one job (r6 — one fewer action per
-      // query); pairs stays persisted until after the loop so the two
-      // union legs share one verified-pairs computation
-      // init fuses the first propagation round: label0 = min(self, neighbors)
-      var labels = edges.groupBy($"s").agg(min($"t").as("mt"))
-        .select($"s".as("node"), least($"s", $"mt").as("label")).persist()
-      var cached = labels // the persisted frame currently backing `labels`
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 32) {
-        // one round = one union-groupBy: neighbor labels arrive via the
-        // equi-join on t (edges side pre-partitioned — no exchange), the
-        // node's own label rides a self-leg that also carries the previous
-        // label for the convergence check, and a single hash-agg takes
-        // min(own, neighbors) — 2 exchanges/round (labels + agg) instead of
-        // the former join+agg+join's 3, same labels by construction:
-        // label'(v) = min(label(v), min over neighbors' labels)
-        val step = edges
-          .join(labels.select($"node".as("t"), $"label".as("lt")), "t")
-          .select($"s".as("node"), $"lt".as("lab"), lit(null).cast("long").as("prev"))
-          .unionByName(labels.select($"node", $"label".as("lab"), $"label".as("prev")))
-          .groupBy($"node")
-          .agg(min($"lab").as("label"), max($"prev").as("prev"))
-          .persist()
-        changed = step.where($"label" =!= $"prev").count()
-        // the first convergence action materialized pairs → edges → init
-        // labels; edges is now cached, so the pairs cache is dead weight
-        // for the rest of the loop — release it here, not after the loop
-        if (rounds == 0) pairs.unpersist(blocking = false)
-        cached.unpersist(blocking = false)
-        cached = step
-        labels = step.select($"node", $"label")
-        rounds += 1
-      }
-      if (changed != 0) { // release caches on the failure path too
-        cached.unpersist(blocking = false)
-        edges.unpersist(blocking = false)
-        pairs.unpersist(blocking = false)
-        throw new IllegalStateException(
-          s"label propagation did not converge in $rounds rounds")
-      }
-      // Cut the loop lineage before releasing the per-round caches: the
-      // labels frame references every prior round TWICE per round (join +
-      // carry), so dropping the caches while lineage survives would make a
-      // later materialization exponential. localCheckpoint materializes the
-      // (small: only clustered docs) converged labels once; its blocks are
-      // GC-cleaned with the frame. A restart-tolerant cluster deployment
-      // would use a reliable checkpoint dir instead.
-      val finalLabels = labels.localCheckpoint(true)
-      cached.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
-      finalLabels.select($"node".as("doc_id"), $"label".as("cluster_id"),
-        when($"node" === $"label", 1).otherwise(0).as("keep"))
-        .orderBy($"doc_id")
-    },
+    // Band-bucket candidate pairs verified by exact 3-shingle Jaccard ≥ 0.7.
+    "dedup_minhash_verified" -> { (spark, sfDir) => NearDup.verified(spark, sfDir) },
+
+    // Near-duplicate CLUSTERING, the dedup output a training pipeline
+    // consumes: connected components over the verified pairs, labelled by
+    // component minimum with the keeper flagged ("drop keep=0" dedups).
+    "dedup_clusters" -> { (spark, sfDir) => NearDup.clusters(spark, sfDir) },
 
     // SimHash (rows-only: bit-twiddling is not portable DuckDB SQL): 32-bit
     // fingerprint from md5(word) bits, majority-weighted by tf.
@@ -787,59 +407,10 @@ object Queries {
         .orderBy($"doc_id")
     },
 
-    // Embedding near-dup via BANDED random-hyperplane LSH (4 bands × 8
+    // Embedding near-dup via banded random-hyperplane LSH (4 bands × 8
     // Rademacher planes, signs derived from md5 so DuckDB reproduces them
-    // exactly): a pair is a candidate when it collides in ANY band — the
-    // same b×r structure as the minhash path. Banding keeps recall high
-    // while each band bucket stays small: at n rows and 256 buckets/band,
-    // expected within-bucket pair work is 4·n²/256 versus a single wider
-    // code losing recall — and there is never an all-pairs join in the
-    // physical plan, so one hot label cannot cartesian-blow-up at scale.
-    "dedup_embedding_cosine" -> { (spark, sfDir) =>
-      import spark.implicits._
-      val bands = 4
-      val planesPerBand = 8
-      val e = tbl(spark, sfDir, "embeddings")
-        .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
-      // The hyperplane signs depend only on (plane, dim): md5('rp:p:d') is
-      // evaluated ONCE on the driver and embedded as ±1 literal arrays
-      // (the oracle computes the same md5 in SQL — identical signs by
-      // construction); the per-row expression is then a plain dot product.
-      // The persisted code projection is shared with sim_ann_lsh — both
-      // self-join legs (and the ANN probe) reuse the 32 hyperplane
-      // projections (ids + band codes only — the vectors stay out of the
-      // cache and out of the candidate-pair shuffle).
-      val withB = cachedBandCodes(spark, sfDir, bands, planesPerBand)
-      withB.count()
-      val a = withB.select($"band", $"bucket", $"vec_id".as("a"))
-      val b = withB.select($"band", $"bucket", $"vec_id".as("b"))
-      // union over bands → distinct candidate ID pairs → re-join vectors →
-      // exact-cosine verify. The distinct keys on (a, b) ONLY (mirroring
-      // dedup_minhash_verified): riding the full embedding vectors through
-      // the dedup shuffle would multiply its volume by 2×dim for nothing
-      // (the r3 judge's nit #2). Vectors re-enter via a fresh single-row-
-      // per-vec scan of the source (a narrow cast projection, no distinct).
-      // r6: the per-pair norm folds are hoisted to PER-VECTOR norm columns
-      // on the join legs — sqrt(Σx²) is the identical expression over the
-      // identical array, just computed once per vector instead of once per
-      // CANDIDATE pair per side (~36k pairs vs 2k vectors at sf0.1, and the
-      // pair/vector ratio only grows with corpus size), so cos values are
-      // bit-identical. (A typed-map verify was tried and rejected: the
-      // object-decoder boundary on two dim-length arrays per pair cost more
-      // than the interpreted folds it replaced — measured 2.6 s vs 0.25 s
-      // for this subtree.)
-      val en = e.select($"vec_id", $"v", expr(
-        "sqrt(aggregate(transform(v, x -> x*x), cast(0 as double), (s, p) -> s + p))").as("nrm"))
-      a.join(b, Seq("band", "bucket")).where($"a" < $"b")
-        .select($"a", $"b").distinct()
-        .join(en.select($"vec_id".as("a"), $"v".as("va"), $"nrm".as("na")), "a")
-        .join(en.select($"vec_id".as("b"), $"v".as("vb"), $"nrm".as("nb")), "b")
-        .withColumn("dot", expr("aggregate(zip_with(va, vb, (x, y) -> x*y), cast(0 as double), (s, p) -> s + p)"))
-        .withColumn("cos", $"dot" / ($"na" * $"nb"))
-        .where($"cos" >= 0.35)
-        .select($"a", $"b", round($"cos", 4).as("cos_r"))
-        .orderBy($"a", $"b")
-    },
+    // exactly), verified by exact cosine: see NearDup.cosinePairs.
+    "dedup_embedding_cosine" -> { (spark, sfDir) => NearDup.cosinePairs(spark, sfDir) },
 
     // --------------------------------------------------------- similarity
 
@@ -848,8 +419,7 @@ object Queries {
     // interpreted per row); rounding stays in the Spark column.
     "sim_cosine_topk" -> { (spark, sfDir) =>
       import spark.implicits._
-      val e = tbl(spark, sfDir, "embeddings")
-        .select($"vec_id", expr("transform(embedding, x -> cast(x as double))").as("v"))
+      val e = vectors(spark, sfDir)
       val q = e.where($"vec_id" === 0).select($"v".as("qv"))
       e.where($"vec_id" =!= 0).crossJoin(broadcast(q))
         .select($"vec_id", $"v", $"qv")
@@ -874,10 +444,10 @@ object Queries {
     "sim_ann_ivf" -> { (spark, sfDir) => simAnnIvf(spark, sfDir) },
 
     // LSH-bucketed ANN (multiprobe hyperplane bands; DuckDB value-checked —
-    // no trained state, unlike IVF): see simAnnLsh. Recall in the
+    // no trained state, unlike IVF): see NearDup.annLsh. Recall in the
     // near-duplicate regime is gated with planted neighbors in
     // AnnRecallSpec.
-    "sim_ann_lsh" -> { (spark, sfDir) => simAnnLsh(spark, sfDir) },
+    "sim_ann_lsh" -> { (spark, sfDir) => NearDup.annLsh(spark, sfDir) },
 
     // ------------------------------------------------------ text analysis
 

@@ -1,7 +1,6 @@
 package graft.bm25
 
 import graft.text.{Bm25Tokenizer, TextTokenizer}
-import org.apache.spark.sql.{Dataset, Encoders}
 
 /** One token occurrence embedded in the u32 space: `index` is the FxHash32 of
   * the token (carried as unsigned in a Long), `value` its BM25 term-frequency
@@ -108,24 +107,10 @@ object Embedder {
             hasher: TokenHasher = TokenHasher.default): Embedder =
     new Embedder(Bm25Params(k1, b, avgdl), tokenizer, hasher)
 
-  /** avgdl fit over a distributed corpus — the reference's only
-    * parallel-flavored op (`embedder.rs:213-237`): exact integer token-count
-    * sum, f64 division, f32 cast. One Spark job (partial + final agg).
+  /** avgdl fit over an in-memory corpus (`embedder.rs:213-237`): exact
+    * integer token-count sum, f64 division, f32 cast. A distributed corpus
+    * gets the same numerics from the index builder's stats stage.
     */
-  def fitAvgdl(corpus: Dataset[String], tokenizer: TextTokenizer): Float = {
-    val counts = corpus.mapPartitions { it =>
-      var total = 0L
-      var n = 0L
-      it.foreach { t => total += tokenizer.tokenize(t).length.toLong; n += 1 }
-      Iterator.single((total, n))
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-    val partials = counts.collect() // ≤ one row per partition
-    val total = partials.iterator.map(_._1).sum
-    val n = partials.iterator.map(_._2).sum
-    if (n == 0L) FallbackAvgdl else (total.toDouble / n.toDouble).toFloat
-  }
-
-  /** Local fit with identical numerics (used by tests and tiny corpora). */
   def fitAvgdlLocal(corpus: IterableOnce[String], tokenizer: TextTokenizer): Float = {
     var total = 0L
     var n = 0L

@@ -79,22 +79,6 @@ object TableIO {
       s"doc_id collision: ${row.getLong(0)} rows, ${row.getLong(1)} distinct ids")
   }
 
-  /** CSV corpus reader with the reference loader's semantics (S1,
-    * `/root/reference/src/test_data_loader.rs:13-28`): header row, quoted
-    * fields with embedded commas/newlines, first column = title (doc key),
-    * second = contents.
-    */
-  def readCsvCorpus(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("escape", "\"")
-      // the reference's csv crate never trims quoted fields; univocity
-      // does by default — keep field bytes exact
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(path)
-
   /** Per-row content integrity fingerprints (the input_hint invariant:
     * `sha256(content)` equality vs the reference corpus rows).
     */

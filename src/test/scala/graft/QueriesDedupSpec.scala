@@ -55,7 +55,7 @@ class QueriesDedupSpec extends SparkTestBase {
 
     // candidate generation must be bounded: the all-pairs join over this
     // block would evaluate 203·202/2 ≈ 20 503 pairs
-    val (cands, _) = Queries.jaccardBlockCandidates(spark, dir, Queries.JaccardHotBlockCap)
+    val (cands, _) = NearDup.jaccardBlockCandidates(spark, dir)
     val nCands = cands.count()
     assert(nCands < 2000L, s"hot block exploded: $nCands candidate pairs")
 
@@ -72,5 +72,55 @@ class QueriesDedupSpec extends SparkTestBase {
     // shingles → equal bands → guaranteed collision)
     assert(res.exists(p => p._1 == 1000L && p._2 == 1001L && p._3 == 1.0),
       s"planted identical pair lost; got ${res.mkString(", ")}")
+  }
+
+  private def cachedData(df: org.apache.spark.sql.DataFrame) =
+    spark.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
+  test("a held band-code frame is registered again after clearCache()") {
+    Queries.all("sim_ann_lsh")(spark, sf).collect()
+    spark.catalog.clearCache()
+    Queries.all("sim_ann_lsh")(spark, sf).collect()
+    val codes = NearDup.held(spark)((sf, "bandCodes"))
+    assert(cachedData(codes).isDefined, "sim_ann_lsh read an uncached band-code frame after clearCache()")
+  }
+
+  test("NearDup.clear releases every held frame") {
+    for (q <- Seq("dedup_jaccard_block", "dedup_minhash_sig", "dedup_minhash_pairs", "dedup_minhash_verified",
+                  "dedup_clusters", "dedup_embedding_cosine", "sim_ann_lsh"))
+      Queries.all(q)(spark, sf).collect()
+    val frames = NearDup.held(spark).collect { case ((dir, name), df) if dir == sf => name -> df }
+    assert(frames.keySet === Set("blocks", "signature", "shingleSets", "verified", "bandCodes"))
+    frames.foreach { case (name, df) => assert(cachedData(df).isDefined, s"$name not cached") }
+    NearDup.clear(spark)
+    assert(NearDup.held(spark).isEmpty)
+    frames.foreach { case (name, df) => assert(cachedData(df).isEmpty, s"$name still cached after clear") }
+  }
+
+  test("dedup_clusters after dedup_minhash_verified reads the held pairs: no rebuild") {
+    import org.apache.spark.graft.JobRecorder
+    import org.apache.spark.scheduler.StageInfo
+    Queries.all("dedup_minhash_verified")(spark, sf).collect()
+    val held = NearDup.held(spark)
+    val rebuildInputs = Seq("signature", "shingleSets")
+      .map(n => cachedData(held((sf, n))).get.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id).toSet
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, jobs, stages) = JobRecorder.withStages(spark.sparkContext)(Queries.all("dedup_clusters")(spark, sf).collect())
+    // what a submitted stage computed: its RDDs down to, and including,
+    // those cached before the call, which it reads rather than rebuilds
+    def computed(st: StageInfo) = {
+      val byId = st.rddInfos.map(r => r.id -> r).toMap
+      val parents = st.rddInfos.flatMap(_.parentIds).toSet
+      def walk(id: Int): Seq[Int] =
+        id +: (if (cachedBefore(id)) Nil else byId.get(id).toSeq.flatMap(_.parentIds).flatMap(walk))
+      st.rddInfos.map(_.id).filterNot(parents).flatMap(walk).distinct.flatMap(byId.get)
+    }
+    // a file scan rebuilds shingles or signatures; reading the signature or
+    // shingle-set cache rebuilds the verified pairs
+    val rebuilds = for (st <- stages; rdd <- computed(st)
+                        if rdd.name == "FileScanRDD" || rebuildInputs(rdd.id)) yield (st.name, rdd.name.take(80))
+    assert(rebuilds.isEmpty, s"dedup_clusters rebuilt its input: $rebuilds")
+    // 15 jobs at sf0.001; 26 while each call planned the verify again
+    assert(jobs.size <= 15, s"${jobs.size} jobs: ${jobs.map(_.map(_._1))}")
   }
 }

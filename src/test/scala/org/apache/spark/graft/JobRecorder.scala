@@ -1,7 +1,7 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -24,8 +24,20 @@ object JobRecorder {
     * pool thread whose stack names no caller.
     */
   def withCallSites[A](sc: SparkContext)(body: => A): (A, Seq[Seq[(String, String)]]) = {
+    val (result, jobs, _) = withStages(sc)(body)
+    (result, jobs)
+  }
+
+  /** Like `withCallSites`, plus the stages the block submitted. A stage
+    * whose output already exists (a cached or shuffled input) is skipped,
+    * never submitted, so these are the stages that did work, and their
+    * RDDs tell which data the block really read.
+    */
+  def withStages[A](sc: SparkContext)(body: => A): (A, Seq[Seq[(String, String)]], Seq[StageInfo]) = {
     val group = s"job-recorder-${java.util.UUID.randomUUID()}"
+    def ours(p: java.util.Properties) = Option(p).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
+    val submitted = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val executionSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -33,18 +45,20 @@ object JobRecorder {
         case _ =>
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)) {
+        if (ours(e.properties)) {
           val site = Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
             .flatMap(id => Option(executionSites.get(id))).fold("")("\n" + _)
           jobs.add(e.stageInfos.map(s => (s.name, s.details + site)))
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) submitted.add(e.stageInfo)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "recorded")
     try {
       val result = body
       sc.listenerBus.waitUntilEmpty()
-      (result, jobs.asScala.toSeq)
+      (result, jobs.asScala.toSeq, submitted.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
