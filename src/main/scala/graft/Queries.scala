@@ -110,21 +110,15 @@ object Queries {
     import spark.implicits._
     val eng = graft.api.SearchEngine.open(spark, dir, tokenizer = Some(simpleTokenizer))
     val terms = simpleTokenizer.tokenize("merge join sort table").map(FxHash.hash32u).toArray.distinct
-    val (posts, nLive) = eng.liveQueryState(terms)
+    // the engine's live df (base dictionary df corrected by the churn set,
+    // derived on the driver) rides into the plan as a broadcast local table
+    val (posts, dfs, nLive) = eng.liveQueryState(terms)
     val avgdl = IndexManifest.read(s"$dir/index").avgdl.toDouble
-    // r6: when the base IS the live view (post-compaction, no pending
-    // deltas) the per-term df is exactly the termstats df — one posting per
-    // (term, doc), so the block-count sum equals countDistinct(doc_id) —
-    // and the broadcast side no longer re-evaluates the posting-decode
-    // subtree. With pending deltas the live aggregate stays.
-    val dfs =
-      if (!eng.hasPendingDeltas)
-        new Bm25Index(spark, s"$dir/index", Some(simpleTokenizer)).termStatsFor(terms)
-      else posts.toDF().groupBy($"term").agg(countDistinct($"doc_id").as("df"))
-    val scored = posts.toDF().join(broadcast(dfs), "term")
+    val scored = posts.toDF().join(broadcast(dfs.toSeq.toDF("term", "df")), "term")
       .groupBy($"doc_id").agg(bm25ScoreR(nLive.toDouble, lit(avgdl)))
     // map the engine's surrogate ids back to the original doc ids via the log
-    val keys = spark.read.parquet(s"$dir/docstore").select($"doc_id", $"key").distinct()
+    val keys = spark.read.schema("doc_id BIGINT, key STRING").parquet(s"$dir/docstore")
+      .select($"doc_id", $"key").distinct()
     scored.join(keys, "doc_id")
       .select($"key".cast("long").as("doc_id"), $"score_r")
       .orderBy($"score_r".desc, $"doc_id")
@@ -296,14 +290,11 @@ object Queries {
       val idx = new Bm25Index(spark, dir, Some(simpleTokenizer))
       val qTerms = idx.queryTerms("merge join sort table").distinct
       val n = idx.nDocs.toDouble
-      // r6 optimization: the df lookup and the f64 avgdl aggregate used to
-      // be two separate driver actions (a termstats collect and a forward
-      // head()) before the scoring job; both now ride the one query plan as
-      // broadcast sides — same bucket+term-pruned termstats scan (the
-      // shared Bm25Index.termStatsFor definition), same sum(dl)/count
-      // expression (matches DuckDB's avg()), identical values, one Spark
-      // job instead of three.
-      val dfs = idx.termStatsFor(qTerms)
+      // the dfs come from the index's term dictionary as a local table; the
+      // f64 avgdl rides the plan as a broadcast side (the sum(dl)/count
+      // expression matches DuckDB's avg()), so no driver action precedes
+      // the scoring job but the dictionary's one collect
+      val dfs = idx.termDfs(qTerms).toSeq.toDF("term", "df")
       val avgDf = graft.index.IndexTables.forward(spark, dir)
         .agg((sum($"dl").cast("double") / count(lit(1))).as("avgdl"))
       val posts = idx.postingsFor(qTerms).toDF()

@@ -25,7 +25,7 @@ private[api] final case class ChangedDoc(doc_id: Long, tombstone: Boolean, dl: I
 
 /** The live view one query sees (see `SearchEngine.liveView`). */
 private final case class LiveView(base: Option[Bm25Index], emb: Embedder, superseded: Array[Long],
-                                  live: Array[ChangedDoc], dfSuperseded: Map[Long, Long], nLive: Long)
+                                  live: Array[ChangedDoc], dfs: Map[Long, Long], nLive: Long)
 
 /** What identifies one base index generation on disk (see `baseIndex`). */
 private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
@@ -540,12 +540,9 @@ final class SearchEngine private[api] (
 
   // ----------------------------------------------------------------- search
 
-  /** True when log rows exist past the built base (the live view differs
-    * from the base index). Exposed so callers can route df lookups to the
-    * termstats table when the base IS the live view (post-compaction):
-    * with zero deltas and zero superseded docs, df_live(t) = df_base(t)
-    * exactly (one posting per (term, doc), so the termstats block-count
-    * sum equals the distinct-doc count).
+  /** True when log rows exist past the built base, so the live view
+    * differs from the base index; false after `compact()` until the next
+    * write.
     */
   def hasPendingDeltas: Boolean = pendingDeltas(baseMarker())
 
@@ -553,12 +550,12 @@ final class SearchEngine private[api] (
 
   /** The live-view query state for a set of distinct query terms: all
     * postings of live documents matching any term (the base's, minus the
-    * churn set, plus the live changed docs' from the churn pass's tfs), and
-    * the live document count N. Public so callers (e.g. the driver-oracle
-    * catalog) can score the live view in alternate precisions; `search`
-    * scores it in reference f32.
+    * churn set, plus the live changed docs' from the churn pass's tfs), the
+    * live df of each term and the live document count N. Public so callers
+    * (e.g. the driver-oracle catalog) can score the live view in alternate
+    * precisions; `search` scores it in reference f32.
     */
-  def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
+  def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Map[Long, Long], Long) = {
     val v = liveView(distinctTerms)
     val base = v.base.fold(spark.emptyDataset[Posting]) { idx =>
       val postings = idx.postingsFor(distinctTerms)
@@ -567,15 +564,20 @@ final class SearchEngine private[api] (
     }
     val changedPostings = for (d <- v.live; j <- distinctTerms.indices if d.tfs(j) > 0)
       yield Posting(d.doc_id, distinctTerms(j), d.tfs(j), d.dl)
-    (base.union(changedPostings.toSeq.toDS()), v.nLive)
+    (base.union(changedPostings.toSeq.toDS()), v.dfs, v.nLive)
   }
 
   /** The live view over the distinct query `terms`, derived once per call
     * from one read of the base identity: the base index and its embedder,
     * the post-base churn pass (superseded ids, live changed docs), one
     * probe of the base's forward rows among the superseded ids (how many
-    * the base holds, in total and per term) and the live N — base docs,
-    * minus the superseded ones the base holds, plus the live changed docs.
+    * the base holds, in total and per term), and from those the live df
+    * and N. One posting per (doc, term), so
+    * df_live(t) = df_base(t) − |superseded base docs holding t|
+    *            + |live changed docs holding t|,
+    * with df_base from the held index's term dictionary (no job), and N is
+    * the base docs, minus the superseded ones the base holds, plus the live
+    * changed docs.
     */
   private def liveView(terms: Array[Long]): LiveView = {
     val marker = baseMarker()
@@ -585,7 +587,12 @@ final class SearchEngine private[api] (
     val superseded = changed.map(_.doc_id)
     val live = changed.filterNot(_.tombstone)
     val (inBase, dfSuperseded) = base.fold((0L, Map.empty[Long, Long]))(baseProbe(_, superseded, terms))
-    LiveView(base, emb, superseded, live, dfSuperseded, base.fold(0L)(_.nDocs) - inBase + live.length)
+    val dfBase = base.fold(Map.empty[Long, Long])(_.termDfs(terms))
+    val dfs = terms.indices.map { j =>
+      val t = terms(j)
+      t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + live.count(_.tfs(j) > 0))
+    }.toMap
+    LiveView(base, emb, superseded, live, dfs, base.fold(0L)(_.nDocs) - inBase + live.length)
   }
 
   /** Top-`limit` search, ordered by (score desc, doc_id surrogate asc);
@@ -612,18 +619,11 @@ final class SearchEngine private[api] (
     if (qOcc.isEmpty) return Seq.empty
     val terms = qOcc.distinct
     val v = liveView(terms)
-    // df_live(t) = df_base(t) − |superseded base docs holding t|
-    //            + |live changed docs holding t|   (one posting per (doc, term))
-    val dfBase = v.base.fold(Map.empty[Long, Long])(_.termDfs(terms))
-    val dfLive = terms.indices.map { j =>
-      val t = terms(j)
-      t -> (dfBase.getOrElse(t, 0L) - v.dfSuperseded.getOrElse(t, 0L) + v.live.count(_.tfs(j) > 0))
-    }.toMap
-    if (dfLive.values.forall(_ <= 0L)) return Seq.empty
-    val idfs = dfLive.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(v.nLive, df) }
+    if (v.dfs.values.forall(_ <= 0L)) return Seq.empty
+    val idfs = v.dfs.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(v.nLive, df) }
 
     val k = limit.getOrElse(Int.MaxValue)
-    val present = terms.filter(dfBase.contains)
+    val present = terms.filter(v.dfs(_) > 0L)
     val baseHits = v.base match {
       case Some(idx) if present.nonEmpty =>
         topK(idx.wandTopK(qOcc, present, idfs, k, v.superseded, Some(wandSkippedBlocks)), limit)

@@ -40,8 +40,8 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
 
 /** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan):
   * driver-side query embedding (pure function, no job) → term-stat lookup
-  * (the held term dictionary for WAND, a bucket/row-group-pruned scan for
-  * the exhaustive scorer) → pruned posting-block scan → per-candidate
+  * (a binary search of the held term dictionary, for both modes) → idfs
+  * broadcast to the scorer → pruned posting-block scan → per-candidate
   * f32 score fold (query-occurrence order, `/root/reference/src/scorer.rs:109-123`)
   * → `TakeOrderedAndProject` top-k.
   *
@@ -60,8 +60,8 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   * An instance holds its index dir's small global metadata on the driver:
   * the resolved tables and the term dictionary (every term with its df,
   * sorted; 16 B × the manifest's `vocabulary`), both read once. The posting
-  * payload stays in the partitions. After the first lookup a WAND search
-  * launches only its own fan-out jobs.
+  * payload stays in the partitions. After the first lookup a search, in
+  * either mode, launches only its own scoring jobs.
   */
 final class Bm25Index(spark: SparkSession, val indexDir: String,
                       customTokenizer: Option[TextTokenizer] = None,
@@ -91,7 +91,6 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   // An index dir never changes after it is built (compaction writes a new
   // dir and swaps it in), so each table is resolved once per instance, with
   // its written schema (no schema-inference job; later reads skip the listing).
-  @transient private lazy val termStatsTable = IndexTables.termstats(spark, indexDir)
   @transient private lazy val postingsTable = IndexTables.postings(spark, indexDir)
   @transient private[graft] lazy val forwardTable = IndexTables.forward(spark, indexDir)
 
@@ -118,7 +117,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * must never ship it.
     */
   @transient private lazy val termDictionary: (Array[Long], Array[Long]) = {
-    val rows = termStatsTable.select($"term", $"df").as[(Long, Long)].collect().sortBy(_._1)
+    val rows = IndexTables.termstats(spark, indexDir).as[(Long, Long)].collect().sortBy(_._1)
     (rows.map(_._1), rows.map(_._2))
   }
 
@@ -133,20 +132,6 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       val i = java.util.Arrays.binarySearch(dictTerms, t)
       if (i >= 0) Some(t -> dictDfs(i)) else None
     }.toMap
-  }
-
-  /** The (term, df) rows for `terms` as a DataFrame: the bucket- and
-    * term-pruned termstats scan (reads only the term buckets the query
-    * touches, then row-group pruning via the sorted term column). For plans
-    * that take the df lookup inside themselves: the exhaustive scorer's
-    * broadcast side and the catalog queries. A driver-side lookup reads the
-    * term dictionary instead (`termDfs`).
-    */
-  def termStatsFor(terms: Array[Long]): DataFrame = {
-    val buckets = terms.map(manifest.bucketOf).distinct
-    termStatsTable
-      .where($"bucket".isin(buckets.map(Int.box): _*) && $"term".isin(terms.map(Long.box): _*))
-      .select($"term", $"df")
   }
 
   /** Decoded postings of the given terms (pruned scan over posting blocks). */
@@ -176,53 +161,43 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     */
   def search(query: String, limit: Option[Int] = None, mode: String = "exhaustive"): Dataset[ScoredDoc] = {
     val qOcc = queryTerms(query)
-    if (qOcc.isEmpty) return spark.emptyDataset[ScoredDoc]
-    val distinctTerms = qOcc.distinct
+    // one df lookup for both modes: the term dictionary, on the driver
+    val terms = qOcc.distinct
+    val dfs = termDfs(terms)
+    val present = terms.filter(dfs.contains)
+    if (present.isEmpty) return spark.emptyDataset[ScoredDoc]
+    val idfs = present.iterator.map(t => t -> idf(dfs(t))).toMap
 
     val scored = mode match {
-      case "wand" if limit.isDefined =>
-        // WAND needs idfs up front (block bounds) → a term dictionary
-        // lookup, then the pruned merge.
-        val dfs = termDfs(distinctTerms)
-        val present = distinctTerms.filter(dfs.contains)
-        if (present.isEmpty) return spark.emptyDataset[ScoredDoc]
-        val idfs = distinctTerms.iterator.map(t => t -> idf(dfs.getOrElse(t, 0L))).toMap
-        wandTopK(qOcc, present, idfs, limit.get, Array.empty, None)
-      case _ =>
-        exhaustive(qOcc, distinctTerms)
+      case "wand" if limit.isDefined => wandTopK(qOcc, present, idfs, limit.get, Array.empty, None)
+      case _ => exhaustive(qOcc, present, idfs)
     }
     val sorted = scored.orderBy($"score".desc, $"doc_id".asc)
     limit.map(sorted.limit).getOrElse(sorted).as[ScoredDoc]
   }
 
-  /** Reference-exact scoring of every candidate (disjunctive union), as ONE
-    * Spark job: the per-term df rides into the score fold via a broadcast
-    * join with the pruned termstats (no driver round-trip; idf is computed
-    * in f32 inside the fold, identically to `scorer.rs:99-123`).
+  /** Reference-exact scoring of every candidate (disjunctive union): the
+    * postings of the `present` terms grouped by doc, each doc's score
+    * folded in f32 with the caller's `idfs`, broadcast as `wandTopK` takes
+    * them (identically to `scorer.rs:99-123`).
     */
-  private def exhaustive(qOcc: Array[Long], terms: Array[Long]): Dataset[ScoredDoc] = {
+  private def exhaustive(qOcc: Array[Long], present: Array[Long],
+                         idfs: Map[Long, Float]): Dataset[ScoredDoc] = {
     val emb = embedder
-    val n = nDocs
     val qOccB = spark.sparkContext.broadcast(qOcc)
-    val stats = termStatsFor(terms)
-    postingsFor(terms).toDF()
-      .join(broadcast(stats), "term")
-      .select($"doc_id", $"term", $"tf", $"dl", $"df")
-      .as[(Long, Long, Int, Int, Long)]
-      .groupByKey(_._1)
+    val idfB = spark.sparkContext.broadcast(idfs)
+    postingsFor(present)
+      .groupByKey(_.doc_id)
       .mapGroups { (docId, rows) =>
         val values = new java.util.HashMap[Long, Float](16)
-        val idfs = new java.util.HashMap[Long, Float](16)
-        rows.foreach { case (_, term, tf, dl, df) =>
-          values.putIfAbsent(term, emb.weight(tf, dl))
-          idfs.putIfAbsent(term, graft.bm25.Bm25Math.idf(n, df))
-        }
+        rows.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
         var score = 0.0f
         val occ = qOccB.value
+        val idfMap = idfB.value
         var i = 0
         while (i < occ.length) {
           val v = values.get(occ(i)) // 0.0f when absent — adding 0f is exact
-          if (v != 0.0f) score += idfs.get(occ(i)) * v
+          if (v != 0.0f) score += idfMap(occ(i)) * v
           i += 1
         }
         ScoredDoc(docId, score)

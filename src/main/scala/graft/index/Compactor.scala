@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *     postings, termstats, manifest) run over that table, so the merged
   *     index is built exactly as a fresh build over the live corpus is.
   *
-  * Shard bounds, blockSize, termBuckets, tokenizer, hasher and the FROZEN
-  * avgdl all derive from the base manifest (compaction is physical: scores
-  * must not move, and the written layout must match what the manifest
-  * declares — asserted in SearchEngineSpec / CompactorSpec). A merge is
+  * Shard bounds, blockSize, tokenizer, hasher and the FROZEN avgdl all
+  * derive from the base manifest (compaction is physical: scores must not
+  * move, and the written layout must match what the manifest declares —
+  * asserted in SearchEngineSpec / CompactorSpec). A merge is
   * never resumed: `outDir` must hold no index and no checkpoints, and it
   * ends with the same checkpoint set as a build.
   */
@@ -68,11 +68,10 @@ object Compactor {
       changedIds.count(!_._2)
     } finally changedFwd.unpersist()
 
-    // Layout from the base manifest (bucketOf/shardOf prune against it); one
-    // shard group, since a merge is never resumed.
+    // Layout from the base manifest (shardOf routes the deltas against it);
+    // one shard group, since a merge is never resumed.
     IndexBuilder.fromForward(spark, outDir, base.shardBounds,
-      cfg.copy(numShards = base.numShards, blockSize = base.blockSize,
-        termBuckets = base.termBuckets, shardGroups = 1),
+      cfg.copy(numShards = base.numShards, blockSize = base.blockSize, shardGroups = 1),
       base.tokenizer, base.hasher,
       base.lineage ++ Map("compactedFrom" -> baseDir, "deltaDocs" -> deltaDocs.toString),
       Some(base.avgdl), t0)

@@ -42,20 +42,14 @@ object IndexTables {
   def postings(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.schema(PostingsSchema).parquet(s"$indexDir/postings")
   def termstats(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema("term BIGINT, df BIGINT, bucket INT").parquet(s"$indexDir/termstats")
+    spark.read.schema("term BIGINT, df BIGINT").parquet(s"$indexDir/termstats")
 }
 
 final case class IndexBuildConfig(
     numShards: Int = 8,
     blockSize: Int = 128,
-    termBuckets: Int = 64,
     shardGroups: Int = 4, // checkpoint granularity for the postings stage
     postingTasks: Int = 0, // shuffle tasks for the postings stage (0 = 3x parallelism)
-    // escape valve for pathologically hot terms: split each (shard,
-    // term-prefix) merge group into 2^k doc-range slices so no reduce task
-    // ever has to hold one term's whole encoded posting list (~10 B × df).
-    // Blocks stay doc-disjoint per (shard, term); readers order by min_doc.
-    buildRangeBits: Int = 0,
     // doc ids that are hash surrogates are uniform in [0, Long.MaxValue]:
     // range bounds are then analytic (no quantile job over the corpus)
     uniformIdSpace: Boolean = false
@@ -80,7 +74,7 @@ final case class IndexBuildConfig(
   *                        written blocks (one exchange; the map-side
   *                        partial aggregate folds a hot term to a row per
   *                        task, so no salt) → parquet in the aggregation's
-  *                        partitioning, sorted by (term bucket, term).
+  *                        partitioning, each file sorted by term.
   *                        The same aggregation gives the content metrics
   *                        (blocks, bytes, postings, vocabulary, max/mean
   *                        df), recorded in its checkpoint.
@@ -253,7 +247,7 @@ object IndexBuilder {
       case Some(n) => ContentMetrics.map(k => k -> n.get(k).asDouble()).toMap
       case None =>
         val t = System.nanoTime()
-        val c = buildTermstats(spark, indexDir, cfg)
+        val c = buildTermstats(spark, indexDir)
         Checkpoints.commit(indexDir, "termstats", c + ("seconds" -> (System.nanoTime() - t) / 1e9))
         c
     }
@@ -268,7 +262,6 @@ object IndexBuilder {
       version = IndexManifest.CurrentVersion,
       numShards = cfg.numShards,
       blockSize = cfg.blockSize,
-      termBuckets = cfg.termBuckets,
       tokenizer = tokenizer,
       hasher = hasherName,
       nDocs = nDocs,
@@ -305,11 +298,6 @@ object IndexBuilder {
     val bucketsPerShard = Integer.highestOneBit(
       math.max(1, numPostingTasks * 2 / math.max(cfg.numShards, 1)))
     val prefixBits = Integer.numberOfTrailingZeros(bucketsPerShard)
-    // optional doc-range slicing (see IndexBuildConfig.buildRangeBits): a
-    // group key gains the doc id's top bits, so one term's postings can
-    // spread over 2^k merge tasks; each slice emits its own doc-disjoint
-    // blocks and readers order blocks by min_doc, not block index
-    val rangeBits = math.max(0, math.min(cfg.buildRangeBits, 20))
     // shard and term travel as SEPARATE fields: the 64-bit term hash (fx64 /
     // custom hashers) round-trips exactly — never packed into a shared long
     val packed = rows.select(
@@ -320,7 +308,7 @@ object IndexBuilder {
 
     // map side: buffer → local sort → encoded chunks
     val chunkRdd = packed.queryExecution.toRdd.mapPartitions { it =>
-      val buf = new PostingRuns.RunBuffer(1 << 19, bucketsPerShard, prefixBits, rangeBits)
+      val buf = new PostingRuns.RunBuffer(1 << 19, bucketsPerShard, prefixBits)
       new Iterator[(Int, Array[Byte])] {
         private var pending: Iterator[(Int, Array[Byte])] = Iterator.empty
         @annotation.tailrec
@@ -420,21 +408,18 @@ object IndexBuilder {
         sum(length($"docs") + length($"tfs") + length($"dls")).as("bytes"))
   }
 
-  /** Writes termstats (term, df, bucket) from `termAggregate`, in the
-    * aggregation's own partitioning sorted by (bucket, term): readers prune
-    * on the `bucket` column and row-group stats, so a file per bucket buys
-    * nothing but one-bucket files. The per-term rows are cached, written,
-    * and the cache summed into the content metrics — so they come from the
-    * written postings (a retried or speculative task cannot count twice)
-    * without reading anything back.
+  /** Writes termstats (term, df) from `termAggregate`, in the aggregation's
+    * own partitioning with each file sorted by term; readers take the whole
+    * table once, as `Bm25Index`'s term dictionary. The per-term rows are
+    * cached, written, and the cache summed into the content metrics — so
+    * they come from the written postings (a retried or speculative task
+    * cannot count twice) without reading anything back.
     */
-  private[graft] def buildTermstats(spark: SparkSession, indexDir: String,
-                                    cfg: IndexBuildConfig): Map[String, Double] = {
+  private[graft] def buildTermstats(spark: SparkSession, indexDir: String): Map[String, Double] = {
     import spark.implicits._
     val perTerm = termAggregate(spark, indexDir).persist()
     try {
-      perTerm.select($"term", $"df", pmod($"term", lit(cfg.termBuckets)).cast("int").as("bucket"))
-        .sortWithinPartitions($"bucket", $"term")
+      perTerm.select($"term", $"df").sortWithinPartitions($"term")
         .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/termstats")
       val t = longTotals(perTerm.select($"df", $"blocks", $"bytes"))
       val (vocab, postings) = (t(0), t(1))

@@ -21,7 +21,6 @@ final case class IndexManifest(
     version: Int,
     numShards: Int,
     blockSize: Int,
-    termBuckets: Int,
     tokenizer: TokenizerConfig,
     hasher: String, // token-embedding space: fx32 (crate default) | fx64 | custom
     nDocs: Long,
@@ -38,14 +37,6 @@ final case class IndexManifest(
   /** Range shard for a doc id under the recorded bounds. */
   def shardOf(docId: Long): Int = IndexManifest.shardOf(shardBounds, docId)
 
-  /** Termstats bucket — MUST match the builder's `pmod` (non-negative even
-    * for negative 64-bit term hashes from custom hashers).
-    */
-  def bucketOf(term: Long): Int = {
-    val m = (term % termBuckets).toInt
-    if (m < 0) m + termBuckets else m
-  }
-
   def write(indexDir: String): Unit = IndexManifest.write(this, indexDir)
 }
 
@@ -55,10 +46,12 @@ object IndexManifest {
     *   2 — round-2: block-max WAND columns min_doc/max_doc required by reads
     *   3 — round-3: full-64-bit-term run chunks; blocks/termstats unchanged
     *       on disk but builds are only byte-reproducible within one version
+    *   4 — termstats is (term, df), each file sorted by term, without the
+    *       term-bucket column; the manifest records no term-bucket count
     * Readers fail fast on any mismatch (no silent AnalysisException deep in
     * a query against an old index).
     */
-  val CurrentVersion = 3
+  val CurrentVersion = 4
 
   private val mapper = new ObjectMapper()
 
@@ -80,7 +73,6 @@ object IndexManifest {
     root.put("version", m.version)
     root.put("numShards", m.numShards)
     root.put("blockSize", m.blockSize)
-    root.put("termBuckets", m.termBuckets)
     val tok = root.putObject("tokenizer")
     tok.put("language", m.tokenizer.language)
     tok.put("normalization", m.tokenizer.normalization)
@@ -110,7 +102,6 @@ object IndexManifest {
       version = n.get("version").asInt(),
       numShards = n.get("numShards").asInt(),
       blockSize = n.get("blockSize").asInt(),
-      termBuckets = n.get("termBuckets").asInt(),
       tokenizer = TokenizerConfig(
         n.get("tokenizer").get("language").asText(),
         n.get("tokenizer").get("normalization").asBoolean(),

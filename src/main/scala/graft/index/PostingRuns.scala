@@ -47,12 +47,11 @@ private[index] object PostingRuns {
   @inline def bucketOf(term: Long, prefixBits: Int): Int =
     if (prefixBits == 0) 0 else (fmix64(term) >>> (64 - prefixBits)).toInt
 
-  /** Buffered map-side collector: sort (gkey, term, doc) → split by pkey →
-    * encode. gkey = shard·bucketsPerShard + bucket(term); pkey additionally
-    * carries the doc-range slice when rangeBits > 0.
+  /** Buffered map-side collector: sort (gkey, term, doc) → split by gkey →
+    * encode. gkey = shard·bucketsPerShard + bucket(term) is the chunk's
+    * merge-group key.
     */
-  final class RunBuffer(capacity: Int, bucketsPerShard: Int, prefixBits: Int,
-                        rangeBits: Int) {
+  final class RunBuffer(capacity: Int, bucketsPerShard: Int, prefixBits: Int) {
     private val gkeys = new Array[Long](capacity)
     private val terms = new Array[Long](capacity)
     private val docs = new Array[Long](capacity)
@@ -69,11 +68,6 @@ private[index] object PostingRuns {
     def isFull: Boolean = n == capacity
     def nonEmpty: Boolean = n > 0
 
-    @inline private def pkeyAt(i: Int): Int = {
-      val g = gkeys(i).toInt
-      if (rangeBits == 0) g
-      else (g << rangeBits) | ((docs(i) >>> (63 - rangeBits)) & ((1 << rangeBits) - 1)).toInt
-    }
     @inline private def shardAt(i: Int): Int = (gkeys(i) / bucketsPerShard).toInt
 
     def flush(): Iterator[(Int, Array[Byte])] = {
@@ -82,16 +76,15 @@ private[index] object PostingRuns {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
       var i = 0
       while (i < n) {
-        val pkey = pkeyAt(i)
+        val gk = gkeys(i)
         val bos = new java.io.ByteArrayOutputStream(1024)
         writeVar(bos, shardAt(i).toLong)
         var prevTerm = 0L
-        // encode all consecutive groups sharing this pkey
-        while (i < n && pkeyAt(i) == pkey) {
-          val gk = gkeys(i); val term = terms(i)
+        // encode all consecutive terms sharing this gkey
+        while (i < n && gkeys(i) == gk) {
+          val term = terms(i)
           var j = i
-          while (j < n && gkeys(j) == gk && terms(j) == term &&
-                 (rangeBits == 0 || pkeyAt(j) == pkey)) j += 1
+          while (j < n && gkeys(j) == gk && terms(j) == term) j += 1
           writeVar(bos, term - prevTerm) // wraparound delta: exact for any Long
           writeVar(bos, (j - i).toLong)
           var prevDoc = 0L
@@ -106,7 +99,7 @@ private[index] object PostingRuns {
           prevTerm = term
           i = j
         }
-        out += ((pkey, bos.toByteArray))
+        out += ((gk.toInt, bos.toByteArray))
       }
       n = 0
       out.iterator

@@ -66,7 +66,7 @@ object ScalingBench {
       // numShards is fixed (not a function of parallelism) so the N and 4N
       // runs execute the identical job over identical data.
       val manifest = IndexBuilder.build(spark, docs, Bm25Tokenizer.default, indexDir,
-        IndexBuildConfig(numShards = 64, shardGroups = 1, termBuckets = 64, uniformIdSpace = true, postingTasks = 96),
+        IndexBuildConfig(numShards = 64, shardGroups = 1, uniformIdSpace = true, postingTasks = 96),
         Map("input" -> corpusPath, "n" -> n.toString))
       val buildSec = (System.nanoTime() - t0) / 1e9
 

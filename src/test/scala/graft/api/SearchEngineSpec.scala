@@ -740,9 +740,10 @@ class SearchEngineSpec extends SparkTestBase {
     assert(eng.search("common", None).length === live.length)
     // the public live query state (catalog surface) takes the anti-join branch
     val terms = eng.tokenizer.tokenize("common word4 term2").map(graft.text.FxHash.hash32u).distinct
-    val (posts, n) = eng.liveQueryState(terms)
-    val (freshPosts, freshN) = fresh.liveQueryState(terms)
+    val (posts, dfs, n) = eng.liveQueryState(terms)
+    val (freshPosts, freshDfs, freshN) = fresh.liveQueryState(terms)
     assert(n === live.length.toLong && freshN === n)
+    assert(dfs === freshDfs)
     assert(posts.collect().sortBy(p => (p.doc_id, p.term)) === freshPosts.collect().sortBy(p => (p.doc_id, p.term)))
     // a reopened engine sees the same churn: searches, and point reads of
     // updated, new, untouched, removed and never-present keys

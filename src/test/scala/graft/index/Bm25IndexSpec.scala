@@ -113,49 +113,6 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(hits.length === 1 && hits.head.doc_id === 1L && hits.head.score > 0f)
   }
 
-  test("doc-range-sliced merge (buildRangeBits) ≡ unsliced build, bit-exact") {
-    // The hot-term escape valve: slicing each merge group by doc-id top bits
-    // means no reduce task holds a whole posting list; blocks are then
-    // emitted per slice and readers order by min_doc. Ids must span the id
-    // space for slices to actually split.
-    val words = Seq("merge", "join", "sort", "spark", "key", "fast", "scan", "row")
-    val docs0 = (0 until 400).map { i =>
-      val rnd = new scala.util.Random(i)
-      CorpusDoc(i.toLong * (Long.MaxValue / 401),
-        Seq.fill(6 + rnd.nextInt(10))(words(rnd.nextInt(words.length))).mkString(" "))
-    }
-    val plain = tmpDir("rb_plain")
-    val sliced = tmpDir("rb_sliced")
-    IndexBuilder.build(spark, spark.createDataset(docs0), Bm25Tokenizer.default, plain,
-      IndexBuildConfig(numShards = 4, shardGroups = 1, uniformIdSpace = true))
-    IndexBuilder.build(spark, spark.createDataset(docs0), Bm25Tokenizer.default, sliced,
-      IndexBuildConfig(numShards = 4, shardGroups = 1, uniformIdSpace = true, buildRangeBits = 3))
-
-    def decoded(dir: String): Seq[(Int, Long, Long, Int, Int)] =
-      spark.read.parquet(s"$dir/postings")
-        .select($"shard", $"term", $"cnt", $"docs", $"tfs", $"dls")
-        .as[(Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (s, t, c, d, tf, dl) =>
-          val ds = PostingCodec.decodeDeltas(d, c)
-          val tfs = PostingCodec.decodeInts(tf, c)
-          val dls = PostingCodec.decodeInts(dl, c)
-          Iterator.tabulate(c)(i => (s, t, ds(i), tfs(i), dls(i)))
-        }.collect().sorted.toSeq
-    assert(decoded(sliced) === decoded(plain))
-
-    val ip = new Bm25Index(spark, plain)
-    val is = new Bm25Index(spark, sliced)
-    for (q <- Seq("merge join", "spark fast key", "sort sort row"); k <- Seq(5, 20)) {
-      val a = ip.search(q, Some(k), "wand").collect()
-      val b = is.search(q, Some(k), "wand").collect()
-      assert(a.map(_.doc_id).toSeq === b.map(_.doc_id).toSeq, s"q='$q'")
-      a.zip(b).foreach { case (x, y) =>
-        assert(java.lang.Float.floatToRawIntBits(x.score) ===
-          java.lang.Float.floatToRawIntBits(y.score), s"q='$q' doc ${x.doc_id}")
-      }
-    }
-  }
-
   test("64-bit term hashes (fx64) survive build + search, identical ranks to fx32") {
     // Round-2's run format packed skey = shard<<32 + term, silently
     // truncating 64-bit hashes; this gates the fixed format end-to-end.
@@ -191,25 +148,22 @@ class Bm25IndexSpec extends SparkTestBase {
     }
   }
 
-  test("negative custom-hasher terms route to the builder's termstats bucket") {
-    // manifest.bucketOf must agree with the builder's pmod for terms < 0
-    val m = index.manifest
-    assert(m.bucketOf(-1L) === ((-1L % m.termBuckets) + m.termBuckets) % m.termBuckets)
-    assert(m.bucketOf(-1L) >= 0 && m.bucketOf(Long.MinValue) >= 0)
-    assert(m.bucketOf(7L) === 7 % m.termBuckets)
-  }
-
-  test("termDfs from the term dictionary equals the termStatsFor scan for every term") {
-    val all = IndexTables.termstats(spark, indexDir).select($"term").as[Long].collect()
-    assert(all.length.toDouble === index.manifest.metrics("vocabulary"))
-    val scanned = index.termStatsFor(all).as[(Long, Long)].collect().toMap
-    assert(scanned.size === all.length)
-    assert(index.termDfs(all) === scanned)
+  test("termDfs equals the termstats rows and Σcnt over blocks") {
+    val rows = IndexTables.termstats(spark, indexDir).as[(Long, Long)].collect()
+    assert(rows.length.toDouble === index.manifest.metrics("vocabulary"))
+    val stored = rows.toMap
+    assert(stored.size === rows.length, "one termstats row per term")
+    val all = rows.map(_._1)
+    assert(index.termDfs(all) === stored)
+    val blockSums = IndexTables.postings(spark, indexDir).groupBy($"term")
+      .agg(org.apache.spark.sql.functions.sum($"cnt").as("df"))
+      .as[(Long, Long)].collect().toMap
+    assert(index.termDfs(all) === blockSums)
     val held = all.toSet
     val absent = Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue).filterNot(held).toArray
     assert(absent.nonEmpty)
     assert(index.termDfs(absent).isEmpty)
-    assert(index.termDfs(absent ++ all.take(3)) === all.take(3).map(t => t -> scanned(t)).toMap)
+    assert(index.termDfs(absent ++ all.take(3)) === all.take(3).map(t => t -> stored(t)).toMap)
   }
 
   test("a second termDfs on one index instance launches no Spark job") {
@@ -221,6 +175,14 @@ class Bm25IndexSpec extends SparkTestBase {
     val (second, secondJobs) = JobRecorder(spark.sparkContext)(fresh.termDfs(fresh.queryTerms("spark window")))
     assert(secondJobs.isEmpty, s"second lookup jobs: $secondJobs")
     assert(first === index.termDfs(terms) && second.nonEmpty)
+    // the exhaustive scorer takes its idfs from the same dictionary: a second
+    // search on the instance launches its scoring only, one job for the
+    // doc-grouping exchange's map stage and one for the top-k
+    fresh.search("merge join sort", Some(10), "exhaustive").collect()
+    val (hits, searchJobs) = JobRecorder(spark.sparkContext)(
+      fresh.search("spark window batch", Some(10), "exhaustive").collect())
+    assert(searchJobs.length === 2, s"second exhaustive search jobs: $searchJobs")
+    assert(hits.nonEmpty)
   }
 
   test("df from termstats equals live distinct count from postings") {

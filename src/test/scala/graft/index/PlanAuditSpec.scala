@@ -44,14 +44,15 @@ class PlanAuditSpec extends SparkTestBase {
     assert(files <= partitions, s"$files termstats files for $partitions shuffle partitions")
   }
 
-  test("termstats lookup pushes bucket+term filters") {
-    val terms = index.queryTerms("merge").distinct
-    val df = spark.read.parquet(s"$indexDir/termstats")
-      .where($"bucket".isin(terms.map(index.manifest.bucketOf).distinct.map(Int.box): _*) &&
-        $"term".isin(terms.map(Long.box): _*))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: ["), s"no pushdown:\n$plan")
-    assert(plan.contains("In(term") || plan.contains("EqualTo(term"), s"term not pushed:\n$plan")
+  test("exhaustive top-k plan scans postings only, no termstats") {
+    // the df lookup is the held term dictionary: no termstats FileScan rides
+    // the scoring plan
+    val plan = index.search("merge join sort", Some(10), "exhaustive")
+      .queryExecution.executedPlan.toString
+    val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.nonEmpty && scans.forall(_.contains(s"$indexDir/postings")),
+      s"expected postings scans only:\n$plan")
+    assert(!plan.contains("termstats"), s"termstats in the scoring plan:\n$plan")
   }
 
   test("top-k search plans as TakeOrderedAndProject (no global sort)") {

@@ -19,9 +19,9 @@ class PostingRunsSpec extends AnyFunSuite {
     (p._1, PostingRuns.bucketOf(p._2, PrefixBits), p._2, p._3)
 
   private def roundTrip(postings: Seq[(Int, Long, Long, Int, Int)],
-                        capacity: Int, rangeBits: Int = 0)
+                        capacity: Int)
       : Seq[(Int, Seq[(Int, Long, Long, Int, Int)])] = {
-    val buf = new PostingRuns.RunBuffer(capacity, BucketsPerShard, PrefixBits, rangeBits)
+    val buf = new PostingRuns.RunBuffer(capacity, BucketsPerShard, PrefixBits)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
     postings.foreach { case (shard, term, doc, tf, dl) =>
       buf.add(shard, term, doc, tf, dl)
@@ -77,7 +77,7 @@ class PostingRunsSpec extends AnyFunSuite {
       (rnd.nextInt(2), rnd.nextLong(), // full 64-bit terms through the merge
         rnd.nextLong(1L << 30), 1 + rnd.nextInt(9), 1 + rnd.nextInt(99))
     }.distinctBy(p => (p._1, p._2, p._3))
-    val buf = new PostingRuns.RunBuffer(64, BucketsPerShard, PrefixBits, 0)
+    val buf = new PostingRuns.RunBuffer(64, BucketsPerShard, PrefixBits)
     val pq = new java.util.PriorityQueue[PostingRuns.RunCursor](64,
       (a: PostingRuns.RunCursor, b: PostingRuns.RunCursor) =>
         PostingRuns.compareCursors(a, b))
@@ -106,21 +106,11 @@ class PostingRunsSpec extends AnyFunSuite {
     }
   }
 
-  test("doc-range slicing (rangeBits) splits one term across pkeys, losslessly") {
-    val term = 0x1234_5678_9ABCL // > 2^32 on purpose
-    val postings = (0 until 1000).map { i =>
-      (1, term, i.toLong * (Long.MaxValue / 1001), 1 + (i % 7), 10 + (i % 90))
-    }
-    val chunks = roundTrip(postings, capacity = 2048, rangeBits = 2)
-    assert(chunks.map(_._1).distinct.size > 1, "expected multiple doc-slice pkeys")
-    assert(chunks.flatMap(_._2).sorted === postings.sorted)
-  }
-
   test("empty buffer, single posting, and max-value edges") {
     val one = roundTrip(Seq((5, 42L, Long.MaxValue - 1, Int.MaxValue, 1)), 8)
     assert(one.map(_._2) === Seq(Seq((5, 42L, Long.MaxValue - 1, Int.MaxValue, 1))))
     assert(one.head._1 === pkeyOf(5, 42L))
-    val buf = new PostingRuns.RunBuffer(4, BucketsPerShard, PrefixBits, 0)
+    val buf = new PostingRuns.RunBuffer(4, BucketsPerShard, PrefixBits)
     assert(buf.flush().isEmpty)
   }
 }
