@@ -60,8 +60,10 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *     query-occurrence order → merge → contents lookup
   *     (`search.rs:118-132`): the ≤ k hits' contents come from one pruned
   *     docstore scan, resolved latest-seq-wins on the driver. A clean search
-  *     is 3 Spark jobs (base WAND 2, contents 1); with deltas pending it is
-  *     6 (churn pass 2, forward probe 1, base WAND 2, contents 1).
+  *     is 2 Spark jobs (base WAND 1, over the held base's cached blocks;
+  *     contents 1); with deltas pending it is 5 (churn pass 2, forward
+  *     probe 1, base WAND 1, contents 1). The first search on each base also
+  *     collects its term dictionary and routes and caches its WAND blocks.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -254,11 +256,13 @@ final class SearchEngine private[api] (
   private[graft] def postBaseLogScan(marker: Long): DataFrame =
     readLog().where($"seq" > marker)
 
-  /** The base index, held for one base generation so its tables are
-    * resolved once, not on every search. A generation is identified by the
+  /** The base index, held for one base generation so its tables and term
+    * dictionary are read once and its WAND blocks are routed once, not on
+    * every search. A generation is identified by the
     * `base_seq` marker plus the manifest's bytes and file identity: a base
     * swapped in by another engine instance on the same dir changes it, so
-    * this instance never reads files that were swapped out.
+    * this instance never reads files that were swapped out. A dropped base
+    * (new generation, `buildBase()`, `compact()`) releases its blocks.
     */
   private var heldBase: Option[(BaseGeneration, Bm25Index)] = None
 
@@ -275,14 +279,20 @@ final class SearchEngine private[api] (
         Some(BaseGeneration(marker, attrs.fileKey, attrs.lastModifiedTime,
           new String(Files.readAllBytes(manifest), java.nio.charset.StandardCharsets.UTF_8)))
       } catch { case _: NoSuchFileException => None }
-    generation.map { g =>
-      heldBase.collect { case (held, idx) if held == g => idx }.getOrElse {
-        val idx = new Bm25Index(spark, indexPath, Some(tokenizer), k1, b,
-          avgdlOverride = fixedAvgdl)
-        heldBase = Some((g, idx))
-        idx
-      }
+    if (!heldBase.exists { case (held, _) => generation.contains(held) }) {
+      dropBase()
+      heldBase = generation.map(g => (g, new Bm25Index(spark, indexPath, Some(tokenizer), k1, b,
+        avgdlOverride = fixedAvgdl)))
     }
+    heldBase.map(_._2)
+  }
+
+  /** Forgets the held base and releases its WAND blocks, so a session holds
+    * at most one base generation's blocks per engine.
+    */
+  private def dropBase(): Unit = {
+    heldBase.foreach(_._2.release())
+    heldBase = None
   }
 
   /** `base_seq` marker of the current base; -1 without a base. */
@@ -436,7 +446,7 @@ final class SearchEngine private[api] (
         s"a base index already exists at $indexPath; fold pending changes in with compact()")
     buildFromLog(indexPath, cfg, avgdlOverride)
     sealBase()
-    heldBase = None
+    dropBase()
   }
 
   /** Builds an index at `out` from the live docs, resolved once and cached:
@@ -686,7 +696,7 @@ final class SearchEngine private[api] (
       else buildFromLog(tmp, cfg, Some(frozenAvgdl))
     swapIn(indexPath, IndexManifest.exists)
     sealBase(sealSeq)
-    heldBase = None
+    dropBase()
     compactLog(compacted.nDocs)
   }
 

@@ -458,13 +458,14 @@ class SearchEngineSpec extends SparkTestBase {
     for (q <- queries; limit <- Seq(Some(2), None))
       assertSameResults(eng.search(q, limit), fresh.search(q, limit), s"query '$q' limit $limit")
 
-  test("a clean limited search runs at most 3 Spark jobs and infers no parquet schema; get runs 1") {
+  test("a clean limited search runs at most 2 Spark jobs and infers no parquet schema; get runs 1") {
     import org.apache.spark.graft.JobRecorder
-    enEngine.search("chicken soup", Some(10)) // warm-up: resolves the held index tables
+    enEngine.search("chicken soup", Some(10)) // warm-up: holds the index tables and WAND blocks
     val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", Some(10)))
     assert(hits.nonEmpty)
-    // base WAND 2 · contents 1 (the df lookup reads the held term dictionary)
-    assert(jobs.length <= 3, s"${jobs.length} jobs: $jobs")
+    // base WAND 1 (over the held blocks) · contents 1 (the df lookup reads
+    // the held term dictionary)
+    assert(jobs.length <= 2, s"${jobs.length} jobs: $jobs")
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
     val (doc, getJobs) = JobRecorder(spark.sparkContext)(enEngine.get("Guacamole"))
     assert(doc.exists(_.id == "Guacamole"))
@@ -603,18 +604,32 @@ class SearchEngineSpec extends SparkTestBase {
     assertSameSearches(SearchEngine.open(spark, dir), fresh, Seq("soup", "cheese"))
   }
 
-  test("a warm limited search with deltas pending infers no parquet schema and runs at most 6 Spark jobs") {
+  test("a warm limited search with deltas pending infers no parquet schema and runs at most 5 Spark jobs") {
     import org.apache.spark.graft.JobRecorder
     val eng = SearchEngine.withDocuments(spark, tmpDir("deltajobs"), enRecipes)
     eng.upsert(Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"), enRecipes(3).copy(contents = "garlic bread")))
     eng.remove(enRecipes(5).id)
-    eng.search("chicken soup", Some(10)) // warm-up: resolves the held index tables
+    eng.search("chicken soup", Some(10)) // warm-up: holds the index tables and WAND blocks
     val (hits, jobs) = JobRecorder(spark.sparkContext)(eng.search("garlic vegetable", Some(10)))
     assert(hits.exists(_.id == "Garlic Soup"))
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
-    // churn pass 2 · forward probe 1 · base WAND 2 · contents 1 (the base
+    // churn pass 2 · forward probe 1 · base WAND 1 · contents 1 (the base
     // df comes from the held term dictionary)
-    assert(jobs.length <= 6, s"${jobs.length} jobs: $jobs")
+    assert(jobs.length <= 5, s"${jobs.length} jobs: $jobs")
+  }
+
+  test("after 3 × (upsert, compact, search) the session holds one base generation's WAND blocks") {
+    val eng = SearchEngine.withDocuments(spark, tmpDir("heldblocks"), enRecipes)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    eng.search("chicken soup", Some(10))
+    for (i <- 1 to 3) {
+      eng.upsert(Doc(s"Garlic Soup $i", s"simmer garlic and vegetable stock $i"))
+      eng.compact()
+      assert(eng.search("garlic soup", Some(10)).exists(_.id == s"Garlic Soup $i"))
+    }
+    // each compact() releases the blocks of the base it replaced
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size === 1, s"persisted RDDs left by the engine: $held")
   }
 
   test("compact() on a churned engine runs at most 13 Spark jobs and infers no parquet schema") {

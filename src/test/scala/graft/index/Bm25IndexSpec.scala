@@ -185,6 +185,43 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(hits.nonEmpty)
   }
 
+  /** WAND top-k of `idx` equals the exhaustive scorer's, ids and f32 bits. */
+  private def assertWandExact(idx: Bm25Index, what: String): Unit =
+    for (q <- Seq("merge join sort", "keys key", "spark window batch stream"); k <- Seq(5, 20)) {
+      val ex = index.search(q, Some(k), mode = "exhaustive").collect()
+      val wd = idx.search(q, Some(k), mode = "wand").collect()
+      assert(wd.map(_.doc_id).toSeq === ex.map(_.doc_id).toSeq, s"$what: q='$q' k=$k ids")
+      assert(wd.map(w => java.lang.Float.floatToRawIntBits(w.score)).toSeq ===
+        ex.map(e => java.lang.Float.floatToRawIntBits(e.score)).toSeq, s"$what: q='$q' k=$k scores")
+    }
+
+  test("WAND stays bit-exact against exhaustive after release() and after clearCache(), fan-out too") {
+    import org.apache.spark.graft.JobRecorder
+    for (idx <- Seq(new Bm25Index(spark, indexDir), new Bm25Index(spark, indexDir, wandRangesPerShard = 4))) {
+      val what = s"${idx.wandFanoutRangesPerShard} ranges per shard"
+      assertWandExact(idx, s"$what, first")
+      idx.release()
+      assertWandExact(idx, s"$what, after release()")
+      spark.catalog.clearCache()
+      assertWandExact(idx, s"$what, after clearCache()")
+      // the blocks were registered again: a search reads them, one job
+      val (_, jobs) = JobRecorder(spark.sparkContext)(idx.search("merge join", Some(10), "wand").collect())
+      assert(jobs.length === 1, s"$what: search after re-registration jobs: $jobs")
+      idx.release()
+    }
+  }
+
+  test("a second WAND search on one index instance launches exactly 1 job") {
+    import org.apache.spark.graft.JobRecorder
+    val fresh = new Bm25Index(spark, indexDir)
+    fresh.search("merge join sort", Some(10), "wand").collect() // dictionary and held blocks
+    val (hits, jobs) = JobRecorder(spark.sparkContext)(
+      fresh.search("spark window batch", Some(10), "wand").collect())
+    assert(jobs.length === 1, s"second WAND search jobs: $jobs")
+    assert(hits.nonEmpty)
+    fresh.release()
+  }
+
   test("df from termstats equals live distinct count from postings") {
     val terms = index.queryTerms("merge join").distinct
     val dfs = index.termDfs(terms)

@@ -55,6 +55,29 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!plan.contains("termstats"), s"termstats in the scoring plan:\n$plan")
   }
 
+  test("a warm WAND plan reads the held blocks with the term filter: no exchange, no postings scan") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Nodes extends AdaptiveSparkPlanHelper {
+      def of(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
+    }
+    index.search("merge join sort", Some(10), "wand").collect() // holds the blocks
+    val plan = index.search("merge join", Some(10), "wand").queryExecution.executedPlan
+    val nodes = Nodes.of(plan)
+    val scans = nodes.collect { case s: InMemoryTableScanExec => s }
+    assert(scans.length === 1, s"expected one scan of the held blocks:\n$plan")
+    assert(scans.head.predicates.exists {
+      case In(a: Attribute, _) => a.name == "term"
+      case InSet(a: Attribute, _) => a.name == "term"
+      case _ => false
+    }, s"no term filter on the held blocks:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[Exchange]), s"warm WAND plan shuffles:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]), s"warm WAND plan reads parquet:\n$plan")
+  }
+
   test("top-k search plans as TakeOrderedAndProject (no global sort)") {
     val plan = index.search("merge join sort", Some(10), "exhaustive")
       .queryExecution.executedPlan.toString
