@@ -65,14 +65,24 @@ object Queries {
 
   /** The index over `cachedIndex(spark, sfDir, kind, tok)`, one instance
     * per (session, index dir), so a warm call reuses its term dictionary and
-    * its WAND blocks instead of collecting and routing them again. Entries
-    * of stopped sessions are dropped.
+    * its WAND blocks instead of collecting and routing them again, until
+    * [[releaseIndexes]]. Entries of stopped sessions are dropped.
     */
   private def heldIndex(spark: SparkSession, sfDir: String, kind: String, tok: TextTokenizer): Bm25Index = {
     val dir = cachedIndex(spark, sfDir, kind, tok)
     synchronized {
       heldIndexes.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
       heldIndexes.getOrElseUpdate((spark, dir), new Bm25Index(spark, dir, Some(tok)))
+    }
+  }
+
+  /** Releases the WAND blocks of every index held for `spark` and forgets
+    * the indexes; a later call builds them again.
+    */
+  def releaseIndexes(spark: SparkSession): Unit = synchronized {
+    heldIndexes.filterInPlace { case ((s, _), idx) =>
+      if (s eq spark) idx.release()
+      !(s eq spark)
     }
   }
 

@@ -61,7 +61,8 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   * An instance holds, for its whole life (an index dir never changes):
   *   - on the driver, the resolved tables and the term dictionary (every
   *     term with its df, sorted; 16 B × the manifest's `vocabulary`), both
-  *     read once, on first use;
+  *     read once, on first use, and the WAND fan-out groups, fixed on first
+  *     use;
   *   - in the executors, from its first WAND search on, the posting blocks
   *     routed and partitioned for the WAND fan-out (`heldBlocks`), persisted
   *     at MEMORY_AND_DISK until `release()`.
@@ -106,10 +107,16 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   /** Sub-ranges per shard for the WAND query fan-out (task count scales as
     * numShards × this — numShards is not a parallelism ceiling).
     */
-  def wandFanoutRangesPerShard: Int =
+  def wandFanoutRangesPerShard: Int = fanoutRanges.perShard
+
+  /** The fan-out groups of this instance, fixed on first use. The held
+    * blocks are routed to these groups and the kernel trims each group to
+    * its doc range, so both must read one value: the session's default
+    * parallelism, which sets the auto count, grows as executors register.
+    */
+  @transient private lazy val fanoutRanges: FanoutRanges = FanoutRanges(manifest.shardBounds,
     if (wandRangesPerShard > 0) wandRangesPerShard
-    else math.max(1,
-      (spark.sparkContext.defaultParallelism * 2) / math.max(manifest.numShards, 1))
+    else math.max(1, (spark.sparkContext.defaultParallelism * 2) / math.max(manifest.numShards, 1)))
 
   /** IDF exactly as `scorer.rs:99-107`: f32 throughout, df = number of docs
     * containing the term, N = total docs.
@@ -213,18 +220,15 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       }
   }
 
-  /** The fan-out groups of this instance (fixed: the session's parallelism
-    * does not change).
-    */
-  private def fanoutRanges = FanoutRanges(manifest.shardBounds, wandFanoutRangesPerShard)
-
   @transient private var held: DataFrame = _
 
   /** The WAND's input, held for the life of the instance: every posting
     * block, routed to each fan-out group (shard, sub-range) its doc range
     * overlaps, hash-partitioned by (shard, rng) — a group's blocks share
     * one partition — and sorted by term within each partition, so the
-    * cached batches' term bounds prune a query's `term IN` filter.
+    * cached batches' term bounds prune a query's `term IN` filter (at
+    * 200 k docs, 60 % of the rows a query scans unsorted; see
+    * `benchresults/held-wand-blocks/sort_within_partitions.txt`).
     * Persisted (MEMORY_AND_DISK) and materialized by the first WAND search,
     * so a later search is one job with no parquet scan and no exchange. A
     * frame that left the cache manager since (`release()`,

@@ -199,27 +199,36 @@ class Bm25IndexSpec extends SparkTestBase {
     import org.apache.spark.graft.JobRecorder
     for (idx <- Seq(new Bm25Index(spark, indexDir), new Bm25Index(spark, indexDir, wandRangesPerShard = 4))) {
       val what = s"${idx.wandFanoutRangesPerShard} ranges per shard"
+      // a search over held blocks reads them: one job
+      def assertOneJob(when: String): Unit = {
+        val (hits, jobs) = JobRecorder(spark.sparkContext)(idx.search("spark window batch", Some(10), "wand").collect())
+        assert(jobs.length === 1, s"$what: search $when jobs: $jobs")
+        assert(hits.nonEmpty)
+      }
       assertWandExact(idx, s"$what, first")
+      assertOneJob("after the first")
       idx.release()
       assertWandExact(idx, s"$what, after release()")
       spark.catalog.clearCache()
       assertWandExact(idx, s"$what, after clearCache()")
-      // the blocks were registered again: a search reads them, one job
-      val (_, jobs) = JobRecorder(spark.sparkContext)(idx.search("merge join", Some(10), "wand").collect())
-      assert(jobs.length === 1, s"$what: search after re-registration jobs: $jobs")
+      assertOneJob("after re-registration")
       idx.release()
     }
   }
 
-  test("a second WAND search on one index instance launches exactly 1 job") {
-    import org.apache.spark.graft.JobRecorder
-    val fresh = new Bm25Index(spark, indexDir)
-    fresh.search("merge join sort", Some(10), "wand").collect() // dictionary and held blocks
-    val (hits, jobs) = JobRecorder(spark.sparkContext)(
-      fresh.search("spark window batch", Some(10), "wand").collect())
-    assert(jobs.length === 1, s"second WAND search jobs: $jobs")
-    assert(hits.nonEmpty)
-    fresh.release()
+  test("WAND stays bit-exact when the default parallelism grows after the blocks are held") {
+    import org.apache.spark.graft.LocalParallelism
+    // the auto fan-out count derives from the default parallelism, which on
+    // a cluster grows as executors register: the kernel must trim each
+    // group to the ranges its held blocks were routed with
+    val idx = new Bm25Index(spark, indexDir)
+    val perShard = idx.wandFanoutRangesPerShard
+    assertWandExact(idx, s"$perShard ranges per shard")
+    LocalParallelism(spark.sparkContext, spark.sparkContext.defaultParallelism * 4) {
+      assertWandExact(idx, s"$perShard ranges per shard, default parallelism grown")
+      assert(idx.wandFanoutRangesPerShard === perShard)
+    }
+    idx.release()
   }
 
   test("df from termstats equals live distinct count from postings") {
