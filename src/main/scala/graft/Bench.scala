@@ -2,7 +2,7 @@ package graft
 
 import graft.index.{Bm25Index, CorpusDoc, IndexBuildConfig, IndexBuilder}
 import graft.text.Bm25Tokenizer
-import org.apache.spark.sql.SparkSession
+import graft.tools.ToolSession
 
 /** Benchmark main (driver contract): one JSON line with the total and
   * per-query seconds, plus the BASELINE.md target metrics — index-build
@@ -34,19 +34,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = ToolSession.cpus
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m") // local-scale splits
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC") // NTZ casts must be identity
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession("bm25spark-bench", ToolSession.localSplits("8m"): _*)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     // --- timed index build (fresh dir, real tokenizer) --------------------
     // Built twice into fresh dirs, fastest reported: a hypervisor stall
@@ -58,7 +49,7 @@ object Bench {
       val buildDir = s"${System.getProperty("java.io.tmpdir")}/graft_bench_idx_${System.nanoTime()}"
       val tb0 = System.nanoTime()
       val m = IndexBuilder.build(spark, corpus, Bm25Tokenizer.default, buildDir,
-        IndexBuildConfig(numShards = cpus.toInt, shardGroups = 1), Map("input" -> sfDir))
+        IndexBuildConfig(numShards = cpus, shardGroups = 1), Map("input" -> sfDir))
       (m, (System.nanoTime() - tb0) / 1e9, buildDir)
     }
     val (manifest, buildSec, buildDir) = builds.minBy(_._2)

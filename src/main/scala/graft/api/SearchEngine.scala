@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.bm25.{Bm25Params, Embedder}
+import graft.bm25.{Bm25Params, Bm25Query, Embedder, TokenHasher}
 import graft.index._
 import graft.text.{Bm25Tokenizer, FxHash, Language, TextTokenizer}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession, functions}
@@ -53,17 +53,18 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *     one recovery rule;
   *   - `search(query, limit)` = embed query → churn pass → live df/N (the
   *     base df from the held index's term dictionary, no job, plus one
-  *     forward-table probe of the changed ids) →
-  *     block-max WAND over the base with the superseded docs excluded
-  *     (unbounded k, so nothing pruned, for an unlimited search) + the live
-  *     changed docs scored on the driver with the same f32 fold in
-  *     query-occurrence order → merge → contents lookup
-  *     (`search.rs:118-132`): the ≤ k hits' contents come from one pruned
-  *     docstore scan, resolved latest-seq-wins on the driver. A clean search
-  *     is 2 Spark jobs (base WAND 1, over the held base's cached blocks;
-  *     contents 1); with deltas pending it is 5 (churn pass 2, forward
-  *     probe 1, base WAND 1, contents 1). The first search on each base also
-  *     collects its term dictionary and routes and caches its WAND blocks.
+  *     forward-table probe of the changed ids) → one `Bm25Query` compiled
+  *     against them → block-max WAND over the base with the superseded
+  *     docs excluded (unbounded k, so nothing pruned, for an unlimited
+  *     search) + the live changed docs scored on the driver with the same
+  *     `Bm25Query.score` → the index's `Bm25Index.topK` tail over both →
+  *     contents lookup (`search.rs:118-132`): the ≤ k hits' contents come
+  *     from one pruned docstore scan, resolved latest-seq-wins on the
+  *     driver. A clean search is 2 Spark jobs (base WAND 1, over the held
+  *     base's cached blocks; contents 1); with deltas pending it is 5
+  *     (churn pass 2, forward probe 1, base WAND 1, contents 1). The first
+  *     search on each base also collects its term dictionary and routes and
+  *     caches its WAND blocks.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -312,8 +313,13 @@ final class SearchEngine private[api] (
   private def avgdlOf(base: Option[Bm25Index]): Float =
     fixedAvgdl.orElse(base.map(_.manifest.avgdl)).getOrElse(Embedder.FallbackAvgdl)
 
+  /** The term hash of every base this engine builds (and `Compactor.merge`
+    * carries over), of its churn pass and of its queries.
+    */
+  private val hasher: TokenHasher = TokenHasher.default
+
   private def embedder(base: Option[Bm25Index]) =
-    new Embedder(Bm25Params(k1, b, avgdlOf(base)), tokenizer)
+    new Embedder(Bm25Params(k1, b, avgdlOf(base)), tokenizer, hasher)
 
   def surrogate(key: String): Long = SearchEngine.surrogate(key)
 
@@ -463,7 +469,7 @@ final class SearchEngine private[api] (
       val (n, distinctIds) = (r.getLong(0), r.getLong(1))
       require(n == distinctIds, s"doc key hash collision: $n docs, $distinctIds distinct surrogates")
       IndexBuilder.build(spark, corpus, tokenizer, out, cfg,
-        Map("source" -> logPath, "rows" -> n.toString), avgdlOverride)
+        Map("source" -> logPath, "rows" -> n.toString), avgdlOverride, hasher)
     } finally corpus.unpersist()
   }
 
@@ -609,53 +615,35 @@ final class SearchEngine private[api] (
     * `None` returns every doc sharing ≥1 query term, like the reference's
     * unlimited mode.
     *
-    * One route for every limit and engine state. One churn pass gives the
-    * superseded ids and each live changed doc's token count and query-term
-    * tfs; one probe of the base's forward rows among the superseded ids
-    * gives how many the base holds, in total and per term. From those the
-    * driver derives the live df (base df − superseded base docs holding the
-    * term + live changed docs holding it) and the live N. The base side is
-    * the index's block-max WAND with those live idfs and the superseded
-    * docs excluded; an unlimited search passes an unbounded k, so nothing
-    * is pruned. The changed docs are scored on the driver with the same
-    * f32 fold in query-occurrence order, and the two hit lists merge; an
-    * engine without a base has an empty base side. Results are
-    * bit-identical to a fresh engine over the live docs (gated in
-    * SearchEngineSpec).
+    * One route for every limit and engine state: `liveView` → the query
+    * compiled once against the live df and N → the base index's block-max
+    * WAND with the superseded docs excluded (an unbounded k for an
+    * unlimited search, so nothing is pruned) and the live changed docs
+    * scored on the driver with the same `Bm25Query.score` → their union
+    * through the index's `Bm25Index.topK` tail → contents. An engine
+    * without a base has an empty base side. Results are bit-identical to a
+    * fresh engine over the live docs (gated in SearchEngineSpec).
     */
   def search(query: String, limit: Option[Int] = None): Seq[SearchResult] = {
     require(query != null, "null query")
-    val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
+    val qOcc = tokenizer.tokenize(query).map(hasher.hash)
     if (qOcc.isEmpty) return Seq.empty
     val terms = qOcc.distinct
     val v = liveView(terms)
-    if (v.dfs.values.forall(_ <= 0L)) return Seq.empty
-    val idfs = v.dfs.map { case (t, df) => t -> graft.bm25.Bm25Math.idf(v.nLive, df) }
-
-    val k = limit.getOrElse(Int.MaxValue)
-    val present = terms.filter(v.dfs(_) > 0L)
-    val baseHits = v.base match {
-      case Some(idx) if present.nonEmpty =>
-        topK(idx.wandTopK(qOcc, present, idfs, k, v.superseded, Some(wandSkippedBlocks)), limit)
-      case _ => Array.empty[ScoredDoc]
-    }
-    // f32 fold in query-occurrence order (scorer.rs:109-123) over the live
-    // changed docs holding a query term
-    val slots = qOcc.map(terms.indexOf(_))
+    val q = Bm25Query(qOcc, v.dfs.getOrElse(_, 0L), v.nLive)
+    if (q.isEmpty) return Seq.empty
+    val baseHits = v.base.fold(spark.emptyDataset[ScoredDoc])(
+      _.wandTopK(q, limit.getOrElse(Int.MaxValue), v.superseded, Some(wandSkippedBlocks)))
+    // the live changed docs holding a query term; a doc lives on exactly one
+    // side (superseded base docs are excluded), so the union is exact
+    val at = q.terms.map(terms.indexOf(_))
     val changedHits = v.live.filter(_.tfs.exists(_ > 0)).map { d =>
-      var score = 0.0f
-      for (i <- qOcc.indices; tf = d.tfs(slots(i)) if tf > 0) score += idfs(qOcc(i)) * v.emb.weight(tf, d.dl)
-      ScoredDoc(d.doc_id, score)
+      ScoredDoc(d.doc_id, q.score(at.map(j => if (d.tfs(j) > 0) v.emb.weight(d.tfs(j), d.dl) else 0.0f)))
     }
-    // a doc lives on exactly one side (superseded base docs are excluded),
-    // so a plain merge is exact
-    resolveContents((baseHits ++ changedHits).map(h => (h.doc_id, h.score))
-      .sortBy { case (id, s) => (-s, id) }.take(k).toSeq)
+    val hits = Bm25Index.topK(
+      if (changedHits.isEmpty) baseHits else baseHits.union(changedHits.toSeq.toDS()), limit).collect()
+    resolveContents(hits.map(h => (h.doc_id, h.score)).toSeq)
   }
-
-  /** Collected hits: the top `limit` by (score desc, doc_id asc), or all. */
-  private def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Array[ScoredDoc] =
-    limit.fold(scored)(scored.orderBy($"score".desc, $"doc_id".asc).limit(_).as[ScoredDoc]).collect()
 
   /** Contents for scored hits: the hit docs' log rows come from one pruned
     * scan (`contentsRows`) and latest-seq-wins runs on the driver over those

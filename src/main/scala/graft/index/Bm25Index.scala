@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.bm25.{Bm25Params, Embedder}
+import graft.bm25.{Bm25Params, Bm25Query, Embedder}
 import graft.text.{Bm25Tokenizer, Language, TextTokenizer}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,12 +39,15 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
     }
 }
 
-/** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan):
-  * driver-side query embedding (pure function, no job) → term-stat lookup
-  * (a binary search of the held term dictionary, for both modes) → idfs
-  * broadcast to the scorer → pruned posting-block scan → per-candidate
-  * f32 score fold (query-occurrence order, `/root/reference/src/scorer.rs:109-123`)
-  * → `TakeOrderedAndProject` top-k.
+/** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan). A
+  * search is one route for both modes: driver-side query embedding (pure
+  * function, no job) → one compiled `Bm25Query` (the present terms' slots,
+  * idfs from the held term dictionary's df, multiplicities, occurrence
+  * slots) → the WAND kernel or the exhaustive scorer, each folding a doc's
+  * slot-indexed weights with `Bm25Query.score` (the f32 fold in
+  * query-occurrence order, `/root/reference/src/scorer.rs:109-123`) →
+  * `Bm25Index.topK`, the (score desc, doc_id asc) tail that the engine
+  * shares (`TakeOrderedAndProject` for a limited search).
   *
   * Candidate generation is disjunctive (docs sharing ≥1 query term,
   * `scorer.rs:79-97`); ties are broken deterministically (score desc,
@@ -56,7 +59,10 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   *     1:1; used as the parity gate and as the WAND cross-check).
   *   - `wand`: block-max WAND with a per-partition top-k heap — skips
   *     decoding blocks whose upper bound cannot enter the current top-k.
-  *     Safe/exact for monotone additive scores, so rank-identical.
+  *     Safe/exact for monotone additive scores, so rank-identical. An
+  *     unlimited WAND search runs with an unbounded k and prunes nothing.
+  *
+  * Any other mode is refused.
   *
   * An instance holds, for its whole life (an index dir never changes):
   *   - on the driver, the resolved tables and the term dictionary (every
@@ -76,7 +82,6 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
 final class Bm25Index(spark: SparkSession, val indexDir: String,
                       customTokenizer: Option[TextTokenizer] = None,
                       k1: Float = 1.2f, b: Float = 0.75f,
-                      wandRangesPerShard: Int = 0,
                       avgdlOverride: Option[Float] = None) extends Serializable {
   import spark.implicits._
 
@@ -104,24 +109,14 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   @transient private lazy val postingsTable = IndexTables.postings(spark, indexDir)
   @transient private[graft] lazy val forwardTable = IndexTables.forward(spark, indexDir)
 
-  /** Sub-ranges per shard for the WAND query fan-out (task count scales as
-    * numShards × this — numShards is not a parallelism ceiling).
+  /** The fan-out groups of this instance, fixed on first use: 2 × the
+    * session's default parallelism split over the shards (so the task count
+    * is not capped by numShards). The held blocks are routed to these
+    * groups and the kernel trims each group to its doc range, so both must
+    * read one value: the default parallelism grows as executors register.
     */
-  def wandFanoutRangesPerShard: Int = fanoutRanges.perShard
-
-  /** The fan-out groups of this instance, fixed on first use. The held
-    * blocks are routed to these groups and the kernel trims each group to
-    * its doc range, so both must read one value: the session's default
-    * parallelism, which sets the auto count, grows as executors register.
-    */
-  @transient private lazy val fanoutRanges: FanoutRanges = FanoutRanges(manifest.shardBounds,
-    if (wandRangesPerShard > 0) wandRangesPerShard
-    else math.max(1, (spark.sparkContext.defaultParallelism * 2) / math.max(manifest.numShards, 1)))
-
-  /** IDF exactly as `scorer.rs:99-107`: f32 throughout, df = number of docs
-    * containing the term, N = total docs.
-    */
-  def idf(df: Long): Float = graft.bm25.Bm25Math.idf(nDocs, df)
+  @transient private[index] lazy val fanoutRanges: FanoutRanges = FanoutRanges(manifest.shardBounds,
+    math.max(1, (spark.sparkContext.defaultParallelism * 2) / math.max(manifest.numShards, 1)))
 
   /** The term dictionary: every term of the index, sorted, and its df at the
     * same position. Collected from termstats by one job, on the first
@@ -171,52 +166,44 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   def queryTerms(query: String): Array[Long] =
     tokenizer.tokenize(query).map(hasher.hash)
 
+  /** `occ` compiled against the term dictionary's df and the index's N:
+    * the one query value every scorer here folds and bounds.
+    */
+  private def compile(occ: Array[Long]): Bm25Query = {
+    val dfs = termDfs(occ.distinct)
+    Bm25Query(occ, dfs.getOrElse(_, 0L), nDocs)
+  }
+
   /** Top-k search over the index. Returns (doc_id, score) sorted by
     * (score desc, doc_id asc), limited to `limit` if given — all documents
     * sharing ≥1 query term otherwise (the reference's unlimited search).
+    * `mode` is "wand" or "exhaustive"; an unlimited WAND search runs with an
+    * unbounded k, so it prunes nothing.
     */
   def search(query: String, limit: Option[Int] = None, mode: String = "exhaustive"): Dataset[ScoredDoc] = {
-    val qOcc = queryTerms(query)
-    // one df lookup for both modes: the term dictionary, on the driver
-    val terms = qOcc.distinct
-    val dfs = termDfs(terms)
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return spark.emptyDataset[ScoredDoc]
-    val idfs = present.iterator.map(t => t -> idf(dfs(t))).toMap
-
-    val scored = mode match {
-      case "wand" if limit.isDefined => wandTopK(qOcc, present, idfs, limit.get, Array.empty, None)
-      case _ => exhaustive(qOcc, present, idfs)
-    }
-    val sorted = scored.orderBy($"score".desc, $"doc_id".asc)
-    limit.map(sorted.limit).getOrElse(sorted).as[ScoredDoc]
+    if (mode != "wand" && mode != "exhaustive")
+      throw new IllegalArgumentException(s"unknown search mode '$mode': use \"wand\" or \"exhaustive\"")
+    val q = compile(queryTerms(query))
+    if (q.isEmpty) return spark.emptyDataset[ScoredDoc]
+    Bm25Index.topK(
+      if (mode == "wand") wandTopK(q, limit.getOrElse(Int.MaxValue), Array.empty, None) else exhaustive(q),
+      limit)
   }
 
   /** Reference-exact scoring of every candidate (disjunctive union): the
-    * postings of the `present` terms grouped by doc, each doc's score
-    * folded in f32 with the caller's `idfs`, broadcast as `wandTopK` takes
-    * them (identically to `scorer.rs:99-123`).
+    * postings of the query's terms grouped by doc, each doc's weights put
+    * in its slots and folded by `Bm25Query.score` (`scorer.rs:99-123`).
     */
-  private def exhaustive(qOcc: Array[Long], present: Array[Long],
-                         idfs: Map[Long, Float]): Dataset[ScoredDoc] = {
+  private def exhaustive(q: Bm25Query): Dataset[ScoredDoc] = {
     val emb = embedder
-    val qOccB = spark.sparkContext.broadcast(qOcc)
-    val idfB = spark.sparkContext.broadcast(idfs)
-    postingsFor(present)
+    val queryB = spark.sparkContext.broadcast(q)
+    postingsFor(q.terms)
       .groupByKey(_.doc_id)
       .mapGroups { (docId, rows) =>
-        val values = new java.util.HashMap[Long, Float](16)
-        rows.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-        var score = 0.0f
-        val occ = qOccB.value
-        val idfMap = idfB.value
-        var i = 0
-        while (i < occ.length) {
-          val v = values.get(occ(i)) // 0.0f when absent — adding 0f is exact
-          if (v != 0.0f) score += idfMap(occ(i)) * v
-          i += 1
-        }
-        ScoredDoc(docId, score)
+        val query = queryB.value
+        val weights = new Array[Float](query.size)
+        rows.foreach(p => weights(query.slotOf(p.term)) = emb.weight(p.tf, p.dl))
+        ScoredDoc(docId, query.score(weights))
       }
   }
 
@@ -267,83 +254,72 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     if (held != null) held.unpersist(blocking = false): Unit
   }
 
-  /** Block-max WAND, document-at-a-time: per shard (doc-range partition),
-    * the query terms' posting blocks form doc-sorted cursors that are merged
+  /** Block-max WAND, document-at-a-time: per fan-out group, the query
+    * terms' posting blocks form doc-sorted cursors that are merged
     * doc-at-a-time with a k-sized heap. Before a cursor decodes its next
-    * block, the block's upper bound (idf·weight(max_tf, min_dl), nextUp-
-    * padded) plus the other terms' partition-wide bounds is compared to the
-    * current k-th score: strictly-below blocks are skipped without decoding.
-    * Memory is O(k + blockSize·|terms|) regardless of posting length; the
-    * pruning is conservative, so results are rank- and bit-identical to the
-    * exhaustive scorer (asserted in Bm25IndexSpec). The input is
-    * `heldBlocks` filtered to the `present` terms: each partition holds
-    * whole fan-out groups, so the kernel runs where the blocks are cached.
+    * block, the block's `Bm25Query.blockBound` plus the other terms'
+    * group-wide bounds, padded for f32 rounding, is compared to the current
+    * k-th score: strictly-below blocks are skipped without decoding. Each
+    * candidate's weights go into an array indexed by query slot and are
+    * folded by `Bm25Query.score`. Memory is O(k + blockSize·|terms|)
+    * regardless of posting length; the pruning is conservative, so results
+    * are rank- and bit-identical to the exhaustive scorer (asserted in
+    * Bm25IndexSpec). The input is `heldBlocks` filtered to the query's
+    * terms: each partition holds whole fan-out groups, so the kernel runs
+    * where the blocks are cached.
     *
-    * `idfs` are the caller's (the engine passes live df/N), `exclude` is a
-    * sorted array of doc ids passed over unscored (the engine's superseded
-    * docs), and `skipAcc` counts pruned blocks. With `k = Int.MaxValue` the
-    * threshold never rises above −∞, so nothing is pruned and every
-    * candidate is scored: the engine's unlimited search.
+    * `q` is compiled by the caller (the engine passes live df/N),
+    * `exclude` is a sorted array of doc ids passed over unscored (the
+    * engine's superseded docs); both ship as one broadcast. `skipAcc`
+    * counts pruned blocks. With `k = Int.MaxValue` the threshold never
+    * rises above −∞, so nothing is pruned and every candidate is scored:
+    * every unlimited WAND search.
     */
-  private[graft] def wandTopK(qOcc: Array[Long], present: Array[Long],
-                              idfs: Map[Long, Float], k: Int,
-                              exclude: Array[Long],
+  private[graft] def wandTopK(q: Bm25Query, k: Int, exclude: Array[Long],
                               skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
     val emb = embedder
-    val qOccB = spark.sparkContext.broadcast(qOcc)
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val exclB = spark.sparkContext.broadcast(exclude)
-    // Query-token multiplicity: the score fold adds idf·weight once per
-    // occurrence in qOcc (scorer.rs:109-123), so a term repeated m times
-    // contributes m× — bounds must scale by m or block skips are unsafe.
-    val multB = spark.sparkContext.broadcast(
-      qOcc.groupBy(identity).map { case (t, a) => t -> a.length })
+    val queryB = spark.sparkContext.broadcast((q, exclude))
     val ranges = fanoutRanges
     val blocks = heldBlocks
-      .where($"term".isin(present: _*))
+      .where($"term".isin(q.terms: _*))
       .as[(Int, Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
     blocks.mapPartitions { it =>
-      val occ = qOccB.value
-      val idfMap = idfB.value
-      val multMap = multB.value
-      // Conservative padding for the f32 accumulation of ≤|occ| additions:
-      // fold result ≤ realSum·(1+2^-24)^(|occ|-1); 1e-6·|occ| dominates that.
-      val pad = 1.0 + occ.length * 1e-6
+      val (query, excluded) = queryB.value
+      // Conservative padding for the f32 accumulation of ≤|slots| additions:
+      // fold result ≤ realSum·(1+2^-24)^(|slots|-1); 1e-6·|slots| dominates that.
+      val pad = 1.0 + query.slots.length * 1e-6
       // capacity clamped: k + 1 overflows for an unlimited k
       val heap = new java.util.PriorityQueue[ScoredDoc](math.min(k, 1024) + 1,
         (a: ScoredDoc, b: ScoredDoc) =>
           if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
           else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
 
-      // (shard, rng) → term → blocks ordered by block index
-      val byGroup = new java.util.HashMap[Long, java.util.HashMap[Long, java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]]]()
+      // (shard, rng) → slot → blocks
+      val byGroup = new java.util.HashMap[Long, Array[java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]]]()
       val groupRange = new java.util.HashMap[Long, (Long, Long)]()
       it.foreach { case (shard, rng, term, minDoc, cnt, maxTf, minDl, d, t, l) =>
         val key = (shard.toLong << 32) | (rng.toLong & 0xFFFFFFFFL)
         groupRange.computeIfAbsent(key, _ => ranges.range(shard, rng))
-        byGroup.computeIfAbsent(key, _ => new java.util.HashMap())
-          .computeIfAbsent(term, _ => new java.util.ArrayList())
-          .add((minDoc, cnt, maxTf, minDl, d, t, l))
+        val bySlot = byGroup.computeIfAbsent(key, _ => new Array(query.size))
+        val s = query.slotOf(term)
+        if (bySlot(s) == null) bySlot(s) = new java.util.ArrayList()
+        bySlot(s).add((minDoc, cnt, maxTf, minDl, d, t, l))
       }
 
-      /** Doc-sorted cursor over one term's block list with block-max skip,
+      /** Doc-sorted cursor over one slot's block list with block-max skip,
         * restricted to the group's inclusive doc range.
         */
-      final class Cursor(val term: Long, rLo: Long, rHi: Long,
+      final class Cursor(val slot: Int, rLo: Long, rHi: Long,
                          blocksIn: java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]) {
         // blocks of one (shard, term) have disjoint doc ranges; min_doc
         // orders them even when slices were built by different tasks
         blocksIn.sort((a, b) => java.lang.Long.compare(a._1, b._1))
-        val idf: Float = idfMap(term)
-        val mult: Int = multMap.getOrElse(term, 1)
-        // partition-wide bound for this term (residual for others' skips),
-        // scaled by the term's query-occurrence multiplicity
-        var termBound: Double = 0.0
-        (0 until blocksIn.size).foreach { i =>
+        private val bounds: Array[Double] = Array.tabulate(blocksIn.size) { i =>
           val (_, _, maxTf, minDl, _, _, _) = blocksIn.get(i)
-          val ub = mult * Math.nextUp(idf * Math.nextUp(emb.weight(maxTf, minDl))).toDouble
-          if (ub > termBound) termBound = ub
+          query.blockBound(slot, emb.weight(maxTf, minDl))
         }
+        // group-wide bound for this slot (residual for others' skips)
+        val termBound: Double = bounds.foldLeft(0.0)(math.max)
         private var bi = 0
         private var pos = 0
         private var docs: Array[Long] = null
@@ -352,20 +328,13 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
         private var n = 0
         var residual: Double = 0.0 // set once all cursors exist
 
-        /** bound of the CURRENT block (mult·idf·weight(max_tf,min_dl), padded) */
-        private def blockBound(i: Int): Double = {
-          val (_, _, maxTf, minDl, _, _, _) = blocksIn.get(i)
-          mult * Math.nextUp(idf * Math.nextUp(emb.weight(maxTf, minDl))).toDouble
-        }
-
         /** Advance to the next undecoded block, skipping blocks whose docs
           * provably cannot reach the threshold (strict <).
           */
         def loadNext(threshold: Double): Unit = {
           docs = null
           while (bi < blocksIn.size && docs == null) {
-            if (threshold != Double.NegativeInfinity &&
-                (blockBound(bi) + residual) * pad < threshold) {
+            if (threshold != Double.NegativeInfinity && (bounds(bi) + residual) * pad < threshold) {
               bi += 1 // skip whole block without decoding
               skipAcc.foreach(_.add(1L))
             }
@@ -384,7 +353,6 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
             }
           }
         }
-        def exhausted: Boolean = docs == null && bi >= blocksIn.size
         def currentDoc: Long = docs(pos)
         def hasCurrent: Boolean = docs != null && pos < n
         def currentWeight: Float = emb.weight(tfs(pos), dls(pos))
@@ -394,57 +362,43 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
         }
       }
 
+      val weights = new Array[Float](query.size)
       val groups = byGroup.entrySet().iterator()
       while (groups.hasNext) {
         val entry = groups.next()
         val (rLo, rHi) = groupRange.get(entry.getKey)
-        val terms = entry.getValue
-        val cursors = new java.util.ArrayList[Cursor]()
-        terms.forEach((term, bs) => cursors.add(new Cursor(term, rLo, rHi, bs)): Unit)
-        var total = 0.0
-        (0 until cursors.size).foreach(i => total += cursors.get(i).termBound)
-        (0 until cursors.size).foreach { i =>
-          val c = cursors.get(i); c.residual = total - c.termBound
+        val cursors = entry.getValue.zipWithIndex.collect {
+          case (bs, s) if bs != null => new Cursor(s, rLo, rHi, bs)
         }
+        val total = cursors.map(_.termBound).sum
+        cursors.foreach(c => c.residual = total - c.termBound)
         def threshold: Double =
           if (heap.size < k) Double.NegativeInfinity else heap.peek().score.toDouble
-        cursors.forEach(c => c.loadNext(threshold))
+        cursors.foreach(_.loadNext(threshold))
         // doc-at-a-time merge
-        val weights = new java.util.HashMap[Long, Float](cursors.size * 2)
         var done = false
-        val excluded = exclB.value
         while (!done) {
           var minDoc = Long.MaxValue
-          cursors.forEach { c => if (c.hasCurrent && c.currentDoc < minDoc) minDoc = c.currentDoc }
+          cursors.foreach { c => if (c.hasCurrent && c.currentDoc < minDoc) minDoc = c.currentDoc }
           if (minDoc == Long.MaxValue) done = true
-          else if (java.util.Arrays.binarySearch(excluded, minDoc) >= 0) {
-            // superseded doc: advance past it without scoring
+          else {
+            // a superseded doc is advanced past without scoring
+            val scored = java.util.Arrays.binarySearch(excluded, minDoc) < 0
+            if (scored) java.util.Arrays.fill(weights, 0.0f)
             val thr = threshold
-            cursors.forEach { c =>
-              if (c.hasCurrent && c.currentDoc == minDoc) c.advance(thr)
-            }
-          } else {
-            weights.clear()
-            val thr = threshold
-            cursors.forEach { c =>
+            cursors.foreach { c =>
               if (c.hasCurrent && c.currentDoc == minDoc) {
-                weights.put(c.term, c.currentWeight)
+                if (scored) weights(c.slot) = c.currentWeight
                 c.advance(thr)
               }
             }
-            // f32 fold in query-occurrence order (scorer.rs:109-123)
-            var score = 0.0f
-            var i = 0
-            while (i < occ.length) {
-              val v = weights.get(occ(i))
-              if (v != 0.0f) score += idfMap(occ(i)) * v
-              i += 1
+            if (scored) {
+              heap.add(ScoredDoc(minDoc, query.score(weights)))
+              if (heap.size > k) heap.poll(): Unit
             }
-            heap.add(ScoredDoc(minDoc, score))
-            if (heap.size > k) heap.poll(): Unit
           }
         }
-        // heap carries over across shards within the partition (tighter
+        // heap carries over across groups within the partition (tighter
         // threshold); emitted once at the end
       }
       val arr = new Array[ScoredDoc](heap.size)
@@ -458,7 +412,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * `Scorer::score`, `scorer.rs:72-75`): None when the doc is absent.
     */
   def scoreDoc(docId: Long, query: String): Option[Float] = {
-    val qOcc = queryTerms(query)
+    val q = compile(queryTerms(query))
     val shard = manifest.shardOf(docId)
     val fwd = forwardTable
       .where($"shard" === shard && $"doc_id" === docId)
@@ -466,30 +420,27 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       .as[ForwardRow]
       .collect()
     fwd.headOption.map { row =>
-      if (qOcc.isEmpty) 0.0f
-      else {
-        val dfs = termDfs(qOcc.distinct)
-        val weights = new java.util.HashMap[Long, Float]()
-        var i = 0
-        while (i < row.terms.length) {
-          weights.putIfAbsent(row.terms(i), embedder.weight(row.tfs(i), row.dl))
-          i += 1
-        }
-        var score = 0.0f
-        i = 0
-        while (i < qOcc.length) {
-          val t = qOcc(i)
-          val v = weights.get(t)
-          if (v != 0.0f) score += idf(dfs.getOrElse(t, 0L)) * v
-          i += 1
-        }
-        score
-      }
+      val weights = new Array[Float](q.size)
+      for (i <- row.terms.indices; s = q.slotOf(row.terms(i)) if s >= 0)
+        weights(s) = embedder.weight(row.tfs(i), row.dl)
+      q.score(weights)
     }
   }
 }
 
 object Bm25Index {
+
+  /** The top-k tail of every search, the index's and the engine's: ordered
+    * by (score desc, doc_id asc), the first `limit` rows (each partition's
+    * top `limit`, merged on the driver), or all of them, sorted in one
+    * partition (a global sort would sample its input first, running the
+    * scorer twice).
+    */
+  def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] = {
+    val order = Seq(col("score").desc, col("doc_id").asc)
+    limit.fold(scored.repartition(1).sortWithinPartitions(order: _*))(scored.orderBy(order: _*).limit)
+  }
+
   def searchWithContents(index: Bm25Index, docs: DataFrame, idCol: String, contentCol: String,
                          query: String, limit: Option[Int] = None,
                          mode: String = "exhaustive"): DataFrame = {

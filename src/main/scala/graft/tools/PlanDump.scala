@@ -1,14 +1,13 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` for each catalog query to
   * <outDir>/<query>_<suffix>.txt — the optimization-round evidence files
   * (plans/r06/...). Usage:
   *   runMain graft.tools.PlanDump <outDir> <suffix> [query ...]
-  * Uses the same session config as Bench so the plans match what the bench
-  * executes (AQE on, shuffle.partitions = SPARK_GRAFT_CPUS, 8m splits).
+  * Uses Bench's session (`ToolSession` with 8m splits) so the plans match
+  * what the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -16,17 +15,7 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession("bm25spark-plandump", ToolSession.localSplits("8m"): _*)
     new java.io.File(outDir).mkdirs()
     // prebuild the shared index/engine dirs exactly like Bench does, so the
     // per-query plans do not include one-time index builds

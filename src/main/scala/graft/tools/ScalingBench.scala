@@ -3,7 +3,6 @@ package graft.tools
 import graft.index.{Bm25Index, Checkpoints, IndexBuildConfig, IndexBuilder}
 import graft.sources.{CodeCorpus, TableIO}
 import graft.text.Bm25Tokenizer
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-efficiency evidence (BASELINE.json: ≥0.8 between N and 4N
   * executors; evidenced here as local[N] vs local[4N] per the driver
@@ -17,7 +16,7 @@ import org.apache.spark.sql.SparkSession
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = ToolSession.cpus
     // SPARK_GRAFT_MASTER=local-cluster[N,cores,mem] runs the same job on N
     // separate executor JVMs (the north_rule's N-vs-4N-executors shape);
     // under spark-submit (scripts/run_submit.sh) the master comes from the
@@ -25,21 +24,11 @@ object ScalingBench {
     val master = sys.env.get("SPARK_GRAFT_MASTER")
       .orElse(sys.props.get("spark.master"))
       .getOrElse(s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local-scale split sizing: the corpora here are ~100 MB, so the
-      // default 128 MB split would serialize the scan+tokenize stage on one
-      // task regardless of cores (at production scale the default is right)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-      .config("spark.ui.enabled", "false")
-      .appName("bm25spark-scaling")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the corpora here are ~100 MB: 4m splits (at production scale the
+    // default is right)
+    val spark = ToolSession("bm25spark-scaling", Seq("spark.master" -> master,
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4")) ++
+      ToolSession.localSplits("4m"): _*)
     try {
       val tmp = System.getProperty("java.io.tmpdir")
       val corpusPath = s"$tmp/graft_code_corpus_$n"

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.index._
 import graft.text.Bm25Tokenizer
-import org.apache.spark.sql.SparkSession
 
 /** CLI surface over the distributed engine:
   *
@@ -14,14 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SearchCli {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("bm25spark-cli")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession("bm25spark-cli")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
     try args.toList match {
       case "build" :: docsPath :: indexDir :: rest =>
         val numShards = rest.headOption.map(_.toInt).getOrElse(8)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.bm25.{Bm25Math, Bm25Params, Embedder}
+import graft.bm25.{Bm25Math, Bm25Params, Bm25Query, Embedder}
 import graft.index.PostingCodec
 import graft.text.{Bm25Tokenizer, FxHash, Transliterate}
 import org.scalacheck.{Gen, Prop, Properties}
@@ -59,6 +59,23 @@ object PropertyChecks extends Properties("graft") {
         val v = Bm25Math.idf(n, df)
         v > 0.0f && (df == 0L || Bm25Math.idf(n, df - 1) >= v)
       }
+    }
+
+  // A query of up to 12 occurrences over 6 terms, terms 4 and 5 absent from
+  // the corpus (df 0), and a weight per term, 0 for about a third of them.
+  private val queryAndWeights: Gen[(Array[Long], Map[Long, Float])] = for {
+    occ <- Gen.listOf(Gen.choose(0L, 5L)).map(_.take(12).toArray)
+    ws <- Gen.listOfN(6, Gen.frequency(1 -> Gen.const(0.0f), 2 -> Gen.choose(0.01f, 2.2f)))
+  } yield (occ, ws.zipWithIndex.map { case (w, t) => t.toLong -> w }.toMap)
+
+  property("compiled query score == plain occurrence-order f32 fold, bit for bit") =
+    Prop.forAll(queryAndWeights, Gen.choose(10L, 100000L)) { case ((occ, w), n) =>
+      def df(t: Long): Long = if (t >= 4L) 0L else t + 1L
+      val q = Bm25Query(occ, df, n)
+      var plain = 0.0f
+      occ.foreach(t => plain += Bm25Math.idf(n, df(t)) * (if (df(t) > 0L) w(t) else 0.0f))
+      java.lang.Float.floatToRawIntBits(q.score(q.terms.map(w))) ==
+        java.lang.Float.floatToRawIntBits(plain)
     }
 
   // ------------------------------------------------- tokenizer invariants

@@ -22,6 +22,16 @@ class Bm25IndexSpec extends SparkTestBase {
 
   lazy val index = new Bm25Index(spark, indexDir)
 
+  /** An instance whose fan-out groups are fixed, by its first search, under
+    * a default parallelism of 8: 8 × 2 / 4 shards = 4 ranges per shard.
+    */
+  private def fannedIndex(): Bm25Index =
+    org.apache.spark.graft.LocalParallelism(spark.sparkContext, 8) {
+      val idx = new Bm25Index(spark, indexDir)
+      idx.search("merge join sort", Some(5), mode = "wand").collect()
+      idx
+    }
+
   test("index builds with sane stats") {
     val m = index.manifest
     assert(m.nDocs === 500L)
@@ -63,9 +73,9 @@ class Bm25IndexSpec extends SparkTestBase {
   test("WAND fan-out exceeds numShards and stays rank/bit-identical (range split)") {
     // 4 sub-ranges per shard on a 4-shard index → 16 groups > 4 shards:
     // query parallelism is no longer capped by the shard count.
-    val fanned = new Bm25Index(spark, indexDir, wandRangesPerShard = 4)
-    assert(fanned.wandFanoutRangesPerShard === 4)
-    assert(fanned.manifest.numShards * fanned.wandFanoutRangesPerShard >
+    val fanned = fannedIndex()
+    assert(fanned.fanoutRanges.perShard === 4)
+    assert(fanned.manifest.numShards * fanned.fanoutRanges.perShard >
       fanned.manifest.numShards)
     for (q <- Seq("merge join sort", "the fast key", "keys key"); k <- Seq(5, 20)) {
       val ex = index.search(q, Some(k), mode = "exhaustive").collect()
@@ -89,6 +99,14 @@ class Bm25IndexSpec extends SparkTestBase {
         java.lang.Float.floatToRawIntBits(h.score))
     }
     assert(index.scoreDoc(999999999L, q).isEmpty)
+  }
+
+  test("an unknown search mode is refused, naming both modes") {
+    for (q <- Seq("merge join sort", "")) {
+      val e = intercept[IllegalArgumentException](index.search(q, Some(5), mode = "wnad"))
+      assert(e.getMessage.contains("wnad") && e.getMessage.contains("\"wand\"") &&
+        e.getMessage.contains("\"exhaustive\""), e.getMessage)
+    }
   }
 
   test("empty query and unknown terms yield empty results") {
@@ -185,11 +203,13 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(hits.nonEmpty)
   }
 
-  /** WAND top-k of `idx` equals the exhaustive scorer's, ids and f32 bits. */
+  /** WAND top-k of `idx` equals the exhaustive scorer's, ids and f32 bits,
+    * limited and unlimited.
+    */
   private def assertWandExact(idx: Bm25Index, what: String): Unit =
-    for (q <- Seq("merge join sort", "keys key", "spark window batch stream"); k <- Seq(5, 20)) {
-      val ex = index.search(q, Some(k), mode = "exhaustive").collect()
-      val wd = idx.search(q, Some(k), mode = "wand").collect()
+    for (q <- Seq("merge join sort", "keys key", "spark window batch stream"); k <- Seq(Some(5), Some(20), None)) {
+      val ex = index.search(q, k, mode = "exhaustive").collect()
+      val wd = idx.search(q, k, mode = "wand").collect()
       assert(wd.map(_.doc_id).toSeq === ex.map(_.doc_id).toSeq, s"$what: q='$q' k=$k ids")
       assert(wd.map(w => java.lang.Float.floatToRawIntBits(w.score)).toSeq ===
         ex.map(e => java.lang.Float.floatToRawIntBits(e.score)).toSeq, s"$what: q='$q' k=$k scores")
@@ -197,8 +217,8 @@ class Bm25IndexSpec extends SparkTestBase {
 
   test("WAND stays bit-exact against exhaustive after release() and after clearCache(), fan-out too") {
     import org.apache.spark.graft.JobRecorder
-    for (idx <- Seq(new Bm25Index(spark, indexDir), new Bm25Index(spark, indexDir, wandRangesPerShard = 4))) {
-      val what = s"${idx.wandFanoutRangesPerShard} ranges per shard"
+    for (idx <- Seq(new Bm25Index(spark, indexDir), fannedIndex())) {
+      val what = s"${idx.fanoutRanges.perShard} ranges per shard"
       // a search over held blocks reads them: one job
       def assertOneJob(when: String): Unit = {
         val (hits, jobs) = JobRecorder(spark.sparkContext)(idx.search("spark window batch", Some(10), "wand").collect())
@@ -222,11 +242,11 @@ class Bm25IndexSpec extends SparkTestBase {
     // a cluster grows as executors register: the kernel must trim each
     // group to the ranges its held blocks were routed with
     val idx = new Bm25Index(spark, indexDir)
-    val perShard = idx.wandFanoutRangesPerShard
+    val perShard = idx.fanoutRanges.perShard
     assertWandExact(idx, s"$perShard ranges per shard")
     LocalParallelism(spark.sparkContext, spark.sparkContext.defaultParallelism * 4) {
       assertWandExact(idx, s"$perShard ranges per shard, default parallelism grown")
-      assert(idx.wandFanoutRangesPerShard === perShard)
+      assert(idx.fanoutRanges.perShard === perShard)
     }
     idx.release()
   }
