@@ -12,7 +12,7 @@ package graft.bm25
   *   - `mults`: each slot's multiplicity among the query tokens;
   *   - `slots`: the slot of each query occurrence of a present term, in
   *     token order: the reference's f32 accumulation order
-  *     (`/root/reference/src/scorer.rs:109-123`).
+  *     (`src/scorer.rs:109-123`).
   */
 final case class Bm25Query(terms: Array[Long], idfs: Array[Float], mults: Array[Int],
                            slots: Array[Int]) {

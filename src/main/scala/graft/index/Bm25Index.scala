@@ -45,7 +45,7 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   * idfs from the held term dictionary's df, multiplicities, occurrence
   * slots) → the WAND kernel or the exhaustive scorer, each folding a doc's
   * slot-indexed weights with `Bm25Query.score` (the f32 fold in
-  * query-occurrence order, `/root/reference/src/scorer.rs:109-123`) →
+  * query-occurrence order, the reference's `scorer.rs:109-123`) →
   * `Bm25Index.topK`, the (score desc, doc_id asc) tail that the engine
   * shares (`TakeOrderedAndProject` for a limited search).
   *
@@ -436,7 +436,7 @@ object Bm25Index {
     * partition (a global sort would sample its input first, running the
     * scorer twice).
     */
-  def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] = {
+  private[graft] def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] = {
     val order = Seq(col("score").desc, col("doc_id").asc)
     limit.fold(scored.repartition(1).sortWithinPartitions(order: _*))(scored.orderBy(order: _*).limit)
   }
