@@ -19,7 +19,7 @@ import scala.collection.mutable
   * Every frame the family persists (the jaccard block projection, the
   * minhash signature, the shingle sets, the verified pairs and the band
   * codes) is held by one cache owner per (session, sfDir), see [[hold]],
-  * and released by [[clear]].
+  * next to the jaccard family's hot-block count, and released by [[clear]].
   */
 object NearDup {
   import Queries.{docs, vectors}
@@ -35,33 +35,47 @@ object NearDup {
 
   // ------------------------------------------------------------ the owner
 
-  private val owned = mutable.Map.empty[(SparkSession, String), mutable.Map[String, DataFrame]]
+  /** What the family holds for one (session, sfDir): its persisted frames
+    * by name, and the number of hot jaccard blocks once it is known.
+    */
+  private final class Held {
+    val frames = mutable.Map.empty[String, DataFrame]
+    var hotBlocks: Option[Long] = None
+  }
+
+  private val owned = mutable.Map.empty[(SparkSession, String), Held]
+
+  /** The entry of (session, sfDir), created on first use; entries of
+    * stopped sessions are dropped. Callers hold the owner's lock.
+    */
+  private def entry(spark: SparkSession, sfDir: String): Held = {
+    owned.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    owned.getOrElseUpdate((spark, sfDir), new Held)
+  }
 
   /** The frame held under `name` for (session, sfDir), built from `plan`
     * on first use and persisted. A frame that left the cache manager since
     * (`catalog.clearCache()`) is registered again, so no caller reads a
-    * held frame that silently recomputes. Entries of stopped sessions are
-    * dropped.
+    * held frame that silently recomputes.
     */
   private def hold(spark: SparkSession, sfDir: String, name: String)(plan: => DataFrame): DataFrame =
     synchronized {
-      owned.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-      val df = owned.getOrElseUpdate((spark, sfDir), mutable.Map.empty).getOrElseUpdate(name, plan)
+      val df = entry(spark, sfDir).frames.getOrElseUpdate(name, plan)
       if (df.storageLevel == StorageLevel.NONE) df.persist()
       df
     }
 
   /** The frames held for `spark`, by (sfDir, name), without registering any. */
   private[graft] def held(spark: SparkSession): Map[(String, String), DataFrame] = synchronized {
-    owned.toSeq.collect { case ((s, dir), frames) if s eq spark =>
-      frames.map { case (name, df) => (dir, name) -> df }
+    owned.toSeq.collect { case ((s, dir), h) if s eq spark =>
+      h.frames.map { case (name, df) => (dir, name) -> df }
     }.flatten.toMap
   }
 
   /** Unpersists and forgets every frame held for `spark`. */
   def clear(spark: SparkSession): Unit = synchronized {
-    owned.filterInPlace { case ((s, _), frames) =>
-      if (s eq spark) frames.values.foreach(_.unpersist(blocking = false))
+    owned.filterInPlace { case ((s, _), h) =>
+      if (s eq spark) h.frames.values.foreach(_.unpersist(blocking = false))
       !(s eq spark)
     }
   }
@@ -243,11 +257,16 @@ object NearDup {
             .otherwise(col("th")).as("blk"))
     }
     val counts = d.groupBy(col("blk")).agg(count(lit(1)).as("bcnt"))
-    // one job that both materializes the held projection and tells the
-    // driver whether the hot leg is needed at all: AQE does not prune the
-    // probe side of an empty-broadcast join, so without the probe the hot
-    // leg's shingle rebuild would run for zero hot docs
-    val nHotBlocks = counts.where(col("bcnt") > JaccardHotBlockCap).count()
+    // one job, on the first call, that both materializes the held
+    // projection and tells the driver whether the hot leg is needed at all:
+    // AQE does not prune the probe side of an empty-broadcast join, so
+    // without the probe the hot leg's shingle rebuild would run for zero hot
+    // docs. The answer is held next to the projection.
+    val nHotBlocks = synchronized(entry(spark, sfDir).hotBlocks).getOrElse {
+      val n = counts.where(col("bcnt") > JaccardHotBlockCap).count()
+      synchronized(entry(spark, sfDir).hotBlocks = Some(n))
+      n
+    }
     val dc = d.join(counts, "blk")
 
     // pairs inside one block are unique, so no distinct

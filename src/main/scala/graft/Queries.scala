@@ -65,7 +65,7 @@ object Queries {
 
   /** The index over `cachedIndex(spark, sfDir, kind, tok)`, one instance
     * per (session, index dir), so a warm call reuses its term dictionary and
-    * its WAND blocks instead of collecting and routing them again, until
+    * its shard stores instead of collecting and building them again, until
     * [[releaseIndexes]]. Entries of stopped sessions are dropped.
     */
   private def heldIndex(spark: SparkSession, sfDir: String, kind: String, tok: TextTokenizer): Bm25Index = {
@@ -76,7 +76,7 @@ object Queries {
     }
   }
 
-  /** Releases the WAND blocks of every index held for `spark` and forgets
+  /** Releases the shard stores of every index held for `spark` and forgets
     * the indexes; a later call builds them again.
     */
   def releaseIndexes(spark: SparkSession): Unit = synchronized {

@@ -60,11 +60,12 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *     `Bm25Query.score` → the index's `Bm25Index.topK` tail over both →
   *     contents lookup (`search.rs:118-132`): the ≤ k hits' contents come
   *     from one pruned docstore scan, resolved latest-seq-wins on the
-  *     driver. A clean search is 2 Spark jobs (base WAND 1, over the held
-  *     base's cached blocks; contents 1); with deltas pending it is 5
-  *     (churn pass 2, forward probe 1, base WAND 1, contents 1). The first
-  *     search on each base also collects its term dictionary and routes and
-  *     caches its WAND blocks.
+  *     driver. A clean search is 2 Spark jobs, limited or not (base WAND
+  *     1, over the held base's shard stores; contents 1); with deltas
+  *     pending it is 5 (churn pass 2, forward probe 1, base WAND 1,
+  *     contents 1). The first search on each base adds 2 jobs: one
+  *     collects its term dictionary, one builds and caches its shard
+  *     stores.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -258,7 +259,7 @@ final class SearchEngine private[api] (
     readLog().where($"seq" > marker)
 
   /** The base index, held for one base generation so its tables and term
-    * dictionary are read once and its WAND blocks are routed once, not on
+    * dictionary are read once and its shard stores are built once, not on
     * every search. A generation is identified by the
     * `base_seq` marker plus the manifest's bytes and file identity: a base
     * swapped in by another engine instance on the same dir changes it, so
@@ -288,8 +289,8 @@ final class SearchEngine private[api] (
     heldBase.map(_._2)
   }
 
-  /** Forgets the held base and releases its WAND blocks, so a session holds
-    * at most one base generation's blocks per engine.
+  /** Forgets the held base and releases its shard stores, so a session
+    * holds at most one base generation's stores per engine.
     */
   private def dropBase(): Unit = {
     heldBase.foreach(_._2.release())

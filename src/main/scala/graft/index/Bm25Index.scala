@@ -2,7 +2,9 @@ package graft.index
 
 import graft.bm25.{Bm25Params, Bm25Query, Embedder}
 import graft.text.{Bm25Tokenizer, Language, TextTokenizer}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,30 +15,42 @@ final case class Posting(doc_id: Long, term: Long, tf: Int, dl: Int)
 
 final case class ScoredDoc(doc_id: Long, score: Float)
 
-/** The WAND fan-out's doc sub-ranges: shard `s` covers the doc ids in
-  * [low, high) of the index's shard bounds, split into `perShard` slices of
-  * equal width, the last absorbing the remainder. Blocks are routed with
-  * `rangeOf` and each fan-out task filters its postings to `range`.
+/** One shard's posting blocks, held for WAND and indexed by term: the
+  * shard's terms, sorted; the blocks of `terms(i)` are `blockAt(i) until
+  * blockAt(i + 1)`, ordered by min_doc; block j holds `cnt(j)` postings with
+  * block-max `maxTf(j)` and `minDl(j)`, and its doc-delta, tf and dl streams
+  * lie back to back in `bytes` from `byteAt(j)`.
   */
-private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int) {
-  private def low(s: Int): Long = math.max(0L, if (s == 0) Long.MinValue else bounds(s - 1))
-  private def high(s: Int): Long = if (s >= bounds.length) Long.MaxValue else bounds(s)
-  private def width(s: Int): Long = {
-    val span = high(s) - low(s)
-    math.max(1L, (if (span < 0) Long.MaxValue else span) / perShard)
-  }
+private[index] final class ShardStore(val terms: Array[Long], val blockAt: Array[Int],
+                                      val cnt: Array[Int], val maxTf: Array[Int], val minDl: Array[Int],
+                                      val byteAt: Array[Int], val bytes: Array[Byte]) extends Serializable
 
-  /** The sub-range of shard `s` that holds `doc`. */
-  def rangeOf(s: Int, doc: Long): Int =
-    if (perShard <= 1) 0 else math.min(perShard - 1, ((doc - low(s)) / width(s)).toInt)
+private[index] object ShardStore {
+  type Block = (Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])
 
-  /** Sub-range `r` of shard `s` as inclusive doc bounds. */
-  def range(s: Int, r: Int): (Long, Long) =
-    if (perShard <= 1) (Long.MinValue, Long.MaxValue)
-    else {
-      val a = low(s) + r.toLong * width(s)
-      (a, if (r == perShard - 1) Long.MaxValue else a + width(s) - 1)
+  /** The store of one shard's blocks, each (term, min_doc, cnt, max_tf,
+    * min_dl, docs, tfs, dls). The streams are copied once, into an array of
+    * their exact total size; a shard whose streams pass 2 GiB is refused
+    * (`addExact` throws), so such an index needs more shards.
+    */
+  def apply(blocks: Iterator[Block]): ShardStore = {
+    val sorted = blocks.toArray.sortWith((a, b) => if (a._1 != b._1) a._1 < b._1 else a._2 < b._2)
+    val n = sorted.length
+    val terms = Array.newBuilder[Long]
+    val blockAt = Array.newBuilder[Int]
+    val byteAt = new Array[Int](n + 1)
+    for (j <- 0 until n) {
+      val (term, _, _, _, _, d, t, l) = sorted(j)
+      if (j == 0 || term != sorted(j - 1)._1) { terms += term; blockAt += j }
+      byteAt(j + 1) = Math.addExact(byteAt(j), d.length + t.length + l.length)
     }
+    blockAt += n
+    val bytes = new Array[Byte](byteAt(n))
+    val out = java.nio.ByteBuffer.wrap(bytes)
+    sorted.foreach { case (_, _, _, _, _, d, t, l) => out.put(d).put(t).put(l) }
+    new ShardStore(terms.result(), blockAt.result(), sorted.map(_._3), sorted.map(_._4), sorted.map(_._5),
+      byteAt, bytes)
+  }
 }
 
 /** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan). A
@@ -67,17 +81,16 @@ private[index] final case class FanoutRanges(bounds: Array[Long], perShard: Int)
   * An instance holds, for its whole life (an index dir never changes):
   *   - on the driver, the resolved tables and the term dictionary (every
   *     term with its df, sorted; 16 B × the manifest's `vocabulary`), both
-  *     read once, on first use, and the WAND fan-out groups, fixed on first
-  *     use;
-  *   - in the executors, from its first WAND search on, the posting blocks
-  *     routed and partitioned for the WAND fan-out (`heldBlocks`), persisted
-  *     at MEMORY_AND_DISK until `release()`.
+  *     read once, on first use;
+  *   - in the executors, from its first WAND search on, one `ShardStore`
+  *     per shard (`shardStores`), persisted at MEMORY_AND_DISK until
+  *     `release()`.
   *
-  * So a WAND search after the first is one job over the held blocks, with
-  * no parquet scan and no exchange. The exhaustive scorer and
-  * `postingsFor` read the postings parquet, so WAND ≡ exhaustive compares
-  * two independent input paths. An owner that drops an instance calls
-  * `release()`.
+  * So a WAND search after the first is one job over the held stores, one
+  * task per shard, with no parquet scan and no exchange. The exhaustive
+  * scorer and `postingsFor` read the postings parquet, so WAND ≡
+  * exhaustive compares two independent input paths. An owner that drops an
+  * instance calls `release()`.
   */
 final class Bm25Index(spark: SparkSession, val indexDir: String,
                       customTokenizer: Option[TextTokenizer] = None,
@@ -109,23 +122,13 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   @transient private lazy val postingsTable = IndexTables.postings(spark, indexDir)
   @transient private[graft] lazy val forwardTable = IndexTables.forward(spark, indexDir)
 
-  /** The fan-out groups of this instance, fixed on first use: 2 × the
-    * session's default parallelism split over the shards (so the task count
-    * is not capped by numShards). The held blocks are routed to these
-    * groups and the kernel trims each group to its doc range, so both must
-    * read one value: the default parallelism grows as executors register.
-    */
-  @transient private[index] lazy val fanoutRanges: FanoutRanges = FanoutRanges(manifest.shardBounds,
-    math.max(1, (spark.sparkContext.defaultParallelism * 2) / math.max(manifest.numShards, 1)))
-
   /** The term dictionary: every term of the index, sorted, and its df at the
     * same position. Collected from termstats by one job, on the first
     * `termDfs` of this instance; an index dir never changes, so it stays
     * valid for the instance's life. It holds 16 B × the manifest's
     * `vocabulary` (0.7 MB for the 42 k terms of a 200 k-doc `CodeCorpus`
     * index). `@transient`: it is driver-side metadata, and a
-    * task closure that captures this index (the WAND fan-out, `postingsFor`)
-    * must never ship it.
+    * task closure that captures this index must never ship it.
     */
   @transient private lazy val termDictionary: (Array[Long], Array[Long]) = {
     val rows = IndexTables.termstats(spark, indexDir).as[(Long, Long)].collect().sortBy(_._1)
@@ -207,66 +210,52 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       }
   }
 
-  @transient private var held: DataFrame = _
+  @transient private var stores: RDD[ShardStore] = _
 
-  /** The WAND's input, held for the life of the instance: every posting
-    * block, routed to each fan-out group (shard, sub-range) its doc range
-    * overlaps, hash-partitioned by (shard, rng) — a group's blocks share
-    * one partition — and sorted by term within each partition, so the
-    * cached batches' term bounds prune a query's `term IN` filter (at
-    * 200 k docs, 60 % of the rows a query scans unsorted; see
-    * `benchresults/held-wand-blocks/sort_within_partitions.txt`).
-    * Persisted (MEMORY_AND_DISK) and materialized by the first WAND search,
-    * so a later search is one job with no parquet scan and no exchange. A
-    * frame that left the cache manager since (`release()`,
-    * `catalog.clearCache()`) is registered and materialized again, so no
-    * search re-routes the whole table inside its own job.
+  /** The WAND's input, held for the life of the instance: the postings
+    * parquet read once, each block keyed by its shard and partitioned by
+    * `HashPartitioner(numShards)` (an `Int` key hashes to itself, so
+    * partition i holds shard i alone), each partition built into one
+    * `ShardStore`. Persisted (MEMORY_AND_DISK) and materialized by one job
+    * on the first WAND search, so a later search is one job with no parquet
+    * scan and no exchange. After `release()` the next WAND search builds
+    * the stores again.
     */
-  private def heldBlocks: DataFrame = synchronized {
-    if (held == null) {
-      val ranges = fanoutRanges
-      held = postingsTable
-        .select($"shard", $"term", $"cnt", $"max_tf", $"min_dl",
-          $"min_doc", $"max_doc", $"docs", $"tfs", $"dls")
-        .as[(Int, Long, Int, Int, Int, Long, Long, Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (shard, term, cnt, maxTf, minDl, minDoc, maxDoc, d, t, l) =>
-          (ranges.rangeOf(shard, minDoc) to ranges.rangeOf(shard, maxDoc)).iterator.map(r =>
-            (shard, r, term, minDoc, cnt, maxTf, minDl, d, t, l))
-        }
-        .toDF("shard", "rng", "term", "min_doc", "cnt", "max_tf", "min_dl", "docs", "tfs", "dls")
-        .repartition(math.max(manifest.numShards * ranges.perShard, spark.sparkContext.defaultParallelism),
-          $"shard", $"rng")
-        .sortWithinPartitions($"term")
+  private def shardStores: RDD[ShardStore] = synchronized {
+    if (stores == null)
+      stores = postingsTable
+        .select($"shard", $"term", $"min_doc", $"cnt", $"max_tf", $"min_dl", $"docs", $"tfs", $"dls")
+        .as[(Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
+        .rdd
+        .map { case (shard, term, minDoc, cnt, maxTf, minDl, d, t, l) => (shard, (term, minDoc, cnt, maxTf, minDl, d, t, l)) }
+        .partitionBy(new HashPartitioner(manifest.numShards))
+        .mapPartitions(blocks => Iterator(ShardStore(blocks.map(_._2))))
+    if (stores.getStorageLevel == StorageLevel.NONE) {
+      stores.persist(StorageLevel.MEMORY_AND_DISK)
+      stores.count(): Unit
     }
-    if (held.storageLevel == StorageLevel.NONE) {
-      held.persist()
-      // materialized by a write to the noop sink: one job fewer than
-      // count(), which aggregates over the cache once it is filled
-      held.write.format("noop").mode("overwrite").save()
-    }
-    held
+    stores
   }
 
-  /** Drops the held WAND blocks from the cache; a later WAND search on this
-    * instance builds them again.
+  /** Drops the held shard stores from the cache; a later WAND search on
+    * this instance builds them again.
     */
   def release(): Unit = synchronized {
-    if (held != null) held.unpersist(blocking = false): Unit
+    if (stores != null) stores.unpersist(blocking = false): Unit
   }
 
-  /** Block-max WAND, document-at-a-time: per fan-out group, the query
-    * terms' posting blocks form doc-sorted cursors that are merged
-    * doc-at-a-time with a k-sized heap. Before a cursor decodes its next
-    * block, the block's `Bm25Query.blockBound` plus the other terms'
-    * group-wide bounds, padded for f32 rounding, is compared to the current
-    * k-th score: strictly-below blocks are skipped without decoding. Each
+  /** Block-max WAND, document-at-a-time, one task per shard store: each
+    * query term's blocks, found by a binary search of the store's terms,
+    * form one doc-sorted cursor, and the cursors are merged doc-at-a-time
+    * with a k-sized heap. Before a cursor decodes its next block, the
+    * block's `Bm25Query.blockBound` plus the other terms' shard-wide
+    * bounds, padded for f32 rounding, is compared to the current k-th
+    * score: strictly-below blocks are skipped without decoding. Each
     * candidate's weights go into an array indexed by query slot and are
     * folded by `Bm25Query.score`. Memory is O(k + blockSize·|terms|)
     * regardless of posting length; the pruning is conservative, so results
     * are rank- and bit-identical to the exhaustive scorer (asserted in
-    * Bm25IndexSpec). The input is `heldBlocks` filtered to the query's
-    * terms: each partition holds whole fan-out groups, so the kernel runs
-    * where the blocks are cached.
+    * Bm25IndexSpec).
     *
     * `q` is compiled by the caller (the engine passes live df/N),
     * `exclude` is a sorted array of doc ids passed over unscored (the
@@ -278,12 +267,9 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   private[graft] def wandTopK(q: Bm25Query, k: Int, exclude: Array[Long],
                               skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
     val emb = embedder
+    val blockSize = manifest.blockSize
     val queryB = spark.sparkContext.broadcast((q, exclude))
-    val ranges = fanoutRanges
-    val blocks = heldBlocks
-      .where($"term".isin(q.terms: _*))
-      .as[(Int, Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-    blocks.mapPartitions { it =>
+    spark.createDataset(shardStores.mapPartitions(_.flatMap { store =>
       val (query, excluded) = queryB.value
       // Conservative padding for the f32 accumulation of ≤|slots| additions:
       // fold result ≤ realSum·(1+2^-24)^(|slots|-1); 1e-6·|slots| dominates that.
@@ -294,118 +280,86 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
           else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
 
-      // (shard, rng) → slot → blocks
-      val byGroup = new java.util.HashMap[Long, Array[java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]]]()
-      val groupRange = new java.util.HashMap[Long, (Long, Long)]()
-      it.foreach { case (shard, rng, term, minDoc, cnt, maxTf, minDl, d, t, l) =>
-        val key = (shard.toLong << 32) | (rng.toLong & 0xFFFFFFFFL)
-        groupRange.computeIfAbsent(key, _ => ranges.range(shard, rng))
-        val bySlot = byGroup.computeIfAbsent(key, _ => new Array(query.size))
-        val s = query.slotOf(term)
-        if (bySlot(s) == null) bySlot(s) = new java.util.ArrayList()
-        bySlot(s).add((minDoc, cnt, maxTf, minDl, d, t, l))
-      }
-
-      /** Doc-sorted cursor over one slot's block list with block-max skip,
-        * restricted to the group's inclusive doc range.
+      /** Doc-sorted cursor over the store's blocks `from until until` of
+        * one slot's term, with block-max skip.
         */
-      final class Cursor(val slot: Int, rLo: Long, rHi: Long,
-                         blocksIn: java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]) {
-        // blocks of one (shard, term) have disjoint doc ranges; min_doc
-        // orders them even when slices were built by different tasks
-        blocksIn.sort((a, b) => java.lang.Long.compare(a._1, b._1))
-        private val bounds: Array[Double] = Array.tabulate(blocksIn.size) { i =>
-          val (_, _, maxTf, minDl, _, _, _) = blocksIn.get(i)
-          query.blockBound(slot, emb.weight(maxTf, minDl))
+      final class Cursor(val slot: Int, from: Int, until: Int) {
+        private val bounds: Array[Double] = Array.tabulate(until - from) { i =>
+          query.blockBound(slot, emb.weight(store.maxTf(from + i), store.minDl(from + i)))
         }
-        // group-wide bound for this slot (residual for others' skips)
+        // shard-wide bound for this slot (residual for others' skips)
         val termBound: Double = bounds.foldLeft(0.0)(math.max)
-        private var bi = 0
+        private var bi = from
         private var pos = 0
-        private var docs: Array[Long] = null
-        private var tfs: Array[Int] = null
-        private var dls: Array[Int] = null
         private var n = 0
+        private val docs = new Array[Long](blockSize)
+        private val tfs = new Array[Int](blockSize)
+        private val dls = new Array[Int](blockSize)
         var residual: Double = 0.0 // set once all cursors exist
 
         /** Advance to the next undecoded block, skipping blocks whose docs
           * provably cannot reach the threshold (strict <).
           */
         def loadNext(threshold: Double): Unit = {
-          docs = null
-          while (bi < blocksIn.size && docs == null) {
-            if (threshold != Double.NegativeInfinity && (bounds(bi) + residual) * pad < threshold) {
-              bi += 1 // skip whole block without decoding
-              skipAcc.foreach(_.add(1L))
-            }
+          n = 0
+          while (bi < until && n == 0) {
+            if (threshold != Double.NegativeInfinity && (bounds(bi - from) + residual) * pad < threshold)
+              skipAcc.foreach(_.add(1L)) // skip whole block without decoding
             else {
-              val (_, cnt, _, _, d, t, l) = blocksIn.get(bi)
-              docs = PostingCodec.decodeDeltas(d, cnt)
-              tfs = PostingCodec.decodeInts(t, cnt)
-              dls = PostingCodec.decodeInts(l, cnt)
-              // trim to the group's doc range (docs are sorted)
-              var s = 0
-              while (s < cnt && docs(s) < rLo) s += 1
-              var e = cnt
-              while (e > s && docs(e - 1) > rHi) e -= 1
-              if (e <= s) { docs = null; bi += 1 } // block entirely outside
-              else { n = e; pos = s; bi += 1 }
+              n = store.cnt(bi)
+              pos = 0
+              PostingCodec.decodeBlock(store.bytes, store.byteAt(bi), n, docs, tfs, dls)
             }
+            bi += 1
           }
         }
         def currentDoc: Long = docs(pos)
-        def hasCurrent: Boolean = docs != null && pos < n
+        def hasCurrent: Boolean = pos < n
         def currentWeight: Float = emb.weight(tfs(pos), dls(pos))
         def advance(threshold: Double): Unit = {
           pos += 1
-          if (pos >= n) { docs = null; loadNext(threshold) }
+          if (pos >= n) loadNext(threshold)
         }
       }
 
+      val cursors = query.terms.indices.flatMap { s =>
+        val i = java.util.Arrays.binarySearch(store.terms, query.terms(s))
+        if (i < 0) None else Some(new Cursor(s, store.blockAt(i), store.blockAt(i + 1)))
+      }
+      val total = cursors.map(_.termBound).sum
+      cursors.foreach(c => c.residual = total - c.termBound)
+      def threshold: Double =
+        if (heap.size < k) Double.NegativeInfinity else heap.peek().score.toDouble
+      cursors.foreach(_.loadNext(threshold))
       val weights = new Array[Float](query.size)
-      val groups = byGroup.entrySet().iterator()
-      while (groups.hasNext) {
-        val entry = groups.next()
-        val (rLo, rHi) = groupRange.get(entry.getKey)
-        val cursors = entry.getValue.zipWithIndex.collect {
-          case (bs, s) if bs != null => new Cursor(s, rLo, rHi, bs)
-        }
-        val total = cursors.map(_.termBound).sum
-        cursors.foreach(c => c.residual = total - c.termBound)
-        def threshold: Double =
-          if (heap.size < k) Double.NegativeInfinity else heap.peek().score.toDouble
-        cursors.foreach(_.loadNext(threshold))
-        // doc-at-a-time merge
-        var done = false
-        while (!done) {
-          var minDoc = Long.MaxValue
-          cursors.foreach { c => if (c.hasCurrent && c.currentDoc < minDoc) minDoc = c.currentDoc }
-          if (minDoc == Long.MaxValue) done = true
-          else {
-            // a superseded doc is advanced past without scoring
-            val scored = java.util.Arrays.binarySearch(excluded, minDoc) < 0
-            if (scored) java.util.Arrays.fill(weights, 0.0f)
-            val thr = threshold
-            cursors.foreach { c =>
-              if (c.hasCurrent && c.currentDoc == minDoc) {
-                if (scored) weights(c.slot) = c.currentWeight
-                c.advance(thr)
-              }
-            }
-            if (scored) {
-              heap.add(ScoredDoc(minDoc, query.score(weights)))
-              if (heap.size > k) heap.poll(): Unit
+      // doc-at-a-time merge
+      var done = false
+      while (!done) {
+        var minDoc = Long.MaxValue
+        cursors.foreach { c => if (c.hasCurrent && c.currentDoc < minDoc) minDoc = c.currentDoc }
+        if (minDoc == Long.MaxValue) done = true
+        else {
+          // a superseded doc is advanced past without scoring
+          val scored = java.util.Arrays.binarySearch(excluded, minDoc) < 0
+          if (scored) java.util.Arrays.fill(weights, 0.0f)
+          val thr = threshold
+          cursors.foreach { c =>
+            if (c.hasCurrent && c.currentDoc == minDoc) {
+              if (scored) weights(c.slot) = c.currentWeight
+              c.advance(thr)
             }
           }
+          if (scored) {
+            heap.add(ScoredDoc(minDoc, query.score(weights)))
+            if (heap.size > k) heap.poll(): Unit
+          }
         }
-        // heap carries over across groups within the partition (tighter
-        // threshold); emitted once at the end
       }
       val arr = new Array[ScoredDoc](heap.size)
       var i = arr.length - 1
       while (heap.size > 0) { arr(i) = heap.poll(); i -= 1 }
       arr.iterator
-    }
+    }))
   }
 
   /** Point score of one document vs a query (the reference's
@@ -432,14 +386,16 @@ object Bm25Index {
 
   /** The top-k tail of every search, the index's and the engine's: ordered
     * by (score desc, doc_id asc), the first `limit` rows (each partition's
-    * top `limit`, merged on the driver), or all of them, sorted in one
-    * partition (a global sort would sample its input first, running the
-    * scorer twice).
+    * top `limit`, merged on the driver), or all of them, collected and
+    * sorted on the driver (no exchange; a global sort would sample its
+    * input first, running the scorer twice).
     */
-  private[graft] def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] = {
-    val order = Seq(col("score").desc, col("doc_id").asc)
-    limit.fold(scored.repartition(1).sortWithinPartitions(order: _*))(scored.orderBy(order: _*).limit)
-  }
+  private[graft] def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] =
+    limit.fold {
+      val all = scored.collect().sortWith((a, b) =>
+        if (a.score != b.score) a.score > b.score else a.doc_id < b.doc_id)
+      scored.sparkSession.createDataset(all.toSeq)(Encoders.product[ScoredDoc])
+    }(scored.orderBy(col("score").desc, col("doc_id").asc).limit)
 
   def searchWithContents(index: Bm25Index, docs: DataFrame, idCol: String, contentCol: String,
                          query: String, limit: Option[Int] = None,

@@ -34,12 +34,9 @@ object PostingCodec {
     out.toByteArray
   }
 
-  def decodeDeltas(bytes: Array[Byte], n: Int): Array[Long] = {
-    val out = new Array[Long](n)
-    var acc = 0L
-    var pos = 0
-    var i = 0
-    while (i < n) {
+  /** Reads consecutive varbyte values from `bytes`, from `pos` on. */
+  private final class Reader(bytes: Array[Byte], private var pos: Int) {
+    def next(): Long = {
       var shift = 0
       var v = 0L
       var b = 0
@@ -49,10 +46,22 @@ object PostingCodec {
         shift += 7
         pos += 1
       } while ((b & 0x80) != 0)
-      acc = if (i == 0) v else acc + v
-      out(i) = acc
-      i += 1
+      v
     }
+    def deltas(n: Int, out: Array[Long]): Unit = {
+      var acc = 0L
+      var i = 0
+      while (i < n) { acc += next(); out(i) = acc; i += 1 }
+    }
+    def ints(n: Int, out: Array[Int]): Unit = {
+      var i = 0
+      while (i < n) { out(i) = next().toInt; i += 1 }
+    }
+  }
+
+  def decodeDeltas(bytes: Array[Byte], n: Int): Array[Long] = {
+    val out = new Array[Long](n)
+    new Reader(bytes, 0).deltas(n, out)
     out
   }
 
@@ -65,21 +74,19 @@ object PostingCodec {
 
   def decodeInts(bytes: Array[Byte], n: Int): Array[Int] = {
     val out = new Array[Int](n)
-    var pos = 0
-    var i = 0
-    while (i < n) {
-      var shift = 0
-      var v = 0L
-      var b = 0
-      do {
-        b = bytes(pos) & 0xff
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        pos += 1
-      } while ((b & 0x80) != 0)
-      out(i) = v.toInt
-      i += 1
-    }
+    new Reader(bytes, 0).ints(n, out)
     out
+  }
+
+  /** Decodes one block of `n` postings whose doc-delta, tf and dl streams
+    * lie back to back in `bytes` from `from` into the first `n` slots of
+    * `docs`, `tfs` and `dls`.
+    */
+  def decodeBlock(bytes: Array[Byte], from: Int, n: Int,
+                  docs: Array[Long], tfs: Array[Int], dls: Array[Int]): Unit = {
+    val r = new Reader(bytes, from)
+    r.deltas(n, docs)
+    r.ints(n, tfs)
+    r.ints(n, dls)
   }
 }

@@ -62,9 +62,9 @@ object ScalingBench {
       val idx = new Bm25Index(spark, indexDir)
       val queries = Seq("fn return match struct", "def class import lambda",
         "func range defer chan", "val object trait extends", "vab vac vad")
-      // the first WAND query also collects the term dictionary and routes
-      // and caches the index's WAND blocks: reported as warm_ms, with the
-      // cached blocks' size, apart from the steady-state percentiles
+      // the first WAND query also collects the term dictionary and builds
+      // and caches the index's shard stores: reported as warm_ms, with the
+      // stores' cached size, apart from the steady-state percentiles
       val tw = System.nanoTime()
       idx.search(queries.head, Some(20), "wand").count()
       val warmMs = (System.nanoTime() - tw) / 1e6

@@ -123,4 +123,20 @@ class QueriesDedupSpec extends SparkTestBase {
     // 15 jobs at sf0.001; 26 while each call planned the verify again
     assert(jobs.size <= 15, s"${jobs.size} jobs: ${jobs.map(_.map(_._1))}")
   }
+
+  test("a warm dedup_jaccard_block reads the held hot-block count: no probe job") {
+    import org.apache.spark.graft.JobRecorder
+    NearDup.clear(spark)
+    def run() = JobRecorder.withCallSites(spark.sparkContext)(Queries.all("dedup_jaccard_block")(spark, sf).collect())
+    // the probe is the one action jaccardBlockCandidates itself launches
+    def probes(jobs: Seq[Seq[(String, String)]]) = jobs.count(_.exists(_._2.contains("jaccardBlockCandidates")))
+    val (cold, coldJobs) = run()
+    assert(probes(coldJobs) > 0, s"no probe job found on the cold call: ${coldJobs.map(_.map(_._1))}")
+    val (warm, warmJobs) = run()
+    assert(warm.toSeq === cold.toSeq)
+    assert(probes(warmJobs) === 0, s"hot-block probe ran on the warm call: ${warmJobs.map(_.map(_._1))}")
+    // at sf0.001: 15 cold jobs, 5 of them the probe and the projection's
+    // materialization under it
+    assert(warmJobs.length === 10, s"${warmJobs.length} warm jobs: ${warmJobs.map(_.map(_._1))}")
+  }
 }

@@ -460,10 +460,10 @@ class SearchEngineSpec extends SparkTestBase {
 
   test("a clean limited search runs at most 2 Spark jobs and infers no parquet schema; get runs 1") {
     import org.apache.spark.graft.JobRecorder
-    enEngine.search("chicken soup", Some(10)) // warm-up: holds the index tables and WAND blocks
+    enEngine.search("chicken soup", Some(10)) // warm-up: holds the index tables and shard stores
     val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", Some(10)))
     assert(hits.nonEmpty)
-    // base WAND 1 (over the held blocks) · contents 1 (the df lookup reads
+    // base WAND 1 (over the held stores) · contents 1 (the df lookup reads
     // the held term dictionary)
     assert(jobs.length <= 2, s"${jobs.length} jobs: $jobs")
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
@@ -497,6 +497,16 @@ class SearchEngineSpec extends SparkTestBase {
     assert(got.length > 1024)
     assertSameResults(got, fresh.search("common word4", None), "unlimited")
     assertSameResults(eng.search("common word4", Some(5)), fresh.search("common word4", Some(5)), "top 5")
+  }
+
+  test("a clean unlimited search runs 2 Spark jobs, like a limited one, and ranks like it") {
+    import org.apache.spark.graft.JobRecorder
+    enEngine.search("chicken soup", None) // warm-up: holds the index tables and shard stores
+    val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", None))
+    assert(hits.length > 1)
+    // base WAND 1 · contents 1: the hits are ranked on the driver, no exchange
+    assert(jobs.length === 2, s"${jobs.length} jobs: $jobs")
+    assertSameResults(hits, enEngine.search("garlic vegetable", Some(hits.length)), "unlimited vs limited")
   }
 
   test("the held base index follows compact() and buildBase() on the same instance") {
@@ -609,7 +619,7 @@ class SearchEngineSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("deltajobs"), enRecipes)
     eng.upsert(Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"), enRecipes(3).copy(contents = "garlic bread")))
     eng.remove(enRecipes(5).id)
-    eng.search("chicken soup", Some(10)) // warm-up: holds the index tables and WAND blocks
+    eng.search("chicken soup", Some(10)) // warm-up: holds the index tables and shard stores
     val (hits, jobs) = JobRecorder(spark.sparkContext)(eng.search("garlic vegetable", Some(10)))
     assert(hits.exists(_.id == "Garlic Soup"))
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
@@ -627,7 +637,7 @@ class SearchEngineSpec extends SparkTestBase {
       eng.compact()
       assert(eng.search("garlic soup", Some(10)).exists(_.id == s"Garlic Soup $i"))
     }
-    // each compact() releases the blocks of the base it replaced
+    // each compact() releases the stores of the base it replaced
     val held = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(held.size === 1, s"persisted RDDs left by the engine: $held")
   }

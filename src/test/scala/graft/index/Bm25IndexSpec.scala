@@ -22,15 +22,17 @@ class Bm25IndexSpec extends SparkTestBase {
 
   lazy val index = new Bm25Index(spark, indexDir)
 
-  /** An instance whose fan-out groups are fixed, by its first search, under
-    * a default parallelism of 8: 8 × 2 / 4 shards = 4 ranges per shard.
+  /** The same corpus indexed with 8-posting blocks, so a (shard, term)
+    * holds several blocks and WAND skips or decodes each on its own.
     */
-  private def fannedIndex(): Bm25Index =
-    org.apache.spark.graft.LocalParallelism(spark.sparkContext, 8) {
-      val idx = new Bm25Index(spark, indexDir)
-      idx.search("merge join sort", Some(5), mode = "wand").collect()
-      idx
-    }
+  lazy val multiBlockDir: String = {
+    val dir = tmpDir("idx_sf0001_b8")
+    val docs = spark.read.parquet(index.manifest.lineage("input"))
+      .selectExpr("doc_id", "text as content").as[CorpusDoc]
+    IndexBuilder.build(spark, docs, Bm25Tokenizer.default, dir,
+      IndexBuildConfig(numShards = 4, shardGroups = 2, blockSize = 8))
+    dir
+  }
 
   test("index builds with sane stats") {
     val m = index.manifest
@@ -70,22 +72,28 @@ class Bm25IndexSpec extends SparkTestBase {
     }
   }
 
-  test("WAND fan-out exceeds numShards and stays rank/bit-identical (range split)") {
-    // 4 sub-ranges per shard on a 4-shard index → 16 groups > 4 shards:
-    // query parallelism is no longer capped by the shard count.
-    val fanned = fannedIndex()
-    assert(fanned.fanoutRanges.perShard === 4)
-    assert(fanned.manifest.numShards * fanned.fanoutRanges.perShard >
-      fanned.manifest.numShards)
-    for (q <- Seq("merge join sort", "the fast key", "keys key"); k <- Seq(5, 20)) {
-      val ex = index.search(q, Some(k), mode = "exhaustive").collect()
-      val wd = fanned.search(q, Some(k), mode = "wand").collect()
-      assert(wd.map(_.doc_id).toSeq === ex.map(_.doc_id).toSeq, s"q='$q' k=$k ids")
-      wd.zip(ex).foreach { case (w, e) =>
-        assert(java.lang.Float.floatToRawIntBits(w.score) ===
-          java.lang.Float.floatToRawIntBits(e.score), s"q='$q' k=$k doc ${w.doc_id}")
-      }
+  test("multi-block WAND ≡ exhaustive: limited, unlimited, repeated tokens, after release(), clearCache() and parallelism growth") {
+    import org.apache.spark.graft.{JobRecorder, LocalParallelism}
+    val idx = new Bm25Index(spark, multiBlockDir)
+    val queries = Seq("merge join sort", "the fast key", "merge merge join sort sort sort", "keys key",
+      "spark window batch stream")
+    val terms = queries.flatMap(idx.queryTerms).distinct
+    val blocksPerList = IndexTables.postings(spark, multiBlockDir)
+      .where($"term".isin(terms: _*)).groupBy($"shard", $"term").count()
+      .as[(Int, Long, Long)].collect().map(_._3)
+    assert(blocksPerList.count(_ > 1) > blocksPerList.length / 2,
+      s"most query-term lists should span several blocks: ${blocksPerList.sorted.toSeq}")
+    assertWandExact(idx, "8-posting blocks", queries)
+    val (_, jobs) = JobRecorder(spark.sparkContext)(idx.search("spark window batch", Some(10), "wand").collect())
+    assert(jobs.length === 1, s"warm WAND search jobs: $jobs")
+    idx.release()
+    assertWandExact(idx, "8-posting blocks, after release()", queries)
+    spark.catalog.clearCache()
+    assertWandExact(idx, "8-posting blocks, after clearCache()", queries)
+    LocalParallelism(spark.sparkContext, spark.sparkContext.defaultParallelism * 4) {
+      assertWandExact(idx, "8-posting blocks, default parallelism grown", queries)
     }
+    idx.release()
   }
 
   test("scoreDoc matches the search score for a hit, None for absent doc") {
@@ -203,51 +211,71 @@ class Bm25IndexSpec extends SparkTestBase {
     assert(hits.nonEmpty)
   }
 
-  /** WAND top-k of `idx` equals the exhaustive scorer's, ids and f32 bits,
-    * limited and unlimited.
+  /** WAND top-k of `idx` equals its exhaustive scorer's (which reads the
+    * postings parquet, not the held stores), ids and f32 bits, limited and
+    * unlimited.
     */
-  private def assertWandExact(idx: Bm25Index, what: String): Unit =
-    for (q <- Seq("merge join sort", "keys key", "spark window batch stream"); k <- Seq(Some(5), Some(20), None)) {
-      val ex = index.search(q, k, mode = "exhaustive").collect()
+  private def assertWandExact(idx: Bm25Index, what: String,
+                              queries: Seq[String] = Seq("merge join sort", "keys key", "spark window batch stream")): Unit =
+    for (q <- queries; k <- Seq(Some(5), Some(20), None)) {
+      val ex = idx.search(q, k, mode = "exhaustive").collect()
       val wd = idx.search(q, k, mode = "wand").collect()
       assert(wd.map(_.doc_id).toSeq === ex.map(_.doc_id).toSeq, s"$what: q='$q' k=$k ids")
       assert(wd.map(w => java.lang.Float.floatToRawIntBits(w.score)).toSeq ===
         ex.map(e => java.lang.Float.floatToRawIntBits(e.score)).toSeq, s"$what: q='$q' k=$k scores")
     }
 
-  test("WAND stays bit-exact against exhaustive after release() and after clearCache(), fan-out too") {
+  test("WAND stays bit-exact against exhaustive after release() and after clearCache(), one job when held") {
     import org.apache.spark.graft.JobRecorder
-    for (idx <- Seq(new Bm25Index(spark, indexDir), fannedIndex())) {
-      val what = s"${idx.fanoutRanges.perShard} ranges per shard"
-      // a search over held blocks reads them: one job
-      def assertOneJob(when: String): Unit = {
-        val (hits, jobs) = JobRecorder(spark.sparkContext)(idx.search("spark window batch", Some(10), "wand").collect())
-        assert(jobs.length === 1, s"$what: search $when jobs: $jobs")
-        assert(hits.nonEmpty)
-      }
-      assertWandExact(idx, s"$what, first")
-      assertOneJob("after the first")
-      idx.release()
-      assertWandExact(idx, s"$what, after release()")
-      spark.catalog.clearCache()
-      assertWandExact(idx, s"$what, after clearCache()")
-      assertOneJob("after re-registration")
-      idx.release()
+    val idx = new Bm25Index(spark, indexDir)
+    // a search over the held stores reads them: one job
+    def assertOneJob(when: String): Unit = {
+      val (hits, jobs) = JobRecorder(spark.sparkContext)(idx.search("spark window batch", Some(10), "wand").collect())
+      assert(jobs.length === 1, s"search $when jobs: $jobs")
+      assert(hits.nonEmpty)
     }
+    assertWandExact(idx, "first")
+    assertOneJob("after the first")
+    idx.release()
+    assertWandExact(idx, "after release()")
+    spark.catalog.clearCache()
+    assertWandExact(idx, "after clearCache()")
+    assertOneJob("after clearCache()")
+    idx.release()
   }
 
   test("WAND stays bit-exact when the default parallelism grows after the blocks are held") {
     import org.apache.spark.graft.LocalParallelism
-    // the auto fan-out count derives from the default parallelism, which on
-    // a cluster grows as executors register: the kernel must trim each
-    // group to the ranges its held blocks were routed with
+    // on a cluster the default parallelism grows as executors register; the
+    // held stores are one per shard whatever it reads
     val idx = new Bm25Index(spark, indexDir)
-    val perShard = idx.fanoutRanges.perShard
-    assertWandExact(idx, s"$perShard ranges per shard")
+    assertWandExact(idx, "held")
     LocalParallelism(spark.sparkContext, spark.sparkContext.defaultParallelism * 4) {
-      assertWandExact(idx, s"$perShard ranges per shard, default parallelism grown")
-      assert(idx.fanoutRanges.perShard === perShard)
+      assertWandExact(idx, "default parallelism grown")
     }
+    idx.release()
+  }
+
+  test("the first WAND search holds one store per shard, each block stored once") {
+    import org.apache.spark.graft.JobRecorder
+    val idx = new Bm25Index(spark, indexDir)
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val (_, jobs) = JobRecorder(spark.sparkContext)(idx.search("merge join sort", Some(5), "wand").collect())
+    // the term dictionary collect, the store build, the WAND search
+    assert(jobs.length === 3, s"first WAND search jobs: $jobs")
+    val held = spark.sparkContext.getRDDStorageInfo.filterNot(r => before(r.id))
+    assert(held.length === 1, s"cached RDDs: ${held.toSeq}")
+    assert(held.head.numPartitions === idx.manifest.numShards)
+    assert(held.head.numCachedPartitions === idx.manifest.numShards)
+    // a block's streams once, 16 B of block metadata, 12 B per (shard, term)
+    // list, and a few array headers per store: a store holding any block
+    // twice exceeds this
+    val (blocks, lists, streams) = IndexTables.postings(spark, indexDir)
+      .selectExpr("count(*)", "count(distinct shard, term)", "sum(length(docs) + length(tfs) + length(dls))")
+      .as[(Long, Long, Long)].head()
+    val bound = streams + 16 * blocks + 12 * lists + 4096L * idx.manifest.numShards
+    assert(held.head.memSize + held.head.diskSize <= bound,
+      s"held ${held.head.memSize} B in memory, ${held.head.diskSize} B on disk; bound $bound B")
     idx.release()
   }
 

@@ -55,27 +55,29 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!plan.contains("termstats"), s"termstats in the scoring plan:\n$plan")
   }
 
-  test("a warm WAND plan reads the held blocks with the term filter: no exchange, no postings scan") {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  test("a warm WAND plan is one scan of the held shard stores: no exchange, no postings scan") {
+    import org.apache.spark.graft.JobRecorder
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.storage.StorageLevel
     object Nodes extends AdaptiveSparkPlanHelper {
       def of(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
     }
-    index.search("merge join sort", Some(10), "wand").collect() // holds the blocks
-    val plan = index.search("merge join", Some(10), "wand").queryExecution.executedPlan
+    index.search("merge join sort", Some(10), "wand").collect() // holds the stores
+    val search = index.search("merge join", Some(10), "wand")
+    val plan = search.queryExecution.executedPlan
     val nodes = Nodes.of(plan)
-    val scans = nodes.collect { case s: InMemoryTableScanExec => s }
-    assert(scans.length === 1, s"expected one scan of the held blocks:\n$plan")
-    assert(scans.head.predicates.exists {
-      case In(a: Attribute, _) => a.name == "term"
-      case InSet(a: Attribute, _) => a.name == "term"
-      case _ => false
-    }, s"no term filter on the held blocks:\n$plan")
+    val scans = nodes.collect { case s: ExternalRDDScanExec[_] => s }
+    assert(scans.length === 1, s"expected one scan of the held stores:\n$plan")
+    // the scanned RDD is the WAND kernel over the persisted stores
+    assert(scans.head.rdd.dependencies.map(_.rdd.getStorageLevel) === Seq(StorageLevel.MEMORY_AND_DISK),
+      s"the scan does not read the held stores:\n$plan")
     assert(!nodes.exists(_.isInstanceOf[Exchange]), s"warm WAND plan shuffles:\n$plan")
     assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]), s"warm WAND plan reads parquet:\n$plan")
+    val (hits, jobs) = JobRecorder(spark.sparkContext)(search.collect())
+    assert(hits.nonEmpty)
+    assert(jobs.length === 1, s"warm WAND search jobs: $jobs")
   }
 
   test("top-k search plans as TakeOrderedAndProject (no global sort)") {
