@@ -3,8 +3,13 @@ package graft.api
 import graft.bm25.{Bm25Params, Bm25Query, Embedder, TokenHasher}
 import graft.index._
 import graft.text.{Bm25Tokenizer, FxHash, Language, TextTokenizer}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** A document (reference `Document<K>`, `/root/reference/src/search.rs:17-38`).
   * Keys are strings; the engine derives a stable Long surrogate (FxHash64,
@@ -23,9 +28,64 @@ private[api] final case class LogRow(doc_id: Long, key: String, contents: String
   */
 private[api] final case class ChangedDoc(doc_id: Long, tombstone: Boolean, dl: Int, tfs: Array[Int])
 
-/** The live view one query sees (see `SearchEngine.liveView`). */
-private final case class LiveView(base: Option[Bm25Index], emb: Embedder, superseded: Array[Long],
+/** The live view one query sees (see `SearchEngine.liveView`); `marker` is
+  * the base's `base_seq`.
+  */
+private final case class LiveView(marker: Long, base: Option[Bm25Index], emb: Embedder, superseded: Array[Long],
                                   live: Array[ChangedDoc], dfs: Map[Long, Long], nLive: Long)
+
+/** One base shard's documents, held beside its WAND store: the shard's doc
+  * ids, sorted; doc i's key and contents lie back to back in `text` as
+  * UTF-8, the key from `at(2i)`, the contents from `at(2i + 1)` until
+  * `at(2i + 2)`.
+  */
+private[api] final class ShardDocs(ids: Array[Long], at: Array[Int], text: Array[Byte]) extends Serializable {
+
+  /** (key, contents) of doc `id`, if the shard holds it. */
+  def get(id: Long): Option[(String, String)] = {
+    val i = java.util.Arrays.binarySearch(ids, id)
+    if (i < 0) None else Some((utf8(2 * i), utf8(2 * i + 1)))
+  }
+
+  private def utf8(j: Int): String = new String(text, at(j), at(j + 1) - at(j), UTF_8)
+}
+
+private[api] object ShardDocs {
+
+  /** The docs of one shard from its log rows (doc_id, seq, tombstone, key,
+    * contents): each doc's newest row, kept when it is not a tombstone (the
+    * rule `latestLive` applies). The text is copied once, into an array of
+    * its exact total size; a shard whose text passes 2 GiB is refused
+    * (`addExact` throws), so such an engine needs more shards.
+    */
+  def apply(rows: Iterator[(Long, Long, Boolean, String, String)]): ShardDocs = {
+    val newest = scala.collection.mutable.LongMap.empty[(Long, Boolean, String, String)]
+    rows.foreach { case (id, seq, tombstone, key, contents) =>
+      if (newest.get(id).forall(_._1 < seq)) newest(id) = (seq, tombstone, key, contents)
+    }
+    val live = newest.toArray.filterNot(_._2._2).sortBy(_._1)
+    val fields = live.flatMap { case (_, (_, _, key, contents)) => Array(key.getBytes(UTF_8), contents.getBytes(UTF_8)) }
+    val at = new Array[Int](fields.length + 1)
+    for (j <- fields.indices) at(j + 1) = Math.addExact(at(j), fields(j).length)
+    val text = new Array[Byte](at(fields.length))
+    val out = java.nio.ByteBuffer.wrap(text)
+    fields.foreach(out.put)
+    new ShardDocs(live.map(_._1), at, text)
+  }
+
+  /** The base's docs, one `ShardDocs` per shard, from the log rows up to
+    * the base's `base_seq` (the rows it was built from): keyed by
+    * `manifest.shardOf(doc_id)` and partitioned like the index's shard
+    * stores, by `HashPartitioner(numShards)`, so partition i holds shard i.
+    */
+  def of(rows: Dataset[(Long, Long, Boolean, String, String)], manifest: IndexManifest): RDD[ShardDocs] = {
+    val bounds = manifest.shardBounds
+    rows.rdd
+      .map(r => (IndexManifest.shardOf(bounds, r._1), r))
+      .partitionBy(new HashPartitioner(manifest.numShards))
+      .mapPartitions(rows => Iterator(ShardDocs(rows.map(_._2))))
+  }
+}
 
 /** What identifies one base index generation on disk (see `baseIndex`). */
 private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
@@ -56,16 +116,18 @@ private final case class BaseGeneration(marker: Long, manifestKey: AnyRef,
   *     forward-table probe of the changed ids) → one `Bm25Query` compiled
   *     against them → block-max WAND over the base with the superseded
   *     docs excluded (unbounded k, so nothing pruned, for an unlimited
-  *     search) + the live changed docs scored on the driver with the same
-  *     `Bm25Query.score` → the index's `Bm25Index.topK` tail over both →
-  *     contents lookup (`search.rs:118-132`): the ≤ k hits' contents come
-  *     from one pruned docstore scan, resolved latest-seq-wins on the
-  *     driver. A clean search is 2 Spark jobs, limited or not (base WAND
-  *     1, over the held base's shard stores; contents 1); with deltas
-  *     pending it is 5 (churn pass 2, forward probe 1, base WAND 1,
-  *     contents 1). The first search on each base adds 2 jobs: one
-  *     collects its term dictionary, one builds and caches its shard
-  *     stores.
+  *     search), each shard's hits returned with their contents from the
+  *     base's docs held beside the shard's store (`search.rs:118-132`) +
+  *     the live changed docs scored on the driver with the same
+  *     `Bm25Query.score` → both merged on the driver in
+  *     `Bm25Index.RankOrder` → the contents of the changed docs that made
+  *     the cut from one pruned docstore scan, resolved latest-seq-wins on
+  *     the driver. A clean search is 1 Spark job, limited or not (base
+  *     WAND and contents, over the held base's shard stores and docs);
+  *     with deltas pending it is 4 (churn pass 2, forward probe 1, base
+  *     WAND 1), or 5 when a changed doc ranks (contents 1). The first
+  *     search on each base adds 1 job, which collects its term dictionary;
+  *     its WAND job builds and holds the shard stores and docs.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -264,9 +326,15 @@ final class SearchEngine private[api] (
     * `base_seq` marker plus the manifest's bytes and file identity: a base
     * swapped in by another engine instance on the same dir changes it, so
     * this instance never reads files that were swapped out. A dropped base
-    * (new generation, `buildBase()`, `compact()`) releases its blocks.
+    * (new generation, `buildBase()`, `compact()`) releases its stores and
+    * docs.
     */
   private var heldBase: Option[(BaseGeneration, Bm25Index)] = None
+
+  /** The held base's docs, one `ShardDocs` per shard beside its shard
+    * store (see `heldDocs`); null until its first search.
+    */
+  private var baseDocs: RDD[ShardDocs] = _
 
   /** The base index for the given `base_seq` marker (read once per
     * operation by the caller); None without a base.
@@ -289,12 +357,34 @@ final class SearchEngine private[api] (
     heldBase.map(_._2)
   }
 
-  /** Forgets the held base and releases its shard stores, so a session
-    * holds at most one base generation's stores per engine.
+  /** Forgets the held base and releases its shard stores and docs, so a
+    * session holds at most one base generation's stores per engine.
     */
   private def dropBase(): Unit = {
     heldBase.foreach(_._2.release())
     heldBase = None
+    if (baseDocs != null) baseDocs.unpersist(blocking = false): Unit
+    baseDocs = null
+  }
+
+  /** The base's docs (`ShardDocs.of` the log rows up to `marker`, the held
+    * base's `base_seq`), held for the base generation like its shard
+    * stores: persisted (MEMORY_AND_DISK) and filled by the first search's
+    * job, which builds them and the stores beside the WAND it runs. A base
+    * doc the WAND does not pass over has no row past the marker, so its
+    * newest row up to the marker is its newest row: the contents
+    * `resolveContents` would read. Built again by the next search if
+    * unpersisted. Named after the engine dir, so `getRDDStorageInfo` tells
+    * them apart.
+    */
+  private def heldDocs(idx: Bm25Index, marker: Long): RDD[ShardDocs] = {
+    if (baseDocs == null)
+      baseDocs = ShardDocs.of(readLog().where($"seq" <= marker)
+        .select($"doc_id", $"seq", $"tombstone", $"key", $"contents")
+        .as[(Long, Long, Boolean, String, String)], idx.manifest)
+        .setName(s"base docs of $dir")
+    if (baseDocs.getStorageLevel == StorageLevel.NONE) baseDocs.persist(StorageLevel.MEMORY_AND_DISK)
+    baseDocs
   }
 
   /** `base_seq` marker of the current base; -1 without a base. */
@@ -609,7 +699,7 @@ final class SearchEngine private[api] (
       val t = terms(j)
       t -> (dfBase.getOrElse(t, 0L) - dfSuperseded.getOrElse(t, 0L) + live.count(_.tfs(j) > 0))
     }.toMap
-    LiveView(base, emb, superseded, live, dfs, base.fold(0L)(_.nDocs) - inBase + live.length)
+    LiveView(marker, base, emb, superseded, live, dfs, base.fold(0L)(_.nDocs) - inBase + live.length)
   }
 
   /** Top-`limit` search, ordered by (score desc, doc_id surrogate asc);
@@ -617,47 +707,59 @@ final class SearchEngine private[api] (
     * unlimited mode.
     *
     * One route for every limit and engine state: `liveView` → the query
-    * compiled once against the live df and N → the base index's block-max
-    * WAND with the superseded docs excluded (an unbounded k for an
-    * unlimited search, so nothing is pruned) and the live changed docs
-    * scored on the driver with the same `Bm25Query.score` → their union
-    * through the index's `Bm25Index.topK` tail → contents. An engine
-    * without a base has an empty base side. Results are bit-identical to a
-    * fresh engine over the live docs (gated in SearchEngineSpec).
+    * compiled once against the live df and N → one Spark job over the
+    * base's shards: the index's block-max WAND (`Bm25Index.wandRuns`) with
+    * the superseded docs excluded (an unbounded k for an unlimited search,
+    * so nothing is pruned), each shard's hits zipped with their key and
+    * contents from the shard's held docs (`heldDocs`) and collected → the
+    * live changed docs scored on the driver with the same `Bm25Query.score`
+    * → the per-shard runs and the changed hits merged on the driver in
+    * `Bm25Index.RankOrder` and cut to `limit` → contents for the changed
+    * hits that made the cut (`resolveContents`). An engine without a base
+    * has an empty base side. Results are bit-identical to a fresh engine
+    * over the live docs (gated in SearchEngineSpec).
     */
   def search(query: String, limit: Option[Int] = None): Seq[SearchResult] = {
     require(query != null, "null query")
     val qOcc = tokenizer.tokenize(query).map(hasher.hash)
-    if (qOcc.isEmpty) return Seq.empty
+    // without a log there is no doc to return
+    if (qOcc.isEmpty || !logExists) return Seq.empty
     val terms = qOcc.distinct
     val v = liveView(terms)
     val q = Bm25Query(qOcc, v.dfs.getOrElse(_, 0L), v.nLive)
     if (q.isEmpty) return Seq.empty
-    val baseHits = v.base.fold(spark.emptyDataset[ScoredDoc])(
-      _.wandTopK(q, limit.getOrElse(Int.MaxValue), v.superseded, Some(wandSkippedBlocks)))
+    val k = limit.getOrElse(Int.MaxValue)
+    val baseHits = v.base.fold(Array.empty[(ScoredDoc, Option[(String, String)])]) { idx =>
+      val runs = idx.wandRuns(q, k, v.superseded, Some(wandSkippedBlocks))
+      val docs = heldDocs(idx, v.marker)
+      require(runs.getNumPartitions == docs.getNumPartitions,
+        s"${runs.getNumPartitions} WAND runs for ${docs.getNumPartitions} shards of held docs")
+      runs.zipPartitions(docs) { (hits, held) =>
+        val shard = held.next()
+        hits.map(h => (h, shard.get(h.doc_id)))
+      }.collect()
+    }
     // the live changed docs holding a query term; a doc lives on exactly one
-    // side (superseded base docs are excluded), so the union is exact
+    // side (superseded base docs are excluded), so the merge is exact
     val at = q.terms.map(terms.indexOf(_))
     val changedHits = v.live.filter(_.tfs.exists(_ > 0)).map { d =>
-      ScoredDoc(d.doc_id, q.score(at.map(j => if (d.tfs(j) > 0) v.emb.weight(d.tfs(j), d.dl) else 0.0f)))
+      ScoredDoc(d.doc_id, q.score(at.map(j => if (d.tfs(j) > 0) v.emb.weight(d.tfs(j), d.dl) else 0.0f))) -> None
     }
-    val hits = Bm25Index.topK(
-      if (changedHits.isEmpty) baseHits else baseHits.union(changedHits.toSeq.toDS()), limit).collect()
-    resolveContents(hits.map(h => (h.doc_id, h.score)).toSeq)
+    val hits = (baseHits ++ changedHits).sortBy(_._1)(Bm25Index.RankOrder).take(k)
+    val changed = resolveContents(hits.collect { case (h, None) => h.doc_id })
+    hits.toSeq.flatMap { case (h, held) =>
+      held.orElse(changed.get(h.doc_id)).map { case (key, c) => SearchResult(key, c, h.score) }
+    }
   }
 
-  /** Contents for scored hits: the hit docs' log rows come from one pruned
-    * scan (`contentsRows`) and latest-seq-wins runs on the driver over those
-    * few rows — no window, no exchange. Every row of a hit doc is read, so
-    * the newest one decides, exactly as over the whole log.
+  /** Contents of the hits the held docs do not hold (the changed docs'),
+    * doc_id → (key, contents): their log rows come from one pruned scan
+    * (`contentsRows`) and latest-seq-wins runs on the driver over those few
+    * rows — no window, no exchange. Every row of a doc is read, so the
+    * newest one decides, exactly as over the whole log. No job without ids.
     */
-  private def resolveContents(hits: Seq[(Long, Float)]): Seq[SearchResult] = {
-    if (hits.isEmpty || !logExists) return Seq.empty
-    val contents = latestLive(contentsRows(hits.map(_._1)))
-    hits.flatMap { case (docId, score) =>
-      contents.get(docId).map { case (key, c) => SearchResult(key, c, score) }
-    }
-  }
+  private def resolveContents(ids: Seq[Long]): Map[Long, (String, String)] =
+    if (ids.isEmpty) Map.empty else latestLive(contentsRows(ids))
 
   /** Distributed compaction: with an existing base, folds pending deltas in
     * via the multi-way posting merge (Compactor — the base's forward rows,

@@ -60,8 +60,9 @@ private[index] object ShardStore {
   * slots) → the WAND kernel or the exhaustive scorer, each folding a doc's
   * slot-indexed weights with `Bm25Query.score` (the f32 fold in
   * query-occurrence order, the reference's `scorer.rs:109-123`) →
-  * `Bm25Index.topK`, the (score desc, doc_id asc) tail that the engine
-  * shares (`TakeOrderedAndProject` for a limited search).
+  * `Bm25Index.topK`, the `Bm25Index.RankOrder` (score desc, doc_id asc)
+  * tail (`TakeOrderedAndProject` for a limited search). The engine runs
+  * the same WAND kernel (`wandRuns`) and merges its per-shard runs itself.
   *
   * Candidate generation is disjunctive (docs sharing ≥1 query term,
   * `scorer.rs:79-97`); ties are broken deterministically (score desc,
@@ -86,7 +87,8 @@ private[index] object ShardStore {
   *     per shard (`shardStores`), persisted at MEMORY_AND_DISK until
   *     `release()`.
   *
-  * So a WAND search after the first is one job over the held stores, one
+  * So the first WAND search is one job that builds the stores and
+  * searches them, and a later one is one job over the held stores, one
   * task per shard, with no parquet scan and no exchange. The exhaustive
   * scorer and `postingsFor` read the postings parquet, so WAND ≡
   * exhaustive compares two independent input paths. An owner that drops an
@@ -189,7 +191,8 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     val q = compile(queryTerms(query))
     if (q.isEmpty) return spark.emptyDataset[ScoredDoc]
     Bm25Index.topK(
-      if (mode == "wand") wandTopK(q, limit.getOrElse(Int.MaxValue), Array.empty, None) else exhaustive(q),
+      if (mode == "wand") spark.createDataset(wandRuns(q, limit.getOrElse(Int.MaxValue), Array.empty, None))
+      else exhaustive(q),
       limit)
   }
 
@@ -216,10 +219,11 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * parquet read once, each block keyed by its shard and partitioned by
     * `HashPartitioner(numShards)` (an `Int` key hashes to itself, so
     * partition i holds shard i alone), each partition built into one
-    * `ShardStore`. Persisted (MEMORY_AND_DISK) and materialized by one job
-    * on the first WAND search, so a later search is one job with no parquet
-    * scan and no exchange. After `release()` the next WAND search builds
-    * the stores again.
+    * `ShardStore`. Persisted (MEMORY_AND_DISK) and filled by the first WAND
+    * search, whose job builds them, so a later search is one job with no
+    * parquet scan and no exchange. After `release()` the next WAND search
+    * builds the stores again. Named after the index dir, so
+    * `getRDDStorageInfo` tells them apart.
     */
   private def shardStores: RDD[ShardStore] = synchronized {
     if (stores == null)
@@ -230,10 +234,8 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
         .map { case (shard, term, minDoc, cnt, maxTf, minDl, d, t, l) => (shard, (term, minDoc, cnt, maxTf, minDl, d, t, l)) }
         .partitionBy(new HashPartitioner(manifest.numShards))
         .mapPartitions(blocks => Iterator(ShardStore(blocks.map(_._2))))
-    if (stores.getStorageLevel == StorageLevel.NONE) {
-      stores.persist(StorageLevel.MEMORY_AND_DISK)
-      stores.count(): Unit
-    }
+        .setName(s"shard stores of $indexDir")
+    if (stores.getStorageLevel == StorageLevel.NONE) stores.persist(StorageLevel.MEMORY_AND_DISK)
     stores
   }
 
@@ -263,22 +265,24 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * counts pruned blocks. With `k = Int.MaxValue` the threshold never
     * rises above −∞, so nothing is pruned and every candidate is scored:
     * every unlimited WAND search.
+    *
+    * Partition i of the result is shard i's hits, at most k, in
+    * `Bm25Index.RankOrder`: the index's search wraps it in a Dataset for
+    * `topK`, the engine zips it with the shard's held contents.
     */
-  private[graft] def wandTopK(q: Bm25Query, k: Int, exclude: Array[Long],
-                              skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
+  private[graft] def wandRuns(q: Bm25Query, k: Int, exclude: Array[Long],
+                              skipAcc: Option[org.apache.spark.util.LongAccumulator]): RDD[ScoredDoc] = {
     val emb = embedder
     val blockSize = manifest.blockSize
     val queryB = spark.sparkContext.broadcast((q, exclude))
-    spark.createDataset(shardStores.mapPartitions(_.flatMap { store =>
+    shardStores.mapPartitions(_.flatMap { store =>
       val (query, excluded) = queryB.value
       // Conservative padding for the f32 accumulation of ≤|slots| additions:
       // fold result ≤ realSum·(1+2^-24)^(|slots|-1); 1e-6·|slots| dominates that.
       val pad = 1.0 + query.slots.length * 1e-6
-      // capacity clamped: k + 1 overflows for an unlimited k
-      val heap = new java.util.PriorityQueue[ScoredDoc](math.min(k, 1024) + 1,
-        (a: ScoredDoc, b: ScoredDoc) =>
-          if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
-          else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
+      // capacity clamped: k + 1 overflows for an unlimited k; the head is
+      // the lowest-ranked hit held
+      val heap = new java.util.PriorityQueue[ScoredDoc](math.min(k, 1024) + 1, Bm25Index.RankOrder.reverse)
 
       /** Doc-sorted cursor over the store's blocks `from until until` of
         * one slot's term, with block-max skip.
@@ -359,7 +363,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       var i = arr.length - 1
       while (heap.size > 0) { arr(i) = heap.poll(); i -= 1 }
       arr.iterator
-    }))
+    })
   }
 
   /** Point score of one document vs a query (the reference's
@@ -384,16 +388,24 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
 
 object Bm25Index {
 
-  /** The top-k tail of every search, the index's and the engine's: ordered
-    * by (score desc, doc_id asc), the first `limit` rows (each partition's
-    * top `limit`, merged on the driver), or all of them, collected and
-    * sorted on the driver (no exchange; a global sort would sample its
-    * input first, running the scorer twice).
+  /** The rank order of every search: score desc, then doc_id asc (the
+    * reference's tie order is nondeterministic). The WAND kernel's heap,
+    * `topK` and the engine's merge of the per-shard runs all use it.
+    */
+  private[graft] val RankOrder: Ordering[ScoredDoc] = new Ordering[ScoredDoc] {
+    def compare(a: ScoredDoc, b: ScoredDoc): Int =
+      if (a.score != b.score) java.lang.Float.compare(b.score, a.score)
+      else java.lang.Long.compare(a.doc_id, b.doc_id)
+  }
+
+  /** The top-k tail of the index's search: in `RankOrder`, the first
+    * `limit` rows (each partition's top `limit`, merged on the driver), or
+    * all of them, collected and sorted on the driver (no exchange; a global
+    * sort would sample its input first, running the scorer twice).
     */
   private[graft] def topK(scored: Dataset[ScoredDoc], limit: Option[Int]): Dataset[ScoredDoc] =
     limit.fold {
-      val all = scored.collect().sortWith((a, b) =>
-        if (a.score != b.score) a.score > b.score else a.doc_id < b.doc_id)
+      val all = scored.collect().sorted(RankOrder)
       scored.sparkSession.createDataset(all.toSeq)(Encoders.product[ScoredDoc])
     }(scored.orderBy(col("score").desc, col("doc_id").asc).limit)
 

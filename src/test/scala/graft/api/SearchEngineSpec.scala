@@ -159,15 +159,8 @@ class SearchEngineSpec extends SparkTestBase {
       Doc("c", "join broadcast hash"), Doc("d", "window aggregate state"),
       Doc("e", "shuffle join window")))
 
-    for (q <- Seq("shuffle join", "spark", "window state", "merge")) {
-      val got = eng.search(q, None).sortBy(_.id)
-      val exp = fresh.search(q, None).sortBy(_.id)
-      assert(got.map(_.id) === exp.map(_.id), s"query '$q' ids")
-      got.zip(exp).foreach { case (g, e) =>
-        assert(java.lang.Float.floatToRawIntBits(g.score) ===
-          java.lang.Float.floatToRawIntBits(e.score), s"query '$q' doc ${g.id}")
-      }
-    }
+    for (q <- Seq("shuffle join", "spark", "window state", "merge"))
+      assertSameResults(eng.search(q, None).sortBy(_.id), fresh.search(q, None).sortBy(_.id), s"query '$q'")
     assert(eng.count() === 4L)
     assert(eng.get("b").isEmpty)
   }
@@ -192,15 +185,8 @@ class SearchEngineSpec extends SparkTestBase {
     val fresh = SearchEngine.withAvgdl(spark, tmpDir("delta2"), frozenAvgdl)
     fresh.upsert(live)
 
-    for (q <- Seq("shuffle join", "spark", "window state", "merge")) {
-      val got = eng.search(q, None).sortBy(_.id)
-      val exp = fresh.search(q, None).sortBy(_.id)
-      assert(got.map(_.id) === exp.map(_.id), s"query '$q' ids")
-      got.zip(exp).foreach { case (g, e) =>
-        assert(java.lang.Float.floatToRawIntBits(g.score) ===
-          java.lang.Float.floatToRawIntBits(e.score), s"query '$q' doc ${g.id}")
-      }
-    }
+    for (q <- Seq("shuffle join", "spark", "window state", "merge"))
+      assertSameResults(eng.search(q, None).sortBy(_.id), fresh.search(q, None).sortBy(_.id), s"query '$q'")
   }
 
   test("limited search runs WAND over the live view: bit-exact vs exhaustive, blocks skipped") {
@@ -223,13 +209,7 @@ class SearchEngineSpec extends SparkTestBase {
 
     for (q <- Seq("merge join", "spark window", "sort fast key", "join")) {
       // expected = the exhaustive live scorer (unlimited path), same order
-      val exp = eng.search(q, None).take(5)
-      val got = eng.search(q, Some(5))
-      assert(got.map(_.id) === exp.map(_.id), s"query '$q' ids")
-      got.zip(exp).foreach { case (g, e) =>
-        assert(java.lang.Float.floatToRawIntBits(g.score) ===
-          java.lang.Float.floatToRawIntBits(e.score), s"query '$q' doc ${g.id}")
-      }
+      assertSameResults(eng.search(q, Some(5)), eng.search(q, None).take(5), s"query '$q'")
     }
     assert(eng.wandSkippedBlocks.value > 0L,
       "live-WAND should have pruned at least one block with a nonempty delta")
@@ -253,14 +233,10 @@ class SearchEngineSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("cmp"), base)
     eng.remove("b")
     eng.upsert(Doc("e", "shuffle join window"))
-    val before = eng.search("shuffle join", None).sortBy(_.id)
+    val before = eng.search("shuffle join", None)
     eng.compact() // physical only: frozen avgdl carried through
-    val after = eng.search("shuffle join", None).sortBy(_.id)
-    assert(after.map(_.id) === before.map(_.id))
-    after.zip(before).foreach { case (g, e) =>
-      assert(java.lang.Float.floatToRawIntBits(g.score) ===
-        java.lang.Float.floatToRawIntBits(e.score))
-    }
+    assertSameResults(eng.search("shuffle join", None), before, "after compact")
+    assertContentsAsGet(eng, Seq("shuffle join", "window"))
   }
 
   test("compaction rewrites the docstore log to its live view") {
@@ -285,14 +261,8 @@ class SearchEngineSpec extends SparkTestBase {
     assert(!new java.io.File(s"$dir/docstore_old").exists())
     // live view and scores are untouched, both in this engine and a reopen
     assert(eng.iter().collect().sortBy(_.id) === liveBefore)
-    for (e <- Seq(eng, SearchEngine.open(spark, dir))) {
-      val after = e.search("shuffle join", None).sortBy(_.id)
-      assert(after.map(_.id) === before.map(_.id))
-      after.zip(before).foreach { case (g, x) =>
-        assert(java.lang.Float.floatToRawIntBits(g.score) ===
-          java.lang.Float.floatToRawIntBits(x.score))
-      }
-    }
+    for (e <- Seq(eng, SearchEngine.open(spark, dir)))
+      assertSameResults(e.search("shuffle join", None).sortBy(_.id), before, "after compact")
     // mutations after compaction keep working on the rewritten log
     eng.upsert(Doc("f", "another shuffle"))
     assert(eng.get("f").exists(_.contents == "another shuffle"))
@@ -458,14 +428,25 @@ class SearchEngineSpec extends SparkTestBase {
     for (q <- queries; limit <- Seq(Some(2), None))
       assertSameResults(eng.search(q, limit), fresh.search(q, limit), s"query '$q' limit $limit")
 
-  test("a clean limited search runs at most 2 Spark jobs and infers no parquet schema; get runs 1") {
+  /** Every hit of every query, limited and unlimited, carries the contents
+    * `get` reads for its key (one `get` per distinct key).
+    */
+  private def assertContentsAsGet(eng: SearchEngine, queries: Seq[String]): Unit = {
+    val hits = for (q <- queries; limit <- Seq(Some(2), None); r <- eng.search(q, limit))
+      yield (s"query '$q' limit $limit", r)
+    assert(hits.nonEmpty, s"no hits for $queries")
+    val got = hits.map(_._2.id).distinct.map(id => id -> eng.get(id).map(_.contents)).toMap
+    for ((what, r) <- hits) assert(got(r.id).contains(r.contents), s"$what key ${r.id}")
+  }
+
+  test("a clean limited search runs 1 Spark job and infers no parquet schema; get runs 1") {
     import org.apache.spark.graft.JobRecorder
-    enEngine.search("chicken soup", Some(10)) // warm-up: holds the index tables and shard stores
+    enEngine.search("chicken soup", Some(10)) // warm-up: holds the index tables, shard stores and docs
     val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", Some(10)))
     assert(hits.nonEmpty)
-    // base WAND 1 (over the held stores) · contents 1 (the df lookup reads
-    // the held term dictionary)
-    assert(jobs.length <= 2, s"${jobs.length} jobs: $jobs")
+    // base WAND and contents 1, over the held stores and docs (the df
+    // lookup reads the held term dictionary)
+    assert(jobs.length === 1, s"${jobs.length} jobs: $jobs")
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
     val (doc, getJobs) = JobRecorder(spark.sparkContext)(enEngine.get("Guacamole"))
     assert(doc.exists(_.id == "Guacamole"))
@@ -482,6 +463,7 @@ class SearchEngineSpec extends SparkTestBase {
     val fresh = SearchEngine.withAvgdl(spark, tmpDir("latest2"), eng.avgdl)
     fresh.upsert(Seq(Doc("a", "toasted cheese sandwich again"), base(1), base(2)))
     assertSameSearches(eng, fresh, Seq("cheese sandwich", "version", "toasted", "soup"))
+    assertContentsAsGet(eng, Seq("cheese sandwich", "soup"))
     assert(eng.get("a").contains(Doc("a", "toasted cheese sandwich again")))
   }
 
@@ -493,20 +475,39 @@ class SearchEngineSpec extends SparkTestBase {
     val live = docs.filterNot(d => d.id == "d3" || d.id == "d4") :+ Doc("d4", "common word4 changed")
     val fresh = SearchEngine.withAvgdl(spark, tmpDir("wide2"), eng.avgdl)
     fresh.upsert(live)
+    // the base hits' contents are held; the fresh engine has no base, so all
+    // of its > 1024 hits resolve through the semi-join
     val got = eng.search("common word4", None)
     assert(got.length > 1024)
     assertSameResults(got, fresh.search("common word4", None), "unlimited")
+    val liveContents = eng.iter().collect().map(d => d.id -> d.contents).toMap
+    for (r <- got) assert(liveContents.get(r.id).contains(r.contents), s"key ${r.id}")
     assertSameResults(eng.search("common word4", Some(5)), fresh.search("common word4", Some(5)), "top 5")
   }
 
-  test("a clean unlimited search runs 2 Spark jobs, like a limited one, and ranks like it") {
+  test("a clean unlimited search runs 1 Spark job, like a limited one, and ranks like it") {
     import org.apache.spark.graft.JobRecorder
-    enEngine.search("chicken soup", None) // warm-up: holds the index tables and shard stores
+    enEngine.search("chicken soup", None) // warm-up: holds the index tables, shard stores and docs
     val (hits, jobs) = JobRecorder(spark.sparkContext)(enEngine.search("garlic vegetable", None))
     assert(hits.length > 1)
-    // base WAND 1 · contents 1: the hits are ranked on the driver, no exchange
-    assert(jobs.length === 2, s"${jobs.length} jobs: $jobs")
+    // base WAND and contents 1: the hits are ranked on the driver, no exchange
+    assert(jobs.length === 1, s"${jobs.length} jobs: $jobs")
     assertSameResults(hits, enEngine.search("garlic vegetable", Some(hits.length)), "unlimited vs limited")
+  }
+
+  test("unpersisted held stores and docs are built again by the next search: same hits, contents as get") {
+    val queries = Seq("garlic vegetable", "chicken soup")
+    def searches() = for (q <- queries; limit <- Seq(Some(10), None)) yield enEngine.search(q, limit)
+    val before = searches()
+    // the engine's held base: its index's shard stores and its docs
+    def held = spark.sparkContext.getPersistentRDDs.values.filter(r => Option(r.name).exists(_.contains(enEngine.dir)))
+    assert(held.size === 2, s"held RDDs: $held")
+    held.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    assert(held.isEmpty)
+    for ((a, b) <- searches().zip(before)) assertSameResults(a, b, "after unpersist and clearCache()")
+    assert(held.size === 2, s"held RDDs: $held")
+    assertContentsAsGet(enEngine, queries)
   }
 
   test("the held base index follows compact() and buildBase() on the same instance") {
@@ -519,13 +520,21 @@ class SearchEngineSpec extends SparkTestBase {
     eng.search(q, Some(2))
     eng.compact()
     assertSameResults(eng.search(q, Some(2)), SearchEngine.open(spark, dir).search(q, Some(2)), "after compact")
+    assertContentsAsGet(eng, Seq(q, "window"))
 
     val dir2 = tmpDir("held2")
     val eng2 = SearchEngine.open(spark, dir2)
     eng2.upsert(Seq(Doc("a", "spark shuffle join"), Doc("b", "shuffle sort merge")))
     eng2.search(q, Some(2)) // no base yet
+    // a superseded row and a tombstone at or below the base's seq
+    eng2.upsert(Doc("a", "spark shuffle join rewritten"))
+    eng2.upsert(Doc("c", "join shuffle cache"))
+    eng2.remove("c")
     eng2.buildBase()
     assertSameResults(eng2.search(q, Some(2)), SearchEngine.open(spark, dir2).search(q, Some(2)), "after buildBase")
+    assertContentsAsGet(eng2, Seq(q, "merge"))
+    assert(eng2.search("rewritten", None).map(r => (r.id, r.contents)) === Seq(("a", "spark shuffle join rewritten")))
+    assert(eng2.search("cache", None).isEmpty)
   }
 
   test("a base compacted by another instance is picked up, never read from swapped-out files") {
@@ -619,13 +628,18 @@ class SearchEngineSpec extends SparkTestBase {
     val eng = SearchEngine.withDocuments(spark, tmpDir("deltajobs"), enRecipes)
     eng.upsert(Seq(Doc("Garlic Soup", "simmer garlic and vegetable stock"), enRecipes(3).copy(contents = "garlic bread")))
     eng.remove(enRecipes(5).id)
-    eng.search("chicken soup", Some(10)) // warm-up: holds the index tables and shard stores
+    eng.search("chicken soup", Some(10)) // warm-up: holds the index tables, shard stores and docs
     val (hits, jobs) = JobRecorder(spark.sparkContext)(eng.search("garlic vegetable", Some(10)))
     assert(hits.exists(_.id == "Garlic Soup"))
     assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"schema-inference job: $jobs")
-    // churn pass 2 · forward probe 1 · base WAND 1 · contents 1 (the base
-    // df comes from the held term dictionary)
-    assert(jobs.length <= 5, s"${jobs.length} jobs: $jobs")
+    // churn pass 2 · forward probe 1 · base WAND and held contents 1 ·
+    // the ranked changed doc's contents 1 (the base df comes from the held
+    // term dictionary)
+    assert(jobs.length === 5, s"${jobs.length} jobs: $jobs")
+    // no changed doc holds "chicken": no contents lookup
+    val (baseOnly, baseJobs) = JobRecorder(spark.sparkContext)(eng.search("chicken", Some(10)))
+    assert(baseOnly.nonEmpty)
+    assert(baseJobs.length === 4, s"${baseJobs.length} jobs: $baseJobs")
   }
 
   test("after 3 × (upsert, compact, search) the session holds one base generation's WAND blocks") {
@@ -637,9 +651,10 @@ class SearchEngineSpec extends SparkTestBase {
       eng.compact()
       assert(eng.search("garlic soup", Some(10)).exists(_.id == s"Garlic Soup $i"))
     }
-    // each compact() releases the stores of the base it replaced
-    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(held.size === 1, s"persisted RDDs left by the engine: $held")
+    // each compact() releases the stores and docs of the base it replaced
+    val held = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.map(_.name).toSeq
+    assert(held.sorted === Seq(s"base docs of ${eng.dir}", s"shard stores of ${eng.dir}/index"),
+      s"persisted RDDs left by the engine: $held")
   }
 
   test("compact() on a churned engine runs at most 13 Spark jobs and infers no parquet schema") {
@@ -742,6 +757,10 @@ class SearchEngineSpec extends SparkTestBase {
       val (hits, jobs) = JobRecorder(spark.sparkContext)(opened.search("garlic vegetable", Some(10)))
       assert(hits.exists(_.id == "Garlic Soup"), s"pending $pending")
       assert(!jobs.flatten.exists(_.startsWith("parquet at")), s"pending $pending, schema-inference job: $jobs")
+      // term dictionary 1 · base WAND 1, which builds and holds the shard
+      // stores and docs; pending adds churn pass 2, forward probe 1 and the
+      // ranked changed doc's contents 1
+      assert(jobs.length === (if (pending) 6 else 2), s"pending $pending, ${jobs.length} jobs: $jobs")
     }
   }
 
